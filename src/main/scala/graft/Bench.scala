@@ -143,9 +143,8 @@ object Bench {
     try {
       val sym = spark.read.parquet(edgesPath).persist()
       val m = sym.count() // directed message count per superstep
-      val grid = sys.env.getOrElse("SPARK_GRAFT_GRID", "1").toInt
       val res = PageRank.run(spark, sym, fixedIter = Some(supersteps),
-        salts = salts, symmetric = true, grid = grid)
+        salts = salts, symmetric = true)
       res.ranks.count()
       val sec = steadySec(res.metrics)
       sym.unpersist()
@@ -174,8 +173,8 @@ object Bench {
     try {
       // input materialized (persist + count) OUTSIDE the timed region:
       // the recorded number measures the TC kernel, matching rounds 1-2
-      // (which read the in-memory bench graph), TcProbe, and the
-      // reference's published TC times (compute after HDFS load)
+      // (which read the in-memory bench graph) and the reference's
+      // published TC times (compute after HDFS load)
       val canonical = spark.read.parquet(edgesPath)
         .filter(col("src") < col("dst")).persist()
       canonical.count()
@@ -298,6 +297,7 @@ object Bench {
     @volatile var convSec = -1.0
     @volatile var convTp = -1L
     @volatile var queries: Seq[(String, Double)] = Nil
+    @volatile var queriesFailed: Seq[String] = Nil
     @volatile var queriesSkipped = 0
     @volatile var queriesGated = 0
     @volatile var elapsedF: () => Double = () => -1.0
@@ -363,7 +363,7 @@ object Bench {
     private def convJson: String =
       f""""pagerank_convergence":{"directed_edges":$convM,"iters":$convIters,"converged":$convConverged,"sec":$convSec%.2f,"edges_per_sec":$convTp}"""
     private def head: String =
-      f"""{"metric":"pagerank_edges_per_sec_per_superstep","value":$value,"value_source":"$valueSource","unit":"edges/sec","sf":"$sfDir","budget_sec":$budget,"elapsed_sec":${elapsedF()}%.0f,"legs_skipped":$legsSkipped,"queries_skipped":$queriesSkipped,"queries_gated":$queriesGated"""
+      f"""{"metric":"pagerank_edges_per_sec_per_superstep","value":$value,"value_source":"$valueSource","unit":"edges/sec","sf":"$sfDir","budget_sec":$budget,"elapsed_sec":${elapsedF()}%.0f,"legs_skipped":$legsSkipped,"queries_skipped":$queriesSkipped,"queries_gated":$queriesGated,"queries_failed":${queriesFailed.map(Json.quote).mkString("[", ",", "]")}"""
 
     def fullJson: String = {
       val qJson = queries.map { case (k, v) => f""""$k":$v%.3f""" }
@@ -661,11 +661,15 @@ object Bench {
         }
         .foreach { case (name, fn) =>
         if (remaining > 10) {
-          val (_, sec) = time {
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+          // a query that throws is listed as failed, never timed
+          try {
+            val (_, sec) = time(fn(spark, sfDir).count())
+            qs = qs :+ (name -> sec)
+            S.queries = qs
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            S.queriesFailed = S.queriesFailed :+ name
           }
-          qs = qs :+ (name -> sec)
-          S.queries = qs
         } else S.queriesSkipped += 1
       }
       checkpointSection("queries")

@@ -1148,7 +1148,7 @@ object SparkEntry {
       val symW = cw.select(col("src"), col("dst"), col("weight"))
         .unionAll(cw.select(col("dst").as("src"), col("src").as("dst"),
           col("weight")))
-      LabelPropagation.runWeighted(s, symW, 5).labels
+      LabelPropagation.run(s, symW, 5, weightCol = Some("weight")).labels
     }),
 
     // count-min sketch heavy hitters: exact top-30 corpus tokens joined

@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.Json
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
@@ -28,10 +29,8 @@ final class Checkpointer(val root: String, val runId: String) {
   private def stateDir(iter: Int): Path = runDir.resolve(f"state_$iter%05d")
 
   /** Commit one iteration's state; returns the re-read (lineage-truncated)
-    * DataFrame. `meta` is free-form JSON content recorded in the manifest
-    * (per-iteration metrics / lineage). */
-  def commit(spark: SparkSession, state: DataFrame, iter: Int,
-             meta: Map[String, String] = Map.empty): DataFrame = {
+    * DataFrame. */
+  def commit(spark: SparkSession, state: DataFrame, iter: Int): DataFrame = {
     val tmp = runDir.resolve(f"_tmp_state_$iter%05d")
     deleteRecursively(tmp)
     state.write.mode("overwrite").parquet(tmp.toString)
@@ -46,8 +45,8 @@ final class Checkpointer(val root: String, val runId: String) {
       try listing.iterator().asScala
         .count(_.getFileName.toString.startsWith("part-"))
       finally listing.close()
-    val metaJson = meta.map { case (k, v) => s""""${k}":"${v}"""" }.mkString(",")
-    val line = s"""{"iter":$iter,"path":"${dst.toString}","partitions":$nParts${if (metaJson.nonEmpty) "," + metaJson else ""}}"""
+    val line = s"""{"iter":$iter,"path":${Json.quote(dst.toString)},""" +
+      s""""partitions":$nParts}"""
     Files.write(manifest,
       java.util.List.of(line),
       java.nio.file.StandardOpenOption.CREATE,
@@ -59,7 +58,8 @@ final class Checkpointer(val root: String, val runId: String) {
     * (`_metrics.jsonl`) — the north rule's "iteration/shuffle metrics
     * recorded" at the table layer, not just in the driver's memory. */
   def recordMetric(m: IterationMetric): Unit = {
-    val line = s"""{"algo":"${m.algo}","run":"${m.runId}","iter":${m.iter},""" +
+    val line = s"""{"algo":${Json.quote(m.algo)},""" +
+      s""""run":${Json.quote(m.runId)},"iter":${m.iter},""" +
       s""""rows":${m.rows},"delta":${m.delta},"wall_ms":${m.wallMs},""" +
       s""""shuffle_read":${m.shuffleReadBytes},"shuffle_write":${m.shuffleWriteBytes}}"""
     Files.write(runDir.resolve("_metrics.jsonl"),

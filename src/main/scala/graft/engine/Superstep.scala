@@ -47,10 +47,9 @@ object Superstep {
     * With a checkpointer: durable parquet commit + re-read.
     * Without: eager localCheckpoint (MEMORY_AND_DISK blocks). */
   def materialize(spark: SparkSession, df: DataFrame, iter: Int,
-                  ckpt: Option[Checkpointer],
-                  meta: Map[String, String] = Map.empty): DataFrame =
+                  ckpt: Option[Checkpointer]): DataFrame =
     ckpt match {
-      case Some(c) => c.commit(spark, df, iter, meta)
+      case Some(c) => c.commit(spark, df, iter)
       case None    => df.localCheckpoint(eager = true)
     }
 

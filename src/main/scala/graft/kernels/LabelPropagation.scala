@@ -27,16 +27,23 @@ object LabelPropagation {
   /** @param sym symmetric edge table (src, dst)
     * @param iterations fixed superstep count (synchronous LP need not
     *        converge — fixed budget keeps results well-defined); stops
-    *        early at a fixpoint */
+    *        early at a fixpoint
+    * @param weightCol if set, the adopted label maximizes the SUM of this
+    *        per-edge weight instead of the neighbor count — communities
+    *        follow co-occurrence STRENGTH, not just adjacency (the
+    *        multi_attr-format analog, SURVEY §1.2). Integer weights keep
+    *        every aggregate exact, so fixed-round runs hash-match a SQL
+    *        replay; count ≡ Σ weight 1. */
   def run(spark: SparkSession, sym: DataFrame,
           iterations: Int,
           ckpt: Option[Checkpointer] = None,
-          resume: Boolean = false): Result = {
+          resume: Boolean = false,
+          weightCol: Option[String] = None): Result = {
     // hash-partition the persisted edge table on the join key: every
     // superstep's state join then reuses this partitioning instead of
     // re-shuffling |E| rows per iteration (state is already hash(vid)-
     // partitioned by the previous aggregation)
-    val edges = sym.select(col("src"), col("dst"))
+    val edges = sym.select((Seq("src", "dst") ++ weightCol).map(col): _*)
       .repartition(col("src")).persist()
 
     def init: DataFrame =
@@ -45,9 +52,11 @@ object LabelPropagation {
     def step(labels: DataFrame): DataFrame = {
       val msgs = edges
         .join(labels.hint("SHUFFLE_HASH"), edges("src") === labels("vid"))
-        .select(edges("dst").as("vid"), col("label"))
+        .select(Seq(edges("dst").as("vid"), col("label")) ++
+          weightCol.map(col): _*)
       val hist = msgs.groupBy(col("vid"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
+        .agg(weightCol.map(c => sum(col(c))).getOrElse(count(lit(1)))
+          .as("cnt"))
       hist.groupBy("vid")
         .agg(max(struct(col("cnt").as("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("vid"), (-col("m.nl")).as("label"))
@@ -63,45 +72,6 @@ object LabelPropagation {
     val (state, metrics, iters, done) = Superstep.run(
       spark, "lp", init, step, delta, _ == 0.0, iterations, ckpt, resume,
       countRows = false)
-    edges.unpersist()
-    Result(state, metrics, iters, done)
-  }
-
-  /** WEIGHTED label propagation: the adopted label maximizes the SUM of
-    * incident edge weights instead of the neighbor count (ties: smallest
-    * label) — communities follow co-occurrence STRENGTH, not just
-    * adjacency (the multi_attr-format analog of [[run]]; reference
-    * weighted fabric per SURVEY §1.2). Integer weights keep every
-    * aggregate exact, so fixed-round runs hash-match a SQL replay.
-    * Same two-phase mode shape: sum per (vid, label), then
-    * max(struct(wsum, −label)). */
-  def runWeighted(spark: SparkSession, symW: DataFrame,
-                  iterations: Int): Result = {
-    val edges = symW.select(col("src"), col("dst"), col("weight"))
-      .repartition(col("src")).persist()
-
-    def init: DataFrame =
-      Edges.vertexIds(edges).select(col("vid"), col("vid").as("label"))
-
-    def step(labels: DataFrame): DataFrame = {
-      val msgs = edges
-        .join(labels.hint("SHUFFLE_HASH"), edges("src") === labels("vid"))
-        .select(edges("dst").as("vid"), col("label"), col("weight"))
-      val hist = msgs.groupBy(col("vid"), col("label"))
-        .agg(sum(col("weight")).as("w"))
-      hist.groupBy("vid")
-        .agg(max(struct(col("w").as("c"), (-col("label")).as("nl")))
-          .as("m"))
-        .select(col("vid"), (-col("m.nl")).as("label"))
-    }
-
-    def delta(prev: DataFrame, next: DataFrame): Double =
-      next.as("n").join(prev.as("p"), "vid")
-        .filter(col("n.label") =!= col("p.label")).count().toDouble
-
-    val (state, metrics, iters, done) = Superstep.run(
-      spark, "lpw", init, step, delta, _ == 0.0, iterations,
-      ckpt = None, resume = false, countRows = false)
     edges.unpersist()
     Result(state, metrics, iters, done)
   }

@@ -139,8 +139,7 @@ object MaxClique {
     // neighborhood) cannot reach the greedy lower bound hosts neither a
     // maximum clique nor a tie (its best is 1+outdeg < bound <= max), so
     // it is dropped BEFORE the induced-edge self-join — strictly-less
-    // keeps every possible tie exact (globalBound=false is the
-    // measurement baseline, McfProbe)
+    // keeps every possible tie exact
     val bound = if (globalBound) greedyBound(e) else 1
     val survivors = e.groupBy(col("src").as("seed"))
       .agg(count(lit(1)).as("outdeg"))
@@ -177,9 +176,8 @@ object MaxClique {
     * argmax-with-ties shape. Computed EAGERLY (one row) so both persisted
     * inputs are released before return — a long-lived session running many
     * queries keeps no cached blocks behind. */
-  def run(spark: SparkSession, edges: DataFrame,
-          globalBound: Boolean = true): DataFrame = {
-    val (perDs, release) = perSeedWithRelease(spark, edges, globalBound)
+  def run(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val (perDs, release) = perSeedWithRelease(spark, edges, globalBound = true)
     val per = perDs.toDF().persist()
     val mx = per.agg(max(col("size")).as("max_size"))
     val result = per.join(broadcast(mx), col("size") === col("max_size"))

@@ -58,7 +58,6 @@ object PageRank {
           hubDegree: Long = 100000L,
           weightCol: Option[String] = None,
           symmetric: Boolean = false,
-          grid: Int = 1,
           ckpt: Option[Checkpointer] = None,
           resume: Boolean = false,
           personalized: Option[DataFrame] = None,
@@ -80,40 +79,15 @@ object PageRank {
     // dangling checks — without the cache each consumer re-aggregates the
     // full |E|-row input (round-2 pre-loop ran three separate edge passes)
     val outDeg = e.groupBy("src").agg(sum(col("w")).as("odeg")).persist()
-    // grid > 1: destination-block edge layout — links carry an explicit
-    // block column blk = hash(dst) mod grid and are partitioned by blk, so
-    // all contributions to a given vertex are produced inside ONE
-    // partition and map-side combine collapses the message stream to
-    // ≤ |V| rows total (vs up-to-|E| under src-partitioning, where each
-    // partition sees a random slice of the whole destination space).
-    // State reaches the blocks via a REPLICATION JOIN: rank rows are
-    // joined to the loop-invariant (src → blk) relation and shuffled by
-    // blk — ~avgBlocksPerSrc·|V| rows — never broadcast, so there is no
-    // driver-serial cap and the layout scales to state that exceeds any
-    // single executor (round 1 used a broadcast here; its wall time was
-    // flat across cores because the driver serialized the state each
-    // superstep). grid sets BOTH the block count and the join/agg
-    // parallelism of the superstep — use the target core count.
-    // grid = 1 keeps the co-partitioned zero-extra-shuffle join.
     // SHUFFLE_HASH build on the |V|-row degree side: a sort-merge join
     // here sorts the full |E|-row edge view once in the pre-loop, and the
     // join's own hash(src) output partitioning already IS the layout the
     // per-superstep state join needs — the former explicit
     // repartition(src) on top re-exchanged all |E| rows a second time
     // for the same partitioning (guide §2.4: remove shuffles outright)
-    val links0 = e.join(outDeg.hint("SHUFFLE_HASH"), "src")
+    val links = e.join(outDeg.hint("SHUFFLE_HASH"), "src")
       .select(col("src"), col("dst"), (col("w") / col("odeg")).as("share"))
-    val links = (if (grid > 1)
-        links0.withColumn("blk", pmod(xxhash64(col("dst")), lit(grid.toLong)))
-          .repartition(grid, col("blk"))
-      else links0)
       .persist()
-    // loop-invariant replication relation: which blocks does each source
-    // feed (≤ min(outdeg, grid) rows per source)
-    val srcBlocks =
-      if (grid <= 1) None
-      else Some(links.select(col("src"), col("blk")).distinct()
-        .repartition(col("src")).persist())
     // symmetric graphs: every vertex has out-edges, so the out-degree keys
     // ARE the vertex set (skips a |2E|-row union+distinct) and nothing
     // dangles
@@ -205,26 +179,11 @@ object PageRank {
               case r                  => r.getDouble(0)
             }
       }
-      // grid=1: state is the SHUFFLE_HASH build side — the |E|-row link
-      // table is probed, never sorted (SMJ would re-sort it per superstep).
-      // grid>1: state is replicated per destination block through the
-      // (src → blk) join, then the block join is co-partitioned with the
-      // stored blk layout of links (no |E|-row exchange).
-      val contribs =
-        if (grid > 1) {
-          val rep = srcBlocks.get
-            .join(ranks.hint("SHUFFLE_HASH"),
-              srcBlocks.get("src") === ranks("vid"))
-            .select(col("src"), col("blk"), col("rank"))
-          links.join(rep.hint("SHUFFLE_HASH"), Seq("blk", "src"))
-            .select(links("dst").as("vid"),
-              (col("rank") * col("share")).as("c"))
-        } else {
-          val state = ranks.hint("SHUFFLE_HASH")
-          links.join(state, links("src") === state("vid"))
-            .select(links("dst").as("vid"),
-              (col("rank") * col("share")).as("c"))
-        }
+      // state is the SHUFFLE_HASH build side — the |E|-row link table is
+      // probed, never sorted (SMJ would re-sort it per superstep)
+      val state = ranks.hint("SHUFFLE_HASH")
+      val contribs = links.join(state, links("src") === state("vid"))
+        .select(links("dst").as("vid"), (col("rank") * col("share")).as("c"))
       val summed =
         if (hubIds.nonEmpty) {
           // two-phase: hub-bound contributions spread over `salts` reducer
@@ -268,7 +227,7 @@ object PageRank {
       spark, "pagerank", init, step, deltaFn, conv, iters, ckpt, resume,
       countRows = fixedIter.isEmpty || ckpt.isDefined)
     links.unpersist(); verts.unpersist(); outDeg.unpersist()
-    danglingVids.foreach(_.unpersist()); srcBlocks.foreach(_.unpersist())
+    danglingVids.foreach(_.unpersist())
     pers.foreach(_.unpersist())
     if (pers.isDefined) vertsT.unpersist()
     Result(state, metrics, it, done || fixedIter.isDefined)

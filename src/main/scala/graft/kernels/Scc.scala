@@ -111,8 +111,6 @@ object Scc {
         val nDead = dead.count()
         if (nDead == 0) trimming = false
         else {
-          if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-            System.err.println(s"[scc] r$round trim dead=$nDead")
           pieces += dead.select(col("vid"), col("vid").as("scc_id"))
           shrink(dead)
           remaining -= nDead
@@ -145,8 +143,6 @@ object Scc {
           changed = next.filter(col("changed")).count()
           colors = next.select(col("vid"), col("color"))
         }
-        if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc] r$round coloring steps=$steps n=$remaining")
         require(changed == 0, s"scc coloring did not converge " +
           s"in $maxSupersteps supersteps")
         // --- 3. backward sweep from roots within same-color region ---
@@ -178,8 +174,6 @@ object Scc {
           grew = fresh.count()
           if (grew > 0) reached = reached.unionAll(fresh)
         }
-        if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-          System.err.println(s"[scc] r$round bwd steps=$bSteps")
         require(grew == 0,
           s"scc backward sweep did not converge in $maxSupersteps steps")
         val found = reached.localCheckpoint(eager = true)
@@ -190,8 +184,6 @@ object Scc {
       }
     }
     require(remaining == 0, s"scc did not finish in $maxRounds rounds")
-    if (sys.env.contains("SPARK_GRAFT_SCC_DEBUG"))
-      System.err.println(s"[scc] outer rounds: $round")
     val ps = pieces.result()
     if (ps.isEmpty)
       Seq.empty[(Long, Long)].toDF("vid", "scc_id")

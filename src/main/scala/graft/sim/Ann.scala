@@ -135,7 +135,9 @@ object Ann {
     * forced a fresh whole-stage-codegen compile per iteration (the
     * dominant cost at small scale) — the join plan's generated code is
     * value-independent, so the codegen cache hits across iterations and
-    * entry points. */
+    * entry points. Precondition: `vid` is unique in `unit` — the result
+    * is grouped by vid, so duplicate ids would collapse into one row
+    * with their centroid candidates mixed. */
   private def nearestByJoin(unit: DataFrame,
                             centroids: Array[Array[Double]],
                             nprobe: Int): DataFrame = {

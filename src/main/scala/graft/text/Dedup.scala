@@ -147,7 +147,7 @@ object Dedup {
     * AQE-skew-split when an uncapped boilerplate bucket lands. The
     * shared candidate pipeline of [[minHashLsh]], [[containmentLsh]]
     * and [[minHashCalibration]]. */
-  private[graft] def bandedCandidates(sigs: DataFrame, bands: Int, r: Int,
+  private def bandedCandidates(sigs: DataFrame, bands: Int, r: Int,
                                maxBucket: Int,
                                extra: Seq[(String, (Column, Column) => Column)]
                                  = Seq.empty): DataFrame = {
@@ -189,7 +189,7 @@ object Dedup {
     * broadcast for the same reason (the minHashSignatures vocab rule —
     * pass broadcastVocab=false there when shingling an open vocabulary,
     * and this helper would take a shuffled join the same way). */
-  private[graft] def gidStream(sh: DataFrame): DataFrame = {
+  private def gidStream(sh: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dict = sh.select(col("g")).distinct()
       .select(col("g"),
@@ -199,7 +199,7 @@ object Dedup {
 
   /** (id, gs: sorted gid array, n) per document — the set table the
     * per-pair intersect consumers probe. */
-  private[graft] def gidSets(sh: DataFrame): DataFrame =
+  private def gidSets(sh: DataFrame): DataFrame =
     gidStream(sh).groupBy(col("id"))
       .agg(sort_array(collect_list(col("gid"))).as("gs"),
         count(lit(1)).as("n"))
@@ -248,14 +248,15 @@ object Dedup {
     * folds each document's shingle SET into one sorted array row first
     * (one aggregation — the set table is |docs| rows, not the
     * (id, shingle) stream) and scores each candidate pair with a
-    * per-row `array_intersect` after two id-keyed joins. Versus the
+    * per-row sorted intersect count after two id-keyed joins. Versus the
     * explode-and-recount plan (join candidates to the shingle stream on
     * d1, semi-match d2, re-aggregate) this moves the SAME bytes in
     * |pairs| wide rows instead of |pairs|·|shingles| narrow ones and
     * deletes the 100M-row post-join hash aggregation — measured 113 →
-    * ~15 s at sf0.1 (BENCH.md). Intersection is on the shingle STRINGS
-    * (no hash step), so the SQL oracle's exact count is replayed with
-    * no collision caveat. One caveat is honest: LSH buckets are tuned
+    * ~15 s at sf0.1 (BENCH.md). Intersection runs on dictionary-encoded
+    * gids; the dictionary is injective, so the counts equal the shingle-
+    * string intersection and the SQL oracle's exact count is replayed
+    * with no collision caveat. One caveat is honest: LSH buckets are tuned
     * for RESEMBLANCE, so high-containment pairs with low resemblance
     * (tiny A inside huge B) can be missed; production asymmetric dedup
     * re-buckets on the smaller side's signature alone, which is a

@@ -119,16 +119,6 @@ class KernelSpec extends SparkSpec {
     assert(gen === fast)
   }
 
-  test("pagerank dst-block grid layout is allclose 1e-12 to the default") {
-    val sym = Edges.symmetrize(edgeDF(Oracles.powerLaw(70, seed = 13)))
-    val a = PageRank.run(spark, sym, fixedIter = Some(5)).ranks
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val b = PageRank.run(spark, sym, fixedIter = Some(5), grid = 16).ranks
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(a.keySet === b.keySet)
-    a.foreach { case (v, r) => assert(math.abs(r - b(v)) < 1e-12, s"vid=$v") }
-  }
-
   test("random graphs: CC and TC match oracles (seeded ER + power-law)") {
     val graphs = Seq(
       Oracles.erdosRenyi(50, 0.08, seed = 1),
@@ -667,7 +657,8 @@ class KernelSpec extends SparkSpec {
     val es = Seq((1L, 2L, 10L), (1L, 3L, 1L), (1L, 4L, 1L))
     val symW = (es ++ es.map(e => (e._2, e._1, e._3)))
       .toDF("src", "dst", "weight")
-    val got = LabelPropagation.runWeighted(spark, symW, 1).labels
+    val got = LabelPropagation.run(spark, symW, 1,
+      weightCol = Some("weight")).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(1L) === 2L)
     assert(got(2L) === 1L && got(3L) === 1L && got(4L) === 1L)
@@ -675,13 +666,22 @@ class KernelSpec extends SparkSpec {
       (9L, 10L, 100L))
     val symW2 = (es2 ++ es2.map(e => (e._2, e._1, e._3)))
       .toDF("src", "dst", "weight")
-    val got2 = LabelPropagation.runWeighted(spark, symW2, 1).labels
+    val got2 = LabelPropagation.run(spark, symW2, 1,
+      weightCol = Some("weight")).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // center 1: votes 8(w5), 9(w1), 10(w1) -> 8; plain mode would pick
     // min label 8 only on the count tie — here weight decides outright
     assert(got2(1L) === 8L)
     // 9 and 10 follow their strong mutual edge, not the center
     assert(got2(9L) === 10L && got2(10L) === 9L)
+    // all-ones weights: Σ weight IS the neighbor count, so the weighted
+    // path must reproduce the unweighted labels exactly
+    val sym = Edges.symmetrize(edgeDF(Oracles.powerLaw(50, seed = 11)))
+    def labels(res: LabelPropagation.Result): Map[Long, Long] =
+      res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels(LabelPropagation.run(spark,
+        sym.withColumn("weight", lit(1L)), 3, weightCol = Some("weight"))) ===
+      labels(LabelPropagation.run(spark, sym, 3)))
   }
 
   test("pagerank warm start: seeded from fixpoint, one step moves < tol") {

@@ -216,15 +216,57 @@ class MiningSpec extends SparkSpec {
     }
   }
 
+  // ---- reference-format fixtures: the 15-vertex sample graph, written
+  // in-test through the GraphIO writers with seeded vertex attributes and
+  // integer edge weights ----
+
+  /** Three attrs per vertex, one from each of three 3-valued families —
+    * small enough that adjacent vertices often share one (CD needs it). */
+  private val sampleAttrs: Map[Long, Seq[String]] = {
+    val rnd = new scala.util.Random(15)
+    (1L to 15L).map(v =>
+      v -> Seq("A", "B", "C").map(f => s"$f${1 + rnd.nextInt(3)}")).toMap
+  }
+
+  /** Integer weight 1..9 per undirected sample edge (both directions). */
+  private val sampleWeights: Map[(Long, Long), Long] = {
+    val rnd = new scala.util.Random(27)
+    Oracles.sample15.map(e => e -> (1L + rnd.nextInt(9))).toMap
+  }
+
+  private def attrDF = sampleAttrs.toSeq.toDF("src", "attrs")
+
+  /** `attr` format: vid \t attr1 attr2 … \t num nb1 nb2 … */
+  private def writeAttrSample(): String = {
+    val path = Files.createTempDirectory("graft-attr").toString + "/attr"
+    GraphIO.writeAttrAdj(
+      attrDF.join(Edges.adjacency(Edges.symmetrize(edgeDF(Oracles.sample15))),
+        "src"), path)
+    path
+  }
+
+  /** `multi_attr` format: vid \t attrs \t num nb1 w1 nb2 w2 … */
+  private def writeMultiAttrSample(): String = {
+    val path = Files.createTempDirectory("graft-mattr").toString + "/mattr"
+    val directed = sampleWeights.toSeq.flatMap { case ((u, v), w) =>
+      Seq((u, v, w), (v, u, w)) }
+    GraphIO.writeMultiAttrAdj(
+      directed.toDF("src", "dst", "weight").join(attrDF, "src"), path)
+    path
+  }
+
   test("reference multi_attr format drives weighted PageRank vs oracle") {
-    // the reference's own sample file: vid \t attrs \t num nb1 w1 nb2 w2 …
-    val df = GraphIO.readMultiAttrEdges(spark,
-      "/root/reference/sample-datasets/multi_attr_sample.adj").cache()
+    val df = GraphIO.readMultiAttrEdges(spark, writeMultiAttrSample()).cache()
     val edges = df.collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3))).toSeq
-    assert(edges.nonEmpty)
-    // attrs parsed alongside (3 string attrs per vertex in the sample)
-    assert(df.select("attrs").head().getSeq[String](0).size === 3)
+    assert(edges.size === 2 * Oracles.sample15.size)
+    edges.foreach { case (u, v, w) =>
+      assert(w === sampleWeights((math.min(u, v), math.max(u, v))).toDouble)
+    }
+    // attrs parsed alongside, in the fixture's order
+    df.select("src", "attrs").collect().foreach { r =>
+      assert(r.getSeq[String](1) === sampleAttrs(r.getLong(0)))
+    }
     val expect = Oracles.pageRankWeighted(edges, 10)
     val got = graft.kernels.PageRank.run(spark,
       df.select(col("src"), col("dst"), col("weight")),
@@ -233,20 +275,20 @@ class MiningSpec extends SparkSpec {
     assert(got.keySet === expect.keySet)
     got.foreach { case (v, r) =>
       assert(math.abs(r - expect(v)) < 1e-9, s"vid=$v") }
+    df.unpersist()
   }
 
   test("CD community detection matches subset-enumeration oracle on attr_sample") {
-    // the reference's own attr-format sample (15 vertices, 3 attrs each)
-    val va = GraphIO.readAttrAdj(spark,
-      "/root/reference/sample-datasets/attr_sample.adj").cache()
+    val va = GraphIO.readAttrAdj(spark, writeAttrSample()).cache()
     assert(va.count() === 15)
     val attrs = va.collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
-    assert(attrs(1L) === Set("A1", "B2", "C9"))
+    assert(attrs === sampleAttrs.view.mapValues(_.toSet).toMap)
     val edges = GraphIO.edgesOf(va.select(col("src"), col("adj")))
       .filter(col("src") < col("dst"))
     val edgeSet = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val k = 2 // the 15-vertex sample has no 3-community; k=2 exercises all paths
+    assert(edgeSet === Oracles.sample15.toSet)
+    val k = 2 // k=2 exercises all paths
     // oracle: enumerate every vertex subset, keep attr-sharing cliques,
     // then per min-member argmax size with lex-min tie-break
     val vids = attrs.keys.toSeq.sorted

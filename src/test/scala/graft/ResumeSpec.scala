@@ -4,6 +4,7 @@ import graft.engine.Checkpointer
 import graft.graph.Edges
 import graft.kernels.{ConnectedComponents, LabelPropagation, PageRank}
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** North-rule resume requirement: kill after iteration k, resume from the
   * checkpoint, final state equals the uninterrupted run (bitwise for CC/LP,
@@ -87,6 +88,34 @@ class ResumeSpec extends SparkSpec {
     val iters = recorded.map(l =>
       """"iter":(\d+)""".r.findFirstMatchIn(l).get.group(1).toInt)
     assert(iters === (1 to res.iterations))
+  }
+
+  test("checkpoint logs stay valid JSON when the run id holds a quote") {
+    val sym = Edges.symmetrize(edgeDF(Oracles.sample15))
+    val straight = ConnectedComponents.run(spark, sym)
+      .components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val root = tmp()
+    val runId = "cc \"quoted\" run"
+    ConnectedComponents.run(spark, sym, maxIter = 2,
+      ckpt = Some(new Checkpointer(root, runId)))
+    val resumed = ConnectedComponents.run(spark, sym,
+      ckpt = Some(new Checkpointer(root, runId)), resume = true)
+    assert(resumed.components.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap === straight)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val dir = java.nio.file.Paths.get(root, runId)
+    def parsed(file: String) = {
+      val lines = Files.readAllLines(dir.resolve(file))
+      assert(!lines.isEmpty, file)
+      lines.asScala.map(mapper.readTree(_))
+    }
+    parsed("_manifest.jsonl").foreach { j =>
+      assert(j.get("path").asText().startsWith(dir.toString))
+    }
+    parsed("_metrics.jsonl").foreach { j =>
+      assert(j.get("run").asText() === runId)
+      assert(j.get("algo").asText() === "cc")
+    }
   }
 
   private val golden = Seq((1L, 2L), (2L, 3L), (4L, 5L))
