@@ -13,6 +13,8 @@ import org.apache.spark.sql.functions._
   *   rank'(v) = teleport/N + damping * ( Σ_{u→v} rank(u)/outdeg(u)
   *                                       + danglingMass/N )
   *
+  * with teleport 0.15 and damping 0.85.
+  *
   * Scale design (SURVEY §4.3-4.4): the link table (src, dst, odeg) is built
   * once, hash-partitioned on src and persisted; each superstep is one
   * co-partitioned join + a two-phase SALTED aggregation — contributions to a
@@ -23,6 +25,9 @@ import org.apache.spark.sql.functions._
   * per superstep; convergence is max |Δrank| ≤ tol.
   */
 object PageRank {
+
+  private val Teleport = 0.15
+  private val Damping = 0.85
 
   final case class Result(ranks: DataFrame,
                           metrics: Seq[IterationMetric],
@@ -52,8 +57,6 @@ object PageRank {
           tol: Double = 1e-6,
           maxIter: Int = 100,
           fixedIter: Option[Int] = None,
-          teleport: Double = 0.15,
-          damping: Double = 0.85,
           salts: Int = 1,
           hubDegree: Long = 100000L,
           weightCol: Option[String] = None,
@@ -203,12 +206,12 @@ object PageRank {
       // algebraically equal (teleport + damping·dm)·(1/n) can differ by
       // 1 ulp and flake a round(…,8) hash boundary
       val addTerm =
-        if (pers.isEmpty) lit(teleport / n + damping * danglingMass / n)
-        else (lit(teleport) + lit(damping * danglingMass)) * col("tele")
+        if (pers.isEmpty) lit(Teleport / n + Damping * danglingMass / n)
+        else (lit(Teleport) + lit(Damping * danglingMass)) * col("tele")
       vertsT.join(summed.hint("SHUFFLE_HASH"), Seq("vid"), "left")
         .select(col("vid"),
           (addTerm
-            + lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
+            + lit(Damping) * coalesce(col("s"), lit(0.0))).as("rank"))
     }
 
     def delta(prev: DataFrame, next: DataFrame): Double =

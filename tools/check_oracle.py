@@ -17,6 +17,7 @@ for t in ["region","nation","customer","supplier","part","orders",
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fails = []
+matched, rows_only = 0, 0
 # a query that crashed in Verify dumps nothing — flag it, don't skip it
 for name in sorted(oracle):
     if not os.path.isdir(f"{out_dir}/{name}"):
@@ -33,6 +34,8 @@ for name in sorted(os.listdir(out_dir)):
               ("OK" if len(got) > 0 else "EMPTY!"))
         if len(got) == 0:
             fails.append(name)
+        else:
+            rows_only += 1
         continue
     try:
         exp = con.execute(oracle[name]).df()
@@ -63,5 +66,8 @@ for name in sorted(os.listdir(out_dir)):
         fails.append(name)
     else:
         print(f"{name:22s} OK ({len(g)} rows)")
+        matched += 1
 print("\nFAILED:" if fails else "\nALL OK", fails if fails else "")
+# the tally, last, so a caller reads the gate numbers off one line
+print(f"{matched} hash-match, {rows_only} rows-only, {len(fails)} failed")
 sys.exit(1 if fails else 0)
