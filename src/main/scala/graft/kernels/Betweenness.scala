@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Frontier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,49 +28,30 @@ import org.apache.spark.sql.functions._
   * fixed per-level evaluation order; the final sums sit far above the
   * 1e-8 boundary noise, the PageRank-oracle discipline).
   *
-  * Scale shape: each forward level is one join+integer-aggregate of the
-  * labeled frontier against the shared src-partitioned edge table with
-  * an anti-join against the reached set; each backward level joins one
-  * level's rows (frontier-sized) with the next level's δ through the
-  * edge table — SHUFFLE_HASH on the state sides, localCheckpoint
+  * Scale shape: each forward level is one [[graft.engine.Frontier]] hop,
+  * a join+integer-aggregate of the labeled frontier against the edge
+  * table with an anti-join against the reached set; each backward level
+  * joins one level's rows (frontier-sized) with the next level's δ
+  * through the edge table — SHUFFLE_HASH on the state sides, localCheckpoint
   * truncation per level, no collect, no window.
   */
 object Betweenness {
 
-  /** Per-(seed, vid) forward state pieces, one per level: (seed, vid,
+  /** Per-(seed, vid) forward state, one piece per level: (seed, vid,
     * dist, sigma). Level 0 = the seeds themselves (sigma 1). */
   private def forward(sym: DataFrame, seeds: DataFrame, maxHop: Int)
-      : Vector[DataFrame] = {
-    val e = sym.select(col("src"), col("dst"))
-    var level = seeds.select(col("vid").as("seed"), col("vid"),
-        lit(0).as("dist"), lit(1L).as("sigma"))
-      .localCheckpoint(eager = true)
-    var pieces = Vector(level)
-    // the reached set folds into ONE re-checkpointed table every 4
-    // levels (the Bfs.distances compactEvery discipline) — a lazy union
-    // of every prior piece makes level h rescan h pieces, O(h²) total
-    var reached = level.select(col("seed"), col("vid"))
-    var sinceFold = 0
-    for (l <- 1 to maxHop if !level.isEmpty) {
-      val f = level.select(col("seed"), col("vid").as("fv"), col("sigma"))
+      : Vector[DataFrame] =
+    Frontier.run(sym.select(col("src"), col("dst")),
+        seeds.select(col("vid").as("seed"), col("vid"), lit(0).as("dist"),
+          lit(1L).as("sigma")),
+        Seq("seed", "vid"), maxHop) { (e, last, hop) =>
+      val f = last.select(col("seed"), col("vid").as("fv"), col("sigma"))
         .hint("SHUFFLE_HASH")
-      val next = e.join(f, e("src") === f("fv"))
+      e.join(f, e("src") === f("fv"))
         .groupBy(col("seed"), e("dst").as("vid"))
         .agg(sum(col("sigma")).as("sigma"))
-        .join(reached, Seq("seed", "vid"), "left_anti")
-        .select(col("seed"), col("vid"), lit(l).as("dist"), col("sigma"))
-        .localCheckpoint(eager = true)
-      pieces = pieces :+ next
-      reached = reached.union(next.select(col("seed"), col("vid")))
-      sinceFold += 1
-      if (sinceFold == 4) {
-        reached = reached.localCheckpoint(eager = true)
-        sinceFold = 0
-      }
-      level = next
-    }
-    pieces
-  }
+        .select(col("seed"), col("vid"), lit(hop).as("dist"), col("sigma"))
+    }.levels
 
   /** (seed, vid, dist, sigma, delta) for every reached pair — the
     * fixed-horizon Brandes table, exposed for oracle replay. */

@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Frontier
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,99 +10,40 @@ import org.apache.spark.sql.functions._
   * (`partition/BDGPartitioner.tpp:279-307` is the same traversal with
   * colors instead of distances): graph feature generation for a training
   * pipeline ("hops to nearest doc of type X") and the reachability
-  * primitive behind the drill-down queries.
-  *
-  * Shape: one Spark job per hop. The frontier expands ONLY from the
-  * previous hop's frontier (not the whole reached set), the anti-join
-  * prunes revisits against the accumulated set, each frontier is a lazily
-  * checkpointed piece materialized by the SAME count that drives
-  * convergence, and the result is the lazy union of per-hop pieces —
-  * lineage stays O(1) per hop and nothing is re-materialized
-  * (the BdgLayout.floodColors protocol). At 100 TB each hop is one
-  * shuffle keyed by vertex id; the frontier piece is the only state that
-  * grows, and it is bounded by |V|.
+  * primitive behind the drill-down queries. Both traversals are
+  * [[graft.engine.Frontier]] walks; each hop is one shuffle keyed by
+  * vertex id, and the reached set, bounded by |V|, is the only state.
   */
 object Bfs {
 
   /** (vid, dist) for every vertex within `maxHop` of `seeds` (a `vid`
-    * column); dist = minimum hop count to any seed (seeds are dist 0).
-    *
-    * `compactEvery` bounds the reached-set lineage on DEEP traversals:
-    * every anti-join scans the union of accumulated frontier pieces, so
-    * an h-hop walk over loose pieces costs O(h²) cached-piece scans; once
-    * the piece list reaches `compactEvery` it is folded into ONE eagerly
-    * re-checkpointed table (the fold re-writes O(|reached|) rows — cheap
-    * every K hops, and shallow fan-out traversals never trigger it). */
-  def distances(sym: DataFrame, seeds: DataFrame, maxHop: Int,
-                compactEvery: Int = 8): DataFrame = {
-    // persist the edge view for the loop: every hop probes it, and a
-    // caller handing a LAZY derived graph (e.g. the co-occurrence
-    // self-join) would otherwise re-derive it once PER HOP — measured
-    // as the dominant cost of q101/q257 (diameter × derivation)
-    val e = sym.select(col("src"), col("dst")).persist()
-    var last = seeds.select(col("vid"), lit(0L).as("dist"))
-      .localCheckpoint(eager = true)
-    var pieces = List(last)
-    def reached: DataFrame = pieces.reduce(_ union _)
-    var hop = 0
-    var grew = true
-    while (grew && hop < maxHop) {
-      hop += 1
-      val frontier = e.join(last.hint("SHUFFLE_HASH"),
-          e("src") === last("vid"))
-        .select(e("dst").as("vid")).distinct()
-        .join(reached, Seq("vid"), "left_anti")
-        .select(col("vid"), lit(hop.toLong).as("dist"))
-        .localCheckpoint(eager = false) // materialized by the count below
-      if (frontier.count() == 0L) grew = false
-      else {
-        last = frontier; pieces = frontier :: pieces
-        if (pieces.size >= compactEvery)
-          pieces = List(pieces.reduce(_ union _).localCheckpoint(eager = true))
-      }
-    }
-    e.unpersist() // every piece is checkpointed; nothing re-reads e
-    reached
-  }
+    * column); dist = minimum hop count to any seed (seeds are dist 0). */
+  def distances(sym: DataFrame, seeds: DataFrame, maxHop: Int): DataFrame =
+    Frontier.run(sym.select(col("src"), col("dst")),
+        seeds.select(col("vid"), lit(0L).as("dist")), Seq("vid"), maxHop) {
+      (e, last, hop) =>
+        e.join(last.hint("SHUFFLE_HASH"), e("src") === last("vid"))
+          .select(e("dst").as("vid")).distinct()
+          .select(col("vid"), lit(hop.toLong).as("dist"))
+    }.reached
 
   /** Per-seed (labeled) BFS distances: (seed, vid, dist) for every seed
     * and every vertex within `maxHop` of it — the landmark-distance
     * feature table (harmonic/closeness centrality of the landmarks, "hops
-    * from doc X" features). Same frontier-only/piece-union/compaction
-    * discipline as [[distances]], with state keyed by (seed, vid): the
-    * per-seed traversals share every join and shuffle instead of running
-    * |seeds| separate jobs. State is bounded by |seeds|·|V| — callers
-    * bound the landmark set (that bound is the standard approximation for
+    * from doc X" features). State is keyed by (seed, vid): the per-seed
+    * traversals share every join and shuffle instead of running |seeds|
+    * separate jobs. State is bounded by |seeds|·|V| — callers bound the
+    * landmark set (that bound is the standard approximation for
     * centrality at scale, Eppstein–Wang 2004). */
-  def perSeedDistances(sym: DataFrame, seeds: DataFrame, maxHop: Int,
-                       compactEvery: Int = 8): DataFrame = {
-    // persisted for the loop — same re-derivation guard as [[distances]]
-    val e = sym.select(col("src"), col("dst")).persist()
-    var last = seeds.select(col("vid").as("seed"), col("vid"),
-        lit(0L).as("dist"))
-      .localCheckpoint(eager = true)
-    var pieces = List(last)
-    def reached: DataFrame = pieces.reduce(_ union _)
-    var hop = 0
-    var grew = true
-    while (grew && hop < maxHop) {
-      hop += 1
-      val frontier = e.join(last.hint("SHUFFLE_HASH"),
-          e("src") === last("vid"))
+  def perSeedDistances(sym: DataFrame, seeds: DataFrame,
+                       maxHop: Int): DataFrame =
+    Frontier.run(sym.select(col("src"), col("dst")),
+        seeds.select(col("vid").as("seed"), col("vid"), lit(0L).as("dist")),
+        Seq("seed", "vid"), maxHop) { (e, last, hop) =>
+      e.join(last.hint("SHUFFLE_HASH"), e("src") === last("vid"))
         .select(col("seed"), e("dst").as("vid")).distinct()
-        .join(reached, Seq("seed", "vid"), "left_anti")
         .select(col("seed"), col("vid"), lit(hop.toLong).as("dist"))
-        .localCheckpoint(eager = false) // materialized by the count below
-      if (frontier.count() == 0L) grew = false
-      else {
-        last = frontier; pieces = frontier :: pieces
-        if (pieces.size >= compactEvery)
-          pieces = List(pieces.reduce(_ union _).localCheckpoint(eager = true))
-      }
-    }
-    e.unpersist() // every piece is checkpointed; nothing re-reads e
-    reached
-  }
+    }.reached
 
   /** Bounded-hop weighted single/multi-source shortest paths: dist(v) =
     * minimum total weight over paths of <= `rounds` edges from any seed
@@ -115,7 +57,8 @@ object Bfs {
     * distance must be able to re-propagate. */
   def weightedDistances(edgesW: DataFrame, seeds: DataFrame,
                         rounds: Int): DataFrame = {
-    // persisted for the loop — same re-derivation guard as [[distances]]
+    // persisted for the loop: a lazy derived graph would otherwise be
+    // re-derived every round
     val e = edgesW.select(col("src"), col("dst"), col("weight")).persist()
     var state = seeds.select(col("vid"), lit(0L).as("dist"))
       .localCheckpoint(eager = true)

@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Frontier
 import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,50 +15,32 @@ import org.apache.spark.sql.functions._
   * One multi-source parity frontier keyed by component id — components
   * partition the graph, so the traversals never overlap and the whole
   * verdict costs one join per BFS level, not one traversal per
-  * component. State space is (vid, parity), at most 2|V| rows; frontier
-  * expansion is the same anti-join + localCheckpoint discipline as every
-  * superstep kernel ([[Bfs]], [[Bridges]]). */
+  * component. State space is (vid, parity), at most 2|V| rows, walked by
+  * [[graft.engine.Frontier]]. */
 object Bipartite {
 
   /** @param edges undirected unique pairs (src, dst)
     * @return (component — its min vid, n_vertices, is_bipartite 0/1) */
   def run(spark: SparkSession, edges: DataFrame,
           maxIter: Int = 200): DataFrame = {
+    // persisted once for both walks: the CC labels and the parity BFS
     val sym = Edges.symmetrize(edges).repartition(col("src")).persist()
     // hash-min CC: component id IS the component's minimum vid = the root
     val comp = ConnectedComponents.run(spark, sym).components
       .localCheckpoint(eager = true)
-    // frontier-piece discipline ([[Bfs.distances]]): the per-level frontier
-    // is a lazy checkpoint materialized by the SAME count that drives
-    // convergence, and the seen set is the lazy union of per-level pieces
-    // (folded into one eager checkpoint every compactEvery levels) — one
-    // driver job per BFS level instead of the three (eager checkpoint +
-    // count + seen re-checkpoint) this loop issued through round 4
     val roots = comp.filter(col("vid") === col("component"))
       .select(col("component"), col("vid"), lit(0L).as("par"))
-      .localCheckpoint(eager = true)
-    var pieces = List(roots)
-    def seen: DataFrame = pieces.reduce(_ union _)
-    var frontier = roots
-    var n = 1L // roots are nonempty whenever the graph is
-    var it = 0
-    val compactEvery = 8
-    while (n > 0 && it < maxIter) {
-      it += 1
-      val next = frontier.join(sym, frontier("vid") === sym("src"))
-        .select(frontier("component"), sym("dst").as("vid"),
-          (lit(1L) - frontier("par")).as("par"))
+    val walk = Frontier.run(sym, roots, Seq("component", "vid", "par"),
+        maxIter) { (e, last, _) =>
+      last.join(e, last("vid") === e("src"))
+        .select(last("component"), e("dst").as("vid"),
+          (lit(1L) - last("par")).as("par"))
         .distinct()
-        .join(seen, Seq("component", "vid", "par"), "left_anti")
-        .localCheckpoint(eager = false) // materialized by the count below
-      n = next.count()
-      if (n > 0) {
-        frontier = next; pieces = next :: pieces
-        if (pieces.size >= compactEvery)
-          pieces = List(pieces.reduce(_ union _).localCheckpoint(eager = true))
-      }
     }
     sym.unpersist()
+    require(walk.converged,
+      s"bipartite parity BFS did not converge in $maxIter levels")
+    val seen = walk.reached
     val odd = seen.groupBy(col("component"), col("vid"))
       .agg(count(lit(1)).as("np")).filter(col("np") === 2L)
       .select(col("component")).distinct()

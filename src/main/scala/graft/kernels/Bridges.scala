@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Frontier
 import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,14 +12,14 @@ import org.apache.spark.sql.functions._
   * deletion (q46-style drill-down) splits a component.
   *
   * All candidates are probed TOGETHER: reachability is one multi-source
-  * frontier expansion keyed by candidate id (same shape as
-  * [[Bfs.multiSource]]), so c candidates cost one join per hop, not c
-  * traversals. The per-candidate removed edge is enforced with a
+  * [[graft.engine.Frontier]] walk keyed by candidate id (the shape of
+  * [[Bfs.perSeedDistances]]), so c candidates cost one join per hop, not
+  * c traversals. The per-candidate removed edge is enforced with a
   * broadcast of the (cid, cs, cd) table — three longs per candidate —
   * against the expansion, never a per-candidate edge copy. Candidates
   * are expected to be few (sha-sampled or suspicion-filtered upstream);
-  * the reached set is at most |cand| × |component| rows and is
-  * localCheckpoint-truncated per hop like every superstep kernel.
+  * the reached set is at most |cand| × |component| rows. A walk that
+  * `maxIter` cuts short fails loudly instead of reporting a verdict.
   */
 object Bridges {
 
@@ -27,31 +28,22 @@ object Bridges {
     * @return (src, dst, is_bridge 0/1) one row per candidate */
   def probe(spark: SparkSession, edges: DataFrame, cand: DataFrame,
             maxIter: Int = 200): DataFrame = {
-    val sym = Edges.symmetrize(edges).repartition(col("src")).persist()
     val c = cand.select(col("cid"), col("src").as("cs"), col("dst").as("cd"))
       .localCheckpoint(eager = true)
-    var reached = c.select(col("cid"), col("cs").as("vid"))
-      .localCheckpoint(eager = true)
-    var frontier = reached
-    var n = frontier.count()
-    var it = 0
-    while (n > 0 && it < maxIter) {
-      it += 1
-      val exp = frontier.join(sym, frontier("vid") === sym("src"))
-        .select(frontier("cid"), frontier("vid"), sym("dst").as("nbr"))
+    val walk = Frontier.run(Edges.symmetrize(edges).repartition(col("src")),
+        c.select(col("cid"), col("cs").as("vid")), Seq("cid", "vid"),
+        maxIter) { (sym, last, _) =>
+      last.join(sym, last("vid") === sym("src"))
+        .select(last("cid"), last("vid"), sym("dst").as("nbr"))
         .join(broadcast(c), Seq("cid"))
         .filter(!((col("vid") === col("cs") && col("nbr") === col("cd")) ||
                   (col("vid") === col("cd") && col("nbr") === col("cs"))))
         .select(col("cid"), col("nbr").as("vid")).distinct()
-      val next = exp.join(reached, Seq("cid", "vid"), "left_anti")
-        .localCheckpoint(eager = true)
-      n = next.count()
-      if (n > 0) {
-        reached = reached.union(next).localCheckpoint(eager = true)
-        frontier = next
-      }
     }
-    sym.unpersist()
+    // an unreached endpoint reads as a bridge, so a cut-short walk would
+    // mislabel every candidate it did not finish
+    require(walk.converged, s"bridge probe did not converge in $maxIter hops")
+    val reached = walk.reached
     c.as("c")
       .join(reached.as("r"),
         col("c.cid") === col("r.cid") && col("r.vid") === col("c.cd"),
@@ -78,25 +70,17 @@ object Bridges {
     val nbrs = cv.join(sym, cv("cv") === sym("src"))
       .select(col("cv"), col("dst").as("nbr"))
       .localCheckpoint(eager = true)
-    var reached = nbrs.groupBy(col("cv")).agg(min(col("nbr")).as("vid"))
-      .localCheckpoint(eager = true)
-    var frontier = reached
-    var n = frontier.count()
-    var it = 0
-    while (n > 0 && it < maxIter) {
-      it += 1
-      val exp = frontier.join(sym, frontier("vid") === sym("src"))
-        .select(frontier("cv"), sym("dst").as("vid"))
+    val walk = Frontier.run(sym,
+        nbrs.groupBy(col("cv")).agg(min(col("nbr")).as("vid")),
+        Seq("cv", "vid"), maxIter) { (e, last, _) =>
+      last.join(e, last("vid") === e("src"))
+        .select(last("cv"), e("dst").as("vid"))
         .filter(col("vid") =!= col("cv")).distinct()
-      val next = exp.join(reached, Seq("cv", "vid"), "left_anti")
-        .localCheckpoint(eager = true)
-      n = next.count()
-      if (n > 0) {
-        reached = reached.union(next).localCheckpoint(eager = true)
-        frontier = next
-      }
     }
     sym.unpersist()
+    require(walk.converged,
+      s"articulation probe did not converge in $maxIter hops")
+    val reached = walk.reached
     nbrs.as("n")
       .join(reached.as("r"),
         col("n.cv") === col("r.cv") && col("n.nbr") === col("r.vid"),

@@ -93,7 +93,7 @@ object Coloring {
       pieces += newly
       colored = colored.unionAll(newly)
       // uncolored/hp shrink lazily; materialize every other round (the
-      // flood checkEvery discipline — each extra checkpoint is a job)
+      // Frontier probe cadence — each extra checkpoint is a job)
       uncolored = uncolored.join(newly.select(col("vid")),
         Seq("vid"), "left_anti")
       n -= nNew

@@ -408,7 +408,7 @@ object GraphStats {
     var it = 0
     while (changed > 0 && it < maxIter) {
       // two relaxations composed per materialization + ONE convergence
-      // count (the flood checkEvery discipline): a converged first step
+      // count (the Frontier probe cadence): a converged first step
       // makes the second a no-op, so checking only the pair is safe
       it += 2
       val next = relax(relax(lay).select(col("vid"), col("layer")))

@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Frontier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,10 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * Per round: ONE join moving labels over the symmetrized pair graph +
   * one counted-vote aggregation (map-side combinable); already-labeled
-  * vertices are clamped (seeds and earlier rounds never flip), so each
-  * round touches only the still-unlabeled frontier. Ties break to the
-  * smaller label — q11's (count desc, label asc) rule. Lineage is
-  * checkpoint-truncated per round. */
+  * vertices are clamped (seeds and earlier rounds never flip). Rounds are
+  * [[graft.engine.Frontier]] hops, so only the labels set last round vote
+  * — the same votes every labeled vertex would cast (see Frontier). Ties
+  * break to the smaller label — q11's (count desc, label asc) rule. */
 object LabelSpread {
 
   /** (vid, label, origin) — origin 0 = seed, r = labeled in round r.
@@ -25,21 +26,16 @@ object LabelSpread {
           rounds: Int): DataFrame = {
     val sym = pairs.select(col("src"), col("dst"))
       .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(true)
-    var lab = seeds.select(col("vid"), col("label"),
-      lit(0L).as("origin")).localCheckpoint(true)
-    for (r <- 1 to rounds) {
-      val votes = sym
-        .join(lab.select(col("vid").as("src"), col("label")), "src")
+      .distinct()
+    Frontier.run(sym, seeds.select(col("vid"), col("label"),
+        lit(0L).as("origin")), Seq("vid"), rounds) { (e, last, r) =>
+      e.join(last.select(col("vid").as("src"), col("label")), "src")
         .groupBy(col("dst").as("vid"), col("label"))
         .agg(count(lit(1)).as("cnt"))
-      val newly = votes.groupBy(col("vid"))
+        .groupBy(col("vid"))
         .agg(min_by(col("label"),
           col("cnt") * lit(-1000000000L) + col("label")).as("label"))
-        .join(lab.select(col("vid")), Seq("vid"), "left_anti")
         .select(col("vid"), col("label"), lit(r.toLong).as("origin"))
-      lab = lab.unionByName(newly).localCheckpoint(true)
-    }
-    lab
+    }.reached
   }
 }

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *     relabels through the resulting map with one broadcast-sized join.
   * Components at least halve per round → ≤ log2(V) rounds; every loop
   * materializes once per superstep and counts arithmetic deltas only
-  * (the [[Scc]] / flood `checkEvery` discipline).
+  * (the [[Scc]] trim / [[graft.engine.Frontier]] probe cadence).
   *
   * Weights: sha60("w:src:dst") — unique modulo a 2^-60-per-pair
   * collision, making the MSF unique, so Kruskal replayed edge-by-edge in

@@ -1,6 +1,7 @@
 package graft.kernels
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.engine.Frontier
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Strongly connected components on a DIRECTED link graph — the
@@ -25,17 +26,17 @@ import org.apache.spark.sql.functions._
   *     coloring phase would peel a long dependency chain one vertex
   *     per round.
   *  2. FORWARD COLORING to fixpoint: color(v) = min vertex id that
-  *     reaches v (directed hash-min — the CC superstep with the edge
-  *     table NOT symmetrized). One shuffle-hash join + map-side-combined
-  *     min aggregation per superstep, state localCheckpoint-truncated
-  *     ([[graft.engine.Superstep]] discipline).
+  *     reaches v — [[ConnectedComponents.run]] on the edge table NOT
+  *     symmetrized (directed hash-min; its frontier messaging is sound on
+  *     directed edges, since every label a vertex takes is sent along
+  *     its out-edges the superstep after).
   *  3. BACKWARD SWEEP within colors: from each root r (color(r) = r),
   *     walk edges BACKWARD but only across same-colored endpoints; the
   *     vertices reached are exactly SCC(r) — they reach r (backward
   *     path = forward path to r) and r reaches them (their color says
   *     the min-reacher is r... r reaches everything it colors).
-  *     Every root's sweep runs in the SAME job (the root set is a
-  *     DataFrame, not a loop over roots).
+  *     Every root's sweep runs in the SAME [[graft.engine.Frontier]]
+  *     walk (the root set is a DataFrame, not a loop over roots).
   *  4. The identified SCCs leave the graph; repeat on the remainder.
   *     Each round removes at least every root's SCC (the global min of
   *     every weak component is always a root), so the round count is
@@ -81,8 +82,8 @@ object Scc {
     var round = 0
 
     // drop removed vertices from both tables. Lazy by default — trim
-    // composes several cheap peels per materialization (the flood
-    // `checkEvery` trick: each extra driver round-trip costs more than
+    // composes several cheap peels per materialization (the Frontier
+    // probe cadence: each extra job costs more than
     // the narrowed plan it saves on local[*] AND on a real cluster,
     // where a fixpoint loop's small jobs are scheduler-latency-bound)
     def shrink(removed: DataFrame): Unit = {
@@ -121,30 +122,12 @@ object Scc {
       if (sinceMat > 0) materialize()
       if (remaining > 0) {
         // --- 2. forward min-coloring to fixpoint (directed hash-min) ---
-        var colors = verts.select(col("vid"), col("vid").as("color"))
-          .localCheckpoint(eager = true)
-        var changed = 1L
-        var steps = 0
-        while (changed > 0 && steps < maxSupersteps) {
-          steps += 1
-          val msgs = edges
-            .join(colors.hint("SHUFFLE_HASH"),
-              edges("src") === colors("vid"))
-            .select(edges("dst").as("vid"), col("color"))
-          val mins = msgs.groupBy("vid").agg(min("color").as("m"))
-          val next = colors.select(col("vid"), col("color"))
-            .join(mins.hint("SHUFFLE_HASH"), Seq("vid"), "left")
-            .select(col("vid"),
-              least(col("color"), coalesce(col("m"), col("color")))
-                .as("color"),
-              (col("m").isNotNull && col("m") < col("color"))
-                .as("changed"))
-            .localCheckpoint(eager = true)
-          changed = next.filter(col("changed")).count()
-          colors = next.select(col("vid"), col("color"))
-        }
-        require(changed == 0, s"scc coloring did not converge " +
+        // every vertex left after the trim has an out-edge, so the CC
+        // vertex set (edge sources) is the remaining vertex set
+        val cc = ConnectedComponents.run(spark, edges, maxSupersteps)
+        require(cc.converged, s"scc coloring did not converge " +
           s"in $maxSupersteps supersteps")
+        val colors = cc.components.withColumnRenamed("component", "color")
         // --- 3. backward sweep from roots within same-color region ---
         val cSrc = colors.select(col("vid").as("src"),
           col("color").as("c_src"))
@@ -154,32 +137,19 @@ object Scc {
           .join(cDst.hint("SHUFFLE_HASH"), "dst")
           .filter(col("c_src") === col("c_dst"))
           .select(col("src"), col("dst"), col("c_src").as("color"))
-          .localCheckpoint(eager = true)
-        var reached = colors.filter(col("vid") === col("color"))
-          .select(col("vid"), col("color"))
-          .localCheckpoint(eager = true)
-        var grew = 1L
-        var bSteps = 0
-        while (grew > 0 && bSteps < maxSupersteps) {
-          bSteps += 1
-          val nbrs = sameColor
-            .join(reached.hint("SHUFFLE_HASH"),
-              sameColor("dst") === reached("vid") &&
-                sameColor("color") === reached("color"))
-            .select(sameColor("src").as("vid"),
-              sameColor("color").as("color"))
-            .distinct()
-          val fresh = nbrs.join(reached, Seq("vid"), "left_anti")
-            .localCheckpoint(eager = true)
-          grew = fresh.count()
-          if (grew > 0) reached = reached.unionAll(fresh)
+        val sweep = Frontier.run(sameColor,
+            colors.filter(col("vid") === col("color")), Seq("vid"),
+            maxSupersteps) { (e, last, _) =>
+          e.join(last.hint("SHUFFLE_HASH"),
+              e("dst") === last("vid") && e("color") === last("color"))
+            .select(e("src").as("vid"), e("color")).distinct()
         }
-        require(grew == 0,
+        require(sweep.converged,
           s"scc backward sweep did not converge in $maxSupersteps steps")
-        val found = reached.localCheckpoint(eager = true)
+        val found = sweep.reached
         pieces += found.select(col("vid"), col("color").as("scc_id"))
         shrink(found.select(col("vid")))
-        remaining -= found.count()
+        remaining -= sweep.rows
         materialize()
       }
     }

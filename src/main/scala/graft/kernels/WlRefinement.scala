@@ -32,7 +32,7 @@ object WlRefinement {
     // persist the edge view for the loop: the degree init plus every
     // round's multiset join probe it — a lazy derived caller graph
     // (the co-occurrence self-join) would otherwise be re-derived
-    // rounds+1 times (the Bfs.distances re-derivation guard)
+    // rounds+1 times
     val e = sym.select(col("src"), col("dst")).persist()
     // each round reads the previous colors twice (multiset build + the
     // rehash join) — checkpoint-truncated lineage per round, the same

@@ -1,5 +1,6 @@
 package graft.partition
 
+import graft.engine.Frontier
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,6 +35,12 @@ import org.apache.spark.sql.functions._
   *  - B7 cross-edge statistics (`BPartitioner.tpp:454-486`): per-worker
   *    block/vertex counts + cross-worker edge counts, with the plain
   *    hash-partition cross count as the baseline the layout must beat.
+  *
+  * Every entry point pins its edge table ([[Frontier.pinned]]): the
+  * layout passes a DERIVED table (e.g. a co-occurrence self-join) through
+  * dozens of flood-hop/stat joins, and unpinned each would re-derive it
+  * from the raw scan (the round-4 q38 profile: ~20 redundant derivations
+  * dominated the wall clock).
   */
 object BdgLayout {
 
@@ -51,79 +58,32 @@ object BdgLayout {
     df.filter(pmod(xxhash64(col("vid")), lit(1000000L))
       < lit((rate * 1000000L).toLong))
 
-  /** Persist `df` unless the caller already did, returning the handle and
-    * whether WE own the persist (and so must unpersist). The layout passes
-    * a DERIVED edge table (e.g. a co-occurrence self-join) through dozens
-    * of flood-hop/stat joins — without pinning it once at the outermost
-    * entry point, every hop re-derives it from the raw scan (the round-4
-    * q38 profile: ~20 redundant derivations dominated the wall clock). */
-  private def pinned(df: DataFrame): (DataFrame, Boolean) =
-    if (df.storageLevel.useMemory || df.storageLevel.useDisk) (df, false)
-    else (df.persist(), true)
-
   /** Synchronous min-color flood from `seedColors` (vid, color), frozen
     * adoption: per hop, every UNCOLORED vertex adjacent to a colored one
     * adopts the minimum neighboring color; colored vertices never change
     * (`BDGPartitioner.tpp:279-307`; min is the deterministic closure of
     * the reference's race-dependent first-arrival — equivalently, a
     * vertex ends with the min color among the NEAREST seeds, which is
-    * what the q56 recursive-CTE oracle replays). Returns all colored
-    * (vid, color) with lineage truncated, plus the hop count run.
-    *
-    * One Spark job per `checkEvery` hops: every hop's adopt step is a
-    * lazily-checkpointed piece, and a count (which doubles as the
-    * convergence probe) materializes the chain only every `checkEvery`
-    * hops — intermediate pieces are computed and cached transitively
-    * inside that job, so a 10-hop flood costs 5 driver roundtrips, not
-    * 10-20 (round-2 q38 spent most of its wall on per-hop chatter; the
-    * convergence check can lag a hop — an empty hop just yields one more
-    * empty piece, never a wrong color).
-    *
-    * The probe counts ALL pieces adopted since the previous probe, so the
-    * returned `colored` total (seed rows + every probe's sum) is exact and
-    * FREE — callers running a re-seed ladder (voronoiColors) previously
-    * re-counted the whole union per round, a full extra pass over the
-    * color table each round (round-3 VERDICT item 7). */
-  def floodColors(symIn: DataFrame, seedColors: DataFrame,
-                  maxHop: Int, checkEvery: Int = 2): (DataFrame, Int, Long) = {
-    val (sym, ownSym) = pinned(symIn)
-    val seedPiece = seedColors.select(col("vid"), col("color"))
-      .localCheckpoint(eager = true)
-    var colored = seedPiece.count() // cached — a cheap metadata-ish job
-    var pieces = List(seedPiece)
-    def colors: DataFrame = pieces.reduce(_ union _)
-    var hop = 0
-    var grew = true
-    var pending: List[DataFrame] = Nil
-    while (grew && hop < maxHop) {
-      hop += 1
-      val adopt = sym.join(colors.hint("SHUFFLE_HASH"),
-          sym("src") === colors("vid"))
-        .groupBy(sym("dst").as("vid")).agg(min(col("color")).as("color"))
-        .join(colors, Seq("vid"), "left_anti")
-        .localCheckpoint(eager = false) // cached when the probe job runs
-      pieces = adopt :: pieces
-      pending = adopt :: pending
-      if (pending.size >= checkEvery || hop == maxHop) {
-        // ONE job: counting the union materializes every pending piece
-        // transitively and yields their combined row count
-        val grewBy = pending.reduce(_ union _).count()
-        colored += grewBy
-        pending = Nil
-        if (grewBy == 0L) { grew = false; pieces = pieces.tail }
-      }
+    * what the q56 recursive-CTE oracle replays). A [[Frontier]] walk: each
+    * hop reads only the colors adopted the hop before. Returns all
+    * colored (vid, color), the hop count run, and the colored total (the
+    * walk's probe-summed `rows`: callers running a re-seed ladder need no
+    * recount of the color table). */
+  def floodColors(sym: DataFrame, seedColors: DataFrame,
+                  maxHop: Int): (DataFrame, Int, Long) = {
+    val flood = Frontier.run(sym, seedColors.select(col("vid"), col("color")),
+        Seq("vid"), maxHop) { (e, last, _) =>
+      e.join(last.hint("SHUFFLE_HASH"), e("src") === last("vid"))
+        .groupBy(e("dst").as("vid")).agg(min(col("color")).as("color"))
     }
-    // every piece was materialized by a probe job, so `colors` no longer
-    // depends on sym and the pin (if ours) can be released here
-    if (ownSym) sym.unpersist()
-    (colors, hop, colored)
+    (flood.reached, flood.hops, flood.rows)
   }
 
   /** B3: Voronoi colors to fixpoint-or-fallback. Input: symmetric edge
     * table (src, dst). Output: (vid, color), every vertex colored. */
   def voronoiColors(spark: SparkSession, symIn: DataFrame,
                     p: Params = Params()): DataFrame = {
-    val (sym, ownSym) = pinned(symIn)
+    val (sym, ownSym) = Frontier.pinned(symIn)
     val verts = sym.select(col("src").as("vid")).distinct()
       .repartition(col("vid")).persist()
     val n = verts.count()
@@ -202,7 +162,7 @@ object BdgLayout {
     * `workers` bins. Returns the driver-side block→worker map. */
   def assignBlocks(symIn: DataFrame, colors: DataFrame,
                    p: Params = Params()): Map[Long, Int] = {
-    val (sym, ownSym) = pinned(symIn)
+    val (sym, ownSym) = Frontier.pinned(symIn)
     val info = blockInfo(sym, colors)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toSet))
@@ -253,7 +213,7 @@ object BdgLayout {
                         colors: DataFrame, workers: Int = 8,
                         capNum: Long = 11L, capDen: Long = 10L): DataFrame = {
     import spark.implicits._
-    val (sym, ownSym) = pinned(symIn)
+    val (sym, ownSym) = Frontier.pinned(symIn)
     val info = blockInfo(sym, colors)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toSet))
@@ -292,7 +252,7 @@ object BdgLayout {
                           colors: DataFrame, assign: DataFrame,
                           workers: Int): DataFrame = {
     import spark.implicits._
-    val (sym, ownSym) = pinned(symIn)
+    val (sym, ownSym) = Frontier.pinned(symIn)
     val lay = colors.join(broadcast(assign), "color")
       .select(col("vid"), col("color"), col("worker")).persist()
     // edges with both endpoints colored, tagged with both workers; reused
@@ -337,7 +297,7 @@ object BdgLayout {
   def layout(spark: SparkSession, symIn: DataFrame,
              p: Params = Params()): DataFrame = {
     import spark.implicits._
-    val (sym, ownSym) = pinned(symIn)
+    val (sym, ownSym) = Frontier.pinned(symIn)
     val colors = voronoiColors(spark, sym, p)
     val blk2w = assignBlocks(sym, colors, p)
     if (ownSym) sym.unpersist() // blk2w is driver-side; colors checkpointed
@@ -353,7 +313,7 @@ object BdgLayout {
     * leaving the worker under each assignment. */
   def crossEdgeStats(spark: SparkSession, symIn: DataFrame,
                      p: Params = Params()): DataFrame = {
-    val (sym, ownSym) = pinned(symIn)
+    val (sym, ownSym) = Frontier.pinned(symIn)
     val lay = layout(spark, sym, p).persist()
     val wA = sym
       .join(lay.select(col("vid").as("src"), col("worker").as("wa")), "src")

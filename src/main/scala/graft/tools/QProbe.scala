@@ -7,12 +7,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.QProbe <sfDir> <queryName>[,<queryName>...]
   *        [cores] [rounds]
+  * `cores` defaults to SPARK_GRAFT_CPUS, else the host's processor count.
   */
 object QProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cores = args.lift(2).getOrElse("32")
+    val cores = args.lift(2).orElse(sys.env.get("SPARK_GRAFT_CPUS"))
+      .getOrElse(Runtime.getRuntime.availableProcessors.toString)
     val rounds = args.lift(3).map(_.toInt).getOrElse(1)
     val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
       "/dev/shm/graft-spark-local")

@@ -470,13 +470,59 @@ class KernelSpec extends SparkSpec {
   test("deep BFS (60-vertex path, maxHop 50) exercises reached-set compaction") {
     import spark.implicits._
     // a path graph forces one frontier vertex per hop — 50 hops crosses
-    // the compactEvery threshold multiple times, so the folded reached
+    // the Frontier fold threshold multiple times, so the folded reached
     // table (not the loose piece union) carries most of the traversal
     val es = (0L until 59L).map(i => (i, i + 1))
     val got = Bfs.distances(Edges.symmetrize(edgeDF(es)),
         Seq(0L).toDF("vid"), 50)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === (0L to 50L).map(i => i -> i).toMap)
+  }
+
+  test("frontier walk: one job per two hops on a 20-hop path") {
+    import spark.implicits._
+    // a caller that checkpoints (or probes) every hop eagerly runs >= 20
+    // jobs here; the Frontier cadence runs one count per two hops. AQE
+    // map-stage jobs and broadcast builds are switched off for the count:
+    // the planner adds those per shuffle whatever the cadence
+    val sym = Edges.symmetrize(edgeDF((0L until 20L).map(i => (i, i + 1))))
+      .persist()
+    sym.count()
+    val group = "frontier-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the listener bus is asynchronous but FIFO: once a later sentinel
+    // job's start arrives, every job of the walk has been counted
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)    => jobs.incrementAndGet()
+          case Some("sentinel") => drained.countDown()
+          case _                => ()
+        }
+    }
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    spark.sparkContext.addSparkListener(listener)
+    val got = try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.sparkContext.setJobGroup(group, group)
+      val d = Bfs.distances(sym, Seq(0L).toDF("vid"), maxHop = 20)
+      spark.sparkContext.setJobGroup("sentinel", "sentinel")
+      spark.sparkContext.parallelize(Seq(1)).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      d
+    } finally {
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get <= 20 / 2 + 2, s"${jobs.get} jobs for a 20-hop walk")
+    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      (0L to 20L).map(i => i -> i).toMap)
+    sym.unpersist()
   }
 
   test("BFS with no reachable frontier terminates at the seed set") {
@@ -618,7 +664,10 @@ class KernelSpec extends SparkSpec {
       // 2-cycle with in/out tails: tails are singletons
       "tailed" -> Seq((1L, 2L), (2L, 1L), (0L, 1L), (2L, 9L)),
       // nested layers: SCC behind an SCC (coloring needs 2 rounds)
-      "layered" -> Seq((1L, 2L), (2L, 1L), (2L, 5L), (5L, 6L), (6L, 5L)))
+      "layered" -> Seq((1L, 2L), (2L, 1L), (2L, 5L), (5L, 6L), (6L, 5L)),
+      // directed 20-ring: 19-hop coloring and backward sweep, deep enough
+      // to fold the sweep's reached set and lag its convergence probe
+      "ring20" -> (1L to 20L).map(i => (i, i % 20 + 1)))
     graphs.foreach { case (name, es) =>
       val got = Scc.run(spark, dDF(es))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1348,6 +1397,24 @@ class KernelSpec extends SparkSpec {
     assert(got2((10L, 11L)) === 1L)
     assert(got2((11L, 12L)) === 1L)
     assert(got2((1L, 2L)) === 0L)
+    // 20-cycle with a pendant path 20-30-31-32: a cycle edge's detour is
+    // 19 hops long; only the path edges are bridges
+    val ring = (1L to 20L).map(i => (i, i % 20 + 1))
+    val path = Seq((20L, 30L), (30L, 31L), (31L, 32L))
+    val got3 = Bridges.probe(spark, edgeDF(ring ++ path),
+      (ring ++ path).map { case (a, b) =>
+        (s"$a:$b", math.min(a, b), math.max(a, b)) }
+        .toDF("cid", "src", "dst"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(got3 === (ring ++ path).map { case (a, b) =>
+      (math.min(a, b), math.max(a, b)) -> (if (path.contains((a, b))) 1L
+        else 0L) }.toMap)
+    // a walk cut short by maxIter fails instead of reporting bridges
+    val line = (0L until 10L).map(i => (i, i + 1))
+    intercept[IllegalArgumentException] {
+      Bridges.probe(spark, edgeDF(line),
+        Seq(("5:6", 5L, 6L)).toDF("cid", "src", "dst"), maxIter = 3)
+    }
   }
 
   test("louvain coarsen: communities contract, intra edges become self-loops") {
@@ -1371,6 +1438,22 @@ class KernelSpec extends SparkSpec {
         Seq(1L, 2L, 3L, 4L, 5L).toDF("vid"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 0L, 5L -> 0L))
+    // 20-cycle with a pendant path 20-30-31-32: removing a cycle vertex
+    // leaves an 18-hop detour; the path's attachment and inner vertices
+    // are the only cut vertices
+    val ring = (1L to 20L).map(i => (i, i % 20 + 1))
+    val deep = Bridges.articulationProbe(spark,
+        edgeDF(ring ++ Seq((20L, 30L), (30L, 31L), (31L, 32L))),
+        ((1L to 20L) ++ Seq(30L, 31L, 32L)).toDF("vid"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(deep === ((1L to 20L) ++ Seq(30L, 31L, 32L)).map(v =>
+      v -> (if (Set(20L, 30L, 31L).contains(v)) 1L else 0L)).toMap)
+    // a walk cut short by maxIter fails instead of flagging cut vertices
+    intercept[IllegalArgumentException] {
+      Bridges.articulationProbe(spark,
+        edgeDF((0L until 10L).map(i => (i, i + 1))), Seq(5L).toDF("vid"),
+        maxIter = 3)
+    }
   }
 
   test("simrank: hand-traced two ppm iterations on path4 and triangle") {
@@ -1415,6 +1498,15 @@ class KernelSpec extends SparkSpec {
       Map(1L -> ((3L, 0L)), 10L -> ((3L, 1L))))
     assert(run(golden("path4")) === Map(1L -> ((4L, 1L))))
     assert(run(golden("star5")) === Map(1L -> ((5L, 1L))))
+    // an even 20-cycle and an odd 21-cycle: ~10-level parity walks
+    val c20 = (0L until 20L).map(i => (1L + i, 1L + (i + 1) % 20))
+    val c21 = (0L until 21L).map(i => (101L + i, 101L + (i + 1) % 21))
+    assert(run(c20 ++ c21) === Map(1L -> ((20L, 1L)), 101L -> ((21L, 0L))))
+    // a walk cut short by maxIter fails instead of reporting bipartite
+    intercept[IllegalArgumentException] {
+      Bipartite.run(spark, edgeDF((0L until 10L).map(i => (i, i + 1))),
+        maxIter = 3)
+    }
   }
 
   test("influence: degree-discount picks the hub, then a discounted leaf") {

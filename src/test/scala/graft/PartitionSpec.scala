@@ -106,7 +106,7 @@ class PartitionSpec extends SparkSpec {
     val sym = Edges.symmetrize(plantedGraph).persist()
     val seeds = Seq(0L, 50L, 100L).toDF("vid")
       .select(col("vid"), col("vid").as("color"))
-    // odd maxHop + early convergence: the probe cadence (checkEvery=2)
+    // odd maxHop + early convergence: the Frontier probe cadence
     // must still sum every adopted piece exactly once
     val (colors, _, colored) = BdgLayout.floodColors(sym, seeds, maxHop = 7)
     assert(colored === colors.count())

@@ -236,8 +236,7 @@ class QualitySpec extends SparkSpec {
   test("deep perSeedDistances compacts its reached set (path, 12 hops)") {
     val sym = graft.graph.Edges.symmetrize(
       edgeDF((1L to 12L).map(i => (i, i + 1))))
-    val d = Bfs.perSeedDistances(sym, Seq(1L).toDF("vid"),
-      maxHop = 12, compactEvery = 3)
+    val d = Bfs.perSeedDistances(sym, Seq(1L).toDF("vid"), maxHop = 12)
     assert(d.count() == 13L)
     assert(d.filter(col("vid") === 13L).head.getLong(2) == 12L)
   }

@@ -3,10 +3,14 @@
 (parquet under OUTDIR), run the oracle SQL from oracle_sql.json in DuckDB
 against the same sf tables, sort columns by name and rows by value, and
 compare. Local dev harness only (the real gate is the round driver)."""
+# Usage: check_oracle.py [SFDIR] [OUTDIR] [QUERIES]. QUERIES is Verify's
+# optional comma-separated query list: only those queries are checked
+# (each still flagged if its output is missing).
 import duckdb, json, sys, glob, os
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
@@ -16,16 +20,19 @@ for t in ["region","nation","customer","supplier","part","orders",
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+# oracle_sql.json always lists every oracled query; a subset run checks
+# only the queries it was asked for
+wanted = lambda name: only is None or name in only
 fails = []
 matched, rows_only = 0, 0
 # a query that crashed in Verify dumps nothing — flag it, don't skip it
-for name in sorted(oracle):
+for name in sorted(oracle if only is None else only):
     if not os.path.isdir(f"{out_dir}/{name}"):
         print(f"{name:22s} MISSING OUTPUT (query crashed in Verify?)")
         fails.append(name)
 for name in sorted(os.listdir(out_dir)):
     d = f"{out_dir}/{name}"
-    if not os.path.isdir(d):
+    if not os.path.isdir(d) or not wanted(name):
         continue
     files = glob.glob(f"{d}/*.parquet")
     got = con.execute(f"SELECT * FROM read_parquet({files})").df()
