@@ -51,7 +51,9 @@ final class Checkpointer(val root: String, val runId: String) {
       java.util.List.of(line),
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND)
-    spark.read.parquet(dst.toString)
+    // the schema is the written one: passing it skips the Spark job that
+    // infers it from a part-file footer on every commit
+    spark.read.schema(state.schema).parquet(dst.toString)
   }
 
   /** Durably record one iteration's metrics next to its checkpoint

@@ -1,7 +1,8 @@
 package graft.engine
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, count, lit}
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
 
@@ -38,8 +39,17 @@ final class ShuffleMeter(spark: SparkSession) extends SparkListener {
 /** Superstep loop driver: materialize-per-iteration (localCheckpoint for
   * ephemeral runs, [[Checkpointer]] for durable/resumable ones), converge
   * test, metrics. The reference's equivalent is the BSP loop + halt bitmap
-  * (`partition/BPartitioner.tpp:361-424`); here convergence is an explicit
-  * aggregate over the state delta and each superstep is one Catalyst job.
+  * (`partition/BPartitioner.tpp:361-424`).
+  *
+  * Convergence statistics ride along with the work, as the reference's
+  * workers fold partials into the `Aggregator` while tasks finish
+  * (`util/aggregator.hpp:12-30`, merged at `sys_sync`): each state's plan
+  * carries `Dataset.observe(Observation(), count, delta)`, so the job that
+  * materializes it also computes its (rows, delta) and no job re-scans a
+  * state. The observed values are exact only because every kernel's delta
+  * aggregate is one whose result does not depend on the order in which
+  * tasks merge (a count, a sum of longs, a max); a floating-point sum
+  * would not be.
   */
 object Superstep {
 
@@ -53,21 +63,30 @@ object Superstep {
       case None    => df.localCheckpoint(eager = true)
     }
 
+  /** Materialize `df` and return it with its (rows, delta), observed on
+    * the materializing job itself. The unnamed Observation is unique per
+    * call, so concurrent runs never read each other's metrics. */
+  private def observed(spark: SparkSession, df: DataFrame, delta: Column,
+                       iter: Int, ckpt: Option[Checkpointer])
+      : (DataFrame, Long, Double) = {
+    val obs = Observation()
+    val mat = materialize(spark, df.observe(obs, count(lit(1)).as("rows"),
+      coalesce(delta.cast("double"), lit(0.0)).as("delta")), iter, ckpt)
+    val m = obs.get
+    (mat, m("rows").asInstanceOf[Long], m("delta").asInstanceOf[Double])
+  }
+
   /** Generic fixpoint loop.
     *
     * @param init       initial state (will be materialized as iter 0)
     * @param step       prevState => nextState (lazy plan; materialized here)
-    * @param delta      (prevState, materializedNext) => convergence metric
-    *                   (e.g. #changed labels, max |rank diff|); computed on
-    *                   the cheap, already-materialized states
-    * @param converged  delta => done?
+    * @param delta      the convergence measure: one aggregate over the next
+    *                   state's own rows whose value does not depend on task
+    *                   merge order (e.g. `sum` of a carried 0/1 `changed`
+    *                   flag, `max` of a carried |rank diff|); empty → 0
+    * @param converged  (rows, delta, previous state's rows) => done?
+    *                   (previous rows are -1 right after a resume)
     * @param resume     continue from the checkpointer's latest state
-    * @param stats      optional fused (rows, delta) extractor over the
-    *                   materialized next state — kernels whose delta is a
-    *                   function of the next state alone (e.g. a carried
-    *                   `changed` flag) compute both in ONE job instead of
-    *                   a count job plus a delta job per superstep; values
-    *                   must equal what countRows + delta would report
     * @return (final state, metrics, iterations run, converged?)
     */
   def run(
@@ -75,13 +94,11 @@ object Superstep {
       algo: String,
       init: => DataFrame,
       step: DataFrame => DataFrame,
-      delta: (DataFrame, DataFrame) => Double,
-      converged: Double => Boolean,
+      delta: Column,
+      converged: (Long, Double, Long) => Boolean,
       maxIter: Int,
       ckpt: Option[Checkpointer] = None,
-      resume: Boolean = false,
-      countRows: Boolean = true,
-      stats: Option[DataFrame => (Long, Double)] = None)
+      resume: Boolean = false)
       : (DataFrame, Seq[IterationMetric], Int, Boolean) = {
 
     val meter = new ShuffleMeter(spark)
@@ -90,8 +107,12 @@ object Superstep {
 
     val resumed = if (resume) ckpt.flatMap(_.latest(spark)) else None
     val startIter = resumed.map(_._1).getOrElse(0)
-    var state = resumed.map(_._2)
-      .getOrElse(materialize(spark, init, 0, ckpt))
+    var (state, prevRows) = resumed match {
+      case Some((_, df)) => (df, -1L)
+      case None =>
+        val (df, rows, _) = observed(spark, init, delta, 0, ckpt)
+        (df, rows)
+    }
 
     var iter = startIter
     var done = false
@@ -99,23 +120,15 @@ object Superstep {
       iter += 1
       val t0 = System.nanoTime()
       val (r0, w0) = meter.snapshot
-      val mat = materialize(spark, step(state), iter, ckpt)
-      // rows metric costs one (cheap) extra job per superstep; callers on a
-      // pure-throughput path (fixed-iteration bench) can skip it, and
-      // kernels with a next-state-only delta fuse both into one job
-      val (rows, d) = stats match {
-        case Some(f) => f(mat)
-        case None    =>
-          val r = if (countRows) mat.count() else -1L
-          (r, delta(state, mat))
-      }
+      val (mat, rows, d) = observed(spark, step(state), delta, iter, ckpt)
       val (r1, w1) = meter.snapshot
       val m = IterationMetric(algo, runId, iter, rows, d,
         (System.nanoTime() - t0) / 1000000L, r1 - r0, w1 - w0)
       metrics += m
       ckpt.foreach(_.recordMetric(m)) // durable, next to the checkpoint
+      done = converged(rows, d, prevRows)
       state = mat
-      done = converged(d)
+      prevRows = rows
     }
     meter.close()
     (state, metrics.toSeq, iter, done)

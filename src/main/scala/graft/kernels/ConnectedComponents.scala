@@ -52,9 +52,8 @@ object ConnectedComponents {
     val edges = sym.select(col("src"), col("dst"))
       .repartition(col("src")).persist()
 
-    // state carries a per-vertex `changed` flag so convergence is a filter
-    // over the already-materialized checkpoint instead of a prev⋈next join
-    // (one extra superstep-sized join per iteration saved)
+    // state carries a per-vertex `changed` flag (also the frontier), so
+    // the changed count is an aggregate over the state's own rows
     def init: DataFrame = {
       val ids = Edges.vertexIds(edges)
       initState match {
@@ -98,22 +97,11 @@ object ConnectedComponents {
           (col("m").isNotNull && col("m") < col("component")).as("changed"))
     }
 
-    def delta(prev: DataFrame, next: DataFrame): Double =
-      next.filter(col("changed")).count().toDouble
-
-    // fused per-superstep stats: state rows + changed count in ONE job
-    // (the separate count + filter-count pair costs a driver round-trip
-    // per iteration; values are identical by construction)
-    def stats(next: DataFrame): (Long, Double) = {
-      val r = next.agg(count(lit(1)),
-        coalesce(sum(when(col("changed"), 1L).otherwise(0L)), lit(0L)))
-        .head()
-      (r.getLong(0), r.getLong(1).toDouble)
-    }
-
+    // changed count = sum(changed), observed on the job that materializes
+    // the state (a sum of longs is exact in any merge order)
     val (state, metrics, iters, done) = Superstep.run(
-      spark, "cc", init, step, delta, _ == 0.0, maxIter, ckpt, resume,
-      stats = Some(stats))
+      spark, "cc", init, step, sum(col("changed").cast("long")),
+      (_, d, _) => d == 0.0, maxIter, ckpt, resume)
     edges.unpersist()
     Result(state, metrics, iters, done)
   }

@@ -68,10 +68,10 @@ object EigenCentrality {
         .groupBy(e("dst").as("vid")).agg(sum(col("x")).as("x"))
     }
 
+    // delta: the largest walk count (a max, exact in any merge order)
     val (state, metrics, it, _) = Superstep.run(
-      spark, "eigencentrality", init, step,
-      (_, _) => Double.MaxValue, _ => false, iters,
-      ckpt = None, resume = false, countRows = false)
+      spark, "eigencentrality", init, step, max(col("x")),
+      (_, _, _) => false, iters)
     val total = state.agg(sum(col("x"))).first().getDouble(0)
     val out = state.select(col("vid"), (col("x") / total).as("score"))
     e.unpersist(); verts.unpersist()

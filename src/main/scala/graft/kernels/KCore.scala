@@ -1,6 +1,6 @@
 package graft.kernels
 
-import graft.engine.{Checkpointer, IterationMetric, Superstep}
+import graft.engine.{IterationMetric, Superstep}
 import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,33 +39,30 @@ object KCore {
     import org.apache.spark.sql.expressions.Window
     val e = sym.select(col("src"), col("dst"))
       .repartition(col("src")).persist()
-    var c = Edges.degrees(e).select(col("vid"), col("degree").as("c"))
-      .localCheckpoint(eager = true)
     val w = Window.partitionBy("vid").orderBy(col("c").desc)
-    def step(prev: DataFrame): DataFrame = e
-      .join(prev.hint("SHUFFLE_HASH"), e("src") === prev("vid"))
-      .select(e("dst").as("vid"), col("c"))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .groupBy("vid").agg(max(least(col("c"), col("rn"))).as("c"))
-    iters match {
-      case Some(k) =>
-        (1 to k).foreach { _ =>
-          c = step(c).localCheckpoint(eager = true) }
-      case None =>
-        var changed = 1L
-        var it = 0
-        while (changed > 0 && it < maxIter) {
-          it += 1
-          val next = step(c).localCheckpoint(eager = true)
-          changed = next.as("n").join(c.as("p"), "vid")
-            .filter(col("n.c") =!= col("p.c")).count()
-          c = next
-        }
-        require(changed == 0,
-          s"coreness did not converge in $maxIter h-index rounds")
+    // state carries a per-vertex `changed` flag, so the changed count is
+    // an aggregate over the state's own rows, observable on the job that
+    // materializes it
+    def init: DataFrame = Edges.degrees(e)
+      .select(col("vid"), col("degree").as("c"), lit(true).as("changed"))
+    def step(prev: DataFrame): DataFrame = {
+      val h = e.join(prev.hint("SHUFFLE_HASH"), e("src") === prev("vid"))
+        .select(e("dst").as("vid"), col("c"))
+        .withColumn("rn", row_number().over(w).cast("long"))
+        .groupBy("vid").agg(max(least(col("c"), col("rn"))).as("h"))
+      // the (vid, c) plan the edge join reads: one shared exchange
+      h.join(prev.select(col("vid"), col("c")).hint("SHUFFLE_HASH"),
+          Seq("vid"), "left")
+        .select(col("vid"), col("h").as("c"),
+          coalesce(col("h") =!= col("c"), lit(false)).as("changed"))
     }
+    val (state, _, _, done) = Superstep.run(spark, "coreness", init, step,
+      sum(col("changed").cast("long")), (_, d, _) => iters.isEmpty && d == 0.0,
+      iters.getOrElse(maxIter))
     e.unpersist()
-    c
+    require(iters.isDefined || done,
+      s"coreness did not converge in $maxIter h-index rounds")
+    state.select(col("vid"), col("c"))
   }
 
   /** s-core (weighted k-core — Eidsaa & Almaas, PRE 2013): peel vertices
@@ -165,9 +162,7 @@ object KCore {
   /** @param sym symmetric edge table (src, dst)
     * @return surviving (vid, degree) rows of the k-core (degree = induced) */
   def run(spark: SparkSession, sym: DataFrame, k: Int,
-          maxIter: Int = 100,
-          ckpt: Option[Checkpointer] = None,
-          resume: Boolean = false): Result = {
+          maxIter: Int = 100): Result = {
     // hash-partition the persisted edge table on the join key: every
     // superstep's state join then reuses this partitioning instead of
     // re-shuffling |E| rows per iteration (state is already hash(vid)-
@@ -188,19 +183,12 @@ object KCore {
       Edges.degrees(induced).filter(col("degree") >= k)
     }
 
-    // each state is counted ONCE (the previous iteration's count is carried
-    // forward) — round 1 recounted both sides every superstep, 3 count jobs
-    // per iteration including Superstep's own rows metric
-    var lastRows = -1L
-    def delta(prev: DataFrame, next: DataFrame): Double = {
-      val p = if (lastRows >= 0) lastRows else prev.count()
-      val n = next.count() // cheap: next is already materialized
-      lastRows = n
-      (p - n).toDouble
-    }
-
+    // peeling only ever removes vertices, so the core is reached when the
+    // observed survivor count stops changing; the recorded delta is the
+    // survivors' degree sum (twice the induced edge count)
     val (state, metrics, iters, done) = Superstep.run(
-      spark, s"kcore$k", init, step, delta, _ == 0.0, maxIter, ckpt, resume)
+      spark, s"kcore$k", init, step, sum(col("degree")),
+      (rows, _, prevRows) => rows == prevRows, maxIter)
     edges.unpersist()
     Result(state, metrics, iters, done)
   }

@@ -16,6 +16,11 @@ import org.apache.spark.sql.functions._
   * per vid take max of struct(count, -label) — lexicographic struct
   * ordering gives greatest count, then smallest label. Both aggregations
   * get map-side partial combine from Catalyst.
+  *
+  * The state is (vid, label, changed); the changed-label count is
+  * sum(changed), observed by [[Superstep]] on the job that materializes
+  * the state (a sum of longs is exact in any merge order), and the run
+  * stops early when it is 0. The result is (vid, label).
   */
 object LabelPropagation {
 
@@ -46,8 +51,8 @@ object LabelPropagation {
     val edges = sym.select((Seq("src", "dst") ++ weightCol).map(col): _*)
       .repartition(col("src")).persist()
 
-    def init: DataFrame =
-      Edges.vertexIds(edges).select(col("vid"), col("vid").as("label"))
+    def init: DataFrame = Edges.vertexIds(edges)
+      .select(col("vid"), col("vid").as("label"), lit(true).as("changed"))
 
     def step(labels: DataFrame): DataFrame = {
       val msgs = edges
@@ -57,22 +62,19 @@ object LabelPropagation {
       val hist = msgs.groupBy(col("vid"), col("label"))
         .agg(weightCol.map(c => sum(col(c))).getOrElse(count(lit(1)))
           .as("cnt"))
-      hist.groupBy("vid")
+      val mode = hist.groupBy("vid")
         .agg(max(struct(col("cnt").as("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("vid"), (-col("m.nl")).as("label"))
+      // the (vid, label) plan the message join reads: one shared exchange
+      val prev = labels.select(col("vid"), col("label"))
+      mode.join(prev.hint("SHUFFLE_HASH"), Seq("vid"), "left")
+        .select(col("vid"), (-col("m.nl")).as("label"),
+          coalesce(-col("m.nl") =!= col("label"), lit(false)).as("changed"))
     }
 
-    def delta(prev: DataFrame, next: DataFrame): Double =
-      next.as("n").join(prev.as("p"), "vid")
-        .filter(col("n.label") =!= col("p.label")).count().toDouble
-
-    // countRows=false: the state is already materialized eagerly by the
-    // checkpoint, no query consumes LP's rows metric, and the count job
-    // costs a driver round-trip per superstep
     val (state, metrics, iters, done) = Superstep.run(
-      spark, "lp", init, step, delta, _ == 0.0, iterations, ckpt, resume,
-      countRows = false)
+      spark, "lp", init, step, sum(col("changed").cast("long")),
+      (_, d, _) => d == 0.0, iterations, ckpt, resume)
     edges.unpersist()
-    Result(state, metrics, iters, done)
+    Result(state.select(col("vid"), col("label")), metrics, iters, done)
   }
 }

@@ -22,7 +22,10 @@ import org.apache.spark.sql.functions._
   * single reducer's fan-in, then reduced per dst. Dangling mass is a scalar
   * aggregate collected per superstep (the reference's two-phase
   * `Aggregator` shape, `util/aggregator.hpp:12-30`). State is checkpointed
-  * per superstep; convergence is max |Δrank| ≤ tol.
+  * per superstep as (vid, rank, diff), where diff = |rank − previous rank|
+  * comes out of the same row as the new rank; convergence is
+  * max(diff) ≤ tol, observed by [[Superstep]] on the job that materializes
+  * the state (a max is exact in any merge order). The result is (vid, rank).
   */
 object PageRank {
 
@@ -163,13 +166,14 @@ object PageRank {
     // cutting supersteps-to-convergence on mostly-unchanged graphs.
     // Vertices absent from the seed (newly added) fall back to tele.
     def init: DataFrame = initRanks match {
-      case None => vertsT.select(col("vid"), col("tele").as("rank"))
+      case None =>
+        vertsT.select(col("vid"), col("tele").as("rank"), lit(0.0).as("diff"))
       case Some(r0) =>
         vertsT.select(col("vid"), col("tele"))
           .join(r0.select(col("vid"), col("rank").as("r0")),
             Seq("vid"), "left")
           .select(col("vid"),
-            coalesce(col("r0"), col("tele")).as("rank"))
+            coalesce(col("r0"), col("tele")).as("rank"), lit(0.0).as("diff"))
     }
 
     def step(ranks: DataFrame): DataFrame = {
@@ -208,31 +212,25 @@ object PageRank {
       val addTerm =
         if (pers.isEmpty) lit(Teleport / n + Damping * danglingMass / n)
         else (lit(Teleport) + lit(Damping * danglingMass)) * col("tele")
-      vertsT.join(summed.hint("SHUFFLE_HASH"), Seq("vid"), "left")
-        .select(col("vid"),
-          (addTerm
-            + lit(Damping) * coalesce(col("s"), lit(0.0))).as("rank"))
+      // the previous state holds every vertex, so the new rank and its diff
+      // come out of one row; read as the same (vid, rank) plan the
+      // contribution join reads, both joins share one exchange of the state
+      val prev = ranks.select(col("vid"), col("rank"))
+      val base = if (pers.isEmpty) prev else prev.join(vertsT, Seq("vid"))
+      val next = addTerm + lit(Damping) * coalesce(col("s"), lit(0.0))
+      base.join(summed.hint("SHUFFLE_HASH"), Seq("vid"), "left")
+        .select(col("vid"), next.as("rank"), abs(next - col("rank")).as("diff"))
     }
-
-    def delta(prev: DataFrame, next: DataFrame): Double =
-      next.as("n").join(prev.as("p"), "vid")
-        .agg(max(abs(col("n.rank") - col("p.rank")))).first().getDouble(0)
-
-    val (iters, conv): (Int, Double => Boolean) = fixedIter match {
-      case Some(k) => (k, _ => false)
-      case None    => (maxIter, _ <= tol)
-    }
-    // with fixedIter the delta job is skipped entirely (oracle-parity mode)
-    val deltaFn: (DataFrame, DataFrame) => Double =
-      if (fixedIter.isDefined) (_, _) => Double.MaxValue else delta
 
     val (state, metrics, it, done) = Superstep.run(
-      spark, "pagerank", init, step, deltaFn, conv, iters, ckpt, resume,
-      countRows = fixedIter.isEmpty || ckpt.isDefined)
+      spark, "pagerank", init, step, max(col("diff")),
+      (_, d, _) => fixedIter.isEmpty && d <= tol, fixedIter.getOrElse(maxIter),
+      ckpt, resume)
     links.unpersist(); verts.unpersist(); outDeg.unpersist()
     danglingVids.foreach(_.unpersist())
     pers.foreach(_.unpersist())
     if (pers.isDefined) vertsT.unpersist()
-    Result(state, metrics, it, done || fixedIter.isDefined)
+    Result(state.select(col("vid"), col("rank")), metrics, it,
+      done || fixedIter.isDefined)
   }
 }

@@ -479,19 +479,14 @@ class KernelSpec extends SparkSpec {
     assert(got === (0L to 50L).map(i => i -> i).toMap)
   }
 
-  test("frontier walk: one job per two hops on a 20-hop path") {
-    import spark.implicits._
-    // a caller that checkpoints (or probes) every hop eagerly runs >= 20
-    // jobs here; the Frontier cadence runs one count per two hops. AQE
-    // map-stage jobs and broadcast builds are switched off for the count:
-    // the planner adds those per shuffle whatever the cadence
-    val sym = Edges.symmetrize(edgeDF((0L until 20L).map(i => (i, i + 1))))
-      .persist()
-    sym.count()
-    val group = "frontier-job-count"
+  /** Jobs `body` runs, counted by job group. AQE map-stage jobs and
+    * broadcast builds are switched off for the count: the planner adds
+    * those per shuffle whatever the loop does. */
+  private def jobsOf[A](body: => A): (Int, A) = {
+    val group = "job-count"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     // the listener bus is asynchronous but FIFO: once a later sentinel
-    // job's start arrives, every job of the walk has been counted
+    // job's start arrives, every job of the body has been counted
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -506,23 +501,114 @@ class KernelSpec extends SparkSpec {
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
     spark.sparkContext.addSparkListener(listener)
-    val got = try {
+    try {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       spark.sparkContext.setJobGroup(group, group)
-      val d = Bfs.distances(sym, Seq(0L).toDF("vid"), maxHop = 20)
+      val a = body
       spark.sparkContext.setJobGroup("sentinel", "sentinel")
       spark.sparkContext.parallelize(Seq(1)).count()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      d
+      (jobs.get, a)
     } finally {
       saved.foreach { case (k, v) => spark.conf.set(k, v) }
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
-    assert(jobs.get <= 20 / 2 + 2, s"${jobs.get} jobs for a 20-hop walk")
+  }
+
+  test("frontier walk: one job per two hops on a 20-hop path") {
+    import spark.implicits._
+    // a caller that checkpoints (or probes) every hop eagerly runs >= 20
+    // jobs here; the Frontier cadence runs one count per two hops
+    val sym = Edges.symmetrize(edgeDF((0L until 20L).map(i => (i, i + 1))))
+      .persist()
+    sym.count()
+    val (jobs, got) = jobsOf(Bfs.distances(sym, Seq(0L).toDF("vid"),
+      maxHop = 20))
+    assert(jobs <= 20 / 2 + 2, s"$jobs jobs for a 20-hop walk")
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       (0L to 20L).map(i => i -> i).toMap)
     sym.unpersist()
+  }
+
+  test("superstep stats are observed: a superstep runs only its materialization's jobs") {
+    import graft.engine.{Checkpointer, Superstep}
+    // a 20-hop path: none of the three kernels settles within k supersteps
+    val sym = Edges.symmetrize(edgeDF((0L until 20L).map(i => (i, i + 1))))
+      .persist()
+    sym.count()
+    val k = 3
+    Seq(false, true).foreach { durable =>
+      def ck(): Option[Checkpointer] =
+        if (!durable) None
+        else Some(new Checkpointer(
+          java.nio.file.Files.createTempDirectory("graft-jobs").toString, "run"))
+      // the jobs one state's materialization runs on its own
+      val (mat, _) = jobsOf(Superstep.materialize(spark,
+        sym.groupBy(col("src").as("vid")).count(), 0, ck()))
+      val kernels: Seq[(String, Int => Int)] = Seq(
+        "pagerank" -> (i => PageRank.run(spark, sym, tol = 0.0, maxIter = i,
+          symmetric = true, ckpt = ck()).metrics.size),
+        "cc" -> (i => ConnectedComponents.run(spark, sym, maxIter = i,
+          ckpt = ck()).metrics.size),
+        "lp" -> (i => LabelPropagation.run(spark, sym, i, ckpt = ck())
+          .metrics.size))
+      kernels.foreach { case (name, run) =>
+        val (pre, _) = jobsOf(run(0))
+        val (all, steps) = jobsOf(run(k))
+        assert(steps === k, s"$name durable=$durable")
+        assert((all - pre).toDouble / k === mat.toDouble,
+          s"$name durable=$durable: jobs per superstep vs one materialization")
+      }
+    }
+    sym.unpersist()
+  }
+
+  test("observed superstep stats equal a recount over consecutive fixed runs") {
+    val sym = Edges.symmetrize(edgeDF(Oracles.powerLaw(60, seed = 5)))
+      .persist()
+    val n = Edges.vertexIds(sym).count()
+    def ranks(i: Int) = PageRank.run(spark, sym, fixedIter = Some(i)).ranks
+    val pr = PageRank.run(spark, sym, fixedIter = Some(4))
+    assert(pr.metrics.map(_.iter) === (1 to 4))
+    pr.metrics.foreach { m =>
+      val expect = ranks(m.iter).as("n").join(ranks(m.iter - 1).as("p"), "vid")
+        .agg(max(abs(col("n.rank") - col("p.rank")))).first().getDouble(0)
+      assert(m.rows === n, s"pagerank superstep ${m.iter}")
+      assert(m.delta == expect, s"pagerank superstep ${m.iter}")
+    }
+    def labels(i: Int) = LabelPropagation.run(spark, sym, i).labels
+    val lp = LabelPropagation.run(spark, sym, 4)
+    assert(lp.metrics.nonEmpty)
+    lp.metrics.foreach { m =>
+      val changed = labels(m.iter).as("n")
+        .join(labels(m.iter - 1).as("p"), "vid")
+        .filter(col("n.label") =!= col("p.label")).count()
+      assert(m.rows === n, s"lp superstep ${m.iter}")
+      assert(m.delta == changed.toDouble, s"lp superstep ${m.iter}")
+    }
+    sym.unpersist()
+  }
+
+  test("empty edge table: PageRank, CC and LP stop with observed rows == 0") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.{Seconds, Span}
+    import spark.implicits._
+    // a plan that never reported its observed metrics would block forever
+    implicit val signaler: Signaler = ThreadSignaler
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    TimeLimits.failAfter(Span(120, Seconds)) {
+      val pr = PageRank.run(spark, empty, symmetric = true)
+      val cc = ConnectedComponents.run(spark, empty)
+      val lp = LabelPropagation.run(spark, empty, 5)
+      Seq("pagerank" -> pr.metrics, "cc" -> cc.metrics, "lp" -> lp.metrics)
+        .foreach { case (name, ms) =>
+          assert(ms.nonEmpty && ms.forall(_.rows == 0), name)
+        }
+      assert(pr.converged && cc.converged && lp.converged)
+      assert(pr.ranks.count() === 0 && cc.components.count() === 0 &&
+        lp.labels.count() === 0)
+    }
   }
 
   test("BFS with no reachable frontier terminates at the seed set") {
@@ -879,6 +965,10 @@ class KernelSpec extends SparkSpec {
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got === bruteCoreness(es), s"graph=$gi")
     }
+    // path4's middle vertices drop from degree 2 to coreness 1 in round 1,
+    // so one round cannot reach the fixpoint
+    intercept[IllegalArgumentException](KCore.coreness(spark,
+      Edges.symmetrize(edgeDF(golden("path4"))), maxIter = 1))
   }
 
   test("degreeProfile: exact percentiles on star5") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.Checkpointer
+import graft.engine.{Checkpointer, IterationMetric}
 import graft.graph.Edges
 import graft.kernels.{ConnectedComponents, LabelPropagation, PageRank}
 import java.nio.file.Files
@@ -66,28 +66,61 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("checkpointer records per-iteration manifest with metrics meta") {
-    val root = tmp()
-    val ck = new Checkpointer(root, "meta-run")
-    val sym = Edges.symmetrize(edgeDF(golden))
-    val res = ConnectedComponents.run(spark, sym, ckpt = Some(ck))
-    assert(res.converged)
-    val manifest = java.nio.file.Paths.get(root, "meta-run", "_manifest.jsonl")
-    assert(Files.exists(manifest))
-    val lines = Files.readAllLines(manifest)
-    assert(lines.size() === res.iterations + 1) // init + each superstep
-    // per-partition lineage: every committed state records its part count
-    lines.forEach(l => assert(l.contains("\"partitions\":"), l))
-    // metrics observed per superstep: rows, wall, shuffle bytes
-    assert(res.metrics.nonEmpty)
-    assert(res.metrics.forall(_.rows > 0))
-    assert(res.metrics.forall(_.wallMs >= 0))
-    // ...and recorded DURABLY next to the checkpoints, one line per
-    // executed superstep, iters parseable and in commit order
-    val recorded = ck.recordedMetrics()
-    assert(recorded.size === res.iterations)
-    val iters = recorded.map(l =>
-      """"iter":(\d+)""".r.findFirstMatchIn(l).get.group(1).toInt)
-    assert(iters === (1 to res.iterations))
+    val sym = Edges.symmetrize(edgeDF(Oracles.sample15))
+    // (supersteps, checkpointer, resume) => (result, metrics, iterations);
+    // the budget is CC's maxIter, LP's iterations and PR's fixedIter
+    type Run = (Int, Option[Checkpointer], Boolean) =>
+      (Map[Long, Double], Seq[IterationMetric], Int)
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      df.collect().map(r => r.getLong(0) ->
+        r.get(1).asInstanceOf[Number].doubleValue).toMap
+    val kernels: Seq[(String, Int, Run)] = Seq(
+      ("cc", 200, (i, ck, res) => {
+        val r = ConnectedComponents.run(spark, sym, maxIter = i, ckpt = ck,
+          resume = res)
+        (rows(r.components), r.metrics, r.iterations)
+      }),
+      ("lp", 5, (i, ck, res) => {
+        val r = LabelPropagation.run(spark, sym, i, ckpt = ck, resume = res)
+        (rows(r.labels), r.metrics, r.iterations)
+      }),
+      ("pagerank", 8, (i, ck, res) => {
+        val r = PageRank.run(spark, sym, fixedIter = Some(i), ckpt = ck,
+          resume = res)
+        (rows(r.ranks), r.metrics, r.iterations)
+      }))
+    kernels.foreach { case (name, budget, run) =>
+      val (straight, _, _) = run(budget, None, false)
+      val root = tmp()
+      // stopped after 2 supersteps, resumed from a new handle
+      run(2, Some(new Checkpointer(root, name)), false)
+      val ck = new Checkpointer(root, name)
+      val (got, metrics, iterations) = run(budget, Some(ck), true)
+      assert(got.keySet === straight.keySet, name)
+      got.foreach { case (v, x) =>
+        assert(math.abs(x - straight(v)) <= 1e-12, s"$name vid=$v")
+      }
+      val manifest = java.nio.file.Paths.get(root, name, "_manifest.jsonl")
+      assert(Files.exists(manifest), name)
+      val lines = Files.readAllLines(manifest)
+      assert(lines.size() === iterations + 1, name) // init + each superstep
+      // per-partition lineage: every committed state records its part count
+      lines.forEach(l => assert(l.contains("\"partitions\":"), l))
+      // metrics observed per superstep: rows, wall, shuffle bytes
+      assert(metrics.nonEmpty, name)
+      assert(metrics.forall(m => m.rows > 0 && m.wallMs >= 0), name)
+      // ...and recorded DURABLY next to the checkpoints, one line per
+      // executed superstep (paused and resumed), in commit order
+      val recorded = ck.recordedMetrics()
+      assert(recorded.size === iterations, name)
+      val iters = recorded.map(l =>
+        """"iter":(\d+)""".r.findFirstMatchIn(l).get.group(1).toInt)
+      assert(iters === (1 to iterations), name)
+      recorded.foreach { l =>
+        assert(""""rows":(\d+)""".r.findFirstMatchIn(l)
+          .exists(_.group(1).toLong > 0), l)
+      }
+    }
   }
 
   test("checkpoint logs stay valid JSON when the run id holds a quote") {
@@ -117,6 +150,4 @@ class ResumeSpec extends SparkSpec {
       assert(j.get("algo").asText() === "cc")
     }
   }
-
-  private val golden = Seq((1L, 2L), (2L, 3L), (4L, 5L))
 }
