@@ -1358,7 +1358,7 @@ object GraphQueries {
     // ending at each vertex — the scheduling depth / topo-sort key)
     Q("q109_topo_layers", (s, d) =>
       graft.kernels.GraphStats.dagLayers(s,
-        Edges.orientByDegree(e2(s, d))),
+        Edges.orientByDegree(e2(s, d))).layers,
       // topo layering replay: degree orientation (lower (degree,vid)
       // first), longest path via dedup'd (vid, h) expansion — bounded by
       // V x depth because the orientation is acyclic

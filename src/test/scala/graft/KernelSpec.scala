@@ -483,37 +483,13 @@ class KernelSpec extends SparkSpec {
     * broadcast builds are switched off for the count: the planner adds
     * those per shuffle whatever the loop does. */
   private def jobsOf[A](body: => A): (Int, A) = {
-    val group = "job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    // the listener bus is asynchronous but FIFO: once a later sentinel
-    // job's start arrives, every job of the body has been counted
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`)    => jobs.incrementAndGet()
-          case Some("sentinel") => drained.countDown()
-          case _                => ()
-        }
-    }
     val confs = Seq("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    spark.sparkContext.addSparkListener(listener)
     try {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      spark.sparkContext.setJobGroup(group, group)
-      val a = body
-      spark.sparkContext.setJobGroup("sentinel", "sentinel")
-      spark.sparkContext.parallelize(Seq(1)).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (jobs.get, a)
-    } finally {
-      saved.foreach { case (k, v) => spark.conf.set(k, v) }
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+      graft.tools.QProbe.countJobs(spark)(body)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("frontier walk: one job per two hops on a 20-hop path") {
@@ -928,17 +904,71 @@ class KernelSpec extends SparkSpec {
   test("dagLayers: longest-path layers on oriented path4 + DAG check") {
     // path4 degree orientation: 1->2, 2->3, 4->3; layers 0,1,2,0
     val got = GraphStats.dagLayers(spark,
-        Edges.orientByDegree(edgeDF(golden("path4"))))
+        Edges.orientByDegree(edgeDF(golden("path4")))).layers
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 0L))
     // every oriented edge goes to a strictly higher layer (topo order)
     val or = Edges.orientByDegree(edgeDF(Oracles.erdosRenyi(50, 0.1,
       seed = 17)))
-    val lay = GraphStats.dagLayers(spark, or)
+    val lay = GraphStats.dagLayers(spark, or).layers
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     or.collect().foreach { r =>
       assert(lay(r.getLong(0)) < lay(r.getLong(1)),
         s"edge ${r.getLong(0)}->${r.getLong(1)} not ascending") }
+  }
+
+  /** `body` with AQE partition coalescing on or off. */
+  private def coalescing[A](on: Boolean)(body: => A): A = {
+    val k = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.get(k)
+    spark.conf.set(k, on.toString)
+    try body finally spark.conf.set(k, saved)
+  }
+
+  test("dagLayers equals a longest-path oracle in one block and in several") {
+    import spark.implicits._
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val path = (0L until 199L).map(i => (i, i + 1))
+    val byDegree = (Seq(3L, 17L, 29L).map(s =>
+        Oracles.erdosRenyi(60, 0.08, seed = s)) :+ path)
+      .map(es => pairs(Edges.orientByDegree(edgeDF(es))))
+    // descending vid: the blocks are not topological, cross edges run
+    // backward in block order
+    val byVid = Seq(Oracles.erdosRenyi(60, 0.08, seed = 41), path)
+      .map(_.map { case (a, b) => (math.max(a, b), math.min(a, b)) })
+    for (on <- Seq(true, false);
+         (es, degreeOrder) <- byDegree.map(_ -> true) ++ byVid.map(_ -> false)) {
+      val run = coalescing(on)(GraphStats.dagLayers(spark, es.toDF("src", "dst")))
+      val what = s"coalescing=$on degreeOrder=$degreeOrder |E|=${es.size}"
+      assert(run.layers.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        === Oracles.longestPathLayers(es), what)
+      if (on) assert(run.blocks === 1, what)
+      else assert(run.blocks > 1, what)
+      // degree order: every edge runs forward in block order
+      if (degreeOrder) assert(run.rounds <= run.blocks, what)
+    }
+  }
+
+  test("dagLayers fails loudly on a cycle, inside a block and across blocks") {
+    import spark.implicits._
+    // one block: the local Kahn pass leaves the 3-cycle unvisited
+    val inBlock = intercept[Exception](coalescing(true)(GraphStats.dagLayers(
+      spark, Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst"))))
+    assert(inBlock.getMessage.contains("a cycle inside block"))
+    // an 8-ring over 4 blocks: every block is a path, the layers climb
+    // round the ring until the |V| bound
+    val ring = (0L until 8L).map(i => (i, (i + 1) % 8))
+    val across = intercept[IllegalArgumentException](coalescing(false)(
+      GraphStats.dagLayers(spark, ring.toDF("src", "dst"))))
+    assert(across.getMessage.contains("did not converge in 8 supersteps"))
+  }
+
+  test("dagLayers' jobs do not grow with the DAG's depth") {
+    def jobs(n: Long): Int = jobsOf(GraphStats.dagLayers(spark,
+      Edges.orientByDegree(edgeDF((0L until n - 1).map(i => (i, i + 1))))))._1
+    val (deep, shallow) = (jobs(200), jobs(40))
+    assert(deep <= shallow, s"$deep jobs at depth 199, $shallow at depth 39")
   }
 
   test("coreness h-index fixpoint equals brute peeling") {

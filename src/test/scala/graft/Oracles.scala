@@ -132,6 +132,28 @@ object Oracles {
     l
   }
 
+  /** Longest path ending at each vertex of a DAG (Kahn order). */
+  def longestPathLayers(dag: Seq[(Long, Long)]): Map[Long, Long] = {
+    val out = dag.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val indeg = scala.collection.mutable.Map.empty[Long, Int]
+    dag.foreach { case (a, b) => indeg(a) = indeg.getOrElse(a, 0)
+      indeg(b) = indeg.getOrElse(b, 0) + 1 }
+    val layer = scala.collection.mutable.Map.empty[Long, Long]
+    val ready = scala.collection.mutable.Queue.from(
+      indeg.collect { case (v, 0) => v })
+    while (ready.nonEmpty) {
+      val u = ready.dequeue()
+      val lu = layer.getOrElseUpdate(u, 0L)
+      out.getOrElse(u, Nil).foreach { w =>
+        layer(w) = math.max(layer.getOrElse(w, 0L), lu + 1)
+        indeg(w) -= 1
+        if (indeg(w) == 0) ready.enqueue(w)
+      }
+    }
+    assert(layer.size == indeg.size, "not a DAG")
+    layer.toMap
+  }
+
   /** Seeded Erdős–Rényi canonical edge list. */
   def erdosRenyi(n: Int, p: Double, seed: Long): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(seed)
