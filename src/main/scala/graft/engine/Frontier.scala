@@ -27,10 +27,9 @@ import org.apache.spark.sql.functions.col
   *    the probe counts are summed into `rows`, the exact reached total.
   *    The check can lag: a probe that still sees rows costs at most two
   *    more hops, whose empty levels are dropped, never a wrong row.
-  *  - Folding. Each hop's anti-join scans the reached set, so h loose
-  *    pieces cost O(h²) piece scans over a deep walk; once a probe finds
-  *    [[FoldAt]] or more pieces they are folded into one checkpoint,
-  *    which the next probe materializes. Shallow fan-out walks never fold.
+  *  - Folding. Each hop's anti-join scans the reached set, so each probe
+  *    [[fold]]s the pieces, and the next probe materializes the fold.
+  *    Shallow fan-out walks never fold.
   *
   * Why expanding from the last level alone is exact: a key still unreached
   * after hop h−1 has no neighbour reached at hop ≤ h−2, because that
@@ -60,6 +59,17 @@ object Frontier {
     if (df.storageLevel.useMemory || df.storageLevel.useDisk) (df, false)
     else (df.persist(), true)
 
+  /** The union of a walk's or a peel's pieces. */
+  private[engine] def union(pieces: List[DataFrame]): DataFrame =
+    pieces.reduce(_ union _)
+
+  /** A loop that scans its piece union every round scans O(r²) pieces over
+    * r rounds, so from [[FoldAt]] pieces on they become one lazy
+    * checkpoint, materialized by the next job that reads it. */
+  private[engine] def fold(pieces: List[DataFrame]): List[DataFrame] =
+    if (pieces.size < FoldAt) pieces
+    else List(union(pieces).localCheckpoint(eager = false))
+
   def run(edges: DataFrame, seeds: DataFrame, keys: Seq[String],
           maxHop: Int)(step: (DataFrame, DataFrame, Int) => DataFrame)
       : Result = {
@@ -70,7 +80,7 @@ object Frontier {
     val cols = seeds.columns.toSeq.map(c => col(c).as(c))
     var levels = Vector(seeds.select(cols: _*).localCheckpoint(eager = false))
     var pieces = levels.toList // the reached set, newest piece first
-    def reached: DataFrame = pieces.reduce(_ union _)
+    def reached: DataFrame = union(pieces)
     var counted = 0 // levels already summed by a probe
     var rows = 0L
     var hop = 0
@@ -86,8 +96,7 @@ object Frontier {
         val empty = levels.size - math.max(counted, 1)
         levels = levels.dropRight(empty)
         pieces = pieces.drop(empty)
-      } else if (pieces.size >= FoldAt)
-        pieces = List(reached.localCheckpoint(eager = false))
+      } else pieces = fold(pieces)
       counted = levels.size
     }
 

@@ -66,8 +66,9 @@ object Superstep {
   /** Materialize `df` and return it with its (rows, delta), observed on
     * the materializing job itself. The unnamed Observation is unique per
     * call, so concurrent runs never read each other's metrics. */
-  private def observed(spark: SparkSession, df: DataFrame, delta: Column,
-                       iter: Int, ckpt: Option[Checkpointer])
+  private[engine] def observed(spark: SparkSession, df: DataFrame,
+                               delta: Column, iter: Int,
+                               ckpt: Option[Checkpointer])
       : (DataFrame, Long, Double) = {
     val obs = Observation()
     val mat = materialize(spark, df.observe(obs, count(lit(1)).as("rows"),

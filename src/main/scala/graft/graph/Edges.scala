@@ -103,6 +103,19 @@ object Edges {
     sym.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("adj"))
 
+  /** A vertex peel's live (vertices, edges) without the vertices `gone`
+    * names (its `vid` column) and every edge touching one. */
+  def withoutVertices(live: Vector[DataFrame],
+                      gone: DataFrame): Vector[DataFrame] = {
+    val Vector(verts, edges) = live
+    val g = gone.select(col("vid"))
+    Vector(verts.join(g, Seq("vid"), "left_anti"),
+      edges.join(g.select(col("vid").as("g1")), col("src") === col("g1"),
+          "left_anti")
+        .join(g.select(col("vid").as("g2")), col("dst") === col("g2"),
+          "left_anti"))
+  }
+
   /** Distinct vertex ids of a symmetric edge table. */
   def vertexIds(sym: DataFrame): DataFrame =
     sym.select(col("src").as("vid")).distinct()

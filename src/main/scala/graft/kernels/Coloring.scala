@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Peel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,8 +26,8 @@ import org.apache.spark.sql.functions._
   * (bounded by its degree), and the smallest free color is
   * `array_min(array_except(sequence(0, size(used)), used))` — per-row
   * array arithmetic, no window, no driver loop over vertices. The
-  * pending-edge table shrinks as colors land and is re-checkpointed
-  * per round ([[graft.engine.Superstep]] lineage discipline).
+  * uncolored set and the pending-edge table shrink as colors land, one
+  * [[graft.engine.Peel]] round per superstep.
   */
 object Coloring {
 
@@ -57,18 +58,12 @@ object Coloring {
         (col("pd") === col("ps") && col("dst") < col("src")))
       .select(col("src"), col("dst"))
       .localCheckpoint(eager = true)
-    var hp = hpAll
-    var uncolored = e.select(col("src").as("vid")).distinct()
-      .localCheckpoint(eager = true)
-    var n = uncolored.count()
-    val pieces = Seq.newBuilder[DataFrame]
-    var colored: DataFrame = Seq.empty[(Long, Long)].toDF("vid", "color")
-    var round = 0
-    var sinceMat = 0
-    while (n > 0 && round < maxRounds) {
-      round += 1
+    val none = Seq.empty[(Long, Long)].toDF("vid", "color")
+    val r = Peel.run(Vector(e.select(col("src").as("vid")).distinct(), hpAll),
+        none, maxRounds) { st =>
+      // uncolored vertices, and the hp-edges whose dst is still uncolored
+      val Vector(uncolored, hp) = st.live
       // ready: no uncolored higher-priority neighbor left in `hp`
-      // (lazy — consumed twice below off checkpointed inputs)
       val ready = uncolored
         .join(hp.select(col("src").as("vid")).distinct(),
           Seq("vid"), "left_anti")
@@ -77,42 +72,26 @@ object Coloring {
       // look them up in the full hp view against the colored table
       val used = ready
         .join(hpAll.select(col("src").as("vid"), col("dst")), Seq("vid"))
-        .join(colored.select(col("vid").as("d2"), col("color")),
+        .join(st.done.select(col("vid").as("d2"), col("color")),
           col("dst") === col("d2"))
         .groupBy(col("vid"))
         .agg(collect_set(col("color")).as("used"))
-      val newly = ready.join(used, Seq("vid"), "left")
+      ready.join(used, Seq("vid"), "left")
         .select(col("vid"),
           when(col("used").isNull, lit(0L))
             .otherwise(array_min(array_except(
               sequence(lit(0L), size(col("used")).cast("long")),
               col("used")))).as("color"))
-        .localCheckpoint(eager = true)
-      val nNew = newly.count()
-      require(nNew > 0, s"coloring stalled at round $round")
-      pieces += newly
-      colored = colored.unionAll(newly)
-      // uncolored/hp shrink lazily; materialize every other round (the
-      // Frontier probe cadence — each extra checkpoint is a job)
-      uncolored = uncolored.join(newly.select(col("vid")),
-        Seq("vid"), "left_anti")
-      n -= nNew
-      hp = hp.join(newly.select(col("vid").as("done")),
-          col("dst") === col("done"), "left_anti")
-        .select(col("src"), col("dst"))
-      sinceMat += 1
-      if (sinceMat == 2 && n > 0) {
-        uncolored = uncolored.localCheckpoint(eager = true)
-        hp = hp.localCheckpoint(eager = true)
-        // compact the colored union too — piece count otherwise grows
-        // with the round number and the used-lookup scans every piece
-        colored = colored.localCheckpoint(eager = true)
-        sinceMat = 0
-      }
+    } { (st, newly) =>
+      val Vector(uncolored, hp) = st.live
+      Vector(uncolored.join(newly.select(col("vid")), Seq("vid"), "left_anti"),
+        hp.join(newly.select(col("vid").as("done")),
+            col("dst") === col("done"), "left_anti")
+          .select(col("src"), col("dst")))
     }
-    require(n == 0, s"coloring did not finish in $maxRounds rounds")
-    val ps = pieces.result()
-    if (ps.isEmpty) Seq.empty[(Long, Long)].toDF("vid", "color")
-    else ps.reduce(_ unionAll _).localCheckpoint(eager = true)
+    require(r.rows.last.head == 0L,
+      if (r.converged) s"coloring stalled at round ${r.rounds}"
+      else s"coloring did not finish in $maxRounds rounds")
+    r.emitted
   }
 }

@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Peel
 import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,9 +13,10 @@ import org.apache.spark.sql.functions._
   * |E|/|V| is a ≥½-of-optimum density witness.
   *
   * Scale shape per round: one degree aggregation over the live canonical
-  * edges (map-side combined) + two semi-joins to induce the survivor
-  * subgraph; the loop's driver state is two scalar counts per round
-  * (needed to steer the peel anyway), lineage truncated per round.
+  * edges (map-side combined) + anti-joins that drop the peeled vertices
+  * and their edges; the two counts that steer the peel are the ones
+  * [[graft.engine.Peel]] observes on the jobs that materialize the
+  * survivors, so the census costs no job of its own.
   */
 object Densest {
 
@@ -26,36 +28,26 @@ object Densest {
   def peelCensus(spark: SparkSession, edges: DataFrame,
                  rounds: Int): DataFrame = {
     import spark.implicits._
-    var e = edges.select(col("src"), col("dst"))
-      .localCheckpoint(eager = true)
-    var verts = e.select(col("src").as("vid"))
-      .union(e.select(col("dst"))).distinct()
-      .localCheckpoint(eager = true)
-    val out = Seq.newBuilder[(Long, Long, Long)]
-    var nV = verts.count()
-    var nE = e.count()
-    out += ((0L, nV, nE))
-    for (r <- 1 to rounds) {
-      val deg = Edges.degrees(Edges.symmetrize(e))
-      // keep iff deg·|V| > 2·|E| (strictly above average, exact); on an
-      // empty/edgeless graph this keeps nothing — same as the oracle's
-      // unrolled stage, so converged rounds replay identically
-      val keep = verts
-        .join(deg, Seq("vid"), "left")
-        .filter(coalesce(col("degree"), lit(0L)) * nV > 2L * nE)
+    // materialized once: the vertex set and the edge table derive from it
+    val e0 = edges.select(col("src"), col("dst")).localCheckpoint(eager = true)
+    val verts0 = e0.select(col("src").as("vid"))
+      .union(e0.select(col("dst"))).distinct()
+    val r = Peel.run(Vector(verts0, e0), verts0.limit(0), rounds) { st =>
+      val Vector(verts, e) = st.live
+      val Vector(nV, nE) = st.rows
+      // peel iff deg·|V| <= 2·|E| (at most average, exact); on an
+      // empty/edgeless graph this peels everything — same as the oracle's
+      // unrolled stage
+      verts.join(Edges.degrees(Edges.symmetrize(e)), Seq("vid"), "left")
+        .filter(coalesce(col("degree"), lit(0L)) * nV <= 2L * nE)
         .select(col("vid"))
-        .localCheckpoint(eager = true)
-      e = e.join(keep.select(col("vid").as("k1")),
-          col("src") === col("k1"), "left_semi")
-        .join(keep.select(col("vid").as("k2")),
-          col("dst") === col("k2"), "left_semi")
-        .localCheckpoint(eager = true)
-      verts = keep
-      nV = verts.count()
-      nE = e.count()
-      out += ((r.toLong, nV, nE))
-    }
-    out.result().toDF("round", "n_v", "n_e")
+    }((st, peeled) => Edges.withoutVertices(st.live, peeled))
+    // a peel that stopped early (emptied, or removed nothing) repeats its
+    // last census row, as the oracle's converged stages do
+    (0 to rounds).map { i =>
+      val Vector(nV, nE) = r.rows(math.min(i, r.rounds))
+      (i.toLong, nV, nE)
+    }.toDF("round", "n_v", "n_e")
   }
 
   /** The densest round's induced subgraph stats: argmax over the census

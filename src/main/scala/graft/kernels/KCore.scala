@@ -1,6 +1,6 @@
 package graft.kernels
 
-import graft.engine.{IterationMetric, Superstep}
+import graft.engine.{IterationMetric, Peel, Superstep}
 import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,7 +70,7 @@ object KCore {
     * fixpoint; the natural core notion on weighted link graphs, where a
     * vertex with two weight-10 edges is more embedded than one with five
     * weight-1 edges. Same peel shape as [[run]] (one strength agg + two
-    * semi-joins per round, localCheckpoint-truncated lineage).
+    * semi-joins per [[graft.engine.Peel]] round).
     * `maxRounds` fixes the round count for oracle-parity replay (the
     * fixpoint path is spec-covered). Returns (vid, strength) over the
     * surviving edge set — after a capped run, strengths are as of the
@@ -84,30 +84,21 @@ object KCore {
     def strengths(e: DataFrame): DataFrame =
       symW(e).groupBy(col("src").as("vid"))
         .agg(sum(col("weight")).as("strength"))
-    var e = weighted.select(col("src"), col("dst"), col("weight"))
-      .localCheckpoint(eager = true)
-    var n = e.count()
-    var round = 0
-    var done = n == 0
-    while (!done && round < maxRounds) {
-      round += 1
+    val r = Peel.shrink(Vector(weighted.select(col("src"), col("dst"),
+        col("weight"))), maxRounds) { st =>
+      val e = st.live.head
       val keep = strengths(e).filter(col("strength") >= s)
         .select(col("vid"))
-      val kept = e
+      Vector(e
         .join(keep.withColumnRenamed("vid", "src").hint("SHUFFLE_HASH"),
           Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("vid", "dst").hint("SHUFFLE_HASH"),
           Seq("dst"), "left_semi")
         // the Seq-key joins move their key to column 0; restore the
         // canonical order symW's positional union depends on
-        .select(col("src"), col("dst"), col("weight"))
-        .localCheckpoint(eager = true)
-      val kn = kept.count()
-      done = kn == n
-      e = kept
-      n = kn
+        .select(col("src"), col("dst"), col("weight")))
     }
-    strengths(e)
+    strengths(r.live.head)
   }
 
   /** Onion decomposition (Hébert-Dufresne, Grochow & Allard, Scientific
@@ -122,36 +113,25 @@ object KCore {
     *
     * A vertex whose induced degree drops to 0 must still be peeled, so
     * the surviving VERTEX set is carried explicitly (an isolated
-    * survivor vanishes from the induced edge table). Per round: one
-    * degree agg + one left join + two semi-joins, all keyed by vid;
-    * state localCheckpoint-truncated like every peel kernel.
+    * survivor vanishes from the induced edge table). Per
+    * [[graft.engine.Peel]] round: one degree agg + one left join + three
+    * anti-joins, all keyed by vid.
     * @param sym symmetric edge table
     * @return (vid, layer) for every vertex of the input graph */
   def onionLayers(spark: SparkSession, sym: DataFrame, k: Int,
                   rounds: Int): DataFrame = {
-    var e = sym.select(col("src"), col("dst")).localCheckpoint(eager = true)
-    var verts = Edges.degrees(e).select(col("vid"))
-      .localCheckpoint(eager = true)
-    val pieces = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (i <- 1 to rounds) {
-      val deg = verts
-        .join(Edges.degrees(e), Seq("vid"), "left_outer")
-        .select(col("vid"), coalesce(col("degree"), lit(0L)).as("degree"))
-      pieces += deg.filter(col("degree") < k)
-        .select(col("vid"), lit(i.toLong).as("layer"))
-        .localCheckpoint(eager = true)
-      verts = deg.filter(col("degree") >= k).select(col("vid"))
-        .localCheckpoint(eager = true)
-      e = e
-        .join(verts.withColumnRenamed("vid", "src").hint("SHUFFLE_HASH"),
-          Seq("src"), "left_semi")
-        .join(verts.withColumnRenamed("vid", "dst").hint("SHUFFLE_HASH"),
-          Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(eager = true)
-    }
-    pieces += verts.select(col("vid"), lit(0L).as("layer"))
-    pieces.reduce(_ union _)
+    // materialized once: the vertex set and the edge table derive from it
+    val e0 = sym.select(col("src"), col("dst")).localCheckpoint(eager = true)
+    val none = spark.range(0).select(col("id").as("vid"), lit(0L).as("layer"))
+    val r = Peel.run(Vector(Edges.degrees(e0).select(col("vid")), e0), none,
+        rounds) { st =>
+      val Vector(verts, e) = st.live
+      verts.join(Edges.degrees(e), Seq("vid"), "left_outer")
+        .filter(coalesce(col("degree"), lit(0L)) < k)
+        .select(col("vid"), lit(st.round.toLong).as("layer"))
+    }((st, layer) => Edges.withoutVertices(st.live, layer))
+    // a peel stopped early stands: later rounds would remove nothing
+    r.emitted.union(r.live.head.select(col("vid"), lit(0L).as("layer")))
   }
 
   final case class Result(core: DataFrame,

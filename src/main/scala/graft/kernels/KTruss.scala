@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Peel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,11 +22,8 @@ import org.apache.spark.sql.functions._
   *    one row per (triangle, edge), the unavoidable 3× expansion of
   *    support attribution);
   *  - support is a two-phase count aggregation; the filter drops edges
-  *    under k−2, and the survivor table is localCheckpoint-truncated so
-  *    lineage stays O(1) across rounds (the [[graft.engine.Superstep]]
-  *    discipline);
-  *  - convergence = no row removed (the same materializing count drives
-  *    both).
+  *    under k−2 — one [[graft.engine.Peel]] round, which stops when no
+  *    row is removed.
   *
   * `maxRounds` bounds the peel for the oracle-parity query (q69 runs a
   * FIXED 3 rounds so DuckDB replays the identical staged SQL); the
@@ -40,19 +38,17 @@ object KTruss {
   def run(edges: DataFrame, k: Int,
           maxRounds: Int = Int.MaxValue): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    var e = edges.select(col("src"), col("dst"))
-      .localCheckpoint(eager = true)
-    var n = e.count()
-    var round = 0
-    var done = n == 0
-    while (!done && round < maxRounds) {
-      round += 1
-      // the oriented table feeds the adj aggregation AND both join probes
-      // — persisted per round, released after the survivors materialize
-      // (relying on ReusedExchange instead was measured 3.7x slower on
-      // the bench graph, TriangleCount scaladoc)
-      val oe = graft.graph.Edges.orientByDegree(e).persist()
-      val tri = TriangleCount.trianglesOriented(oe)
+    // the round's oriented table feeds the adj aggregation AND both join
+    // probes: persisted, and released once the next round's survivors
+    // have materialized (relying on ReusedExchange instead was measured
+    // 3.7x slower on the bench graph, TriangleCount scaladoc)
+    var oe = Option.empty[DataFrame]
+    val r = Peel.shrink(Vector(edges.select(col("src"), col("dst"))),
+        maxRounds) { st =>
+      val e = st.live.head
+      oe.foreach(_.unpersist())
+      oe = Some(graft.graph.Edges.orientByDegree(e).persist())
+      val tri = TriangleCount.trianglesOriented(oe.get)
       // charge each triangle to its three CANONICAL edges (least/greatest:
       // degree orientation does not preserve id order)
       val charged = tri.select(
@@ -67,17 +63,12 @@ object KTruss {
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
       val support = charged.groupBy(col("src"), col("dst"))
         .agg(count(lit(1)).as("sup"))
-      val kept = e.join(support, Seq("src", "dst"), "left")
+      Vector(e.join(support, Seq("src", "dst"), "left")
         .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
-        .select(col("src"), col("dst"))
-        .localCheckpoint(eager = true)
-      val kn = kept.count()
-      oe.unpersist()
-      done = kn == n
-      e = kept
-      n = kn
+        .select(col("src"), col("dst")))
     }
-    e
+    oe.foreach(_.unpersist())
+    r.live.head
   }
 
   /** Truss communities (Huang et al. SIGMOD'14, vertex-component

@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Peel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one union + one min-aggregation keyed by
   * endpoint (map-side combined), one join back to the live edges, two
-  * anti-joins to drop saturated endpoints; lineage truncated per round
-  * via localCheckpoint — the [[Mis]]/[[Scc]] loop discipline.
+  * anti-joins to drop saturated endpoints — one [[graft.engine.Peel]]
+  * round.
   */
 object Matching {
 
@@ -33,46 +34,33 @@ object Matching {
     * default runs to the maximal-matching fixpoint. */
   def greedy(spark: SparkSession, edges: DataFrame, salt: String = "mm",
              maxRounds: Int = Int.MaxValue): DataFrame = {
-    var live = edges.select(col("src"), col("dst"))
+    val live = edges.select(col("src"), col("dst"))
       .withColumn("p", prio(col("src"), col("dst"), salt))
-      .localCheckpoint(eager = true)
-    var pieces: Seq[DataFrame] = Nil
-    var round = 0
-    var n = live.count()
-    while (n > 0 && round < maxRounds) {
-      round += 1
+    val none = spark.range(0).select(col("id").as("src"), col("id").as("dst"),
+      lit(0).as("round"))
+    Peel.run(Vector(live), none, maxRounds) { st =>
+      val live = st.live.head
       val inc = live.select(col("src").as("v"), col("p"))
         .unionAll(live.select(col("dst").as("v"), col("p")))
       val vmin = inc.groupBy(col("v")).agg(min(col("p")).as("mp"))
         .hint("SHUFFLE_HASH")
-      val matched = live
+      // empty only via a sha collision making every local min ambiguous:
+      // the live count then stands and the peel stops
+      live
         .join(vmin.select(col("v").as("sv"), col("mp").as("smp")),
           col("src") === col("sv") && col("p") === col("smp"))
         .join(vmin.select(col("v").as("dv"), col("mp").as("dmp")),
           col("dst") === col("dv") && col("p") === col("dmp"))
-        .select(col("src"), col("dst"), lit(round).as("round"))
-        .localCheckpoint(eager = true)
-      if (matched.isEmpty) {
-        // only possible via a sha collision making every local min
-        // ambiguous — no progress under the strict rule, stop honestly
-        n = 0
-      } else {
-        pieces = pieces :+ matched
-        val mv = matched.select(col("src").as("v"))
-          .union(matched.select(col("dst"))).distinct()
-        live = live
-          .join(mv.select(col("v").as("m1")), col("src") === col("m1"),
-            "left_anti")
-          .join(mv.select(col("v").as("m2")), col("dst") === col("m2"),
-            "left_anti")
-          .localCheckpoint(eager = true)
-        n = live.count()
-      }
-    }
-    if (pieces.isEmpty)
-      spark.range(0).select(col("id").as("src"), col("id").as("dst"),
-        lit(0).as("round")).filter(lit(false))
-    else pieces.reduce(_ unionByName _)
+        .select(col("src"), col("dst"), lit(st.round).as("round"))
+    } { (st, matched) =>
+      val mv = matched.select(col("src").as("v"))
+        .union(matched.select(col("dst"))).distinct()
+      Vector(st.live.head
+        .join(mv.select(col("v").as("m1")), col("src") === col("m1"),
+          "left_anti")
+        .join(mv.select(col("v").as("m2")), col("dst") === col("m2"),
+          "left_anti"))
+    }.emitted
   }
 
   /** 2-approx minimum vertex cover: the endpoints of a maximal matching

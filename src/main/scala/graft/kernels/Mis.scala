@@ -1,5 +1,7 @@
 package graft.kernels
 
+import graft.engine.Peel
+import graft.graph.Edges
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,13 +25,11 @@ import org.apache.spark.sql.functions._
   *    (strictly — a priority tie blocks both sides, keeping the decision
   *    well-defined on every engine; sha60 ties are ~2^-60 per pair and a
   *    stalled fixpoint terminates the loop explicitly);
-  *  - winners and their neighbors leave the undecided set; the edge
-  *    table is re-restricted to undecided endpoints and
-  *    checkpoint-truncated ([[graft.engine.Superstep]] lineage
-  *    discipline).
+  *  - winners and their neighbors leave the undecided set and the edge
+  *    table loses their edges, one [[graft.engine.Peel]] round.
   *
   * Scale shape per round: one join+min-aggregate over the shrinking edge
-  * table (SHUFFLE_HASH on the vertex-sized priority side), two semi
+  * table (SHUFFLE_HASH on the vertex-sized priority side), two anti
   * joins to shrink it — no collect, no window, no per-vertex task. The
   * undecided set at least halves in expectation per round (Luby), so the
   * loop depth is O(log n) with geometrically shrinking work.
@@ -49,47 +49,31 @@ object Mis {
     *                  to the fixpoint) */
   def run(spark: SparkSession, sym: DataFrame, salt: String = "mis",
           maxRounds: Int = Int.MaxValue): DataFrame = {
-    var e = sym.select(col("src"), col("dst"))
-      .localCheckpoint(eager = true)
-    var und = e.select(col("src").as("vid")).distinct()
+    // materialized once: the undecided set and the edge table derive from it
+    val e0 = sym.select(col("src"), col("dst")).localCheckpoint(eager = true)
+    val und0 = e0.select(col("src").as("vid")).distinct()
       .withColumn("p", prio(col("vid"), salt))
-      .localCheckpoint(eager = true)
-    var pieces: Seq[DataFrame] = Nil
-    var round = 0
-    var n = und.count()
-    while (n > 0 && round < maxRounds) {
-      round += 1
+    // a round emits every vertex it decides: winners in, their neighbours out
+    val none = spark.range(0).select(col("id").as("vid"), lit(0).as("round"),
+      lit(true).as("in"))
+    Peel.run(Vector(und0, e0), none, maxRounds) { st =>
+      val Vector(und, e) = st.live
       val pn = und.select(col("vid").as("nb"), col("p").as("pn"))
         .hint("SHUFFLE_HASH")
       val nbrMin = e.join(pn, e("dst") === pn("nb"))
         .groupBy(e("src").as("vid")).agg(min(col("pn")).as("minp"))
       val winners = und.join(nbrMin, Seq("vid"), "left")
         .filter(col("minp").isNull || col("p") < col("minp"))
-        .select(col("vid"), lit(round).as("round"))
-        .localCheckpoint(eager = true)
-      if (winners.isEmpty) {
-        // total priority-tie stall (sha60 collision on every local min):
-        // no progress is possible under the strict rule — stop honestly
-        n = 0
-      } else {
-        pieces = pieces :+ winners
-        val w = winners.select(col("vid").as("wv")).hint("SHUFFLE_HASH")
-        val losers = e.join(w, e("src") === w("wv"))
-          .select(e("dst").as("vid")).distinct()
-        val removed = winners.select(col("vid")).union(losers).distinct()
-        und = und.join(removed, Seq("vid"), "left_anti")
-          .localCheckpoint(eager = true)
-        e = e.join(und.select(col("vid").as("u1")), e("src") === col("u1"),
-            "left_semi")
-          .join(und.select(col("vid").as("u2")), e("dst") === col("u2"),
-            "left_semi")
-          .localCheckpoint(eager = true)
-        n = und.count()
-      }
-    }
-    if (pieces.isEmpty)
-      spark.range(0).select(col("id").as("vid"),
-        lit(0).as("round")).filter(lit(false))
-    else pieces.reduce(_ unionByName _)
+        .select(col("vid"))
+      val w = winners.select(col("vid").as("wv")).hint("SHUFFLE_HASH")
+      val losers = e.join(w, e("src") === w("wv"))
+        .select(e("dst").as("vid")).distinct()
+      // a total priority-tie stall (sha60 collision on every local min)
+      // decides nothing, so the undecided count stands and the peel stops
+      winners.select(col("vid"), lit(st.round).as("round"),
+          lit(true).as("in"))
+        .union(losers.select(col("vid"), lit(st.round), lit(false)))
+    }((st, decided) => Edges.withoutVertices(st.live, decided))
+      .emitted.filter(col("in")).select(col("vid"), col("round"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.kernels
 
-import graft.engine.Frontier
+import graft.engine.{Frontier, Peel}
+import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,10 +44,12 @@ import org.apache.spark.sql.functions._
   *     bounded by the longest chain of nested SCC "layers" — small in
   *     practice once TRIM eats the acyclic mass.
   *
+  * Both the outer rounds and the trim rounds are [[graft.engine.Peel]]
+  * loops over (vertices, edges); each emits (vid, scc_id) pieces.
+  *
   * 100 TB posture: trim rounds are semi-joins on the shrinking vertex
   * set (broadcast once it fits); coloring shuffles only the remaining
-  * cyclic core; no phase collects vertices to the driver; per-round
-  * state is checkpoint-truncated so lineage stays O(1).
+  * cyclic core; no phase collects vertices to the driver.
   */
 object Scc {
 
@@ -72,58 +75,27 @@ object Scc {
   def run(spark: SparkSession, dedges: DataFrame,
           maxRounds: Int = 60, maxSupersteps: Int = 200): DataFrame = {
     import spark.implicits._
-    var edges = dedges.select(col("src"), col("dst")).distinct()
+    // materialized once: the vertex set and the edge table derive from it
+    val e0 = dedges.select(col("src"), col("dst")).distinct()
       .localCheckpoint(eager = true)
-    var verts = edges.select(col("src").as("vid"))
-      .unionAll(edges.select(col("dst").as("vid"))).distinct()
-      .localCheckpoint(eager = true)
-    var remaining = verts.count()
-    val pieces = Seq.newBuilder[DataFrame]
-    var round = 0
-
-    // drop removed vertices from both tables. Lazy by default — trim
-    // composes several cheap peels per materialization (the Frontier
-    // probe cadence: each extra job costs more than
-    // the narrowed plan it saves on local[*] AND on a real cluster,
-    // where a fixpoint loop's small jobs are scheduler-latency-bound)
-    def shrink(removed: DataFrame): Unit = {
-      edges = edges
-        .join(removed.hint("SHUFFLE_HASH"),
-          edges("src") === removed("vid"), "left_anti")
-        .join(removed.hint("SHUFFLE_HASH"),
-          edges("dst") === removed("vid"), "left_anti")
-      verts = verts.join(removed, Seq("vid"), "left_anti")
-    }
-    def materialize(): Unit = {
-      edges = edges.localCheckpoint(eager = true)
-      verts = verts.localCheckpoint(eager = true)
-    }
-
-    while (remaining > 0 && round < maxRounds) {
-      round += 1
+    val verts0 = e0.select(col("src").as("vid"))
+      .unionAll(e0.select(col("dst").as("vid"))).distinct()
+    val none = Seq.empty[(Long, Long)].toDF("vid", "scc_id")
+    val r = Peel.run(Vector(verts0, e0), none, maxRounds) { st =>
       // --- 1. trim to fixpoint: no-in or no-out ⇒ singleton SCC ---
-      var trimming = true
-      var sinceMat = 0
-      while (trimming && remaining > 0) {
+      val trim = Peel.run(st.live, st.rows, none, Int.MaxValue) { t =>
+        val Vector(verts, edges) = t.live
         val both = edges.select(col("src").as("vid")).distinct()
           .join(edges.select(col("dst").as("vid")).distinct(), "vid")
-        val dead = verts.join(both, Seq("vid"), "left_anti")
-          .localCheckpoint(eager = true)
-        val nDead = dead.count()
-        if (nDead == 0) trimming = false
-        else {
-          pieces += dead.select(col("vid"), col("vid").as("scc_id"))
-          shrink(dead)
-          remaining -= nDead
-          sinceMat += 1
-          if (sinceMat == 2) { materialize(); sinceMat = 0 }
-        }
-      }
-      if (sinceMat > 0) materialize()
-      if (remaining > 0) {
+        verts.join(both, Seq("vid"), "left_anti")
+          .select(col("vid"), col("vid").as("scc_id"))
+      }((t, dead) => Edges.withoutVertices(t.live, dead))
+      if (trim.rows.last.head == 0L) trim.emitted
+      else {
         // --- 2. forward min-coloring to fixpoint (directed hash-min) ---
         // every vertex left after the trim has an out-edge, so the CC
         // vertex set (edge sources) is the remaining vertex set
+        val edges = trim.live(1)
         val cc = ConnectedComponents.run(spark, edges, maxSupersteps)
         require(cc.converged, s"scc coloring did not converge " +
           s"in $maxSupersteps supersteps")
@@ -146,17 +118,11 @@ object Scc {
         }
         require(sweep.converged,
           s"scc backward sweep did not converge in $maxSupersteps steps")
-        val found = sweep.reached
-        pieces += found.select(col("vid"), col("color").as("scc_id"))
-        shrink(found.select(col("vid")))
-        remaining -= sweep.rows
-        materialize()
+        trim.emitted.union(sweep.reached.select(col("vid"),
+          col("color").as("scc_id")))
       }
-    }
-    require(remaining == 0, s"scc did not finish in $maxRounds rounds")
-    val ps = pieces.result()
-    if (ps.isEmpty)
-      Seq.empty[(Long, Long)].toDF("vid", "scc_id")
-    else ps.reduce(_ unionAll _).localCheckpoint(eager = true)
+    }((st, found) => Edges.withoutVertices(st.live, found))
+    require(r.rows.last.head == 0L, s"scc did not finish in $maxRounds rounds")
+    r.emitted
   }
 }

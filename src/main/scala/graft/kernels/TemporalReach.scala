@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Superstep
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -84,9 +85,10 @@ object TemporalReach {
     * contact paths from any seed (seeds arrive at time 0). Each round is
     * one join (state ⋈ contacts on src, guarded by departure ≥ arrival)
     * + one min-aggregation (map-side combined) + a full-outer merge —
-    * the hash-min CC shape with a temporal guard. Arrival times only
-    * decrease and the reached set only grows, so the (count, sum) pair
-    * is a faithful O(1)-row convergence probe (no row-level diff join).
+    * the hash-min CC shape with a temporal guard, on
+    * [[graft.engine.Superstep]]. The state carries a `changed` flag
+    * (arrival fell, or the vertex is newly reached), and the fixpoint is
+    * the first superstep with `sum(changed)` = 0.
     *
     * `maxRounds` bounds the supersteps (paths longer than maxRounds
     * contacts are not explored) — the fixed-round form is the
@@ -95,27 +97,24 @@ object TemporalReach {
                       seeds: DataFrame,
                       maxRounds: Int = Int.MaxValue): DataFrame = {
     val c = contactsDf.select(col("src"), col("dst"), col("tu"), col("tv"))
-    var state = seeds.select(col("vid"), lit(0L).as("arrival"))
-      .localCheckpoint(eager = true)
-    var probe = state.agg(count(lit(1)), sum(col("arrival"))).head()
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      round += 1
+    def step(state: DataFrame): DataFrame = {
       val msgs = c
         .join(state.select(col("vid").as("src"), col("arrival")), "src")
         .filter(col("tu") >= col("arrival"))
         .groupBy(col("dst").as("vid")).agg(min(col("tv")).as("cand"))
-      val next = state.join(msgs, Seq("vid"), "full_outer")
+      state.select(col("vid"), col("arrival"))
+        .join(msgs, Seq("vid"), "full_outer")
         .select(col("vid"),
           least(coalesce(col("arrival"), col("cand")),
-            coalesce(col("cand"), col("arrival"))).as("arrival"))
-        .localCheckpoint(eager = true)
-      val p = next.agg(count(lit(1)), sum(col("arrival"))).head()
-      changed = p != probe
-      probe = p
-      state = next
+            coalesce(col("cand"), col("arrival"))).as("arrival"),
+          // arrival fell, or the vertex is newly reached
+          coalesce(col("cand") < col("arrival"), col("cand").isNotNull)
+            .as("changed"))
     }
-    state
+    val (state, _, _, _) = Superstep.run(spark, "temporal-reach",
+      seeds.select(col("vid"), lit(0L).as("arrival"), lit(true).as("changed")),
+      step, sum(col("changed").cast("long")), (_, d, _) => d == 0.0,
+      maxRounds)
+    state.select(col("vid"), col("arrival"))
   }
 }

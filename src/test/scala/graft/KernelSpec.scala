@@ -256,10 +256,13 @@ class KernelSpec extends SparkSpec {
 
   test("k-truss fixpoint matches a brute-force peeler on golden + random graphs") {
     // brute-force: recount per-edge triangle support, drop < k-2, repeat
-    def trussOracle(es: Seq[(Long, Long)], k: Int): Set[(Long, Long)] = {
+    def trussOracle(es: Seq[(Long, Long)], k: Int,
+                    maxRounds: Int = Int.MaxValue): Set[(Long, Long)] = {
       var cur = es.map { case (a, b) => (a min b, a max b) }.toSet
       var changed = true
-      while (changed) {
+      var round = 0
+      while (changed && round < maxRounds) {
+        round += 1
         val sup = scala.collection.mutable.Map.empty[(Long, Long), Int]
           .withDefaultValue(0)
         val vs = cur.flatMap(e => Seq(e._1, e._2)).toSeq.sorted
@@ -273,16 +276,26 @@ class KernelSpec extends SparkSpec {
       }
       cur
     }
+    // two hubs joined to every vertex of a 21-vertex path: at k = 4 the
+    // peel eats one path position from each end per round, 11 rounds
+    val fan = (0L until 20L).map(i => (i, i + 1)) ++
+      (for { h <- Seq(100L, 101L); i <- 0L to 20L } yield (h, i))
     val graphs = golden ++ Map(
       "er20" -> Oracles.erdosRenyi(20, 0.35, seed = 7),
       "k5bridge" -> (for { i <- 1L to 5L; j <- i + 1 to 5L } yield (i, j))
-        .++(Seq((5L, 6L), (6L, 7L))))
+        .++(Seq((5L, 6L), (6L, 7L))),
+      "fan" -> fan)
+    def truss(es: Seq[(Long, Long)], k: Int, maxRounds: Int = Int.MaxValue) =
+      KTruss.run(edgeDF(es), k, maxRounds)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     graphs.foreach { case (name, es) =>
-      for (k <- Seq(3, 4)) {
-        val got = KTruss.run(edgeDF(es), k)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(got === trussOracle(es, k), s"graph=$name k=$k")
-      }
+      for (k <- Seq(3, 4))
+        assert(truss(es, k) === trussOracle(es, k), s"graph=$name k=$k")
+    }
+    // the deep peel's prefixes: rounds 9 and 10 still remove edges
+    for (r <- Seq(9, 10)) {
+      val prefix = trussOracle(fan, 4, r)
+      assert(prefix.nonEmpty && truss(fan, 4, r) === prefix, s"rounds=$r")
     }
   }
 
@@ -613,13 +626,23 @@ class KernelSpec extends SparkSpec {
     }
   }
 
+  /** A path through `n` vertices in descending sha60(salt:vid) order:
+    * its one local priority minimum is its last vertex. */
+  private def shaPath(salt: String, n: Int): Seq[(Long, Long)] = {
+    val vs = (1L to n.toLong).sortBy(v => -Oracles.sha60(s"$salt:$v"))
+    vs.zip(vs.tail)
+  }
+
   test("MIS is independent and maximal on golden + random graphs") {
+    // the sha-descending 20-path: one winner and one loser per round
     val graphs = golden.toSeq.map { case (n, es) => (n, es) } :+
       ("er", Oracles.erdosRenyi(60, 0.07, seed = 7)) :+
-      ("pl", Oracles.powerLaw(80, seed = 8))
+      ("pl", Oracles.powerLaw(80, seed = 8)) :+
+      ("shaPath", shaPath("mis", 20))
     graphs.foreach { case (name, es) =>
-      val mis = Mis.run(spark, Edges.symmetrize(edgeDF(es)))
-        .select("vid").collect().map(_.getLong(0)).toSet
+      val got = Mis.run(spark, Edges.symmetrize(edgeDF(es))).collect()
+      if (name == "shaPath") assert(got.map(_.getInt(1)).max == 10)
+      val mis = got.map(_.getLong(0)).toSet
       val verts = es.flatMap(e => Seq(e._1, e._2)).toSet
       val adj = (es ++ es.map(_.swap)).groupBy(_._1)
         .map { case (v, ps) => v -> ps.map(_._2).toSet }
@@ -729,12 +752,21 @@ class KernelSpec extends SparkSpec {
       "layered" -> Seq((1L, 2L), (2L, 1L), (2L, 5L), (5L, 6L), (6L, 5L)),
       // directed 20-ring: 19-hop coloring and backward sweep, deep enough
       // to fold the sweep's reached set and lag its convergence probe
-      "ring20" -> (1L to 20L).map(i => (i, i % 20 + 1)))
-    graphs.foreach { case (name, es) =>
+      "ring20" -> (1L to 20L).map(i => (i, i % 20 + 1)),
+      // 20-vertex DAG path: 10 trim rounds, one vertex off each end
+      "dagPath20" -> (1L until 20L).map(i => (i, i + 1)))
+    // ten 2-cycles in a one-way chain: vertex 1 colours them all and is
+    // the only root, so each outer round finds one SCC — 10 rounds
+    val chain = (1L to 10L).flatMap(j =>
+      Seq((2 * j - 1, 2 * j), (2 * j, 2 * j - 1), (2 * j, 2 * j + 1)))
+      .filter(_._2 <= 20L)
+    (graphs :+ ("chain" -> chain)).foreach { case (name, es) =>
       val got = Scc.run(spark, dDF(es))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === Oracles.stronglyConnected(es), s"graph=$name")
     }
+    intercept[IllegalArgumentException](
+      Scc.run(spark, dDF(chain), maxRounds = 9).collect())
   }
 
   test("scc on sha-directed seeded random graphs matches Tarjan") {
@@ -852,20 +884,28 @@ class KernelSpec extends SparkSpec {
       }
       colors.toMap
     }
+    // on the sha-descending path each round colours only the last
+    // uncoloured vertex (the lowest sha is the highest priority)
+    val deep = shaPath("col", 12)
     val graphs = Seq(golden("triangle"), golden("path4"), golden("k4"),
       golden("sample15"), Oracles.erdosRenyi(60, 0.08, seed = 13),
-      Oracles.powerLaw(70, seed = 21))
+      Oracles.powerLaw(70, seed = 21), deep)
+    def coloring(es: Seq[(Long, Long)], maxRounds: Int = 500) =
+      Coloring.jonesPlassmann(spark, Edges.symmetrize(edgeDF(es)),
+          maxRounds = maxRounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     graphs.zipWithIndex.foreach { case (es, gi) =>
       val canon = es.map { case (a, b) =>
         (math.min(a, b), math.max(a, b)) }.distinct
-      val got = Coloring.jonesPlassmann(spark,
-          Edges.symmetrize(edgeDF(canon)))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = coloring(canon)
       assert(got === localGreedy(canon), s"graph=$gi")
       // propriety: no monochromatic edge
       canon.foreach { case (a, b) =>
         assert(got(a) !== got(b), s"graph=$gi edge ($a,$b)") }
     }
+    // the deep path needs all 12 rounds; 11 is a cut loop, which throws
+    assert(coloring(deep, maxRounds = 12) === localGreedy(deep))
+    intercept[IllegalArgumentException](coloring(deep, maxRounds = 11))
   }
 
   test("butterflies, rectangles, katz: hand-checked golden values") {
@@ -1054,6 +1094,16 @@ class KernelSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === Oracles.mstKruskal(weighted), s"graph=$gi")
     }
+    import spark.implicits._
+    // a 512-vertex path whose edge i weighs by the 2-adic valuation of
+    // i + 1: every round merges disjoint pairs, so it takes log2 512 = 9
+    val ruler = (0L until 511L).map(i =>
+      (i, i + 1, java.lang.Long.numberOfTrailingZeros(i + 1) * 1000L + i))
+    def msf(maxRounds: Int) = Mst.boruvka(spark,
+        ruler.toDF("src", "dst", "w"), maxRounds = maxRounds)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(msf(9) === Oracles.mstKruskal(ruler))
+    intercept[IllegalArgumentException](msf(8))
   }
 
   test("k-hop features: star5 layers are exact integer sums") {
@@ -1107,10 +1157,23 @@ class KernelSpec extends SparkSpec {
   }
 
   test("greedy matching fixpoint: a maximal matching on every golden graph") {
-    for (g <- Seq("triangle", "path4", "star5", "twoComp", "bowtie", "k4")) {
-      val edges = golden(g)
-      val m = Matching.greedy(spark, edgeDF(edges))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
+    // a 20-edge path grown so each edge's sha priority is below the last
+    // one's: only its final edge is a local minimum, so one edge matches
+    // (and its neighbour leaves) per round — 10 rounds
+    val path = Iterator.iterate((0L, Long.MaxValue, Set(0L))) {
+      case (v, p, used) =>
+        val (u, q) = (1L to 2000L).filterNot(used).map(u =>
+            u -> Oracles.sha60(s"mm:${v min u}:${v max u}"))
+          .filter(_._2 < p).maxBy(_._2)
+        (u, q, used + u)
+    }.take(21).map(_._1).toSeq
+    val deep = path.zip(path.tail)
+    for (g <- Seq("triangle", "path4", "star5", "twoComp", "bowtie", "k4",
+                  "deep")) {
+      val edges = golden.getOrElse(g, deep)
+      val got = Matching.greedy(spark, edgeDF(edges)).collect()
+      if (g == "deep") assert(got.map(_.getInt(2)).max == 10)
+      val m = got.map(r => (r.getLong(0), r.getLong(1)))
       // a matching: no vertex saturated twice
       val eps = m.flatMap(e => Seq(e._1, e._2))
       assert(eps.length == eps.distinct.length, s"$g not a matching")
@@ -1138,6 +1201,14 @@ class KernelSpec extends SparkSpec {
     val best = Densest.densestRound(
       Densest.peelCensus(spark, edgeDF(edges), rounds = 4)).head
     assert(best.getLong(0) == 1L && best.getDouble(3) == 1.5)
+    // a 20-path: both ends are at most average, so each round peels two
+    // vertices and the 10th empties it; later rounds repeat (0, 0)
+    val path = Densest.peelCensus(spark,
+        edgeDF((1L until 20L).map(i => (i, i + 1))), rounds = 12)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
+    assert(path.toSeq === (0L to 12L).map(i =>
+      if (i < 10) (i, 20 - 2 * i, 19 - 2 * i) else (i, 0L, 0L)))
   }
 
   test("rich-club census: K4 plus a pendant isolates the hub club") {
@@ -1245,6 +1316,27 @@ class KernelSpec extends SparkSpec {
     assert(s4 == Map(1L -> 5L, 2L -> 8L, 3L -> 8L, 4L -> 5L))
     // s=6: keep {2,3} -> edge (2,3) only -> strengths 3,3 -> empty
     assert(KCore.sCore(w, s = 6L).count() == 0L)
+    // s=2 on a unit chain 0..10 anchored by (10, 11, 5): round r peels
+    // vertex r-1, the fixpoint is the anchor edge after 10 peeling rounds
+    def strengths(maxRounds: Int) = KCore.sCore(cascade, s = 2L, maxRounds)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(strengths(Int.MaxValue) == Map(10L -> 5L, 11L -> 5L))
+    assert(strengths(9) == Map(9L -> 1L, 10L -> 6L, 11L -> 5L))
+  }
+
+  private def cascade = {
+    import spark.implicits._
+    ((0L until 10L).map(i => (i, i + 1, 1L)) :+ ((10L, 11L, 5L)))
+      .toDF("src", "dst", "weight")
+  }
+
+  test("peel: s-core runs one job per round on a deep cascade") {
+    // 10 peeling rounds and the 11th that removes nothing; a loop that
+    // checkpoints and counts each round apart runs two jobs per round
+    val rounds = 11
+    val (jobs, got) = jobsOf(KCore.sCore(cascade, s = 2L).collect())
+    assert(got.length == 2)
+    assert(jobs <= rounds + 3, s"$jobs jobs for $rounds rounds")
   }
 
   test("anf: register summary equals a single-threaded HLL ball replay") {
@@ -1494,6 +1586,9 @@ class KernelSpec extends SparkSpec {
     // K4 + pendant, k=3: pendant peels round 1, the K4 is the 0-layer core
     assert(run(golden("k4") :+ ((4L, 5L)), 3, 2) ===
       Map(1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 0L, 5L -> 1L))
+    // 20-path, k=2: the ends peel each round, 10 layers deep
+    assert(run((0L until 19L).map(i => (i, i + 1)), 2, 12) ===
+      (0L until 20L).map(i => i -> (math.min(i, 19 - i) + 1)).toMap)
   }
 
   test("bridge probe: cut edge flagged, cycle edges not") {
