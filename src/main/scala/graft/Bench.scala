@@ -53,6 +53,11 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
+  /** Spark's scratch directory (shuffle spill, checkpoint blocks) for
+    * every main here: SPARK_GRAFT_LOCAL_DIR, else a tmpfs path. */
+  private[graft] def localDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local")
+
   private def session(cores: Int): SparkSession = {
     // shuffle partitioning is data-driven and IDENTICAL at both legs (as on
     // a real cluster, where partitions follow data size, not executor
@@ -60,8 +65,6 @@ object Bench {
     // spill dirs on tmpfs — on a real cluster this is NVMe-local or a
     // remote shuffle service, and a slow shared disk would serialize all
     // cores through one device and fake poor scaling
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      "/dev/shm/graft-spark-local")
     new java.io.File(localDir).mkdirs()
     val partitions = sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", "32")
     val s = SparkSession.builder()
@@ -474,9 +477,7 @@ object Bench {
     // --- bench graph derived ONCE to tmpfs parquet; scaling legs and TC
     // legs read it from fresh child JVMs (supersteps measured, not
     // derivation) ---
-    val localBase = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      "/dev/shm/graft-spark-local")
-    val edgesPath = localBase + s"/bench_edges_$rows"
+    val edgesPath = localDir + s"/bench_edges_$rows"
     // the scaling legs use the FULL-size graph: efficiency is a RATIO of
     // edges/sec at two core counts over one fixed input, so it is
     // size-invariant only while superstep time >> per-superstep fixed cost.
@@ -490,7 +491,7 @@ object Bench {
     // honest rounds beat many rounds of a biased ratio.
     val legRows = sys.env.getOrElse("SPARK_GRAFT_LEG_ROWS",
       rows.toString).toLong
-    val legEdgesPath = localBase + s"/bench_edges_$legRows"
+    val legEdgesPath = localDir + s"/bench_edges_$legRows"
     if (doScaling || doTc) {
       val prep = session(cores4N)
       Edges.symmetrize(benchEdges(prep, rows))

@@ -50,6 +50,19 @@ final class ShuffleMeter(spark: SparkSession) extends SparkListener {
   * aggregate is one whose result does not depend on the order in which
   * tasks merge (a count, a sum of longs, a max); a floating-point sum
   * would not be.
+  *
+  * Every kernel whose state is one DataFrame rewritten each round runs
+  * here; a fixed-round kernel passes `delta = lit(0)`, never converges,
+  * and carries any per-round value it needs (a walk step, Katz's 4^i) as
+  * a state column. The round loops that stay outside it, and why:
+  *  - they emit every round's state, not only the last:
+  *    `RandomWalk.walks`/`node2vecWalks`, `GraphStats.khopFeatures` and
+  *    the `Betweenness.dependencies` backward sweep;
+  *  - their state is a collected local value: `Ann.kmeansCentroids`/
+  *    `kmeansParity`/`mmrSelect`, `Influence.degreeDiscount`, `BpeTrain`
+  *    and the `BdgLayout.voronoiColors` re-seed ladder.
+  * Shrinking-set loops run on [[Peel]] and hop-by-hop walks on
+  * [[Frontier]].
   */
 object Superstep {
 

@@ -1,6 +1,6 @@
 package graft.kernels
 
-import graft.engine.Frontier
+import graft.engine.{Frontier, Superstep}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -52,7 +52,7 @@ object Bfs {
     *
     * Shape: per round, one co-partitioned state⋈edges join + a min
     * aggregation with map-side combine (the A8 combiner); state is the
-    * only growing table (<= |V| rows), lineage truncated per round. Unlike
+    * only growing table (<= |V| rows), one [[Superstep]] round each. Unlike
     * [[distances]] the whole state re-joins each round — an improved
     * distance must be able to re-propagate. */
   def weightedDistances(edgesW: DataFrame, seeds: DataFrame,
@@ -60,17 +60,14 @@ object Bfs {
     // persisted for the loop: a lazy derived graph would otherwise be
     // re-derived every round
     val e = edgesW.select(col("src"), col("dst"), col("weight")).persist()
-    var state = seeds.select(col("vid"), lit(0L).as("dist"))
-      .localCheckpoint(eager = true)
-    for (_ <- 1 to rounds) {
-      val relaxed = e.join(state.hint("SHUFFLE_HASH"),
-          e("src") === state("vid"))
-        .select(e("dst").as("vid"),
-          (col("dist") + e("weight")).as("dist"))
+    def relax(state: DataFrame): DataFrame =
+      e.join(state.hint("SHUFFLE_HASH"), e("src") === state("vid"))
+        .select(e("dst").as("vid"), (col("dist") + e("weight")).as("dist"))
         .union(state)
         .groupBy(col("vid")).agg(min(col("dist")).as("dist"))
-      state = relaxed.localCheckpoint(eager = true)
-    }
+    val (state, _, _, _) = Superstep.run(edgesW.sparkSession, "sssp",
+      seeds.select(col("vid"), lit(0L).as("dist")), relax, lit(0),
+      (_, _, _) => false, rounds)
     e.unpersist()
     state
   }

@@ -113,18 +113,11 @@ object Community {
 
   final case class SeedCommunity(seed: Long, community: Array[Long], size: Int)
 
-  /** Per-seed best communities (size ≥ k). Lazy; its internal caches
-    * live until the session drops them — long-lived callers should use
-    * [[perSeedWithRelease]] and invoke the hook after materializing.
+  /** Per-seed best communities (size ≥ k). Lazy; returns the unpersist
+    * hook for the oriented-edge cache (used 4x in the plan), which [[run]]
+    * invokes after materializing.
     * @param verts (vid, attrs array<string>) — attr-format vertices
     * @param edges canonical undirected edge table (src < dst) */
-  def perSeed(spark: SparkSession, verts: DataFrame, edges: DataFrame,
-              k: Int = 3, maxCandidates: Int = DefaultMaxCandidates)
-      : org.apache.spark.sql.Dataset[SeedCommunity] =
-    perSeedWithRelease(spark, verts, edges, k, maxCandidates)._1
-
-  /** Same, with the unpersist hook for the oriented-edge cache (used 4x in
-    * the plan); [[run]] releases it after materializing. */
   def perSeedWithRelease(spark: SparkSession, verts: DataFrame,
                           edges: DataFrame, k: Int,
                           maxCandidates: Int = DefaultMaxCandidates)

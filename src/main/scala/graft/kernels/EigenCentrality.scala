@@ -31,23 +31,23 @@ object EigenCentrality {
     * magnitudes grow like (avg degree)^k — at 6 iterations that is exact
     * far below 2^63 for any graph whose hubs fit a shuffle; a tol-driven
     * production run would use the float β-form with per-superstep
-    * normalization instead. */
+    * normalization instead. The state carries the round's multiplier 4^i
+    * as a column `c`, equal on every row. */
   def katzScaled(spark: SparkSession, sym: DataFrame,
                  iters: Int = 6): DataFrame = {
     val e = sym.select(col("src"), col("dst")).repartition(col("src"))
       .persist()
-    var y = e.select(col("src").as("vid")).distinct()
-      .select(col("vid"), lit(1L).as("y"))
-      .localCheckpoint(eager = true)
-    var c = 1L
-    for (_ <- 1 to iters) {
-      c *= 4
+    val init = e.select(col("src").as("vid")).distinct()
+      .select(col("vid"), lit(1L).as("y"), lit(1L).as("c"))
+    def step(y: DataFrame): DataFrame = {
       val state = y.hint("SHUFFLE_HASH")
-      y = e.join(state, e("src") === state("vid"))
+      val c = max(col("c")) * 4L
+      e.join(state, e("src") === state("vid"))
         .groupBy(e("dst").as("vid"))
-        .agg((lit(c) + sum(col("y"))).as("y"))
-        .localCheckpoint(eager = true)
+        .agg((c + sum(col("y"))).as("y"), c.as("c"))
     }
+    val (y, _, _, _) = Superstep.run(spark, "katz", init, step, lit(0),
+      (_, _, _) => false, iters)
     e.unpersist()
     y.select(col("vid"), col("y").as("katz_scaled"))
   }

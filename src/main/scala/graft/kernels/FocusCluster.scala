@@ -201,12 +201,8 @@ object FocusCluster {
   }
 
   /** Per-seed focused clusters over a weighted canonical edge table
-    * (src, dst, weight) with src < dst. Lazy; long-lived callers should
-    * use [[perSeedWithRelease]] and invoke the hook after materializing. */
-  def perSeed(spark: SparkSession, wedges: DataFrame,
-              p: Params = Params()): org.apache.spark.sql.Dataset[SeedCluster] =
-    perSeedWithRelease(spark, wedges, p)._1
-
+    * (src, dst, weight) with src < dst. Lazy; returns the unpersist hook
+    * that [[run]] invokes after materializing. */
   def perSeedWithRelease(spark: SparkSession, wedges: DataFrame, p: Params)
       : (org.apache.spark.sql.Dataset[SeedCluster], () => Unit) = {
     import spark.implicits._

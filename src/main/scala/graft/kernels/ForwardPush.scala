@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Superstep
 import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is one join of the (sparse) residual frontier
   * against the co-partitioned edge table plus one map-side-combined sum —
-  * the [[graft.engine.Superstep]] discipline, with lineage cut per round.
+  * one [[graft.engine.Superstep]] round, with lineage cut per round.
   */
 object ForwardPush {
 
@@ -37,11 +38,10 @@ object ForwardPush {
     val sym = Edges.symmetrize(edges).localCheckpoint(eager = true)
     val deg = Edges.degrees(sym)
 
-    var state = spark.range(1)
+    val init = spark.range(1)
       .select(lit(seed).as("vid"), lit(0L).as("p"),
         lit(1000000000000L).as("r"))
-      .localCheckpoint(eager = true)
-    for (_ <- 1 to rounds) {
+    def push(state: DataFrame): DataFrame = {
       val st = state.join(deg, Seq("vid"))
         .select(col("vid"),
           (col("p") + expr(s"($alphaPpm * r) div 1000000")).as("p2"),
@@ -50,12 +50,13 @@ object ForwardPush {
       val pushed = st.select(col("vid").as("src"), col("share"))
         .join(sym, "src")
         .groupBy(col("dst").as("vid")).agg(sum(col("share")).as("r"))
-      state = st.select(col("vid"), col("p2").as("p"))
+      st.select(col("vid"), col("p2").as("p"))
         .join(pushed, Seq("vid"), "full")
         .select(col("vid"), coalesce(col("p"), lit(0L)).as("p"),
           coalesce(col("r"), lit(0L)).as("r"))
-        .localCheckpoint(eager = true)
     }
+    val (state, _, _, _) = Superstep.run(spark, "forward_push", init, push,
+      lit(0), (_, _, _) => false, rounds)
     state.filter(col("p") =!= 0L || col("r") =!= 0L)
   }
 }

@@ -602,7 +602,7 @@ object GraphStats {
     *
     * Scale: each hop is ONE join+max-aggregate moving |E|·2^regBits
     * integer rows over the src-partitioned persisted edge fabric (the
-    * superstep shape); lineage is checkpoint-truncated per hop. */
+    * superstep shape); each hop is one [[Superstep]] round. */
   def anf(sym: DataFrame, hops: Int = 2, regBits: Int = 4): DataFrame = {
     val m = 1L << regBits
     val restBits = 60 - regBits
@@ -610,20 +610,21 @@ object GraphStats {
       .persist()
     val h = graft.text.Dedup.shaTokenHash60(col("vid").cast("string"))
     val rest = shiftright(h, regBits)
-    var regs = e.select(col("src").as("vid")).distinct()
+    val init = e.select(col("src").as("vid")).distinct()
       .select(col("vid"), pmod(h, lit(m)).as("reg"),
         when(rest === 0L, lit(restBits + 1).cast("long"))
           .otherwise(instr(lpad(bin(rest), restBits, "0"), "1")
             .cast("long")).as("max_rank"))
-    for (_ <- 1 to hops) {
+    def hop(regs: DataFrame): DataFrame = {
       val nbr = e.join(regs.withColumnRenamed("vid", "dst")
           .hint("SHUFFLE_HASH"), "dst")
         .select(col("src").as("vid"), col("reg"), col("max_rank"))
-      regs = regs.unionByName(nbr)
+      regs.unionByName(nbr)
         .groupBy(col("vid"), col("reg"))
         .agg(max(col("max_rank")).as("max_rank"))
-        .localCheckpoint()
     }
+    val (regs, _, _, _) = Superstep.run(sym.sparkSession, "anf", init, hop,
+      lit(0), (_, _, _) => false, hops)
     val out = regs.groupBy(col("vid"))
       .agg(count(lit(1)).as("n_regs"), sum(col("max_rank")).as("rank_sum"))
       .localCheckpoint()

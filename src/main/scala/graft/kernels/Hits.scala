@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Superstep
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,14 +18,16 @@ import org.apache.spark.sql.functions._
   * bit-replayable in plain SQL (a recursive CTE over half-steps) and
   * double stays exact far past any practical iteration count.
   *
-  * Support semantics: a vertex with no in-edges carries no authority row
+  * Support semantics: a vertex with no in-edges carries no authority
   * and a vertex with no out-edges into the surviving authority support
-  * carries no hub row — the final full outer join coalesces both to 0,
-  * so every vertex that still holds either score appears exactly once.
+  * carries no hub — a null in the state, 0 in the output — so every
+  * vertex that still holds either score appears exactly once.
   *
-  * Scale shape: the edge table is persisted src-partitioned once and
-  * reused by all 2·iters half-steps; state joins build on the (small)
-  * score side via SHUFFLE_HASH; lineage is truncated per half-step.
+  * Scale shape: one [[Superstep]] state (vid, hub, auth) per iteration,
+  * materialized once: the two half-steps and the full outer join that
+  * pairs their supports share one plan. The edge table is persisted once
+  * and reused by every iteration; state joins build on the (small) score
+  * side via SHUFFLE_HASH.
   */
 object Hits {
 
@@ -34,37 +37,31 @@ object Hits {
     * @param iters full HITS iterations (authority then hub) */
   def run(spark: SparkSession, edges: DataFrame, iters: Int): Result = {
     val e = edges.select(col("src"), col("dst")).persist()
-    val verts = e.select(col("src").as("vid"))
+    val init = e.select(col("src").as("vid"))
       .union(e.select(col("dst").as("vid"))).distinct()
-
-    var h = verts.select(col("vid"), lit(1.0).as("x")).localCheckpoint()
-    // iters >= 1 so `a` is always assigned; empty-graph runs short-circuit
-    // before the null-scalar aggregations below
-    require(iters >= 1, "hits needs at least one iteration")
-    var a: DataFrame = h.limit(0)
-    for (_ <- 1 to iters) {
-      val hs = h.select(col("vid").as("sv"), col("x")).hint("SHUFFLE_HASH")
-      a = e.join(hs, e("src") === hs("sv"))
-        .groupBy(e("dst").as("vid")).agg(sum(col("x")).as("x"))
-        .localCheckpoint()
-      val as = a.select(col("vid").as("sv"), col("x")).hint("SHUFFLE_HASH")
-      h = e.join(as, e("dst") === as("sv"))
-        .groupBy(e("src").as("vid")).agg(sum(col("x")).as("x"))
-        .localCheckpoint()
+      .select(col("vid"), lit(1.0).as("hub"),
+        lit(null).cast("double").as("auth"))
+    def half(score: DataFrame, from: String, to: String,
+             name: String): DataFrame = {
+      val s = score.select(col("vid").as("sv"), col("x")).hint("SHUFFLE_HASH")
+      e.join(s, col(from) === col("sv"))
+        .groupBy(col(to).as("vid")).agg(sum(col("x")).as(name))
     }
-
-    def total(df: DataFrame): Double = df.agg(sum(col("x"))).first() match {
-      case r if r.isNullAt(0) => 1.0 // empty side: nothing to normalize
-      case r                  => r.getDouble(0)
+    def step(st: DataFrame): DataFrame = {
+      val a = half(st.filter(col("hub").isNotNull)
+        .select(col("vid"), col("hub").as("x")), "src", "dst", "auth")
+      val h = half(a.select(col("vid"), col("auth").as("x")),
+        "dst", "src", "hub")
+      h.join(a, Seq("vid"), "full_outer")
     }
-    val hTot = total(h)
-    val aTot = total(a)
-    val hn = h.select(col("vid"), (col("x") / hTot).as("hub"))
-    val an = a.select(col("vid").as("avid"), (col("x") / aTot).as("auth"))
-    val out = hn.join(an, hn("vid") === an("avid"), "full_outer")
-      .select(coalesce(col("vid"), col("avid")).as("vid"),
-        coalesce(col("hub"), lit(0.0)).as("hub"),
-        coalesce(col("auth"), lit(0.0)).as("auth"))
+    val (state, _, _, _) = Superstep.run(spark, "hits", init, step, lit(0),
+      (_, _, _) => false, iters)
+    // one scalar per score; an empty side has nothing to normalize
+    val tot = state.agg(sum(col("hub")), sum(col("auth"))).first()
+    def total(i: Int): Double = if (tot.isNullAt(i)) 1.0 else tot.getDouble(i)
+    val out = state.select(col("vid"),
+      coalesce(col("hub") / total(0), lit(0.0)).as("hub"),
+      coalesce(col("auth") / total(1), lit(0.0)).as("auth"))
     e.unpersist()
     Result(out, iters)
   }

@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Superstep
 import graft.graph.Edges
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -29,9 +30,8 @@ import org.apache.spark.sql.functions._
   * computed once; each sweep is one shuffle on the gather key (the same
   * key every sweep, so AQE/bucketing can reuse the layout) followed by a
   * broadcast-size absorbing-set anti-pattern — the absorbing set is a
-  * column flag, never a driver collect. Each sweep's frame is eagerly
-  * localCheckpoint'd (the repo's O(1)-lineage discipline for unrolled
-  * fixed-K loops, same as SimRank's ppm iterations).
+  * column flag, never a collect. Each sweep is one [[Superstep]] round,
+  * its frame materialized (O(1) lineage, as in every fixed-K loop).
   */
 object HittingTime {
 
@@ -52,25 +52,23 @@ object HittingTime {
     // top-m (no global single-task window), broadcast back as a flag
     val top = deg.orderBy(col("degree").desc, col("vid"))
       .limit(absorbTop).select(col("vid").as("avid"))
-    val verts = deg
+    val init = deg
       .join(broadcast(top), deg("vid") === top("avid"), "left")
       .select(col("vid"), col("degree"),
-        col("avid").isNotNull.as("absorb"))
-      .localCheckpoint(eager = true)
-    var h = verts.select(col("vid"), col("degree"), col("absorb"),
-      lit(0L).as("h_milli"))
-    for (_ <- 1 to sweeps) {
+        col("avid").isNotNull.as("absorb"), lit(0L).as("h_milli"))
+    def sweep(h: DataFrame): DataFrame = {
       val gathered = sym
         .join(h.select(col("vid").as("dst"), col("h_milli").as("hn")),
           "dst")
         .groupBy(col("src").as("vid")).agg(sum(col("hn")).as("hsum"))
-      h = verts.join(gathered, Seq("vid"), "left")
+      h.drop("h_milli").join(gathered, Seq("vid"), "left")
         .select(col("vid"), col("degree"), col("absorb"),
           when(col("absorb"), lit(0L))
             .otherwise(expr("1000L + coalesce(hsum, 0L) div degree"))
             .as("h_milli"))
-        .localCheckpoint(eager = true)
     }
+    val (h, _, _, _) = Superstep.run(edges.sparkSession, "hitting_time",
+      init, sweep, lit(0), (_, _, _) => false, sweeps)
     h.select(col("vid"), col("degree"), col("h_milli"))
   }
 }

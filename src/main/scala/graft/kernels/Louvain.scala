@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Superstep
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,8 +33,8 @@ import org.apache.spark.sql.functions._
   * of nothing: the degsum table joins on cand (≤|V| rows, shuffle-hash).
   * The per-round argmax is a max_by over each vertex's ≤deg(v)+1
   * candidate rows — no global sort, no window over the corpus. Rounds are
-  * synchronous and the assignment is localCheckpoint-truncated per round,
-  * so lineage stays O(1) like the other superstep kernels. */
+  * synchronous [[Superstep]] rounds, the assignment materialized per
+  * round, so lineage stays O(1) like the other superstep kernels. */
 object Louvain {
 
   /** @param edges undirected unique pairs (src, dst), src < dst
@@ -48,8 +49,7 @@ object Louvain {
     val sym = graft.graph.Edges.symmetrize(e0)
     val deg = graft.graph.Edges.degrees(sym).persist()
     val m = e0.count()
-    var asg = deg.select(col("vid"), col("vid").as("community"))
-    for (_ <- 1 to rounds) {
+    def step(asg: DataFrame): DataFrame = {
       val degsum = asg.join(deg, "vid")
         .groupBy(col("community").as("cand"))
         .agg(sum(col("degree")).as("dsum"))
@@ -73,12 +73,14 @@ object Louvain {
               col("degree")).otherwise(lit(0L))))
       // deterministic argmax: max gain, then smallest community id —
       // packed as a max_by key so no per-vertex window sort is needed
-      asg = scored
+      scored
         .groupBy(col("vid"))
         .agg(max_by(col("cand"),
           struct(col("gain"), -col("cand"))).as("community"))
-        .localCheckpoint(eager = true)
     }
+    val (asg, _, _, _) = Superstep.run(spark, "louvain",
+      deg.select(col("vid"), col("vid").as("community")), step, lit(0),
+      (_, _, _) => false, rounds)
     e0.unpersist(); deg.unpersist()
     asg
   }

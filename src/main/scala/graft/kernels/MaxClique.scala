@@ -72,13 +72,6 @@ object MaxClique {
   final case class SeedResult(seed: Long, size: Int, cliques: Long,
                               witness: Array[Long])
 
-  /** Per-seed maximum cliques. Input: canonical undirected edges (src<dst).
-    * Every maximum clique of the graph is found at exactly one seed (its
-    * min-(degree,id) member). Lazy; long-lived callers should use
-    * [[perSeedWithRelease]] and invoke the hook after materializing. */
-  def perSeed(spark: SparkSession, edges: DataFrame)
-      : org.apache.spark.sql.Dataset[SeedResult] = perSeedWithRelease(spark, edges)._1
-
   /** Cheap global lower bound on the max clique size — the reference's
     * cross-seed bound (`apps/maxclique.cpp:358,413`: every task prunes
     * against the global running max, refreshed mid-run). Set-at-a-time we
@@ -122,9 +115,12 @@ object MaxClique {
     1 + chosen.length // + the seed itself (adjacent to every neighbor)
   }
 
-  /** Same, returning the unpersist hook for the oriented edge cache (used
-    * 4x in the plan — triple self-join + neighbor agg — so it IS persisted,
-    * and [[run]] releases it once the result is materialized).
+  /** Per-seed maximum cliques. Input: canonical undirected edges (src<dst).
+    * Every maximum clique of the graph is found at exactly one seed (its
+    * min-(degree,id) member). Lazy; returns the unpersist hook for the
+    * oriented edge cache (used 4x in the plan — triple self-join +
+    * neighbor agg — so it IS persisted, and [[run]] releases it once the
+    * result is materialized).
     *
     * `globalBound` defaults OFF here: with it on, seeds whose
     * out-neighborhood cannot reach the greedy global bound produce NO row

@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.engine.Superstep
 import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,11 +23,11 @@ import org.apache.spark.sql.functions._
   * pairs, stored once with a < b); each iteration is two keyed joins of
   * the symmetric edge table around the state lookup (u-side then w-side —
   * the same neighbor-info-exchange shape as J6) and one (a, b) sum — all
-  * shuffles on vertex/pair keys, map-side combined, state
-  * localCheckpoint-truncated. Pair-state growth is the real cost at
-  * scale: density rises with common-neighborhood mass, so production runs
-  * bound it (threshold filter inside the loop via `minPpm`, exactly where
-  * a FocusCluster-style ball cap would go). The ppm numerator
+  * shuffles on vertex/pair keys, map-side combined, one [[Superstep]]
+  * round each. Pair-state growth is the real cost at scale: density
+  * rises with common-neighborhood mass, so production runs bound it
+  * (threshold filter inside the loop via `minPpm`, exactly where a
+  * FocusCluster-style ball cap would go). The ppm numerator
   * cPpm·Σ s_t ≤ 8·10⁵ · (deg_a·deg_b·10⁶) stays in long range up to
   * deg products of ~10⁷; beyond that, pre-scale the state (documented,
   * spec-guarded at this scale). */
@@ -44,15 +45,11 @@ object SimRank {
     val deg = Edges.degrees(sym).persist()
     val diag = deg.select(col("vid").as("u"), col("vid").as("w"),
       lit(1000000L).as("sp"))
-    // off-diagonal state, stored once with a < b
-    var s: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      val full = s match {
-        case None => diag
-        case Some(t) => diag
-          .union(t.select(col("a").as("u"), col("b").as("w"), col("sp")))
-          .union(t.select(col("b").as("u"), col("a").as("w"), col("sp")))
-      }
+    // off-diagonal state, stored once with a < b; it starts empty
+    def step(t: DataFrame): DataFrame = {
+      val full = diag
+        .union(t.select(col("a").as("u"), col("b").as("w"), col("sp")))
+        .union(t.select(col("b").as("u"), col("a").as("w"), col("sp")))
       val tot = sym.as("na")
         .join(full.hint("SHUFFLE_HASH"), col("na.dst") === col("u"))
         .select(col("na.src").as("a"), col("w"), col("sp"))
@@ -60,17 +57,17 @@ object SimRank {
           && col("a") < col("nb.src"))
         .groupBy(col("a"), col("nb.src").as("b"))
         .agg(sum(col("sp")).as("tot"))
-      s = Some(tot
+      tot
         .join(deg.select(col("vid").as("a"), col("degree").as("da")), "a")
         .join(deg.select(col("vid").as("b"), col("degree").as("db")), "b")
         .select(col("a"), col("b"),
           expr(s"($cPpm * tot) div (1000000L * da * db)").as("sp"))
         .filter(col("sp") >= minPpm)
-        .localCheckpoint(eager = true))
     }
+    val (s, _, _, _) = Superstep.run(spark, "simrank",
+      diag.select(col("u").as("a"), col("w").as("b"), col("sp")).limit(0),
+      step, lit(0), (_, _, _) => false, iters)
     sym.unpersist(); deg.unpersist()
-    s.map(_.select(col("a"), col("b"), col("sp").as("sim_ppm")))
-      .getOrElse(diag.select(col("u").as("a"), col("w").as("b"),
-        col("sp").as("sim_ppm")).limit(0))
+    s.select(col("a"), col("b"), col("sp").as("sim_ppm"))
   }
 }

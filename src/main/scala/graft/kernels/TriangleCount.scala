@@ -32,10 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object TriangleCount {
 
-  private def oriented(edges: DataFrame, byDegree: Boolean): DataFrame =
-    if (byDegree) Edges.orientByDegree(edges)
-    else edges.select(col("src"), col("dst"))
-
   /** Triangle triples from a pre-materialized oriented edge table. */
   private def trianglesFrom(e: DataFrame): DataFrame = {
     val adj = e.groupBy(col("src"))
@@ -50,15 +46,6 @@ object TriangleCount {
       .select(col("src").as("a"), col("dst").as("b"),
         explode(col("common")).as("c"))
   }
-
-  /** Triangle triples (a, b, c) — one row per triangle, corners unordered
-    * (set semantics; each triangle appears exactly once). Lazy; intended
-    * for small/spec graphs — the batch entry points are [[total]] and
-    * [[perVertex]], which manage the oriented-edge cache.
-    * @param edges canonical distinct undirected edge table (src < dst)
-    * @param byDegree orient by (degree, id) [scale path] vs by id */
-  def triangles(edges: DataFrame, byDegree: Boolean = true): DataFrame =
-    trianglesFrom(oriented(edges, byDegree))
 
   /** Triangle triples over a caller-managed (persisted) oriented edge
     * table — the per-round building block for iterative consumers like
@@ -95,9 +82,9 @@ object TriangleCount {
     * billions of triangles costs O(E^1.5) intersection work and O(E)
     * rows, not O(#triangles). Eager (computes the scalar, releases the
     * cache, returns a local one-row frame). */
-  def total(edges: DataFrame, byDegree: Boolean = true): DataFrame = {
+  def total(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    val e = oriented(edges, byDegree).persist()
+    val e = Edges.orientByDegree(edges).persist()
     val result = commonCountsFrom(e)
       .agg(coalesce(sum(col("ncommon")), lit(0L)).as("triangles"))
     val rows = result.collect().toSeq
@@ -109,8 +96,8 @@ object TriangleCount {
   /** Per-vertex triangle participation counts (vid, tc) — vertices in at
     * least one triangle. Result is materialized (localCheckpoint) so the
     * oriented-edge cache can be released before return. */
-  def perVertex(edges: DataFrame, byDegree: Boolean = true): DataFrame = {
-    val e = oriented(edges, byDegree).persist()
+  def perVertex(edges: DataFrame): DataFrame = {
+    val e = Edges.orientByDegree(edges).persist()
     val t = trianglesFrom(e)
     val out = t.select(col("a").as("vid"))
       .union(t.select(col("b").as("vid")))

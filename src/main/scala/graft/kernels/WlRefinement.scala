@@ -3,6 +3,7 @@ package graft.kernels
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.engine.Superstep
 import graft.graph.Edges
 import graft.text.Dedup
 
@@ -35,13 +36,10 @@ object WlRefinement {
     // rounds+1 times
     val e = sym.select(col("src"), col("dst")).persist()
     // each round reads the previous colors twice (multiset build + the
-    // rehash join) — checkpoint-truncated lineage per round, the same
-    // O(1)-lineage discipline as the superstep kernels (without it the
-    // final plan re-reads the base edges 2^rounds times)
-    var c = Edges.degrees(e)
-      .select(col("vid"), col("degree").cast("long").as("color"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    // rehash join) — one Superstep round each, so lineage is truncated
+    // per round (without it the final plan re-reads the base edges
+    // 2^rounds times)
+    def refine(c: DataFrame): DataFrame = {
       val counted = e
         .join(c.withColumnRenamed("vid", "src"), "src")
         .groupBy(col("dst"), col("color"))
@@ -53,12 +51,15 @@ object WlRefinement {
           sort_array(collect_list(struct(col("color"), col("n")))),
           s => concat(s.getField("color").cast("string"), lit(":"),
             s.getField("n").cast("string"))), ",").as("enc"))
-      c = c.join(enc, "vid")
+      c.join(enc, "vid")
         .select(col("vid"), Dedup.shaTokenHash60(
           concat(col("color").cast("string"), lit("|"), col("enc")))
           .as("color"))
-        .localCheckpoint(true)
     }
+    val (c, _, _, _) = Superstep.run(sym.sparkSession, "wl_refinement",
+      Edges.degrees(e)
+        .select(col("vid"), col("degree").cast("long").as("color")),
+      refine, lit(0), (_, _, _) => false, rounds)
     e.unpersist() // c is checkpointed; the final joins never re-read e
     val sizes = c.groupBy(col("color"))
       .agg(count(lit(1)).as("class_size"))

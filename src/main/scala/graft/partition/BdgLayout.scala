@@ -25,10 +25,11 @@ import org.apache.spark.sql.functions._
   *  - B5 greedy block→worker assignment (`BDGPartitioner.tpp:139-235`,
   *    KDD'13 streaming heuristic): blocks in size-desc order; a block goes
   *    to the worker maximizing (size of already-assigned neighbor blocks)
-  *    × (1 − assigned/capacity), capacity = (1+eps)·|V|/workers, falling
+  *    × (1 − assigned/capacity), capacity = 1.1·|V|/workers, falling
   *    back to the least-loaded worker. The reference computes the weight
   *    term with INTEGER division (always 1 under capacity); we implement
-  *    the intended float formula.
+  *    the intended formula, ranked in exact integers
+  *    ([[assignBlocksExact]]).
   *  - B6 block re-shuffle: the layout table (vid, color, worker) is the
   *    Spark analog — `repartition($"worker")` co-locates a block's
   *    vertices without rewriting neighbor worker-ids into the data.
@@ -50,8 +51,7 @@ object BdgLayout {
       rateFactor: Double = 2.0,  // re-seed growth
       stopRatio: Double = 0.9,   // stop re-seeding when this much colored
       maxRate: Double = 0.1,     // cap on the re-seed rate
-      workers: Int = 8,          // target worker count
-      eps: Double = 0.1)         // capacity slack (1+eps)*avg
+      workers: Int = 8)          // target worker count
 
   /** Deterministic hash sample: keep vid with probability ~rate. */
   private def sampled(df: DataFrame, rate: Double): DataFrame =
@@ -158,55 +158,15 @@ object BdgLayout {
         coalesce(col("nbs"), array().cast("array<long>")).as("nbs"))
   }
 
-  /** A7 + B5: per-color block info, collected and greedily packed into
-    * `workers` bins. Returns the driver-side block→worker map. */
-  def assignBlocks(symIn: DataFrame, colors: DataFrame,
-                   p: Params = Params()): Map[Long, Int] = {
-    val (sym, ownSym) = Frontier.pinned(symIn)
-    val info = blockInfo(sym, colors)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toSet))
-    if (ownSym) sym.unpersist()
-    val total = info.map(_._2).sum
-    val capacity = ((1 + p.eps) * total / p.workers)
-    val assigned = Array.fill(p.workers)(0L)
-    // countmap(w)(c) = total size of blocks already on w that NEIGHBOR c
-    val countmap = Array.fill(p.workers)(
-      scala.collection.mutable.HashMap.empty[Long, Long])
-    val blk2w = scala.collection.mutable.HashMap.empty[Long, Int]
-    // size-desc, color-asc: deterministic version of the reference sort
-    info.sortBy(b => (-b._2, b._1)).foreach { case (color, size, nbs) =>
-      var best = 0.0; var wid = -1
-      for (j <- 0 until p.workers) {
-        val s = countmap(j).getOrElse(color, 0L)
-        val priority = s * (1.0 - assigned(j) / capacity)
-        if (priority > best && assigned(j) + size <= capacity) {
-          best = priority; wid = j
-        }
-      }
-      if (wid < 0) wid = assigned.zipWithIndex.minBy(_._1)._2
-      blk2w(color) = wid
-      assigned(wid) += size
-      nbs.foreach(c =>
-        countmap(wid)(c) = countmap(wid).getOrElse(c, 0L) + size)
-    }
-    blk2w.toMap
-  }
-
-  /** B5 parity twin (q96): the SAME KDD'13 greedy packer as
-    * [[assignBlocks]] re-expressed in pure-integer arithmetic, so a DuckDB
-    * recursive CTE (one iteration per block, state carried as lists)
-    * replays every placement bit-for-bit — the move that promoted the
-    * float ANN fast paths via q57/q58. Order-equivalence to the float
-    * formula: ranking workers by s·(1 − a/c) is identical to ranking by
-    * the integer s·(c − a) because the capacity c is constant across
-    * workers; the two can differ only on rounding-induced ties, which is
-    * exactly why the oracle-checked twin is the integer one. Capacity is
-    * the integer floor (capNum·total)/(capDen·workers) — the float path's
-    * (1+eps)·total/workers with eps = capNum/capDen − 1. The priority
-    * product s·(c − a) is bounded by |V|² — fine for any driver-side
-    * block table (the packer is O(blocks·workers) on the driver either
-    * way); the float [[assignBlocks]] stays the production default.
+  /** A7 + B5 (q96): per-color block info, collected and greedily packed
+    * into `workers` bins by the KDD'13 heuristic in pure-integer
+    * arithmetic, so a DuckDB recursive CTE (one iteration per block, state
+    * carried as lists) replays every placement bit-for-bit. Ranking
+    * workers by the integer s·(c − a) is ranking by s·(1 − a/c), since
+    * the capacity c is constant across workers, with no rounding ties.
+    * Capacity is the integer floor (capNum·total)/(capDen·workers). The
+    * priority product s·(c − a) is bounded by |V|² — fine for any
+    * collected block table (the packer is O(blocks·workers) in one JVM).
     * Returns the (color, worker) assignment as a small DataFrame.
     * Reference: `partition/BDGPartitioner.tpp:139-235`. */
   def assignBlocksExact(spark: SparkSession, symIn: DataFrame,
@@ -221,9 +181,11 @@ object BdgLayout {
     val total = info.map(_._2).sum
     val capacity = (capNum * total) / (capDen * workers)
     val assigned = Array.fill(workers)(0L)
+    // countmap(w)(c) = total size of blocks already on w that NEIGHBOR c
     val countmap = Array.fill(workers)(
       scala.collection.mutable.HashMap.empty[Long, Long])
     val out = Seq.newBuilder[(Long, Long)]
+    // size-desc, color-asc: deterministic version of the reference sort
     info.sortBy(b => (-b._2, b._1)).foreach { case (color, size, nbs) =>
       var best = 0L; var wid = -1
       for (j <- 0 until workers) {
@@ -241,8 +203,8 @@ object BdgLayout {
 
   /** B7 parity twin (q97): per-worker layout stats + cross-edge counts for
     * an EXPLICIT (color, worker) assignment over an explicit color table —
-    * plain SQL end-to-end, unlike [[crossEdgeStats]] whose layout embeds
-    * the float packer. The hash baseline uses the sha-derived hash family
+    * plain SQL end-to-end, unlike [[crossEdgeStats]] whose layout runs
+    * the re-seed ladder. The hash baseline uses the sha-derived hash family
     * (the one DuckDB shares; xxhash64 has no DuckDB counterpart) and is
     * computed over the SAME colored-colored edge subset as the BDG count,
     * so the reduction claim is apples-to-apples and driver-verifiable.
@@ -296,14 +258,12 @@ object BdgLayout {
     * `BDGPartitioner.tpp:131-135`). */
   def layout(spark: SparkSession, symIn: DataFrame,
              p: Params = Params()): DataFrame = {
-    import spark.implicits._
     val (sym, ownSym) = Frontier.pinned(symIn)
     val colors = voronoiColors(spark, sym, p)
-    val blk2w = assignBlocks(sym, colors, p)
-    if (ownSym) sym.unpersist() // blk2w is driver-side; colors checkpointed
-    val mapDf = blk2w.toSeq.toDF("color", "worker")
-    colors.join(broadcast(mapDf), "color")
-      .select(col("vid"), col("color"), col("worker"))
+    val assign = assignBlocksExact(spark, sym, colors, p.workers)
+    if (ownSym) sym.unpersist() // assign is local; colors checkpointed
+    colors.join(broadcast(assign), "color")
+      .select(col("vid"), col("color"), col("worker").cast("int"))
   }
 
   /** B7: per-worker layout stats + cross-edge counts, with the plain

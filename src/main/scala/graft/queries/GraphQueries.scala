@@ -318,9 +318,9 @@ object GraphQueries {
     // (assignBlocksExact, q96-proven), exact per-worker stats with the
     // sha-hash baseline (q97-proven) — every stage deterministic and
     // SQL-replayable, so the full pipeline output hash-matches a DuckDB
-    // recursive-CTE replay. The production float path (re-seed ladder +
-    // float packer, voronoiColors/assignBlocks) stays spec-covered in
-    // PartitionSpec with the hash-beating assertion.
+    // recursive-CTE replay. The re-seed ladder path (voronoiColors +
+    // layout) stays spec-covered in PartitionSpec with the hash-beating
+    // assertion.
     Q("q38_bdg_layout", (s, d) => bdgCross(s, d, 10, 6),
       // end-to-end BDG pipeline replay — q97's flood+packer+stats CTE at
       // the production 1% seed rate and 6-hop flood radius

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.engine.Superstep
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,19 +54,19 @@ object TextRank {
       .localCheckpoint(eager = true)
     val outW = sym.groupBy(col("src")).agg(sum(col("w")).as("wout"))
 
-    var rank = outW.select(col("src").as("tok"), lit(1000000L).as("r"))
-      .localCheckpoint(eager = true)
-    for (_ <- 1 to iters) {
+    def step(rank: DataFrame): DataFrame = {
       val contrib = rank.join(sym, col("tok") === col("src"))
         .join(outW, "src")
         .select(col("dst"), expr("(r * w) div wout").as("c"))
         .groupBy(col("dst").as("tok")).agg(sum(col("c")).as("cin"))
-      rank = rank.join(contrib, Seq("tok"), "left")
+      rank.join(contrib, Seq("tok"), "left")
         .select(col("tok"),
           (lit(150000L) + expr("850000 * coalesce(cin, 0) div 1000000"))
             .as("r"))
-        .localCheckpoint(eager = true)
     }
+    val (rank, _, _, _) = Superstep.run(docs.sparkSession, "textrank",
+      outW.select(col("src").as("tok"), lit(1000000L).as("r")), step,
+      lit(0), (_, _, _) => false, iters)
     rank.orderBy(col("r").desc, col("tok")).limit(topK)
       .select(col("tok"), col("r").as("rank_ppm"))
       .withColumn("rk", row_number().over(

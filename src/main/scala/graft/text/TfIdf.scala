@@ -7,14 +7,10 @@ import org.apache.spark.sql.functions._
   * classic corpus-profiling / keyword-extraction pass (and the scoring
   * core of a BM25-style retrieval index).
   *
-  * Two idf flavors:
-  *  - [[topTermsIdfPpm]] uses the exact-integer idf `1000000·N div df`
-  *    (monotone in 1/df like ln(N/df), floor-ppm discipline) so a SQL
-  *    oracle replays the ranking bit-for-bit — the hash-oracled path;
-  *  - [[topTerms]] uses the textbook `tf · ln(N/df)` double — the
-  *    production scoring, same plan shape, kept out of the oracle because
-  *    a 1-ulp libm difference at a round boundary could flip a tie
-  *    (ADVICE r3 discipline).
+  * [[topTermsIdfPpm]] uses the exact-integer idf `1000000·N div df`
+  * (monotone in 1/df like the textbook ln(N/df), floor-ppm discipline) so
+  * a SQL oracle replays the ranking bit-for-bit: a double `ln` could flip
+  * a tie on a 1-ulp libm difference at a round boundary.
   *
   * Scale shape: tf is a (doc, term) count (map-side combined, keyed by
   * doc — skew-free), df is a count over that pair table keyed by term
@@ -24,45 +20,23 @@ import org.apache.spark.sql.functions._
   * scalar count. */
 object TfIdf {
 
-  /** (doc, term, tf) pairs + the term document-frequency table. */
-  private def tfDf(docs: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, DataFrame) = {
+  /** Exact-integer parity ranking: score = tf · (1000000·N div df). */
+  def topTermsIdfPpm(docs: DataFrame, idCol: String, textCol: String,
+                     k: Int = 3): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val n = docs.select(col(idCol)).distinct().count()
     val tf = docs.select(col(idCol),
         explode(TextFunctions.tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    (tf, df)
-  }
-
-  private def topK(scored: DataFrame, idCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("score").desc, col("term").asc)
-    scored.withColumn("rank", row_number().over(w))
+    tf.join(df, "term")
+      .withColumn("score", expr(s"tf * (1000000L * ${n}L div df)"))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col(idCol), col("rank").cast("long").as("rank"),
         col("term"), col("score"))
-  }
-
-  /** Exact-integer parity ranking: score = tf · (1000000·N div df). */
-  def topTermsIdfPpm(docs: DataFrame, idCol: String, textCol: String,
-                     k: Int = 3): DataFrame = {
-    val n = docs.select(col(idCol)).distinct().count()
-    val (tf, df) = tfDf(docs, idCol, textCol)
-    val scored = tf.join(df, "term")
-      .withColumn("score", expr(s"tf * (1000000L * ${n}L div df)"))
-    topK(scored, idCol, k)
-  }
-
-  /** Textbook double scoring: score = tf · ln(N/df), rounded to 6 dp. */
-  def topTerms(docs: DataFrame, idCol: String, textCol: String,
-               k: Int = 3): DataFrame = {
-    val n = docs.select(col(idCol)).distinct().count()
-    val (tf, df) = tfDf(docs, idCol, textCol)
-    val scored = tf.join(df, "term")
-      .withColumn("score",
-        round(col("tf") * log(lit(n.toDouble) / col("df")), 6))
-    topK(scored, idCol, k)
   }
 
   /** PMI-family collocation mining: the top-k adjacent word pairs by

@@ -21,8 +21,7 @@ object PlanDump {
     val suffix = args(2)
     val names = args(3).split(",").toSeq
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      "/dev/shm/graft-spark-local")
+    val localDir = graft.Bench.localDir
     new java.io.File(localDir).mkdirs()
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)

@@ -20,11 +20,10 @@ object QProbe {
     val cores = args.lift(2).orElse(sys.env.get("SPARK_GRAFT_CPUS"))
       .getOrElse(Runtime.getRuntime.availableProcessors.toString)
     val rounds = args.lift(3).map(_.toInt).getOrElse(1)
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      "/dev/shm/graft-spark-local")
     val spark = SparkSession.builder().master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.local.dir", localDir)
+      .config("spark.local.dir", graft.Bench.localDir)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
