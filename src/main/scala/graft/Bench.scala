@@ -1,8 +1,10 @@
 package graft
 
 import graft.corpus.{CorpusGen, EdgeDeriver}
+import graft.engine.IterationMetric
 import graft.graph.Edges
 import graft.kernels.{ConnectedComponents, LabelPropagation, PageRank, TriangleCount}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,41 +19,56 @@ import org.apache.spark.sql.functions._
   *  - kernel timings (CC / LP / TC) on the bench graph,
   *  - per-query wall times over `SPARK_GRAFT_SF_DIR` (driver contract).
   *
-  * Artifact robustness (round-3 VERDICT item 1 — BENCH_r03 was rc=124
-  * with nothing recorded because all output was one end-of-run println):
+  * Artifact robustness:
   *
   *  - a GLOBAL WALL-CLOCK BUDGET (`SPARK_GRAFT_BUDGET_SEC`, default 2700)
   *    degrades the protocol gracefully instead of overrunning the driver's
   *    timeout: extra scaling-leg rounds go first, then extra TC rounds,
-  *    then the saturated 32-core leg and the in-session LP extra — never
-  *    the headline N→4N pair, the first TC leg, the PR kernel + pre-loop
-  *    split, the CC + PR-convergence BUDGET ANCHORS (round-4 VERDICT
-  *    item 3: north-rule evidence, ~30 s total, not degradable), or the
-  *    query suite (per-query timings stop early only if the budget is
-  *    already blown, with the skip count recorded);
-  *  - a HOST-PHASE CONTROL (round-4 VERDICT item 2): every TC leg and the
-  *    in-session PR kernel record the calibrated tiny-graph superstep
-  *    floor ([[controlSec]]) measured in their own window; a reading > 2×
-  *    the historical floor marks the VM's minutes-scale slow phases and
-  *    arms ONE re-draw of that leg later in the run — the artifact either
-  *    shows a quiet draw or carries its own phase evidence;
-  *  - every section's result is appended to `target/bench_full.json` AS
+  *    then the saturated 4N leg and LP — never the headline N→4N pair, the
+  *    first TC leg, the PR kernel + pre-loop split, the CC and
+  *    PR-convergence anchors (~30 s of north-rule evidence), or the query
+  *    suite (per-query timings stop early only if the budget is already
+  *    blown, with the skip count recorded);
+  *  - a HOST-PHASE CONTROL: every TC leg and the in-session PR kernel
+  *    record the calibrated tiny-graph superstep floor ([[controlSec]])
+  *    measured in their own window; a reading > 2× the historical floor
+  *    marks the VM's minutes-scale slow phases and arms ONE re-draw of
+  *    that leg later in the run — the artifact either shows a quiet draw
+  *    or carries its own phase evidence;
+  *  - every section's result is written to `target/bench_full.json` AS
   *    IT COMPLETES and progress goes to stderr, so even a hard kill
   *    leaves evidence;
   *  - at the end (and from a shutdown hook, if the JVM is terminated
   *    first) TWO stdout lines are emitted: the full JSON (complete
   *    per-query map — can exceed a log-tail window) followed by a COMPACT
   *    summary line (< ~1500 chars) carrying the headline metric, kernel
-  *    walls, scaling pairs and totals — sized so a tail-bounded parser
-  *    still finds one complete JSON line (round 2's full line was parseable
-  *    only in full stdout, not in a 2000-char tail).
+  *    walls, scaling pairs and totals, so a tail-bounded parser still
+  *    finds one complete JSON line.
   *
-  * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (4N cores, default 32),
-  * SPARK_GRAFT_BENCH_ROWS (corpus rows, default 3200000),
-  * SPARK_GRAFT_SUPERSTEPS (default 10), SPARK_GRAFT_SCALING=0 to skip the
-  * N-core run, SPARK_GRAFT_BUDGET_SEC, SPARK_GRAFT_QUERIES_RESERVE.
+  * Env knobs: SPARK_GRAFT_SF_DIR (query tables), SPARK_GRAFT_CPUS (4N
+  * cores, default the host's processor count), SPARK_GRAFT_BENCH_ROWS
+  * (corpus rows, default 3200000), SPARK_GRAFT_SCALING=0 skips the
+  * scaling legs, SPARK_GRAFT_QUERIES=0 skips the query suite,
+  * SPARK_GRAFT_TC_ROUNDS (fresh-JVM TC legs, default 3; 0 skips TC),
+  * SPARK_GRAFT_BUDGET_SEC, SPARK_GRAFT_CONTROL_FLOOR and
+  * SPARK_GRAFT_LOCAL_DIR.
   */
 object Bench {
+
+  /** Shuffle partitioning is data-driven and IDENTICAL at every leg (as
+    * on a real cluster, where partitions follow data size, not executor
+    * count), so the N-vs-4N comparison is the same physical work. */
+  private val Partitions = 32
+  private val Salts = 8
+  /** In-session PageRank supersteps. */
+  private val Supersteps = 10
+  /** Fresh-JVM rounds per scaling leg, and supersteps per leg. */
+  private val LegRounds = 3
+  private val LegSupersteps = 6
+  /** Seconds held back for the query suite: ~2× its quiet wall (792 s
+    * for 249 queries, BENCH.md), so a slow-phase draw still fits without
+    * starving the leg and TC rounds. */
+  private val QueriesReserve = 1700.0
 
   /** Spark's scratch directory (shuffle spill, checkpoint blocks) for
     * every main here: SPARK_GRAFT_LOCAL_DIR, else a tmpfs path. */
@@ -59,23 +76,18 @@ object Bench {
     sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local")
 
   private def session(cores: Int): SparkSession = {
-    // shuffle partitioning is data-driven and IDENTICAL at both legs (as on
-    // a real cluster, where partitions follow data size, not executor
-    // count) so the N-vs-4N comparison is the same physical work; shuffle
-    // spill dirs on tmpfs — on a real cluster this is NVMe-local or a
-    // remote shuffle service, and a slow shared disk would serialize all
-    // cores through one device and fake poor scaling
+    // shuffle spill dirs on tmpfs — on a real cluster this is NVMe-local
+    // or a remote shuffle service, and a slow shared disk would serialize
+    // all cores through one device and fake poor scaling
     new java.io.File(localDir).mkdirs()
-    val partitions = sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", "32")
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", partitions)
+      .config("spark.sql.shuffle.partitions", Partitions.toLong)
       .config("spark.local.dir", localDir)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -87,44 +99,49 @@ object Bench {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** The deterministic bench graph: canonical co-occurrence edges of the
-    * synthetic corpus (path-level only; identical across runs/parallelism). */
-  private def benchEdges(spark: SparkSession, rows: Long): DataFrame = {
+  /** Symmetrized path co-occurrence edges of the synthetic corpus at
+    * `sc`: deterministic, identical across runs and parallelism. */
+  private def corpusGraph(spark: SparkSession, sc: CorpusGen.Scale)
+      : DataFrame =
+    Edges.symmetrize(EdgeDeriver.pathEdges(CorpusGen.corpus(spark, sc),
+      minWeight = 1L, capPerGroup = 200).select(col("src"), col("dst")))
+
+  /** The bench graph's corpus scale for `rows` file rows. */
+  private def benchScale(rows: Long): CorpusGen.Scale = {
     val repos = math.max(8, (rows / 400).toInt)
-    val sc = CorpusGen.Scale(rows, repos, math.max(2, repos / 32), 32, 128)
-    EdgeDeriver.pathEdges(CorpusGen.corpus(spark, sc),
-      minWeight = 1L, capPerGroup = 200)
-      .select(col("src"), col("dst"))
+    CorpusGen.Scale(rows, repos, math.max(2, repos / 32), 32, 128)
   }
 
-  private def salts: Int = sys.env.getOrElse("SPARK_GRAFT_SALTS", "8").toInt
+  /** `supersteps` fixed PageRank supersteps over the symmetric `sym`,
+    * materialized; returns the engine's per-superstep metrics. */
+  private def prSupersteps(spark: SparkSession, sym: DataFrame,
+                           supersteps: Int): Seq[IterationMetric] = {
+    val r = PageRank.run(spark, sym, fixedIter = Some(supersteps),
+      salts = Salts, symmetric = true)
+    r.ranks.count()
+    r.metrics
+  }
 
-  /** Calibrated host-phase control (round-4 VERDICT item 2): the
-    * tiny-graph superstep floor — best steady superstep of a 4-iteration
-    * PageRank over the deterministic Small-corpus graph (477k directed
-    * edges), measured INSIDE the same JVM/session as the leg it guards.
-    * On a quiet host this reads near [[ControlFloor]] (historical median,
-    * BENCH.md); a reading > 2× the floor is the signature of the VM's
-    * minutes-scale background-throughput phases, so the artifact carries
-    * its own phase evidence next to every TC/PR number instead of
-    * relying on builder-run probes. ~3-5 s per invocation. */
+  /** Calibrated host-phase control: the tiny-graph superstep floor — best
+    * steady superstep of a 4-iteration PageRank over the deterministic
+    * Small-corpus graph (477k directed edges), measured INSIDE the same
+    * JVM/session as the leg it guards. On a quiet host this reads near
+    * [[controlFloor]]; a reading > 2× the floor is the signature of the
+    * VM's minutes-scale background-throughput phases, so the artifact
+    * carries its own phase evidence next to every TC/PR number.
+    * ~3-5 s per invocation. */
   private def controlSec(spark: SparkSession): Double = {
-    val sym = Edges.symmetrize(
-      EdgeDeriver.pathEdges(CorpusGen.corpus(spark, CorpusGen.Small),
-        minWeight = 1L, capPerGroup = 200)
-        .select(col("src"), col("dst"))).persist()
+    val sym = corpusGraph(spark, CorpusGen.Small).persist()
     sym.count()
-    val res = PageRank.run(spark, sym, fixedIter = Some(4), salts = salts,
-      symmetric = true)
-    res.ranks.count()
+    val sec = steadySec(prSupersteps(spark, sym, 4))
     sym.unpersist()
-    steadySec(res.metrics)
+    sec
   }
 
   /** Historical quiet-window median of [[controlSec]] at 32 cores on the
     * dev host: 0.41-0.50 s across four fresh-JVM calibration runs
-    * (recorded in BENCH.md round 5); override with
-    * SPARK_GRAFT_CONTROL_FLOOR. The slow-phase threshold is 2×. */
+    * (BENCH.md); override with SPARK_GRAFT_CONTROL_FLOOR. The slow-phase
+    * threshold is 2×. */
   private def controlFloor: Double =
     sys.env.getOrElse("SPARK_GRAFT_CONTROL_FLOOR", "0.45").toDouble
 
@@ -134,49 +151,34 @@ object Bench {
     * background throughput phases, and mean/median of one run smear a slow
     * phase over the whole leg; the fastest clean superstep is what the
     * hardware can do. The same estimator is applied to every leg. */
-  private def steadySec(ms: Seq[graft.engine.IterationMetric]): Double =
+  private def steadySec(ms: Seq[IterationMetric]): Double =
     ms.filter(_.iter >= 2).map(_.wallMs).min / 1000.0
 
-  /** PageRank per-superstep throughput at one parallelism over a
-    * pre-materialized edge parquet (so legs measure supersteps, not
-    * derivation); returns (directedEdges, bestSuperstepSec, edgesPerSec). */
-  private def prThroughput(cores: Int, edgesPath: String, supersteps: Int)
-      : (Long, Double, Double) = {
+  /** One scaling leg in THIS JVM, over the pre-materialized edge parquet
+    * (so legs measure supersteps, not derivation); prints a one-line
+    * result. A fresh JVM per leg removes heap/GC/JIT contamination between
+    * the N and 4N measurements (the in-sandbox analog of each cluster size
+    * being its own set of fresh executor JVMs). */
+  private def legMain(cores: Int, edgesPath: String, supersteps: Int): Unit = {
     val spark = session(cores)
     try {
       val sym = spark.read.parquet(edgesPath).persist()
       val m = sym.count() // directed message count per superstep
-      val res = PageRank.run(spark, sym, fixedIter = Some(supersteps),
-        salts = salts, symmetric = true)
-      res.ranks.count()
-      val sec = steadySec(res.metrics)
+      val sec = steadySec(prSupersteps(spark, sym, supersteps))
       sym.unpersist()
-      (m, sec, m.toDouble / sec)
+      println(f"""LEG{"cores":$cores,"directed_edges":$m,"superstep_sec":$sec%.3f,"edges_per_sec":${(m.toDouble / sec).toLong}}""")
     } finally spark.stop()
   }
 
-  /** Run one scaling leg in THIS JVM and print a one-line result —
-    * child-process mode (see [[spawnLeg]]): a fresh JVM per leg removes
-    * heap/GC/JIT contamination between the N and 4N measurements (the
-    * in-sandbox analog of each cluster size being its own set of fresh
-    * executor JVMs). */
-  private def legMain(cores: Int, edgesPath: String, supersteps: Int): Unit = {
-    val (m, sec, tp) = prThroughput(cores, edgesPath, supersteps)
-    println(f"""LEG{"cores":$cores,"directed_edges":$m,"superstep_sec":$sec%.3f,"edges_per_sec":${tp.toLong}}""")
-  }
-
-  /** Triangle count in THIS JVM over the pre-materialized edge parquet —
-    * child-process mode for the TC measurement protocol: the round-2
-    * recorded tc_sec (92.5 s) tripled the in-repo fresh probe (30.4 s)
-    * because TC ran late in a long-lived session (accumulated caches +
-    * a VM slow phase); fresh interleaved JVMs + median is the same
-    * protocol that made the scaling legs robust. */
-  private def tcLegMain(cores: Int, edgesPath: String): Unit = {
+  /** Triangle count in THIS JVM over the pre-materialized edge parquet:
+    * fresh interleaved JVMs and a median keep a long-lived session's
+    * caches and a VM slow phase out of the recorded number, as for the
+    * scaling legs. */
+  private def tcLegMain(cores: Int, edgesPath: String, warm: Boolean): Unit = {
     val spark = session(cores)
     try {
       // input materialized (persist + count) OUTSIDE the timed region:
-      // the recorded number measures the TC kernel, matching rounds 1-2
-      // (which read the in-memory bench graph) and the reference's
+      // the recorded number measures the TC kernel, like the reference's
       // published TC times (compute after HDFS load)
       val canonical = spark.read.parquet(edgesPath)
         .filter(col("src") < col("dst")).persist()
@@ -184,30 +186,25 @@ object Bench {
       val (tri, sec) = time(
         TriangleCount.total(canonical).head().getLong(0))
       // optional second kernel run in the SAME JVM: the steady-state
-      // (JIT-warm) number a long-running production job sustains — the
-      // cold/warm split makes the host-phase vs JIT attribution visible
-      // in the driver artifact instead of only in builder-run probes
-      val warm =
-        if (sys.env.getOrElse("SPARK_GRAFT_TC_WARM", "0") == "1")
-          f""","tc_warm_sec":${time(
+      // (JIT-warm) number a long-running job sustains, so the cold/warm
+      // split attributes host phase vs JIT in the artifact itself
+      val warmJson =
+        if (warm) f""","tc_warm_sec":${time(
             TriangleCount.total(canonical).head().getLong(0))._2}%.3f"""
         else ""
-      // host-phase control AFTER the timed kernel (same leg window — the
-      // VM's slow phases are minutes-scale — without perturbing the cold
-      // methodology rounds 1-4 used); the parent compares it to the
-      // calibrated floor and re-draws a slow-phase leg once
+      // host-phase control AFTER the timed kernel: same leg window (the
+      // VM's slow phases are minutes-scale) without perturbing the cold
+      // number; the parent compares it to the floor and re-draws once
       val ctl = controlSec(spark)
       println(
-        f"""LEGTC{"cores":$cores,"tc_sec":$sec%.3f,"triangles":$tri$warm,"control_sec":$ctl%.3f}""")
+        f"""LEGTC{"cores":$cores,"tc_sec":$sec%.3f,"triangles":$tri$warmJson,"control_sec":$ctl%.3f}""")
     } finally spark.stop()
   }
 
-  /** Spawn this main as a child JVM (same classpath + JVM flags) with the
-    * given extra args; returns the first output line starting with
-    * `marker` plus a numeric-field extractor over it. */
-  private def spawnChild(args: Seq[String], edgesPath: String,
-                         supersteps: Int, marker: String,
-                         extraEnv: Map[String, String] = Map.empty)
+  /** Spawn this main as a child JVM (same classpath + JVM flags) with
+    * `args`; returns a numeric-field extractor over the first output line
+    * starting with `marker`. */
+  private def spawnChild(args: Seq[String], marker: String)
       : String => String = {
     import scala.jdk.CollectionConverters._
     val javaBin = System.getProperty("java.home") + "/bin/java"
@@ -216,9 +213,6 @@ object Bench {
     val cp = System.getProperty("java.class.path")
     val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench") ++ args
     val pb = new ProcessBuilder(cmd.asJava)
-    pb.environment().put("SPARK_GRAFT_EDGES_PATH", edgesPath)
-    pb.environment().put("SPARK_GRAFT_SUPERSTEPS", supersteps.toString)
-    extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
     pb.redirectError(ProcessBuilder.Redirect.INHERIT) // Spark logs flow through
     val proc = pb.start()
     val out = new String(proc.getInputStream.readAllBytes())
@@ -227,27 +221,6 @@ object Bench {
       .getOrElse(sys.error(s"child $args produced no $marker line:\n$out"))
     (k: String) =>
       s""""$k":([-0-9.]+)""".r.findFirstMatchIn(line).get.group(1)
-  }
-
-  private def spawnLeg(cores: Int, edgesPath: String, supersteps: Int)
-      : (Long, Double, Double) = {
-    val field = spawnChild(Seq("--leg", cores.toString), edgesPath,
-      supersteps, "LEG{")
-    (field("directed_edges").toLong, field("superstep_sec").toDouble,
-      field("edges_per_sec").toDouble)
-  }
-
-  /** @return (cold kernel sec, triangles, warm kernel sec if requested,
-    *          host-phase control sec for the leg's window) */
-  private def spawnTcLeg(cores: Int, edgesPath: String,
-                         warm: Boolean = false)
-      : (Double, Long, Option[Double], Double) = {
-    val field = spawnChild(Seq("--tcleg", cores.toString), edgesPath,
-      0, "LEGTC{",
-      if (warm) Map("SPARK_GRAFT_TC_WARM" -> "1") else Map.empty)
-    (field("tc_sec").toDouble, field("triangles").toLong,
-      if (warm) Some(field("tc_warm_sec").toDouble) else None,
-      field("control_sec").toDouble)
   }
 
   final case class Leg(edges: Long, secs: Seq[Double]) {
@@ -263,64 +236,42 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0 // true even-count median
   }
 
-  /** Mutable result store: every section writes here the moment it
-    * completes, and [[emit]] (called at the end of main AND from a
-    * shutdown hook, if the JVM is terminated first) assembles whatever
-    * exists into the output JSON — a kill at any point still yields a
-    * parseable artifact with every completed section (BENCH_r03 lost
-    * 100% of a timeout-long run to a single end-of-run println). */
-  private object S {
-    @volatile var sfDir = ""
-    @volatile var budget = 0
-    @volatile var base = 2
-    @volatile var coresN = 8
-    @volatile var cores4N = 32
-    @volatile var legSteps = 6
-    @volatile var legs: Map[Int, Leg] = Map.empty
-    @volatile var legsSkipped = 0
-    @volatile var tcRuns: Seq[(Double, Long)] = Nil
-    @volatile var tcControls: Seq[Double] = Nil
-    @volatile var tcRoundsRun = 0
-    @volatile var tcWarmSec = -1.0
-    @volatile var ctlFloor = -1.0
-    @volatile var m = -1L
-    @volatile var prSec = -1.0
-    @volatile var prControl = -1.0
-    @volatile var prRedrawSec = -1.0
-    @volatile var prRedrawControl = -1.0
-    @volatile var prWall = -1.0
-    @volatile var prPreloopSec = -1.0
-    @volatile var prStepsSec = -1.0
-    @volatile var ccSec = -1.0
-    @volatile var ccIters = -1
-    @volatile var lpSec = -1.0
-    @volatile var convM = -1L
-    @volatile var convIters = -1
-    @volatile var convConverged = false
-    @volatile var convSec = -1.0
-    @volatile var convTp = -1L
-    @volatile var queries: Seq[(String, Double)] = Nil
-    @volatile var queriesFailed: Seq[String] = Nil
-    @volatile var queriesSkipped = 0
-    @volatile var queriesGated = 0
-    @volatile var elapsedF: () => Double = () => -1.0
-    @volatile var emitted = false
+  /** Every section's result so far. -1 marks a section that has not run.
+    * A run replaces its record with an updated copy the moment a section
+    * completes, and [[emit]] renders whatever exists, so a kill at any
+    * point still yields a parseable artifact with every completed
+    * section. The TC rounds run are `tcRuns.size`. */
+  private[graft] final case class Record(
+      sfDir: String, budget: Int, cores4N: Int,
+      legs: Map[Int, Leg] = Map.empty, legsSkipped: Int = 0,
+      tcRuns: Seq[(Double, Long)] = Vector.empty,
+      tcControls: Seq[Double] = Vector.empty, tcWarmSec: Double = -1.0,
+      ctlFloor: Double = -1.0, m: Long = -1L, prSec: Double = -1.0,
+      prControl: Double = -1.0, prRedrawSec: Double = -1.0,
+      prRedrawControl: Double = -1.0, prWall: Double = -1.0,
+      prPreloopSec: Double = -1.0, prStepsSec: Double = -1.0,
+      ccSec: Double = -1.0, ccIters: Int = -1, lpSec: Double = -1.0,
+      convM: Long = -1L, convIters: Int = -1, convConverged: Boolean = false,
+      convSec: Double = -1.0, convTp: Long = -1L,
+      queries: Seq[(String, Double)] = Vector.empty,
+      queriesFailed: Seq[String] = Vector.empty, queriesSkipped: Int = 0,
+      queriesGated: Int = 0) {
 
+    def base: Int = math.max(1, cores4N / 16)
+    def coresN: Int = math.max(1, cores4N / 4)
     def tcSec: Double = if (tcRuns.isEmpty) -1.0 else median(tcRuns.map(_._1))
     def tcTotal: Long = tcRuns.headOption.map(_._2).getOrElse(-1L)
-    // headline = the BEST-SAMPLED 32-core steady-superstep throughput: the
+    // headline = the BEST-SAMPLED 4N steady-superstep throughput: the
     // fresh-JVM leg median when it has >= 2 samples, else whichever of the
-    // single-sample leg / the 10-superstep in-session run measured higher
-    // (a lone 6-superstep leg can land entirely inside one of this VM's
-    // minutes-scale slow phases — round 4's first artifact recorded a
-    // single 7.53 s 32-core leg against a 2.97 s in-session steady
-    // superstep from the same binary minutes later; both raw values stay
-    // in the JSON, `value_source` says which was used)
+    // single-sample leg / the in-session run measured higher (a lone
+    // 6-superstep leg can land entirely inside one of this VM's
+    // minutes-scale slow phases); both raw values stay in the JSON, and
+    // `value_source` says which was used
     private def legTp: Option[Long] =
       legs.get(cores4N).map(_.tpMedian.toLong)
     // the in-session candidate uses the better of the first draw and the
-    // slow-phase redraw (both raw values stay in the JSON) — the same
-    // best-sampled capacity-estimator rule as steadySec's MIN
+    // slow-phase redraw — the same capacity-estimator rule as steadySec's
+    // MIN
     def prBest: Double =
       if (prSec > 0 && prRedrawSec > 0) math.min(prSec, prRedrawSec)
       else if (prRedrawSec > 0) prRedrawSec else prSec
@@ -350,157 +301,161 @@ object Bench {
         val effPaired = if (paired.isEmpty) eff else median(paired)
         val runs = if (compact) ""
           else f""""superstep_sec_n_runs":${secsJson(lN)},"superstep_sec_4n_runs":${secsJson(l4)},"""
-        f""""$tag":{"cores_n":$cn,"cores_4n":$c4,"directed_edges":${lN.edges},"supersteps":$legSteps,"rounds_n":${lN.secs.size},"rounds_4n":${l4.secs.size},"superstep_sec_n":${lN.median}%.2f,"superstep_sec_4n":${l4.median}%.2f,$runs"edges_per_sec_n":${lN.tpMedian.toLong},"edges_per_sec_4n":${l4.tpMedian.toLong},"efficiency":$eff%.3f,"efficiency_best":$effBest%.3f,"efficiency_paired":$effPaired%.3f}"""
+        f""""$tag":{"cores_n":$cn,"cores_4n":$c4,"directed_edges":${lN.edges},"supersteps":$LegSupersteps,"rounds_n":${lN.secs.size},"rounds_4n":${l4.secs.size},"superstep_sec_n":${lN.median}%.2f,"superstep_sec_4n":${l4.median}%.2f,$runs"edges_per_sec_n":${lN.tpMedian.toLong},"edges_per_sec_4n":${l4.tpMedian.toLong},"efficiency":$eff%.3f,"efficiency_best":$effBest%.3f,"efficiency_paired":$effPaired%.3f}"""
       }
-    private def scalingJson(compact: Boolean): String =
-      (pairJson(base, coresN, "scaling", compact).toSeq ++
-        pairJson(coresN, cores4N, "scaling_saturated", compact).toSeq) match {
-        case Nil => ""
-        case ps  => "," + ps.mkString(",")
-      }
-    private def graphJson: String = {
+
+    /** One contract line. The compact one (< ~1500 chars by construction)
+      * carries no per-query map and no raw run arrays: the line a
+      * tail-bounded log parser can always recover whole; the full one
+      * carries everything. */
+    def json(elapsedSec: Double, compact: Boolean): String = {
+      val failed = queriesFailed.map(Json.quote).mkString("[", ",", "]")
+      val qs =
+        if (compact) s""""n_queries":${queries.size}"""
+        else queries.map { case (k, v) => f""""$k":$v%.3f""" }
+          .mkString(""""queries":{""", ",", "}")
+      val totalSec = queries.map(_._2).sum
+      val scaling = pairJson(base, coresN, "scaling", compact).toSeq ++
+        pairJson(coresN, cores4N, "scaling_saturated", compact).toSeq
       val tcRunsJson = tcRuns.map(r => f"${r._1}%.2f").mkString("[", ",", "]")
       val tcCtlJson = tcControls.map(c => f"$c%.2f").mkString("[", ",", "]")
-      f""""graph":{"directed_edges":$m,"pagerank_superstep_sec":$prSec%.2f,"pagerank_control_sec":$prControl%.2f,"pagerank_redraw_superstep_sec":$prRedrawSec%.2f,"pagerank_redraw_control_sec":$prRedrawControl%.2f,"pagerank_superstep_sec_best":$prBest%.2f,"pagerank_wall_sec":$prWall%.2f,"pagerank_preloop_sec":$prPreloopSec%.2f,"pagerank_supersteps_wall_sec":$prStepsSec%.2f,"cc_sec":$ccSec%.2f,"cc_iters":$ccIters,"lp_sec":$lpSec%.2f,"tc_sec":$tcSec%.2f,"tc_sec_runs":$tcRunsJson,"tc_control_runs":$tcCtlJson,"tc_rounds":$tcRoundsRun,"tc_warm_sec":$tcWarmSec%.2f,"control_floor_sec":$ctlFloor%.2f,"triangles":$tcTotal}"""
-    }
-    private def convJson: String =
-      f""""pagerank_convergence":{"directed_edges":$convM,"iters":$convIters,"converged":$convConverged,"sec":$convSec%.2f,"edges_per_sec":$convTp}"""
-    private def head: String =
-      f"""{"metric":"pagerank_edges_per_sec_per_superstep","value":$value,"value_source":"$valueSource","unit":"edges/sec","sf":"$sfDir","budget_sec":$budget,"elapsed_sec":${elapsedF()}%.0f,"legs_skipped":$legsSkipped,"queries_skipped":$queriesSkipped,"queries_gated":$queriesGated,"queries_failed":${queriesFailed.map(Json.quote).mkString("[", ",", "]")}"""
-
-    def fullJson: String = {
-      val qJson = queries.map { case (k, v) => f""""$k":$v%.3f""" }
-        .mkString("{", ",", "}")
-      val totalSec = queries.map(_._2).sum
-      head +
-        f""","queries":$qJson,"queries_total_sec":$totalSec%.1f,""" +
-        graphJson + "," + convJson + scalingJson(compact = false) + "}"
-    }
-
-    /** < ~1500 chars by construction: no per-query map, no raw run
-      * arrays — the line a tail-bounded log parser can always recover
-      * whole (the full line above it carries everything; round 2's full
-      * line was parseable only in full stdout, not in a 2000-char tail). */
-    def compactJson: String = {
-      val totalSec = queries.map(_._2).sum
-      head +
-        f""","n_queries":${queries.size},"queries_total_sec":$totalSec%.1f,""" +
-        graphJson + "," + convJson + scalingJson(compact = true) +
-        ""","note":"compact tail line; full per-query map on the preceding stdout line and in target/bench_full.json"}"""
+      f"""{"metric":"pagerank_edges_per_sec_per_superstep","value":$value,"value_source":"$valueSource","unit":"edges/sec","sf":"$sfDir","budget_sec":$budget,"elapsed_sec":$elapsedSec%.0f,"legs_skipped":$legsSkipped,"queries_skipped":$queriesSkipped,"queries_gated":$queriesGated,"queries_failed":$failed,$qs,"queries_total_sec":$totalSec%.1f,""" +
+        f""""graph":{"directed_edges":$m,"pagerank_superstep_sec":$prSec%.2f,"pagerank_control_sec":$prControl%.2f,"pagerank_redraw_superstep_sec":$prRedrawSec%.2f,"pagerank_redraw_control_sec":$prRedrawControl%.2f,"pagerank_superstep_sec_best":$prBest%.2f,"pagerank_wall_sec":$prWall%.2f,"pagerank_preloop_sec":$prPreloopSec%.2f,"pagerank_supersteps_wall_sec":$prStepsSec%.2f,"cc_sec":$ccSec%.2f,"cc_iters":$ccIters,"lp_sec":$lpSec%.2f,"tc_sec":$tcSec%.2f,"tc_sec_runs":$tcRunsJson,"tc_control_runs":$tcCtlJson,"tc_rounds":${tcRuns.size},"tc_warm_sec":$tcWarmSec%.2f,"control_floor_sec":$ctlFloor%.2f,"triangles":$tcTotal},""" +
+        f""""pagerank_convergence":{"directed_edges":$convM,"iters":$convIters,"converged":$convConverged,"sec":$convSec%.2f,"edges_per_sec":$convTp}""" +
+        scaling.map("," + _).mkString +
+        (if (compact) ""","note":"compact tail line; full per-query map on the preceding stdout line and in target/bench_full.json"""" else "") +
+        "}"
     }
   }
 
-  /** Incremental evidence: rewrite target/bench_full.json after every
-    * completed section (stderr gets a one-line progress note), so even a
-    * hard kill leaves the completed sections on disk. */
-  private def checkpointSection(name: String): Unit = {
+  @volatile private var rec: Record = _
+  @volatile private var emitted = false
+  private val t0 = System.nanoTime()
+  private def elapsed: Double = (System.nanoTime() - t0) / 1e9
+
+  private val FullPath = Paths.get("target/bench_full.json")
+
+  /** Rewrites the full-line artifact; a failed write never costs the
+    * stdout lines. */
+  private[graft] def writeFull(full: String, p: Path = FullPath): Unit =
     try {
-      val p = java.nio.file.Paths.get("target/bench_full.json")
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.writeString(p, S.fullJson + "\n")
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, full + "\n")
     } catch { case _: Throwable => () }
-    System.err.println(f"[bench] section=$name elapsed=${S.elapsedF()}%.0fs")
+
+  /** Incremental evidence: rewrite the artifact after every completed
+    * section (stderr gets a one-line progress note), so even a hard kill
+    * leaves the completed sections on disk. */
+  private def checkpointSection(name: String): Unit = {
+    writeFull(rec.json(elapsed, compact = false))
+    System.err.println(f"[bench] section=$name elapsed=$elapsed%.0fs")
   }
 
-  private def emit(): Unit = S.synchronized {
-    if (!S.emitted) {
-      S.emitted = true
-      try {
-        val p = java.nio.file.Paths.get("target/bench_full.json")
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.writeString(p, S.fullJson + "\n")
-      } catch { case _: Throwable => () }
-      println(S.fullJson)
-      println(S.compactJson)
+  private def emit(): Unit = synchronized {
+    if (!emitted) {
+      emitted = true
+      val (r, el) = (rec, elapsed)
+      val full = r.json(el, compact = false)
+      writeFull(full)
+      println(full)
+      println(r.json(el, compact = true))
       Console.out.flush()
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args match {
+    case Array("--leg", cores, edgesPath, supersteps) =>
+      legMain(cores.toInt, edgesPath, supersteps.toInt)
+    case Array("--tcleg", cores, edgesPath, warm) =>
+      tcLegMain(cores.toInt, edgesPath, warm.toBoolean)
+    case Array() => run()
+    case _ => sys.error(
+      s"usage: graft.Bench [--leg cores edges supersteps | --tcleg cores edges warm], got ${args.mkString(" ")}")
+  }
+
+  private def run(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cores4N = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val coresN = math.max(1, cores4N / 4)
+    val cores4N = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val rows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "3200000").toLong
-    val supersteps = sys.env.getOrElse("SPARK_GRAFT_SUPERSTEPS", "10").toInt
     val doScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0"
     val doQueries = sys.env.getOrElse("SPARK_GRAFT_QUERIES", "1") != "0"
-
-    if (args.length >= 2 && args(0) == "--leg") {
-      legMain(args(1).toInt, sys.env("SPARK_GRAFT_EDGES_PATH"), supersteps)
-      return
-    }
-    if (args.length >= 2 && args(0) == "--tcleg") {
-      tcLegMain(args(1).toInt, sys.env("SPARK_GRAFT_EDGES_PATH"))
-      return
-    }
-
-    // default sized against the driver's observed ceiling: its round-2 run
-    // completed at 2940 s wall, so 2700 + worst-case single-query overshoot
-    // stays under the kill limit while leaving ~30% more room than the
-    // round-3 default (2100) for the degraded-host regime
+    // the longest observed full run ended at 2940 s wall, so 2700 + a
+    // worst-case single-query overshoot stays under the kill limit
     val budget = sys.env.getOrElse("SPARK_GRAFT_BUDGET_SEC", "2700").toInt
-    val t0 = System.nanoTime()
-    def elapsed: Double = (System.nanoTime() - t0) / 1e9
     def remaining: Double = budget - elapsed
-
-    val base = math.max(1, cores4N / 16)
-    val legCores = Seq(base, coresN, cores4N).distinct.filter(_ <= cores4N)
-    val legRounds = sys.env.getOrElse("SPARK_GRAFT_LEG_ROUNDS", "3").toInt
-    val legSteps = sys.env.getOrElse("SPARK_GRAFT_LEG_SUPERSTEPS", "6").toInt
     val tcRounds = sys.env.getOrElse("SPARK_GRAFT_TC_ROUNDS", "3").toInt
     val doTc = tcRounds > 0
 
-    S.sfDir = sfDir; S.budget = budget; S.base = base; S.coresN = coresN
-    S.cores4N = cores4N; S.legSteps = legSteps; S.elapsedF = () => elapsed
+    rec = Record(sfDir, budget, cores4N)
+    val (base, coresN) = (rec.base, rec.coresN)
+    val legCores = Seq(base, coresN, cores4N).distinct.filter(_ <= cores4N)
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit()))
 
     // degradation reserves (sec), refined by measurement as sections run:
     // the budget trims extra leg rounds first, then extra TC rounds, then
-    // the in-session CC/LP/convergence extras — never the headline pair,
-    // the first TC leg, the PR kernel + pre-loop split, or the query suite
-    // retuned for the round-5 suite (q17 sliced, q38 deterministic,
-    // 3 quadratic baselines gated): measured 792 s quiet for 249 queries;
-    // 1700 covers a ~2× slow-phase draw while no longer starving the
-    // inline leg/TC rounds and the LP extra the 2260 reserve skipped
-    // (the r4 suite was 1352 s at driver phase — its reserve was sized
-    // to a suite shape that no longer exists)
-    val queriesReserve =
-      if (!doQueries) 0.0
-      else sys.env.getOrElse("SPARK_GRAFT_QUERIES_RESERVE", "1700").toDouble
+    // LP — never the headline pair, the first TC leg, the PR kernel +
+    // pre-loop split, or the query suite
+    val queriesReserve = if (doQueries) QueriesReserve else 0.0
     val kernelsReserve = 280.0
     var tcEst = 150.0 // per fresh-JVM TC leg incl. spawn + parquet load
     // initial per-leg cost guesses (superstep time scales ~1/cores + a
     // constant JVM/load overhead); replaced by measurement after round 1
     val legCost = scala.collection.mutable.Map[Int, Double](
-      legCores.map(c => c -> (40.0 + legSteps * 32.0 / c)): _*)
+      legCores.map(c => c -> (40.0 + LegSupersteps * 32.0 / c)): _*)
 
-    // --- bench graph derived ONCE to tmpfs parquet; scaling legs and TC
-    // legs read it from fresh child JVMs (supersteps measured, not
-    // derivation) ---
+    // --- bench graph derived ONCE to parquet; scaling legs and TC legs
+    // read it from fresh child JVMs (supersteps measured, not
+    // derivation). The legs use this FULL-size graph: efficiency is a
+    // ratio of edges/sec at two core counts over one fixed input, so it
+    // is size-invariant only while superstep time >> the fixed
+    // per-superstep cost (~0.5-1.7 s of scheduling + barrier). Half-size
+    // legs (25M directed edges) measured 0.67-0.70 where the full graph
+    // measured 0.84-0.96 on the same idle host. ---
     val edgesPath = localDir + s"/bench_edges_$rows"
-    // the scaling legs use the FULL-size graph: efficiency is a RATIO of
-    // edges/sec at two core counts over one fixed input, so it is
-    // size-invariant only while superstep time >> per-superstep fixed cost.
-    // Round 4 tried half-size legs to buy more interleaved rounds and
-    // measured the artifact directly: at 25M directed edges the fixed
-    // per-superstep cost (~0.5-1.7 s of job scheduling + barrier) is a
-    // visible share of the 8-core ~3.2 s superstep and drags
-    // phase-consistent efficiency to 0.67-0.70, while the SAME binary on
-    // the SAME idle host at 50.5M edges measures 0.96/0.84 across two
-    // interleaved pairs (2-core 19.3/17.1 s, 8-core 5.03/5.11 s). Fewer,
-    // honest rounds beat many rounds of a biased ratio.
-    val legRows = sys.env.getOrElse("SPARK_GRAFT_LEG_ROWS",
-      rows.toString).toLong
-    val legEdgesPath = localDir + s"/bench_edges_$legRows"
     if (doScaling || doTc) {
       val prep = session(cores4N)
-      Edges.symmetrize(benchEdges(prep, rows))
+      corpusGraph(prep, benchScale(rows))
         .write.mode("overwrite").parquet(edgesPath)
-      if (doScaling && legRows != rows)
-        Edges.symmetrize(benchEdges(prep, legRows))
-          .write.mode("overwrite").parquet(legEdgesPath)
       prep.stop()
       checkpointSection("derive")
+    }
+
+    /** One scaling-leg draw in a fresh JVM; a top-up draw refunds one
+      * skipped leg. */
+    def drawLeg(c: Int, section: String, topUp: Boolean): Unit = {
+      val t = System.nanoTime()
+      val field = spawnChild(
+        Seq("--leg", c.toString, edgesPath, LegSupersteps.toString), "LEG{")
+      legCost(c) = (System.nanoTime() - t) / 1e9
+      val leg = rec.legs.getOrElse(c,
+        Leg(field("directed_edges").toLong, Vector.empty))
+      rec = rec.copy(
+        legs = rec.legs.updated(c,
+          leg.copy(secs = leg.secs :+ field("superstep_sec").toDouble)),
+        legsSkipped =
+          if (topUp) math.max(0, rec.legsSkipped - 1) else rec.legsSkipped)
+      checkpointSection(s"leg-$c-$section")
+    }
+
+    /** One TC draw in a fresh 4N JVM. The first also times a SAME-JVM
+      * warm rerun: the steady-state number the cold/warm attribution in
+      * BENCH.md relies on. */
+    def drawTc(section: String): Unit = {
+      val warm = rec.tcRuns.isEmpty
+      val t = System.nanoTime()
+      val field = spawnChild(Seq("--tcleg", cores4N.toString, edgesPath,
+        warm.toString), "LEGTC{")
+      val warmSec = if (warm) Some(field("tc_warm_sec").toDouble) else None
+      // later rounds skip the one-time warm rerun, so the estimate
+      // excludes it
+      tcEst = (System.nanoTime() - t) / 1e9 - warmSec.getOrElse(0.0)
+      rec = rec.copy(
+        tcRuns = rec.tcRuns :+
+          (field("tc_sec").toDouble -> field("triangles").toLong),
+        tcControls = rec.tcControls :+ field("control_sec").toDouble,
+        tcWarmSec = warmSec.getOrElse(rec.tcWarmSec))
+      checkpointSection(s"tc-$section${rec.tcRuns.size}")
     }
 
     // --- scaling legs, one fresh child JVM each, interleaved rounds ---
@@ -513,35 +468,23 @@ object Bench {
     // (N,4N,N,4N,...) so a slow host phase cannot land entirely on one
     // leg; ALL raw runs are recorded in the JSON, the headline efficiency
     // uses per-leg MEDIANS, best-run efficiency alongside as the capacity
-    // estimate. Rounds 1 AND 2 of the headline pair are unconditional
-    // (a single round cannot be phase-paired); every further leg run
-    // must fit the budget net of the TC/kernels/queries reserves.
+    // estimate.
     if (doScaling) {
-      val acc = scala.collection.mutable.Map[Int, (Long, Vector[Double])]()
-      for (round <- 1 to legRounds; c <- legCores) {
-        // the FIRST TWO rounds of the headline pair are unconditional:
-        // the north-rule criterion is the N->4N efficiency, and a single
-        // round cannot be phase-paired — the 5th round-4 protocol
-        // recorded a meaningless 1.14 when its only 2-core leg drew a
-        // slow host phase while the 162-query reserve budget-skipped
-        // rounds 2-3. Two interleaved rounds always produce a pairable
-        // median; the query suite still runs to completion afterwards
-        // (it only drops names when remaining < 10 s), which is the
-        // right trade: correctness evidence comes from Verify, the
-        // scaling number only from here.
+      for (round <- 1 to LegRounds; c <- legCores) {
+        // the FIRST TWO rounds of the headline pair are unconditional: a
+        // single round cannot be phase-paired, and one slow-phase draw
+        // alone yields a meaningless efficiency.
+        // The query suite still runs to completion afterwards (it only
+        // drops names when remaining < 10 s): correctness evidence comes
+        // from Verify, the scaling number only from here. Every further
+        // leg must fit the budget net of the TC/kernels/queries reserves.
         val mandatory = round <= 2 && (c == base || c == coresN)
         val reserveAfter = (if (doTc) tcEst else 0.0) +
           kernelsReserve + queriesReserve
-        if (mandatory || remaining - reserveAfter > legCost(c) * 1.2) {
-          val t = System.nanoTime()
-          val (ed, sec, _) = spawnLeg(c, legEdgesPath, legSteps)
-          legCost(c) = (System.nanoTime() - t) / 1e9
-          val (e0, ss) = acc.getOrElse(c, (ed, Vector.empty[Double]))
-          acc(c) = (e0, ss :+ sec)
-          S.legs = acc.toMap.map { case (k, v) => k -> Leg(v._1, v._2) }
-          checkpointSection(s"leg-$c-round$round")
-        } else {
-          S.legsSkipped += 1
+        if (mandatory || remaining - reserveAfter > legCost(c) * 1.2)
+          drawLeg(c, s"round$round", topUp = false)
+        else {
+          rec = rec.copy(legsSkipped = rec.legsSkipped + 1)
           System.err.println(f"[bench] SKIP leg cores=$c round=$round " +
             f"(remaining=$remaining%.0fs, reserve=$reserveAfter%.0fs)")
         }
@@ -549,182 +492,124 @@ object Bench {
     }
 
     // --- TC: interleaved fresh-JVM rounds at 4N cores, median recorded
-    // (VERDICT r2 #1 — the same protocol as the scaling legs). The first
-    // leg is unconditional; later legs must fit the budget. ---
+    // (the same protocol as the scaling legs). The first leg is
+    // unconditional; later legs must fit the budget. ---
     if (doTc) {
-      var runs = Vector.empty[(Double, Long)]
       for (i <- 1 to tcRounds) {
         if (i == 1 ||
-            remaining - (kernelsReserve + queriesReserve) > tcEst * 1.2) {
-          val t = System.nanoTime()
-          // round 1 also times a SAME-JVM warm rerun: the steady-state
-          // number the cold/warm attribution in BENCH.md relies on
-          val (cold, tri, warmSec, ctl) =
-            spawnTcLeg(cores4N, edgesPath, warm = i == 1)
-          runs = runs :+ (cold -> tri)
-          S.tcControls = S.tcControls :+ ctl
-          warmSec.foreach(S.tcWarmSec = _)
-          // later rounds skip the one-time warm rerun — estimating them at
-          // round 1's warm-inclusive wall overshot by ~110 s in round 4's
-          // first artifact and cost the top-up a whole TC round by 8 s
-          tcEst = (System.nanoTime() - t) / 1e9 - warmSec.getOrElse(0.0)
-          S.tcRuns = runs; S.tcRoundsRun = i
-          checkpointSection(s"tc-round$i")
-        } else System.err.println(
+            remaining - (kernelsReserve + queriesReserve) > tcEst * 1.2)
+          drawTc("round")
+        else System.err.println(
           f"[bench] SKIP tc round=$i (remaining=$remaining%.0fs)")
       }
     }
 
     // --- 4N-core session: kernels, convergence, per-query timings ---
     val spark = session(cores4N)
-    S.ctlFloor = controlFloor
-    val sym = (if (doScaling || doTc) spark.read.parquet(edgesPath)
-               else Edges.symmetrize(benchEdges(spark, rows))).persist()
-    S.m = sym.count()
+    rec = rec.copy(ctlFloor = controlFloor)
+    def benchGraph(): DataFrame =
+      (if (doScaling || doTc) spark.read.parquet(edgesPath)
+       else corpusGraph(spark, benchScale(rows))).persist()
+    val sym = benchGraph()
+    rec = rec.copy(m = sym.count())
     // host-phase control BEFORE the PR kernel: pagerank_control_sec near
     // the calibrated floor certifies a quiet window for the superstep
     // number; > 2× floor marks a slow phase and arms the post-queries
     // redraw (the control also absorbs first-query JIT, which the MIN
     // steadySec estimator already discarded via superstep 1)
-    S.prControl = controlSec(spark)
-    val (prRes, prWall) = time {
-      val r = PageRank.run(spark, sym, fixedIter = Some(supersteps),
-        salts = salts, symmetric = true)
-      r.ranks.count(); r
-    }
-    S.prWall = prWall
-    S.prSec = steadySec(prRes.metrics)
+    rec = rec.copy(prControl = controlSec(spark))
+    val (prMetrics, prWall) = time(prSupersteps(spark, sym, Supersteps))
     // pre-loop wall (links/verts build + persists + hub collect) split
-    // from superstep wall so a regression in either is attributable
-    // (VERDICT r2 #6); the remainder also carries the final ranks count
-    S.prStepsSec = prRes.metrics.map(_.wallMs).sum / 1000.0
-    S.prPreloopSec = math.max(0.0, prWall - S.prStepsSec)
+    // from superstep wall so a regression in either is attributable; the
+    // remainder also carries the final ranks count
+    val prStepsSec = prMetrics.map(_.wallMs).sum / 1000.0
+    rec = rec.copy(prWall = prWall, prSec = steadySec(prMetrics),
+      prStepsSec = prStepsSec,
+      prPreloopSec = math.max(0.0, prWall - prStepsSec))
     checkpointSection("pagerank")
 
     // TC recorded = median of the fresh-JVM legs above; an in-session run
-    // here would sit behind the PR/CC/LP caches and a long-lived heap,
-    // which is exactly what round 2 mismeasured.
-    // CC is a BUDGET ANCHOR (round-4 VERDICT item 3): ~20 s of north-rule
-    // kernel evidence that the r4 reserve math silently dropped
-    // (cc_sec: -1, legs_skipped: 5) while 700+ s of budget went unused;
-    // LP keeps a (relaxed) gate as the cheaper degradable twin.
-    locally {
-      val (ccRes, ccSec) = time(ConnectedComponents.run(spark, sym))
-      S.ccSec = ccSec; S.ccIters = ccRes.iterations
-      checkpointSection("cc")
-    }
+    // here would sit behind the PR/CC/LP caches and a long-lived heap.
+    // CC is a budget anchor (~20 s of north-rule kernel evidence); LP is
+    // its cheaper degradable twin.
+    val (cc, ccSec) = time(ConnectedComponents.run(spark, sym))
+    rec = rec.copy(ccSec = ccSec, ccIters = cc.iterations)
+    checkpointSection("cc")
     // LP may overdraft the queries reserve by up to 150 s: the reserve is
-    // sized for a ~2× slow-phase suite (measured 792-875 s quiet vs 1700
-    // reserved), so a ~35 s kernel inside that pessimism never endangers
-    // the suite — runs 1/3 of the round-5 protocols skipped LP on a
-    // reserve that then went ~800 s unused
+    // sized for a ~2× slow-phase suite, so a ~35 s kernel inside that
+    // pessimism never endangers the suite
     if (remaining - queriesReserve > -150) {
       val (_, lpSec) = time(LabelPropagation.run(spark, sym, 5).labels.count())
-      S.lpSec = lpSec
+      rec = rec.copy(lpSec = lpSec)
       checkpointSection("lp")
     } else System.err.println("[bench] SKIP lp (budget)")
 
-    // convergence evidence at 1e-6 on the Small corpus graph
-    def runConvergence(): Unit = {
-      val smallSym = Edges.symmetrize(
-        EdgeDeriver.pathEdges(CorpusGen.corpus(spark, CorpusGen.Small),
-          minWeight = 1L, capPerGroup = 200).select(col("src"), col("dst")))
-        .persist()
-      S.convM = smallSym.count()
-      val (convRes, convSec) = time(
-        PageRank.run(spark, smallSym, tol = 1e-6, maxIter = 200,
-          symmetric = true))
-      S.convIters = convRes.iterations
-      S.convConverged = convRes.converged
-      S.convSec = convSec
-      S.convTp = (S.convM.toDouble * convRes.iterations / convSec).toLong
-      smallSym.unpersist()
-      checkpointSection("convergence")
-    }
-    // convergence is a BUDGET ANCHOR, not a degradable leg (round-4
-    // VERDICT item 3): ~12 s buys the north rule's converged=true/iters
-    // evidence, which the r4 artifact lost to pessimistic reserve math
-    runConvergence()
+    // convergence evidence at 1e-6 on the Small corpus graph: a budget
+    // anchor (~12 s buys the north rule's converged/iters evidence)
+    val smallSym = corpusGraph(spark, CorpusGen.Small).persist()
+    rec = rec.copy(convM = smallSym.count())
+    val (conv, convSec) = time(
+      PageRank.run(spark, smallSym, tol = 1e-6, maxIter = 200,
+        symmetric = true))
+    rec = rec.copy(convIters = conv.iterations,
+      convConverged = conv.converged, convSec = convSec,
+      convTp = (rec.convM.toDouble * conv.iterations / convSec).toLong)
+    smallSym.unpersist()
+    checkpointSection("convergence")
     sym.unpersist()
 
     // per-query timings on the driver's sf dir — runs to completion
     // unless the budget is ALREADY blown (then the remaining names are
     // skipped and counted; completed timings stay recorded per query)
     if (doQueries) {
-      var qs = Vector.empty[(String, Double)]
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (name, _) =>
-          // quadratic-by-design exactness baselines: Verify-only, like
-          // the recall baselines (VERDICT r4 #7) — count, don't time
-          val gated = SparkEntry.benchGated(name)
-          if (gated) S.queriesGated += 1
-          gated
-        }
-        .foreach { case (name, fn) =>
+      // quadratic-by-design exactness baselines are Verify-only, like
+      // the recall baselines — counted, not timed
+      val (gated, timed) = SparkEntry.queries.toSeq.sortBy(_._1)
+        .partition { case (name, _) => SparkEntry.benchGated(name) }
+      rec = rec.copy(queriesGated = gated.size)
+      timed.foreach { case (name, fn) =>
         if (remaining > 10) {
           // a query that throws is listed as failed, never timed
           try {
             val (_, sec) = time(fn(spark, sfDir).count())
-            qs = qs :+ (name -> sec)
-            S.queries = qs
+            rec = rec.copy(queries = rec.queries :+ (name -> sec))
           } catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            S.queriesFailed = S.queriesFailed :+ name
+            rec = rec.copy(queriesFailed = rec.queriesFailed :+ name)
           }
-        } else S.queriesSkipped += 1
+        } else rec = rec.copy(queriesSkipped = rec.queriesSkipped + 1)
       }
       checkpointSection("queries")
     }
 
     // --- budget top-up: TC and leg rounds skipped mid-run (where the
     // queries/kernels reserves must be assumed, not known) re-attempt now
-    // that `remaining` is the exact leftover — the reserves were pessimistic
-    // in round 4's dry run (950 s reserved, 454 s spent at the 39-query
-    // mark), which silently cost two TC rounds while 700+ s went unused ---
+    // that `remaining` is the exact leftover ---
     if (doTc) {
-      // slow-phase redraw (round-4 VERDICT item 2): when EVERY completed
-      // TC leg's in-artifact control read > 2× the calibrated floor, the
-      // artifact has no quiet-window TC sample — one extra draw later in
-      // the run either lands a quiet one or adds another control proving
-      // the phase persisted; a single quiet control among the runs means
-      // the median already has quiet evidence and no redraw is owed
+      // slow-phase redraw: when EVERY completed TC leg's control read
+      // > 2× the calibrated floor, the artifact has no quiet-window TC
+      // sample — one extra draw either lands a quiet one or adds another
+      // control proving the phase persisted
       def tcRedraw: Int =
-        if (S.tcControls.nonEmpty &&
-            S.tcControls.forall(_ > 2.0 * controlFloor)) 1 else 0
-      while (S.tcRoundsRun < tcRounds + tcRedraw &&
-             remaining > tcEst * 1.2 + 20) {
-        val t = System.nanoTime()
-        val (cold, tri, _, ctl) = spawnTcLeg(cores4N, edgesPath)
-        S.tcRuns = S.tcRuns :+ (cold -> tri)
-        S.tcControls = S.tcControls :+ ctl
-        tcEst = (System.nanoTime() - t) / 1e9
-        S.tcRoundsRun += 1
-        checkpointSection(s"tc-topup${S.tcRoundsRun}")
-      }
+        if (rec.tcControls.nonEmpty &&
+            rec.tcControls.forall(_ > 2.0 * controlFloor)) 1 else 0
+      while (rec.tcRuns.size < tcRounds + tcRedraw &&
+             remaining > tcEst * 1.2 + 20)
+        drawTc("topup")
     }
-    if (doScaling && S.legsSkipped > 0) {
+    if (doScaling && rec.legsSkipped > 0) {
       // one more interleaved round of the HEADLINE pair (base, 4·base) per
-      // pass while it fits, plus the saturated leg when there is room.
-      // Round 4's first cut topped up (coresN, cores4N) instead: the
-      // 2-core leg then had samples only from the run's early phase while
-      // the 8-core leg got extra late-phase samples — a host whose early
-      // phase is slow inflates the recorded efficiency. Both legs of a
-      // pair must sample the same phases.
+      // pass while it fits, plus the saturated leg when there is room:
+      // both legs of a pair must sample the same host phases, or a host
+      // whose early phase is slow inflates the recorded efficiency
       var pass = 0
-      while (S.legsSkipped > 0 && pass < 3 &&
+      while (rec.legsSkipped > 0 && pass < 3 &&
              remaining > (legCost(base) + legCost(coresN)) * 1.2 + 20) {
         pass += 1
         for (c <- Seq(base, coresN, cores4N)
              if c == base || c == coresN ||
-               remaining > legCost(c) * 1.2 + 20) {
-          val t = System.nanoTime()
-          val (ed, sec, _) = spawnLeg(c, legEdgesPath, legSteps)
-          legCost(c) = (System.nanoTime() - t) / 1e9
-          val prev = S.legs.getOrElse(c, Leg(ed, Vector.empty))
-          S.legs = S.legs.updated(c, Leg(prev.edges, prev.secs :+ sec))
-          S.legsSkipped = math.max(0, S.legsSkipped - 1)
-          checkpointSection(s"leg-$c-topup$pass")
-        }
+               remaining > legCost(c) * 1.2 + 20)
+          drawLeg(c, s"topup$pass", topUp = true)
       }
     }
     // PR slow-phase redraw: if the pre-PR control read > 2× the floor,
@@ -733,22 +618,16 @@ object Bench {
     // artifact carries either a quiet-window superstep or two controls
     // proving the phase spanned the run. Both draws stay in the JSON;
     // pagerank_superstep_sec_best is the min (capacity estimator).
-    if (S.prControl > 2.0 * controlFloor && S.m > 0 &&
-        remaining > S.prWall * 1.2 + 30) {
-      val sym2 = (if (doScaling || doTc) spark.read.parquet(edgesPath)
-                  else Edges.symmetrize(benchEdges(spark, rows))).persist()
+    if (rec.prControl > 2.0 * controlFloor && rec.m > 0 &&
+        remaining > rec.prWall * 1.2 + 30) {
+      val sym2 = benchGraph()
       sym2.count()
-      S.prRedrawControl = controlSec(spark)
-      val r2 = PageRank.run(spark, sym2, fixedIter = Some(supersteps),
-        salts = salts, symmetric = true)
-      r2.ranks.count()
-      S.prRedrawSec = steadySec(r2.metrics)
+      rec = rec.copy(prRedrawControl = controlSec(spark))
+      rec = rec.copy(prRedrawSec =
+        steadySec(prSupersteps(spark, sym2, Supersteps)))
       sym2.unpersist()
       checkpointSection("pagerank-redraw")
     }
-    // convergence is an anchor now; this guard only fires if an earlier
-    // section threw and the shutdown hook replay reaches here
-    if (S.convIters < 0 && remaining > 90) runConvergence()
     emit()
     spark.stop()
   }

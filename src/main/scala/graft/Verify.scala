@@ -13,7 +13,8 @@ object Verify {
     // correctness dumps carry measured recall for the approximate
     // operators; the bench (which measures the scale paths) leaves this off
     System.setProperty("graft.recall", "1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

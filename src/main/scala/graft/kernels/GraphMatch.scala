@@ -19,64 +19,23 @@ import org.apache.spark.sql.functions._
   */
 object GraphMatch {
 
-  /** All embeddings of a labeled path pattern: columns v1..vk.
+  /** Count of embeddings of a labeled path pattern L1..Lk (k >= 1): the
+    * reference's aggregated match count — EuroSys Table 4's correctness
+    * numbers are exactly this, per pattern.
     * @param verts  (vid, label)
-    * @param sym    symmetric edge table (src, dst)
-    * @param labels hop labels L1..Lk (k >= 1)
-    */
-  def pathMatches(verts: DataFrame, sym: DataFrame,
-                  labels: Seq[String]): DataFrame = {
-    require(labels.nonEmpty)
-    val lab = verts.select(col("vid"), col("label"))
-    def hop(i: Int): DataFrame = broadcast(
-      lab.filter(col("label") === labels(i - 1))
-        .select(col("vid").as(s"v$i")))
-    var m = hop(1)
-    for (i <- 2 to labels.size) {
-      val e = sym.select(col("src").as(s"v${i - 1}"), col("dst").as(s"v$i"))
-      val distinctness: Column = (1 to i - 2)
-        .map(j => col(s"v$j") =!= col(s"v$i"))
-        .foldLeft(lit(true))(_ && _)
-      m = m.join(e, s"v${i - 1}")
-        .join(hop(i), Seq(s"v$i"))
-        .filter(distinctness)
-        .select((1 to i).map(j => col(s"v$j")): _*)
-    }
-    m
-  }
-
-  /** Count of embeddings (the reference's aggregated match count —
-    * EuroSys Table 4's correctness numbers are exactly this, per pattern). */
+    * @param sym    symmetric edge table (src, dst) */
   def countPath(verts: DataFrame, sym: DataFrame,
                 labels: Seq[String]): DataFrame =
-    pathMatches(verts, sym, labels).agg(count(lit(1)).as("matches"))
+    countPattern(verts, sym, labels,
+      (1 until labels.size).map(i => (i, i + 1)))
 
-  /** The reference GM demo's TREE pattern (`apps/graphmatch.cpp:233-437`):
-    * root labeled `la` with two children labeled `lb` and `lc`, and the
-    * `lb`-child has its own child labeled `ld`; all four vertices
-    * pairwise distinct. Embeddings (a, b, c, d) as a 4-way join chain. */
-  def treeMatches(verts: DataFrame, sym: DataFrame,
-                  la: String, lb: String, lc: String, ld: String)
-      : DataFrame = {
-    val lab = verts.select(col("vid"), col("label"))
-    def labeled(l: String, as: String) = broadcast(
-      lab.filter(col("label") === l).select(col("vid").as(as)))
-    def edge(x: String, y: String) =
-      sym.select(col("src").as(x), col("dst").as(y))
-    labeled(la, "a")
-      .join(edge("a", "b"), "a").join(labeled(lb, "b"), Seq("b"))
-      .join(edge("a", "c"), "a").join(labeled(lc, "c"), Seq("c"))
-      .join(edge("b", "d"), "b").join(labeled(ld, "d"), Seq("d"))
-      .filter(col("b") =!= col("c") && col("a") =!= col("d") &&
-        col("c") =!= col("d"))
-      .select(col("a"), col("b"), col("c"), col("d"))
-  }
-
-  /** Aggregated tree-pattern match count. */
+  /** Count of the reference GM demo's TREE pattern
+    * (`apps/graphmatch.cpp:233-437`): root labeled `la` with two children
+    * labeled `lb` and `lc`, and the `lb`-child has its own child labeled
+    * `ld`; all four vertices pairwise distinct. */
   def countTree(verts: DataFrame, sym: DataFrame,
                 la: String, lb: String, lc: String, ld: String): DataFrame =
-    treeMatches(verts, sym, la, lb, lc, ld)
-      .agg(count(lit(1)).as("matches"))
+    countPattern(verts, sym, Seq(la, lb, lc, ld), Seq((1, 2), (1, 3), (2, 4)))
 
   /** GENERAL pattern-graph matching: embeddings of an arbitrary connected
     * labeled pattern (cycles included — beyond the reference's hard-coded

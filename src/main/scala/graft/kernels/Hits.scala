@@ -31,11 +31,10 @@ import org.apache.spark.sql.functions._
   */
 object Hits {
 
-  final case class Result(scores: DataFrame, iterations: Int)
-
   /** @param edges directed edge table (src, dst)
-    * @param iters full HITS iterations (authority then hub) */
-  def run(spark: SparkSession, edges: DataFrame, iters: Int): Result = {
+    * @param iters full HITS iterations (authority then hub)
+    * @return (vid, hub, auth), each score divided by its total */
+  def run(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).persist()
     val init = e.select(col("src").as("vid"))
       .union(e.select(col("dst").as("vid"))).distinct()
@@ -63,6 +62,6 @@ object Hits {
       coalesce(col("hub") / total(0), lit(0.0)).as("hub"),
       coalesce(col("auth") / total(1), lit(0.0)).as("auth"))
     e.unpersist()
-    Result(out, iters)
+    out
   }
 }

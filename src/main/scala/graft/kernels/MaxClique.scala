@@ -120,14 +120,8 @@ object MaxClique {
     * min-(degree,id) member). Lazy; returns the unpersist hook for the
     * oriented edge cache (used 4x in the plan — triple self-join +
     * neighbor agg — so it IS persisted, and [[run]] releases it once the
-    * result is materialized).
-    *
-    * `globalBound` defaults OFF here: with it on, seeds whose
-    * out-neighborhood cannot reach the greedy global bound produce NO row
-    * — sound for [[run]]'s argmax (which opts in) but a silent semantic
-    * narrowing of the per-seed surface. */
-  def perSeedWithRelease(spark: SparkSession, edges: DataFrame,
-                         globalBound: Boolean = false)
+    * result is materialized). */
+  def perSeedWithRelease(spark: SparkSession, edges: DataFrame)
       : (org.apache.spark.sql.Dataset[SeedResult], () => Unit) = {
     import spark.implicits._
     val e = Edges.orientByDegree(edges).persist()
@@ -136,7 +130,7 @@ object MaxClique {
     // maximum clique nor a tie (its best is 1+outdeg < bound <= max), so
     // it is dropped BEFORE the induced-edge self-join — strictly-less
     // keeps every possible tie exact
-    val bound = if (globalBound) greedyBound(e) else 1
+    val bound = greedyBound(e)
     val survivors = e.groupBy(col("src").as("seed"))
       .agg(count(lit(1)).as("outdeg"))
       .filter(col("outdeg") + 1 >= bound).select(col("seed"))
@@ -173,7 +167,7 @@ object MaxClique {
     * inputs are released before return — a long-lived session running many
     * queries keeps no cached blocks behind. */
   def run(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val (perDs, release) = perSeedWithRelease(spark, edges, globalBound = true)
+    val (perDs, release) = perSeedWithRelease(spark, edges)
     val per = perDs.toDF().persist()
     val mx = per.agg(max(col("size")).as("max_size"))
     val result = per.join(broadcast(mx), col("size") === col("max_size"))

@@ -933,7 +933,7 @@ object GraphQueries {
     // iterations, deferred normalization (integer path counts until the
     // final division — half-step-replayable in a recursive CTE)
     Q("q89_hits", (s, d) => {
-      val r = graft.kernels.Hits.run(s, e2(s, d), iters = 4).scores
+      val r = graft.kernels.Hits.run(s, e2(s, d), iters = 4)
       r.select(col("vid"), round(col("hub"), 8).as("hub"),
         round(col("auth"), 8).as("auth"))
     },

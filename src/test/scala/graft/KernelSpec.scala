@@ -29,6 +29,16 @@ class KernelSpec extends SparkSpec {
     }
   }
 
+  test("flagship entry: sf0.001 co-occurrence components match union-find") {
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().toSeq.map(r =>
+        r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue)
+    val edges = pairs(queries.Common.e2(spark, "/root/testdata/sf0.001"))
+    assert(edges.nonEmpty)
+    assert(pairs(SparkEntry.entry(spark)).sorted ===
+      Oracles.connectedComponents(edges).toSeq.sorted)
+  }
+
   test("triangle totals match enumeration") {
     golden.foreach { case (name, es) =>
       assert(TriangleCount.total(edgeDF(es)).head().getLong(0) ===
@@ -610,7 +620,7 @@ class KernelSpec extends SparkSpec {
     //   a2 = {3:4, 4:1}      h2 = {1:4, 2:4, 3:1}
     // hub = h2/9, auth = a2/5; missing scores coalesce to 0
     val e = Seq((1L, 3L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    val got = Hits.run(spark, e, iters = 2).scores.collect()
+    val got = Hits.run(spark, e, iters = 2).collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     val expect = Map(
       1L -> (4.0 / 9, 0.0), 2L -> (4.0 / 9, 0.0),
