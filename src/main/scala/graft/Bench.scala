@@ -39,8 +39,9 @@ import org.apache.spark.sql.functions._
   *    IT COMPLETES and progress goes to stderr, so even a hard kill
   *    leaves evidence;
   *  - at the end (and from a shutdown hook, if the JVM is terminated
-  *    first) TWO stdout lines are emitted: the full JSON (complete
-  *    per-query map — can exceed a log-tail window) followed by a COMPACT
+  *    first; the hook stops a running child leg before it emits) TWO
+  *    stdout lines are emitted: the full JSON (complete per-query map
+  *    — can exceed a log-tail window) followed by a COMPACT
   *    summary line (< ~1500 chars) carrying the headline metric, kernel
   *    walls, scaling pairs and totals, so a tail-bounded parser still
   *    finds one complete JSON line.
@@ -69,6 +70,9 @@ object Bench {
     * for 249 queries, BENCH.md), so a slow-phase draw still fits without
     * starving the leg and TC rounds. */
   private val QueriesReserve = 1700.0
+  /** Milliseconds a child leg gets to exit after SIGTERM before the
+    * shutdown hook kills it. */
+  private val ChildGraceMs = 5000L
 
   /** Spark's scratch directory (shuffle spill, checkpoint blocks) for
     * every main here: SPARK_GRAFT_LOCAL_DIR, else a tmpfs path. */
@@ -215,8 +219,9 @@ object Bench {
     val pb = new ProcessBuilder(cmd.asJava)
     pb.redirectError(ProcessBuilder.Redirect.INHERIT) // Spark logs flow through
     val proc = pb.start()
-    val out = new String(proc.getInputStream.readAllBytes())
-    proc.waitFor()
+    child = proc
+    val out = try new String(proc.getInputStream.readAllBytes())
+      finally { proc.waitFor(); child = null }
     val line = out.linesIterator.find(_.startsWith(marker))
       .getOrElse(sys.error(s"child $args produced no $marker line:\n$out"))
     (k: String) =>
@@ -330,6 +335,8 @@ object Bench {
 
   @volatile private var rec: Record = _
   @volatile private var emitted = false
+  /** The running `--leg`/`--tcleg` child, if any. */
+  @volatile private var child: Process = _
   private val t0 = System.nanoTime()
   private def elapsed: Double = (System.nanoTime() - t0) / 1e9
 
@@ -349,6 +356,15 @@ object Bench {
   private def checkpointSection(name: String): Unit = {
     writeFull(rec.json(elapsed, compact = false))
     System.err.println(f"[bench] section=$name elapsed=$elapsed%.0fs")
+  }
+
+  /** Stops the running child leg, so a stopped Bench leaves nothing
+    * computing on the cores the next measurement uses: SIGTERM, then
+    * SIGKILL after [[ChildGraceMs]]. */
+  private def stopChild(): Unit = Option(child).foreach { p =>
+    p.destroy()
+    if (!p.waitFor(ChildGraceMs, java.util.concurrent.TimeUnit.MILLISECONDS))
+      p.destroyForcibly()
   }
 
   private def emit(): Unit = synchronized {
@@ -390,7 +406,7 @@ object Bench {
     rec = Record(sfDir, budget, cores4N)
     val (base, coresN) = (rec.base, rec.coresN)
     val legCores = Seq(base, coresN, cores4N).distinct.filter(_ <= cores4N)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => emit()))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => { stopChild(); emit() }))
 
     // degradation reserves (sec), refined by measurement as sections run:
     // the budget trims extra leg rounds first, then extra TC rounds, then

@@ -49,14 +49,4 @@ object Densest {
       (i.toLong, nV, nE)
     }.toDF("round", "n_v", "n_e")
   }
-
-  /** The densest round's induced subgraph stats: argmax over the census
-    * of n_e/n_v (ties → earliest round), with the density rounded for
-    * cross-engine compare. */
-  def densestRound(census: DataFrame): DataFrame =
-    census.filter(col("n_v") > 0)
-      .select(col("round"), col("n_v"), col("n_e"),
-        round(col("n_e").cast("double") / col("n_v").cast("double"), 6)
-          .as("density"))
-      .orderBy(col("density").desc, col("round")).limit(1)
 }

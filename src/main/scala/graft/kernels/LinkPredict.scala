@@ -18,10 +18,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one shuffle on the center key for the wedge join, one
   * count aggregation on the pair key, an anti-join against the existing
   * edge set, and a per-vertex top-k window (shuffled by vertex — no
-  * global single-task window). `capPerCenter` bounds the quadratic wedge
-  * expansion of hub centers exactly like the derivation's `capPerGroup`
-  * (deterministic hash top-K, a documented approximation for power-law
-  * hubs); the default keeps the score exact, which is what the q70
+  * global single-task window). Scores are exact, which is what the q70
   * oracle replays.
   */
 object LinkPredict {
@@ -29,23 +26,9 @@ object LinkPredict {
   /** (vid, cand, cn, rnk): for each vertex, its top-k non-neighbor
     * candidates by common-neighbor count (ties to the lower candidate id).
     * @param edges canonical undirected edge table (src < dst, distinct) */
-  def commonNeighbors(edges: DataFrame, topK: Int,
-                      capPerCenter: Int = Int.MaxValue): DataFrame = {
+  def commonNeighbors(edges: DataFrame, topK: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    // pairs of neighbors sharing a center; weight = #common neighbors
-    val cn = Edges.coOccurrence(Edges.symmetrize(e), "src", "dst",
-        minWeight = 1L, capPerGroup = capPerCenter)
-      .withColumnRenamed("weight", "cn")
-    // existing edges are not candidates (both tables are canonical)
-    val cand = cn.join(e, Seq("src", "dst"), "left_anti")
-    val bi = cand.select(col("src").as("vid"), col("dst").as("cand"),
-        col("cn"))
-      .union(cand.select(col("dst").as("vid"), col("src").as("cand"),
-        col("cn")))
-    val w = Window.partitionBy(col("vid"))
-      .orderBy(col("cn").desc, col("cand"))
-    bi.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= topK)
+    topPerVertex(wedgeCounts(e, "cn"), e, "cn", topK)
   }
 
   /** Resource-allocation index (Zhou/Lü/Zhang 2009) in exact fixed-point:
@@ -59,64 +42,40 @@ object LinkPredict {
     * by summed ppm score (ties to the lower candidate id). Same plan shape
     * as [[commonNeighbors]]: one wedge shuffle on the center, one pair
     * aggregation, an anti-join, a vertex-partitioned top-k window. */
-  def resourceAllocation(edges: DataFrame, topK: Int,
-                         capPerCenter: Int = Int.MaxValue): DataFrame = {
+  def resourceAllocation(edges: DataFrame, topK: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val sym = Edges.symmetrize(e)
     val deg = Edges.degrees(sym)
     val sd = sym.join(deg.withColumnRenamed("vid", "src"), "src")
       .select(col("src").as("c"), col("dst").as("nbr"),
         (lit(1000000L) / col("degree")).cast("long").as("w"))
-    val capped =
-      if (capPerCenter == Int.MaxValue) sd
-      else {
-        val cw = Window.partitionBy(col("c"))
-          .orderBy(xxhash64(col("nbr")), col("nbr"))
-        sd.withColumn("rn", row_number().over(cw))
-          .filter(col("rn") <= capPerCenter).drop("rn")
-      }
-    val scored = capped.as("a")
-      .join(capped.as("b"),
-        col("a.c") === col("b.c") && col("a.nbr") < col("b.nbr"))
-      .groupBy(col("a.nbr").as("src"), col("b.nbr").as("dst"))
-      .agg(sum(col("a.w")).as("ra_ppm"))
-    val cand = scored.join(e, Seq("src", "dst"), "left_anti")
-    val bi = cand.select(col("src").as("vid"), col("dst").as("cand"),
-        col("ra_ppm"))
-      .union(cand.select(col("dst").as("vid"), col("src").as("cand"),
-        col("ra_ppm")))
-    val w = Window.partitionBy(col("vid"))
-      .orderBy(col("ra_ppm").desc, col("cand"))
-    bi.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= topK)
-  }
-
-  /** Adamic–Adar index — the float production path: center weight
-    * 1/ln(deg(c)). Spec-tested against a hand oracle with tolerance; the
-    * driver-oracled twin is [[resourceAllocation]] (float sums are
-    * engine-order-dependent, the ppm path is not). Same bucketed shape. */
-  def adamicAdar(edges: DataFrame, topK: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val sym = Edges.symmetrize(e)
-    val deg = Edges.degrees(sym)
-    // degree-1 centers cannot form a wedge; filter BEFORE the weight
-    // projection (ANSI mode evaluates 1/ln(1) eagerly otherwise)
-    val sd = sym.join(deg.withColumnRenamed("vid", "src"), "src")
-      .filter(col("degree") >= 2)
-      .select(col("src").as("c"), col("dst").as("nbr"),
-        (lit(1.0) / log(col("degree"))).as("w"))
     val scored = sd.as("a")
       .join(sd.as("b"),
         col("a.c") === col("b.c") && col("a.nbr") < col("b.nbr"))
       .groupBy(col("a.nbr").as("src"), col("b.nbr").as("dst"))
-      .agg(round(sum(col("a.w")), 6).as("aa"))
+      .agg(sum(col("a.w")).as("ra_ppm"))
+    topPerVertex(scored, e, "ra_ppm", topK)
+  }
+
+  /** Canonical (src < dst) 2-hop pairs with their common-neighbor count
+    * in column `score`: a wedge center IS a shared group, so this is the
+    * co-occurrence derivation over the symmetric edge table. */
+  private def wedgeCounts(e: DataFrame, score: String): DataFrame =
+    Edges.coOccurrence(Edges.symmetrize(e), "src", "dst", minWeight = 1L)
+      .withColumnRenamed("weight", score)
+
+  /** The top-k tail both predictors share: drop existing edges (both
+    * tables are canonical), emit each pair from both ends, and keep each
+    * vertex's top `topK` candidates by (`score` desc, candidate id). */
+  private def topPerVertex(scored: DataFrame, e: DataFrame, score: String,
+                           topK: Int): DataFrame = {
     val cand = scored.join(e, Seq("src", "dst"), "left_anti")
     val bi = cand.select(col("src").as("vid"), col("dst").as("cand"),
-        col("aa"))
+        col(score))
       .union(cand.select(col("dst").as("vid"), col("src").as("cand"),
-        col("aa")))
+        col(score)))
     val w = Window.partitionBy(col("vid"))
-      .orderBy(col("aa").desc, col("cand"))
+      .orderBy(col(score).desc, col("cand"))
     bi.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= topK)
   }
@@ -135,8 +94,8 @@ object LinkPredict {
     * neighbor the same.
     *
     * Scale shape: one weighted-adjacency shuffle, one self-join keyed on
-    * the shared neighbor (the same wedge expansion every link predictor
-    * here bounds — `capPerCenter` truncates hub centers to their top-C
+    * the shared neighbor (the wedge expansion of the predictors above;
+    * `capPerCenter` truncates hub centers to their top-C
     * strongest neighbors, a documented lower-bound approximation exactly
     * like the derivation's `capPerGroup`), one pair aggregation, a
     * broadcast-joined per-vertex weight-mass table, and a distributed
@@ -186,10 +145,7 @@ object LinkPredict {
     *         class is absent. */
   def linkAuc(edges: DataFrame, truth: DataFrame): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
-    val cn = Edges.coOccurrence(Edges.symmetrize(e), "src", "dst",
-        minWeight = 1L)
-      .withColumnRenamed("weight", "score")
-    val lab = cn.join(e, Seq("src", "dst"), "left_anti")
+    val lab = wedgeCounts(e, "score").join(e, Seq("src", "dst"), "left_anti")
       .join(truth.select(col("src"), col("dst"), lit(1L).as("y")),
         Seq("src", "dst"), "left")
       .select(col("score"), coalesce(col("y"), lit(0L)).as("y"))

@@ -4,8 +4,8 @@ import graft.queries.Common._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Queries over the `events` table: time buckets, sessions, windows
-  * and streaming twins. */
+/** Queries over the `events` table: time buckets, sessions, windows,
+  * interval joins and the event ledgers. */
 object EventQueries {
   val all: Seq[Q] = Seq(
     // -- events: time-bucketed aggregation --
@@ -20,8 +20,8 @@ object EventQueries {
         |       event_type, count(*) AS n, round(sum(value), 6) AS sum_value
         |FROM events GROUP BY 1, 2""".stripMargin)),
 
-    // sessionization (custom data-dependent state — the
-    // flatMapGroupsWithState shape; batch twin of Streaming.sessionizeStream)
+    // sessionization (custom data-dependent state: per-user lag over
+    // (ts, event_id), a new session after a 30-minute gap)
     Q("q53_sessions", (s, d) =>
       graft.streaming.Streaming.sessionizeBatch(T(s, d, "events"), 30),
       Sql("""WITH x AS (SELECT user_id, event_id, value, epoch_us(ts) AS tus,
@@ -127,10 +127,7 @@ object EventQueries {
         |         AS max_rank
         |FROM r GROUP BY 1, 2""".stripMargin)),
 
-    // first-arrival dedup, batch twin of Streaming.dedupStream (which
-    // runs the same keys with dropDuplicatesWithinWatermark — bounded
-    // state; stream/batch key-set parity in StreamingSpec): one argmin
-    // aggregation, no per-key window sort
+    // first-arrival dedup: one argmin aggregation, no per-key window sort
     Q("q115_dedup_first", (s, d) =>
       graft.streaming.Streaming.dedupBatch(T(s, d, "events"),
         Seq("user_id", "event_type")),
@@ -227,9 +224,9 @@ object EventQueries {
         |WHERE b.tu >= a.tv AND b.tv - a.tu <= 600000000 AND a.src <> b.dst
         |GROUP BY 1""".stripMargin)),
 
-    // attribution interval join (batch twin of the stream-stream
-    // watermarked join — StreamingSpec asserts stream == batch): every
-    // view credited for a same-user click within the next 60 minutes
+    // attribution interval join (user equi-join plus an event-time range
+    // predicate): every view credited for a same-user click within the
+    // next 60 minutes
     Q("q142_attribution", (s, d) =>
       graft.streaming.Streaming.attributionBatch(T(s, d, "events"),
         windowMin = 60),
@@ -382,7 +379,7 @@ object EventQueries {
         |  ON a.event_id < b.event_id AND a.s <= b.e AND b.s <= a.e""".stripMargin)),
 
     // gap-based throttle (debounce) ledger — kept iff > 60 s after the
-    // key's previous event; one-long-per-key state in the stream twin
+    // key's previous event
     Q("q240_throttle", (s, d) =>
       graft.streaming.Streaming.throttleBatch(T(s, d, "events"), 60L),
       // kept iff first of key or > 60 s after the key's previous event

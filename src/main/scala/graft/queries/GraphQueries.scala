@@ -742,7 +742,7 @@ object GraphQueries {
          |WHERE deg.degree >= 2""".stripMargin)),
 
     // resource-allocation link scores in exact fixed-point ppm (integer
-    // parity discipline — the float Adamic-Adar twin is spec-covered)
+    // parity discipline)
     Q("q72_link_ra", (s, d) =>
       graft.kernels.LinkPredict.resourceAllocation(e2(s, d), topK = 5),
       // wedge join weighted by the center's floor-ppm inverse degree; the

@@ -95,10 +95,6 @@ object GraphIO {
       .select(col("src"), col("attrs"), col("e.dst"), col("e.weight"))
   }
 
-  /** Directed edge rows from an adjacency table. */
-  def edgesOf(adj: DataFrame): DataFrame =
-    adj.select(col("src"), explode(col("adj")).as("dst"))
-
   /** Write (src, adj) back out in `normal` format (S4 partition-dump
     * analog, `partition/Driver.tpp:24-39` — minus the baked-in worker ids,
     * which Spark's partitioning replaces). */

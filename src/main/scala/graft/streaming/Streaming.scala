@@ -1,40 +1,27 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
-/** Structured Streaming surface.
+/** Event-time operators over the `events` table, plus the CDC upsert
+  * ingest.
   *
   * The reference is batch-only (SURVEY §2.9 — its closest analogs are the
-  * periodic `sys_sync` telemetry timers, `core/slave.tpp:893-964`); the
-  * streaming layer here covers the incremental-ingest side of a production
-  * deployment: events/corpus rows arriving as files are aggregated with
-  * event-time windows + watermark, and the SAME transformation function is
-  * used by the batch queries — one definition, two execution modes
-  * (`readStream` vs `read`), which is exactly how Structured Streaming is
-  * meant to be used. State stays bounded via the watermark; the windowed
-  * aggregation is a streaming-safe partial+final hash agg.
+  * periodic `sys_sync` telemetry timers, `core/slave.tpp:893-964`). Every
+  * operator here is a batch plan that a query calls: sessionization,
+  * sliding windows, first-arrival dedup, attribution and interval-overlap
+  * joins, the late-data ledger, the gap throttle and the EWMA detector.
+  * [[ingestUpsert]] is the one Structured Streaming path: a bounded file
+  * stream MERGEd into the catalog batch by batch (q161).
   */
 object Streaming {
-
-  /** Event-time hourly counts/sums per event type — the shared plan.
-    * Works on a batch DataFrame or a streaming one unchanged. */
-  def hourlyAgg(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("w.start").as("hour"), col("event_type"),
-        col("n"), col("sum_value"))
 
   /** Sliding event-time windows (length `windowMin`, step `slideMin`) per
     * event type — each event lands in windowMin/slideMin overlapping
     * windows, all epoch-aligned on the slide like Spark's `window()`
-    * semantics on a real cluster. Works on a batch DataFrame or a
-    * streaming one unchanged (add a watermark upstream for streams).
+    * semantics on a real cluster.
     *
     * Scale shape: the window expansion is a per-row generator (Expand,
     * inside codegen — windowMin/slideMin rows per event, a small constant)
@@ -48,38 +35,6 @@ object Streaming {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("w.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** File-source stream over a directory of event parquet files. */
-  def eventStream(spark: SparkSession, dir: String,
-                  schema: StructType): DataFrame =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 4)
-      .parquet(dir)
-
-  /** Run the hourly aggregation over a directory as a bounded stream
-    * (processAllAvailable + stop), returning the result table — used by
-    * tests to prove stream/batch plan equivalence. */
-  def runBounded(spark: SparkSession, dir: String, schema: StructType,
-                 sinkTable: String): DataFrame = {
-    val q = hourlyAgg(eventStream(spark, dir, schema))
-      .writeStream
-      .format("memory")
-      .queryName(sinkTable)
-      .outputMode("complete")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkTable)
-  }
-
-  /** A closed user session. Times are epoch microseconds (exact — no
-    * format round-trips between engines). */
-  final case class Session(user_id: Long, session_start_us: Long,
-                           session_end_us: Long, n_events: Long,
-                           sum_value: Double)
-
-  /** The open-session state carried between micro-batches. */
-  final case class OpenSession(start: Long, end: Long, n: Long, sum: Double)
 
   /** Batch sessionization: per user, events more than `gapMinutes` apart
     * start a new session. Lag/cumulative-sum windows hash-partitioned by
@@ -104,50 +59,7 @@ object Streaming {
         round(sum(col("value")), 6).as("sum_value"))
   }
 
-  /** Streaming sessionization over `flatMapGroupsWithState` — the custom-
-    * state path the windowed aggregations can't express (sessions have
-    * data-dependent extents). State per user = the open session; a batch's
-    * events (sorted in-batch) extend it or close it and emit. Closed
-    * sessions match [[sessionizeBatch]] exactly; the final open session
-    * per user stays in state (it would close via event-time timeout once
-    * the watermark passes — with a bounded test stream, parity is
-    * asserted on closed sessions). Assumes per-key batch arrival in event
-    * order, as a watermark-sorted source provides. */
-  def sessionizeStream(spark: SparkSession, events: DataFrame,
-                       gapMinutes: Int): Dataset[Session] = {
-    import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    events
-      .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("tus"),
-        col("event_id"), col("value"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[OpenSession, Session](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user, it, state) =>
-          val evs = it.toSeq.sortBy(e => (e._2, e._3))
-          var open = state.getOption
-          val out = Seq.newBuilder[Session]
-          evs.foreach { case (_, tus, _, v) =>
-            open match {
-              case Some(o) if tus - o.end <= gapUs =>
-                open = Some(OpenSession(o.start, tus, o.n + 1, o.sum + v))
-              case Some(o) =>
-                // HALF_UP to match the batch plan's round(sum, 6) exactly
-                out += Session(user, o.start, o.end, o.n,
-                  BigDecimal(o.sum)
-                    .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-                open = Some(OpenSession(tus, tus, 1L, v))
-              case None =>
-                open = Some(OpenSession(tus, tus, 1L, v))
-            }
-          }
-          open.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
-  /** Batch twin of first-arrival dedup: per dedup key, the first event in
+  /** First-arrival dedup: per dedup key, the first event in
     * (ts, event_id) order plus the duplicate count — ONE hash aggregation
     * with map-side combine (min over a (tus, event_id) struct — argmin,
     * no per-key window/sort), deterministic under ties by the event_id
@@ -160,20 +72,6 @@ object Streaming {
         count(lit(1)).as("n_dups"))
       .select(keys.map(col) ++ Seq(col("f.tus").as("first_ts_us"),
         col("f.event_id").as("first_event_id"), col("n_dups")): _*)
-
-  /** Streaming exact dedup with BOUNDED state: one output row per dedup
-    * key, keys forgotten once the watermark passes (the
-    * `dropDuplicatesWithinWatermark` contract) — the shape a continuous
-    * ingest pipeline needs, where an unbounded seen-set would OOM but
-    * duplicates only ever arrive within the lateness horizon. Emits the
-    * first-arrival row; cross-engine determinism is on the KEY SET (which
-    * row of a same-batch duplicate group wins is arrival-order-dependent),
-    * so parity with [[dedupBatch]] is asserted on keys — see
-    * StreamingSpec. */
-  def dedupStream(events: DataFrame, keys: Seq[String],
-                  watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keys)
 
   /** Fixed-delay watermark accounting — the late-data quarantine ledger
     * every production stream needs next to its windowed aggregates:
@@ -211,13 +109,12 @@ object Streaming {
           .as("n_dropped"))
   }
 
-  /** Attribution interval join, batch twin: every (view, click) pair of
+  /** Attribution interval join: every (view, click) pair of
     * the SAME user with the click in (view_ts, view_ts + windowMin] —
     * "which impressions get credit for this click". A user-keyed
     * equi-join plus a range predicate: the range condition never leaves
     * the user key, per-user event counts are bounded, so at 100 TB this
-    * shuffles each side once by user and nothing else — and it is the
-    * same plan [[attributionStream]] executes incrementally. */
+    * shuffles each side once by user and nothing else. */
   def attributionBatch(events: DataFrame, windowMin: Int): DataFrame = {
     val wUs = windowMin * 60L * 1000000L
     val views = events.filter(col("event_type") === "view")
@@ -235,40 +132,6 @@ object Streaming {
         col("click_id"), col("click_us"))
   }
 
-  /** Stream-stream interval join with watermarks — the Structured
-    * Streaming surface the windowed aggs (q24/q87), sessionization (q53)
-    * and dedup (q115) don't cover. Both sides carry a watermark and the
-    * join condition is user equality + the event-time interval, so each
-    * side's join state is bounded by watermark + window (Spark evicts
-    * rows that can no longer match). Emits the same rows as
-    * [[attributionBatch]] — parity asserted in StreamingSpec. */
-  def attributionStream(views: DataFrame, clicks: DataFrame,
-                        windowMin: Int): DataFrame = {
-    val v = views
-      .select(col("user_id"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("view_ts", s"${2 * windowMin} minutes")
-    val c = clicks
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", s"${2 * windowMin} minutes")
-    v.join(c,
-        v("user_id") === c("c_user") &&
-          c("click_ts") > v("view_ts") &&
-          c("click_ts") <= v("view_ts") + expr(s"INTERVAL $windowMin MINUTES"))
-      .select(col("user_id"), col("view_id"),
-        unix_micros(col("view_ts")).as("view_us"),
-        col("click_id"), unix_micros(col("click_ts")).as("click_us"))
-  }
-
-  /** Streaming corpus ingest into the snapshot catalog: corpus files
-    * arriving in `dir` are appended batch-by-batch as catalog snapshots
-    * (`foreachBatch` → `CatalogAdapter.append`), giving the incremental-
-    * derivation entry point the production system would run continuously
-    * — each micro-batch commit is a new snapshot, the edge derivation
-    * reads the latest one, and time travel reaches any ingest point.
-    * Bounded run (processAllAvailable + stop); returns committed
-    * snapshot ids in commit order. */
   /** Streaming UPSERT ingest (CDC-feed application): each micro-batch is
     * MERGEd into the catalog table by `key` (matched keys update, new
     * keys insert) — the lakehouse pattern for applying a change feed
@@ -339,7 +202,7 @@ object Streaming {
           greatest(col("a.s"), col("b.s"))).as("overlap_sec"))
   }
 
-  /** Gap-based THROTTLE ledger (batch twin): per (user, event_type), an
+  /** Gap-based THROTTLE ledger: per (user, event_type), an
     * event is KEPT iff it is the key's first or arrived more than
     * `gapSec` after the key's previous event — the rate-limit /
     * debounce operator (alert suppression, at-most-one-per-interval
@@ -348,9 +211,7 @@ object Streaming {
     * is measured from the previous EVENT, kept or not, so the decision
     * depends only on the predecessor — a per-key `lag` window
     * (per-key cardinality is bounded; the window never sees the whole
-    * table) and exactly the one-value-per-key state
-    * [[throttleStream]] keeps. Returns (user_id, event_type, n_events,
-    * n_kept). */
+    * table). Returns (user_id, event_type, n_events, n_kept). */
   def throttleBatch(events: DataFrame, gapSec: Long): DataFrame = {
     val ord = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("tus"), col("event_id"))
@@ -362,40 +223,6 @@ object Streaming {
           col("tus") - col("pus") > gapSec * 1000000L, 1L).otherwise(0L))
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("kept")).as("n_kept"))
-  }
-
-  final case class Kept(user_id: Long, event_type: String, tus: Long,
-                        event_id: Long)
-
-  /** Streaming twin of [[throttleBatch]]: state per (user, event_type)
-    * is ONE long — the last-seen event time — updated on every event,
-    * emitting only those that clear the gap. Assumes per-key batch
-    * arrival in event order (watermark-sorted source), like
-    * [[sessionizeStream]]; kept rows match the batch twin's `kept`
-    * set exactly on such a stream — asserted in StreamingSpec. */
-  def throttleStream(spark: SparkSession, events: DataFrame,
-                     gapSec: Long): Dataset[Kept] = {
-    import spark.implicits._
-    val gapUs = gapSec * 1000000L
-    events
-      .select(col("user_id"), col("event_type"),
-        unix_micros(col("ts").cast("timestamp")).as("tus"), col("event_id"))
-      .as[(Long, String, Long, Long)]
-      .groupByKey(e => (e._1, e._2))
-      .flatMapGroupsWithState[Long, Kept](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key, it, state) =>
-          val evs = it.toSeq.sortBy(e => (e._3, e._4))
-          var last = state.getOption
-          val out = Seq.newBuilder[Kept]
-          evs.foreach { case (_, _, tus, id) =>
-            if (last.forall(p => tus - p > gapUs))
-              out += Kept(key._1, key._2, tus, id)
-            last = Some(tus)
-          }
-          last.foreach(state.update)
-          out.result().iterator
-      }
   }
 
   /** EWMA anomaly ledger over hourly event-type counts — the
@@ -453,23 +280,5 @@ object Streaming {
       .select(col("event_type"), col("r.h").as("h"), col("r.n").as("n"),
         col("r.ewma_prev_micro").as("ewma_prev_micro"),
         col("r.spike").as("spike"))
-  }
-
-  def ingestCorpus(spark: SparkSession, dir: String, schema: StructType,
-                   catalog: graft.catalog.CatalogAdapter,
-                   table: String): Seq[Long] = {
-    val snaps = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) { snaps += catalog.append(table, batch.toDF()) }
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    snaps.toSeq
   }
 }

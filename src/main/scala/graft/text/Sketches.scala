@@ -101,29 +101,6 @@ object Sketches {
       .groupBy(col("grp"), col("reg")).agg(max(col("rank")).as("max_rank"))
   }
 
-  /** Raw-HLL cardinality estimate per group from [[hllRegisters]]
-    * output: α_m·m²/Σ 2^(−M_j), with missing registers counting as
-    * M_j = 0 and the standard linear-counting correction when the
-    * estimate is small and empty registers remain. Used by specs to
-    * assert the sketch actually estimates; production reads would keep
-    * the integer register table and fold estimates at query time. */
-  def hllEstimate(registers: DataFrame, regBits: Int = 6): DataFrame = {
-    val m = 1L << regBits
-    val alpha = 0.7213 / (1.0 + 1.079 / m)
-    registers.groupBy(col("grp"))
-      .agg(sum(pow(lit(2.0), -col("max_rank"))).as("hit_sum"),
-        count(lit(1)).as("hit_regs"))
-      .select(col("grp"),
-        (lit(alpha * m * m) /
-          (col("hit_sum") + (lit(m) - col("hit_regs")).cast("double")))
-          .as("raw_est"),
-        (lit(m) - col("hit_regs")).as("zero_regs"))
-      .select(col("grp"),
-        when(col("raw_est") <= 2.5 * m && col("zero_regs") > 0,
-          lit(m.toDouble) * log(lit(m.toDouble) / col("zero_regs")))
-          .otherwise(col("raw_est")).as("est"))
-  }
-
   /** The composed heavy-hitter report: exact top-k items (distributed
     * TakeOrdered, mirroring [[TrainPrep.topNgrams]]) joined with their
     * count-min estimates — the driver-verifiable witness that the

@@ -3,6 +3,7 @@ package graft
 import graft.kernels.{GraphMatch, KCore, MaxClique}
 import graft.graph.Edges
 import graft.sources.GraphIO
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -12,6 +13,10 @@ import java.nio.file.Files
   */
 class MiningSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Directed edge rows from an adjacency table. */
+  private def edgesOf(adj: DataFrame): DataFrame =
+    adj.select(col("src"), explode(col("adj")).as("dst"))
 
   // ---- brute-force oracles ----
 
@@ -185,7 +190,7 @@ class MiningSpec extends SparkSpec {
     val adj = Edges.adjacency(sym)
     GraphIO.writeNormalAdj(adj, s"$dir/normal")
     val back = GraphIO.readNormalAdj(spark, s"$dir/normal")
-    val edges = GraphIO.edgesOf(back)
+    val edges = edgesOf(back)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expect = Oracles.sample15.flatMap(e => Seq(e, e.swap)).toSet
     assert(edges === expect)
@@ -207,7 +212,7 @@ class MiningSpec extends SparkSpec {
     try {
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
       spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      val edges = GraphIO.edgesOf(GraphIO.readNormalAdj(spark, s"$dir/normal"))
+      val edges = edgesOf(GraphIO.readNormalAdj(spark, s"$dir/normal"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(edges === Oracles.sample15.flatMap(e => Seq(e, e.swap)).toSet)
     } finally {
@@ -284,7 +289,7 @@ class MiningSpec extends SparkSpec {
     val attrs = va.collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
     assert(attrs === sampleAttrs.view.mapValues(_.toSet).toMap)
-    val edges = GraphIO.edgesOf(va.select(col("src"), col("adj")))
+    val edges = edgesOf(va.select(col("src"), col("adj")))
       .filter(col("src") < col("dst"))
     val edgeSet = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(edgeSet === Oracles.sample15.toSet)

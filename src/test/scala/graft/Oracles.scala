@@ -225,6 +225,19 @@ object Oracles {
       .digest(s.getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString.take(15), 16)
 
+  /** Raw-HLL cardinality estimate from one group's registers (reg →
+    * max rank, as `Sketches.hllRegisters` emits them): α_m·m²/Σ 2^(−M_j),
+    * missing registers counting as M_j = 0, with the linear-counting
+    * correction while the estimate is small and empty registers remain. */
+  def hllEstimate(registers: Map[Long, Long], regBits: Int): Double = {
+    val m = 1L << regBits
+    val alpha = 0.7213 / (1.0 + 1.079 / m)
+    val zero = m - registers.size
+    val raw = alpha * m * m /
+      (registers.values.map(r => math.pow(2.0, -r.toDouble)).sum + zero)
+    if (raw <= 2.5 * m && zero > 0) m * math.log(m.toDouble / zero) else raw
+  }
+
   /** Kruskal MSF on (src, dst, w) with unique weights → MST edge set. */
   def mstKruskal(weighted: Seq[(Long, Long, Long)]): Set[(Long, Long)] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]

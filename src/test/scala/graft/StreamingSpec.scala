@@ -5,77 +5,11 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.sql.Timestamp
 
-/** Structured Streaming: the windowed aggregation produces the same result
-  * run as a bounded file stream and as a batch plan (one transformation,
-  * two execution modes).
+/** The event-time operators in [[Streaming]], each against rows traced
+  * by hand from its input, and the bounded-stream upsert ingest.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
-
-  test("streamed hourly aggregation equals the batch plan") {
-    val rows = Seq(
-      ("click", "2026-01-01 00:10:00", 1.0),
-      ("click", "2026-01-01 00:50:00", 2.0),
-      ("view", "2026-01-01 00:20:00", 3.0),
-      ("click", "2026-01-01 01:05:00", 4.0),
-      ("view", "2026-01-01 02:59:00", 5.0)
-    ).map { case (t, ts, v) => (t, Timestamp.valueOf(ts), v) }
-      .toDF("event_type", "ts", "value")
-
-    val dir = Files.createTempDirectory("graft-stream").toString
-    rows.repartition(3).write.mode("overwrite").parquet(dir)
-
-    val batch = Streaming.hourlyAgg(spark.read.parquet(dir))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1),
-        r.getLong(2), r.getDouble(3))).toSet
-    val streamed = Streaming.runBounded(spark, dir,
-      spark.read.parquet(dir).schema, "stream_sink")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1),
-        r.getLong(2), r.getDouble(3))).toSet
-
-    assert(streamed === batch)
-    assert(batch.size === 4) // (00h click)(00h view)(01h click)(02h view)
-  }
-
-  test("streaming corpus ingest: micro-batches become catalog snapshots") {
-    import graft.catalog.LocalCatalog
-    import graft.corpus.{CorpusGen, EdgeDeriver}
-    val corpus = CorpusGen.corpus(spark, CorpusGen.Tiny).persist()
-    val dir = Files.createTempDirectory("graft-ingest").toString
-    // three arrival chunks, one FLAT parquet file each in the watched dir
-    // (the file-stream source lists plain files, not nested write dirs)
-    for (i <- 0 until 3) {
-      val tmp = Files.createTempDirectory(s"graft-chunk$i").toString
-      corpus.filter(pmod(xxhash64(col("path")), lit(3)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath,
-        java.nio.file.Paths.get(dir, s"chunk$i.parquet"))
-    }
-    val cat = new LocalCatalog(
-      Files.createTempDirectory("graft-ingest-cat").toString)
-    val snaps = Streaming.ingestCorpus(spark, dir, corpus.schema,
-      cat, "corpus")
-    assert(snaps.nonEmpty && snaps == snaps.sorted)
-    // the ingested table equals the batch corpus, sha256 row-for-row
-    val inSha = cat.read(spark, "corpus")
-      .select(sha2(col("content"), 256)).as[String].collect().sorted
-    val batchSha = corpus
-      .select(sha2(col("content"), 256)).as[String].collect().sorted
-    assert(inSha.sameElements(batchSha))
-    // derivation over the streamed catalog == derivation over the batch
-    val viaCatalog = EdgeDeriver.edges(cat.read(spark, "corpus"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val direct = EdgeDeriver.edges(corpus)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    assert(viaCatalog.sameElements(direct))
-    // earlier snapshots see strictly less data (incremental ingest)
-    assert(cat.readSnapshot(spark, "corpus", snaps.head).count()
-      < corpus.count())
-    corpus.unpersist()
-  }
 
   test("streaming upsert ingest: per-batch MERGE equals one-shot merge") {
     import graft.catalog.LocalCatalog
@@ -98,64 +32,38 @@ class StreamingSpec extends SparkSpec {
       (4L, "xx", 47L), (9L, "xx", 90L)))
   }
 
-  test("flatMapGroupsWithState sessionization: stream equals batch") {
+  test("sessionizeBatch: hand-traced sessions split at the 30-minute gap") {
     def mk(id: Long, u: Long, ts: String, v: Double) =
       (id, u, Timestamp.valueOf(ts), v)
-    // three arrival chunks in event-time order; the last carries per-user
-    // flush sentinels far beyond the gap so every real session closes
-    val chunks = Seq(
-      Seq(mk(1, 1, "2026-01-01 00:00:00", 1.0),
-        mk(2, 2, "2026-01-01 00:05:00", 2.0)),
-      Seq(mk(3, 1, "2026-01-01 00:10:00", 3.0),
-        mk(4, 2, "2026-01-01 00:20:00", 4.0)),
-      Seq(mk(5, 1, "2026-01-01 02:00:00", 5.0),
-        mk(6, 2, "2026-01-01 00:30:00", 6.0),
-        mk(98, 1, "2026-01-10 00:00:00", 0.0),
-        mk(99, 2, "2026-01-10 00:00:00", 0.0)))
-    val dir = Files.createTempDirectory("graft-sess").toString
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      val tmp = Files.createTempDirectory(s"graft-sess$i").toString
-      c.toDF("event_id", "user_id", "ts", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath,
-        java.nio.file.Paths.get(dir, s"chunk$i.parquet"))
-    }
-    val all = spark.read.parquet(dir)
-    val flushUs = Timestamp.valueOf("2026-01-10 00:00:00").getTime * 1000L
-
-    val ds = Streaming.sessionizeStream(spark,
-      spark.readStream.schema(all.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir), gapMinutes = 30)
-    val q = ds.writeStream.format("memory").queryName("sess_sink")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sess_sink").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4))).toSet
-
-    // batch twin on the same files, minus the sentinel-only sessions
-    val batch = Streaming.sessionizeBatch(all, 30)
-      .filter(col("session_start_us") < flushUs)
+    val all = Seq(
+      mk(1, 1, "2026-01-01 00:00:00", 1.0),
+      mk(2, 2, "2026-01-01 00:05:00", 2.0),
+      mk(3, 1, "2026-01-01 00:10:00", 3.0),
+      mk(4, 2, "2026-01-01 00:20:00", 4.0),
+      mk(5, 1, "2026-01-01 02:00:00", 5.0),
+      mk(6, 2, "2026-01-01 00:30:00", 6.0),
+      mk(98, 1, "2026-01-10 00:00:00", 0.0),
+      mk(99, 2, "2026-01-10 00:00:00", 0.0)
+    ).toDF("event_id", "user_id", "ts", "value")
+    val got = Streaming.sessionizeBatch(all, 30)
       .select(col("user_id"), col("session_start_us"),
         col("session_end_us"), col("n_events"), col("sum_value"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))).toSet
-
-    assert(streamed === batch)
-    // the expected sessions, spelled out
+    // user 1: 00:00, 00:10 (10 min <= 30, same session, 1+3), 02:00
+    // (110 min > 30, new), 01-10 (new); user 2: 00:05, 00:20, 00:30
+    // (gaps 15 and 10 min, one session, 2+4+6), 01-10 (new)
     def us(ts: String) = Timestamp.valueOf(ts).getTime * 1000L
-    assert(batch === Set(
+    assert(got === Set(
       (1L, us("2026-01-01 00:00:00"), us("2026-01-01 00:10:00"), 2L, 4.0),
       (1L, us("2026-01-01 02:00:00"), us("2026-01-01 02:00:00"), 1L, 5.0),
-      (2L, us("2026-01-01 00:05:00"), us("2026-01-01 00:30:00"), 3L, 12.0)))
+      (1L, us("2026-01-10 00:00:00"), us("2026-01-10 00:00:00"), 1L, 0.0),
+      (2L, us("2026-01-01 00:05:00"), us("2026-01-01 00:30:00"), 3L, 12.0),
+      (2L, us("2026-01-10 00:00:00"), us("2026-01-10 00:00:00"), 1L, 0.0)))
   }
 
-  test("watermarked streaming dedup: key set equals the batch twin") {
+  test("dedupBatch: hand-traced first arrival and duplicate count per key") {
     def mk(id: Long, u: Long, t: String, ts: String) =
       (id, u, t, Timestamp.valueOf(ts), 1.0)
     val rows = Seq(
@@ -166,35 +74,17 @@ class StreamingSpec extends SparkSpec {
       mk(5, 2, "click", "2026-01-01 00:20:00"), // dup of (2, click)
       mk(6, 1, "view", "2026-01-01 01:00:00")   // dup of (1, view)
     ).toDF("event_id", "user_id", "event_type", "ts", "value")
-    val dir = Files.createTempDirectory("graft-dedup").toString
-    rows.repartition(2).write.mode("overwrite").parquet(dir)
-    val keys = Seq("user_id", "event_type")
-
-    val q = Streaming.dedupStream(
-        spark.readStream.schema(rows.schema)
-          .option("maxFilesPerTrigger", 1).parquet(dir), keys)
-      .writeStream.format("memory").queryName("dedup_sink")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("dedup_sink")
-      .select("user_id", "event_type").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-
-    val batch = Streaming.dedupBatch(spark.read.parquet(dir), keys)
-    val batchKeys = batch.select("user_id", "event_type").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    // one row per distinct key on both paths, same key set
-    assert(streamed.length == streamed.distinct.length)
-    assert(streamed.toSet === batchKeys.toSet)
-    assert(batchKeys.toSet ===
-      Set((1L, "click"), (1L, "view"), (2L, "click")))
-    // batch twin picks the FIRST (ts, event_id) row and counts dups
-    val first = batch.collect().map(r =>
-      ((r.getLong(0), r.getString(1)), (r.getLong(3), r.getLong(4)))).toMap
-    assert(first((1L, "click")) == (1L, 2L))
-    assert(first((1L, "view")) == (3L, 2L))
-    assert(first((2L, "click")) == (4L, 2L))
+    val got = Streaming.dedupBatch(rows, Seq("user_id", "event_type"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toSet
+    // one row per key: the earliest (ts, event_id) event and the key's
+    // event count — (1, click) = {1, 2}, (1, view) = {3, 6},
+    // (2, click) = {4, 5}
+    def us(ts: String) = Timestamp.valueOf(ts).getTime * 1000L
+    assert(got === Set(
+      (1L, "click", us("2026-01-01 00:00:00"), 1L, 2L),
+      (1L, "view", us("2026-01-01 00:06:00"), 3L, 2L),
+      (2L, "click", us("2026-01-01 00:07:00"), 4L, 2L)))
   }
 
   test("late-data quarantine ledger replays the sha-jitter classification") {
@@ -249,7 +139,7 @@ class StreamingSpec extends SparkSpec {
       (3L, 10L, 2500000L, 1L)))
   }
 
-  test("stream-stream attribution interval join equals the batch twin") {
+  test("attributionBatch: hand-traced credits in the half-open window") {
     def mk(id: Long, u: Long, t: String, ts: String) =
       (id, u, t, Timestamp.valueOf(ts), 0.0)
     val rows = Seq(
@@ -261,69 +151,32 @@ class StreamingSpec extends SparkSpec {
       mk(6, 2, "view", "2026-01-01 00:10:00"),  // no later click
       mk(7, 1, "click", "2026-01-01 00:05:00")  // ties view 3: NOT > its ts
     ).toDF("event_id", "user_id", "event_type", "ts", "value")
-    val dir = Files.createTempDirectory("graft-attr").toString
-    rows.repartition(2).write.mode("overwrite").parquet(dir)
-
-    val expected = Set((1L, 1L, 2L), (1L, 1L, 7L), (1L, 3L, 4L))
-    val batch = Streaming.attributionBatch(spark.read.parquet(dir), 5)
+    // window (view_ts, view_ts + 5 min]: view 1 takes clicks 2 (00:03)
+    // and 7 (00:05, the closed end); click 4 (00:06) falls past it, so
+    // only view 3 (00:05) takes it
+    val got = Streaming.attributionBatch(rows, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-    assert(batch == expected) // (user, view_id, click_id)
-
-    val src = spark.readStream.schema(rows.schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = Streaming.attributionStream(
-        src.filter(col("event_type") === "view"),
-        src.filter(col("event_type") === "click"), 5)
-      .writeStream.format("memory").queryName("attr_sink")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("attr_sink")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-    assert(streamed == expected)
+    assert(got == Set((1L, 1L, 2L), (1L, 1L, 7L), (1L, 3L, 4L)))
   }
 
-  test("gap throttle: stream kept set equals the batch twin, hand-traced") {
+  test("throttleBatch: hand-traced gap ledger per key") {
     def mk(id: Long, u: Long, t: String, ts: String) =
       (id, u, t, Timestamp.valueOf(ts), 1.0)
-    // user 1 click: 0s, 30s (drop), 50s (drop — 20s after PREVIOUS event,
-    // kept or not), 200s (keep); user 1 view at 10s independent key
-    val chunks = Seq(
-      Seq(mk(1, 1, "click", "2026-01-01 00:00:00"),
-        mk(2, 1, "view", "2026-01-01 00:00:10")),
-      Seq(mk(3, 1, "click", "2026-01-01 00:00:30"),
-        mk(4, 1, "click", "2026-01-01 00:00:50"),
-        mk(5, 2, "click", "2026-01-01 00:01:00")),
-      Seq(mk(6, 1, "click", "2026-01-01 00:03:20")))
-    val dir = Files.createTempDirectory("graft-thr").toString
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      val tmp = Files.createTempDirectory(s"graft-thr$i").toString
-      c.toDF("event_id", "user_id", "event_type", "ts", "value")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      Files.copy(part.toPath,
-        java.nio.file.Paths.get(dir, s"chunk$i.parquet"))
-    }
-    val all = spark.read.parquet(dir)
-
-    val ds = Streaming.throttleStream(spark,
-      spark.readStream.schema(all.schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir), gapSec = 60)
-    val q = ds.writeStream.format("memory").queryName("thr_sink")
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("thr_sink").collect()
-      .map(r => r.getLong(3)).toSet
-    assert(kept === Set(1L, 2L, 5L, 6L))
-
-    // batch ledger agrees per key
-    val batch = Streaming.throttleBatch(all, 60)
+    val all = Seq(
+      mk(1, 1, "click", "2026-01-01 00:00:00"),
+      mk(2, 1, "view", "2026-01-01 00:00:10"),
+      mk(3, 1, "click", "2026-01-01 00:00:30"),
+      mk(4, 1, "click", "2026-01-01 00:00:50"),
+      mk(5, 2, "click", "2026-01-01 00:01:00"),
+      mk(6, 1, "click", "2026-01-01 00:03:20")
+    ).toDF("event_id", "user_id", "event_type", "ts", "value")
+    // user 1 click: 0s (first, keep), 30s (drop), 50s (drop — 20s after
+    // the PREVIOUS event, kept or not), 200s (150s > 60, keep): 4 events,
+    // 2 kept; user 1 view at 10s and user 2 click are their keys' first
+    val got = Streaming.throttleBatch(all, 60)
       .collect().map(r => ((r.getLong(0), r.getString(1)),
         (r.getLong(2), r.getLong(3)))).toMap
-    assert(batch === Map((1L, "click") -> ((4L, 2L)),
+    assert(got === Map((1L, "click") -> ((4L, 2L)),
       (1L, "view") -> ((1L, 1L)), (2L, "click") -> ((1L, 1L))))
   }
 
