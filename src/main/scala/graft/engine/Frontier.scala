@@ -1,6 +1,8 @@
 package graft.engine
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
 /** Monotone multi-source frontier expansion — the one traversal shape of
@@ -27,9 +29,11 @@ import org.apache.spark.sql.functions.col
   *    the probe counts are summed into `rows`, the exact reached total.
   *    The check can lag: a probe that still sees rows costs at most two
   *    more hops, whose empty levels are dropped, never a wrong row.
-  *  - Folding. Each hop's anti-join scans the reached set, so each probe
-  *    [[fold]]s the pieces, and the next probe materializes the fold.
-  *    Shallow fan-out walks never fold.
+  *  - Folding. Each hop's anti-join scans the reached set, so from
+  *    [[FoldAt]] pieces on a probe folds them into one lazy checkpoint,
+  *    which the next probe materializes. Shallow fan-out walks never fold.
+  *  - Metrics. Levels and folds are [[LazyPieces]], so no task reports a
+  *    SQL metric the driver has already dropped.
   *
   * Why expanding from the last level alone is exact: a key still unreached
   * after hop h−1 has no neighbour reached at hop ≤ h−2, because that
@@ -63,12 +67,29 @@ object Frontier {
   private[engine] def union(pieces: List[DataFrame]): DataFrame =
     pieces.reduce(_ union _)
 
-  /** A loop that scans its piece union every round scans O(r²) pieces over
-    * r rounds, so from [[FoldAt]] pieces on they become one lazy
-    * checkpoint, materialized by the next job that reads it. */
-  private[engine] def fold(pieces: List[DataFrame]): List[DataFrame] =
-    if (pieces.size < FoldAt) pieces
-    else List(union(pieces).localCheckpoint(eager = false))
+  /** Lazy `localCheckpoint`s that keep their source plans reachable until
+    * a job has checkpointed them. A lazy piece is computed inside later
+    * jobs, and the first job to finish whose lineage reaches it (a probe,
+    * or a broadcast that AQE plans meanwhile) checkpoints it and cuts its
+    * lineage, the last link from the driver to the SQL metrics of its
+    * source plan. A task of a job still running carries those metrics;
+    * were the plan gone, the driver would have dropped them by the time
+    * the task reports ("attempted to access non-existent accumulator"). */
+  private[engine] final class LazyPieces {
+    private var held = List.empty[(DataFrame, RDD[_])]
+
+    def apply(df: DataFrame): DataFrame = {
+      val piece = df.localCheckpoint(eager = false)
+      held ::= df -> (piece.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd
+      })
+      piece
+    }
+
+    /** Drops the plans of the pieces already checkpointed. Call it between
+      * jobs: a task started after the cut no longer carries the plan. */
+    def release(): Unit = held = held.filterNot(_._2.isCheckpointed)
+  }
 
   def run(edges: DataFrame, seeds: DataFrame, keys: Seq[String],
           maxHop: Int)(step: (DataFrame, DataFrame, Int) => DataFrame)
@@ -78,7 +99,8 @@ object Frontier {
     // ids through the checkpoint, and a step that passes an edge column
     // through would otherwise self-join on it the hop after
     val cols = seeds.columns.toSeq.map(c => col(c).as(c))
-    var levels = Vector(seeds.select(cols: _*).localCheckpoint(eager = false))
+    val lazyPiece = new LazyPieces
+    var levels = Vector(lazyPiece(seeds.select(cols: _*)))
     var pieces = levels.toList // the reached set, newest piece first
     def reached: DataFrame = union(pieces)
     var counted = 0 // levels already summed by a probe
@@ -90,21 +112,21 @@ object Frontier {
       // ONE job: counting the union materializes every pending level
       // transitively and yields their combined row count
       val grew = levels.drop(counted).reduce(_ union _).count()
+      lazyPiece.release()
       rows += grew
       if (grew == 0L) {
         converged = true
         val empty = levels.size - math.max(counted, 1)
         levels = levels.dropRight(empty)
         pieces = pieces.drop(empty)
-      } else pieces = fold(pieces)
+      } else if (pieces.size >= FoldAt) pieces = List(lazyPiece(reached))
       counted = levels.size
     }
 
     while (!converged && hop < maxHop) {
       hop += 1
-      val next = step(e, levels.last, hop)
-        .join(reached, keys, "left_anti").select(cols: _*)
-        .localCheckpoint(eager = false) // materialized by the probe
+      val next = lazyPiece(step(e, levels.last, hop) // the probe computes it
+        .join(reached, keys, "left_anti").select(cols: _*))
       levels :+= next
       pieces ::= next
       if (hop % ProbeEvery == 0 || hop == maxHop) probe()

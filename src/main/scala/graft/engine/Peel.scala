@@ -13,15 +13,13 @@ import org.apache.spark.sql.functions.lit
   * round i emits, and `drop(state, emitted)` the live tables without them.
   * `run` owns the rest:
   *  - Materialization. The emitted rows are a lazy `localCheckpoint`
-  *    handed to `drop`, so they are computed once, by the job that
-  *    materializes the first live table reading them. Every live table is
-  *    then materialized once per round with its row count observed on
-  *    that same job ([[Superstep.observed]]): no probe job re-scans a
-  *    table. The counts are exact: a count does not depend on the order in
-  *    which tasks merge.
-  *  - Pieces. The driver keeps them, folds them into one checkpoint at
-  *    [[Frontier]]'s threshold and hands their union to the next round
-  *    (`state.done`, which first-fit colouring reads) and to the caller.
+  *    ([[Frontier.LazyPieces]]) handed to `drop`, so they are computed
+  *    once, by the job that materializes the first live table reading
+  *    them. Every live table is then materialized once per round with its
+  *    row count observed on that same job ([[Superstep.observed]]): no
+  *    probe job re-scans a table. The counts are exact: a count does not
+  *    depend on the order in which tasks merge.
+  *  - Pieces. The driver keeps them and hands their union to the caller.
   *  - Stop rule. The loop stops when `live(0)` has no rows, when its row
   *    count did not change in a round (a peel that removes nothing from
   *    its primary table reaches the same state again), or after
@@ -30,16 +28,15 @@ import org.apache.spark.sql.functions.lit
   * `maxRounds` is what the caller makes of it. As a replayable prefix (MIS,
   * matching, truss, s-core, onion and densest census replay a fixed
   * number of rounds in SQL) a cut loop is a result; as a safety bound
-  * (colouring, MST, SCC) the caller requires `converged` and an empty
-  * `live(0)`, so a loop cut short or stalled throws.
+  * (MST, SCC) the caller requires `converged` and an empty `live(0)`, so
+  * a loop cut short or stalled throws.
   */
 object Peel {
 
-  /** Round `round` (from 1) sees the live tables the last round left, their
-    * observed row counts and the union of the rows emitted so far (`none`
-    * before the first piece). */
+  /** Round `round` (from 1) sees the live tables the last round left and
+    * their observed row counts. */
   final case class State(live: Vector[DataFrame], rows: Vector[Long],
-                         done: DataFrame, round: Int)
+                         round: Int)
 
   /** @param live      the live tables after the last round run
     * @param emitted   the union of every emitted piece, or `none`
@@ -88,20 +85,22 @@ object Peel {
     var (live, rows) = (live0, rows0)
     var history = Vector(rows)
     var pieces = List.empty[DataFrame] // newest first
-    def done = if (pieces.isEmpty) none else Frontier.union(pieces)
+    val lazyPiece = new Frontier.LazyPieces
     var round = 0
     var converged = rows.head == 0L
     while (!converged && round < maxRounds) {
       round += 1
-      val st = State(live, rows, done, round)
-      val out = pick.map(_(st).localCheckpoint(eager = false))
-      out.foreach(o => pieces = Frontier.fold(o :: pieces))
+      val st = State(live, rows, round)
+      val out = pick.map(p => lazyPiece(p(st)))
+      pieces = out.toList ::: pieces
       val (next, n) = materialize(drop(st, out.orNull), round)
+      lazyPiece.release()
       converged = n.head == 0L || n.head == rows.head
       live = next
       rows = n
       history :+= n
     }
-    Result(live, done, round, converged, history)
+    Result(live, if (pieces.isEmpty) none else Frontier.union(pieces), round,
+      converged, history)
   }
 }

@@ -61,8 +61,9 @@ final class ShuffleMeter(spark: SparkSession) extends SparkListener {
   *  - their state is a collected local value: `Ann.kmeansCentroids`/
   *    `kmeansParity`/`mmrSelect`, `Influence.degreeDiscount`, `BpeTrain`
   *    and the `BdgLayout.voronoiColors` re-seed ladder.
-  * Shrinking-set loops run on [[Peel]] and hop-by-hop walks on
-  * [[Frontier]].
+  * Shrinking-set loops run on [[Peel]], hop-by-hop walks on [[Frontier]],
+  * and folds over an ordered DAG on [[DagFold]], which runs its block
+  * supersteps here.
   */
 object Superstep {
 

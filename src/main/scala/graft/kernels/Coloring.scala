@@ -1,97 +1,47 @@
 package graft.kernels
 
-import graft.engine.Peel
+import graft.engine.DagFold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic greedy graph coloring, Jones-Plassmann style — the
-  * symmetry-breaking step above [[Mis]]: a proper coloring assigns
-  * conflict-free "rounds" to ALL vertices at once (update scheduling,
-  * register-allocation-like slotting of mutually-near-duplicate docs,
-  * channel assignment over a link graph).
+/** Deterministic greedy graph coloring — the symmetry-breaking step above
+  * [[Mis]]: a proper coloring assigns conflict-free "rounds" to ALL
+  * vertices at once (update scheduling, register-allocation-like slotting
+  * of mutually-near-duplicate docs, channel assignment over a link graph).
   *
-  * Priority = (sha60("col:vid"), vid) — a fixed total order. Each
-  * superstep colors every vertex whose HIGHER-priority neighbors are all
-  * colored, with the smallest color unused among them (first-fit):
-  * that is exactly the Jones-Plassmann reduction, and its fixpoint is
-  * provably identical to the SEQUENTIAL first-fit greedy processing
-  * vertices in priority order — which is what the DuckDB oracle replays
-  * one vertex per recursion step with an append-only color list (the
-  * [[Mst]] two-algorithms-one-answer discipline). Expected round count
-  * for random priorities is O(log n / log log n); colors ≤ Δ+1 by
-  * first-fit pigeonhole.
+  * Sequential first-fit in the fixed total order (sha60("col:vid"), vid):
+  * color(v) = the smallest color no higher-priority neighbour holds, which
+  * is what the DuckDB oracle replays one vertex per recursion step with
+  * an append-only color list. Colors ≤ Δ by first-fit pigeonhole.
   *
-  * Per superstep, set-at-a-time: one anti-join finds the ready set, one
-  * join+collect_set gathers each ready vertex's used neighbor colors
-  * (bounded by its degree), and the smallest free color is
-  * `array_min(array_except(sequence(0, size(used)), used))` — per-row
-  * array arithmetic, no window, no driver loop over vertices. The
-  * uncolored set and the pending-edge table shrink as colors land, one
-  * [[graft.engine.Peel]] round per superstep.
+  * That is a fold over the priority DAG, each edge oriented from its
+  * higher-priority end, so it runs on [[DagFold]] with the `mex` fold: a
+  * block of the order is colored by one task in order, and a priority
+  * chain across the whole graph costs no more supersteps than blocks.
   */
 object Coloring {
 
-  private def prio(c: Column, salt: String): Column =
-    graft.text.Dedup.shaTokenHash60(
-      concat(lit(salt + ":"), c.cast("string")))
+  private def prio(c: Column): Column =
+    graft.text.Dedup.shaTokenHash60(concat(lit("col:"), c.cast("string")))
+
+  /** The smallest color not in `used`. */
+  private def mex(used: Array[Long]): Long = {
+    val seen = new java.util.BitSet(used.length + 1)
+    used.foreach(c => if (c <= used.length) seen.set(c.toInt))
+    seen.nextClearBit(0).toLong
+  }
 
   /** Proper coloring (vid, color), colors 0..Δ, deterministic.
     * @param sym symmetric edge view (src, dst) — both directions. */
-  def jonesPlassmann(spark: SparkSession, sym: DataFrame,
-                     salt: String = "col",
-                     maxRounds: Int = 500): DataFrame = {
-    import spark.implicits._
-    // materialized once: consumed by the hpAll checkpoint AND the initial
-    // uncolored set — a lazy derived caller graph would be derived twice
-    val e = sym.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    val withP = e
-      .withColumn("ps", prio(col("src"), salt))
-      .withColumn("pd", prio(col("dst"), salt))
-    // (src ← dst) where dst has HIGHER priority (must color first);
-    // strict (p, vid) lexicographic order — vid breaks sha ties exactly
-    // like the oracle's ORDER BY p, vid
-    // sha priorities computed ONCE — the full higher-priority edge view
-    // is consumed every round (ready test + used-color lookup) and must
-    // not re-hash |E| rows per round
-    val hpAll = withP.filter(col("pd") < col("ps") ||
-        (col("pd") === col("ps") && col("dst") < col("src")))
-      .select(col("src"), col("dst"))
-      .localCheckpoint(eager = true)
-    val none = Seq.empty[(Long, Long)].toDF("vid", "color")
-    val r = Peel.run(Vector(e.select(col("src").as("vid")).distinct(), hpAll),
-        none, maxRounds) { st =>
-      // uncolored vertices, and the hp-edges whose dst is still uncolored
-      val Vector(uncolored, hp) = st.live
-      // ready: no uncolored higher-priority neighbor left in `hp`
-      val ready = uncolored
-        .join(hp.select(col("src").as("vid")).distinct(),
-          Seq("vid"), "left_anti")
-      // colors used by each ready vertex's higher-priority neighbors:
-      // ALL its hp-edges are gone from `hp` (they colored earlier), so
-      // look them up in the full hp view against the colored table
-      val used = ready
-        .join(hpAll.select(col("src").as("vid"), col("dst")), Seq("vid"))
-        .join(st.done.select(col("vid").as("d2"), col("color")),
-          col("dst") === col("d2"))
-        .groupBy(col("vid"))
-        .agg(collect_set(col("color")).as("used"))
-      ready.join(used, Seq("vid"), "left")
-        .select(col("vid"),
-          when(col("used").isNull, lit(0L))
-            .otherwise(array_min(array_except(
-              sequence(lit(0L), size(col("used")).cast("long")),
-              col("used")))).as("color"))
-    } { (st, newly) =>
-      val Vector(uncolored, hp) = st.live
-      Vector(uncolored.join(newly.select(col("vid")), Seq("vid"), "left_anti"),
-        hp.join(newly.select(col("vid").as("done")),
-            col("dst") === col("done"), "left_anti")
-          .select(col("src"), col("dst")))
-    }
-    require(r.rows.last.head == 0L,
-      if (r.converged) s"coloring stalled at round ${r.rounds}"
-      else s"coloring did not finish in $maxRounds rounds")
-    r.emitted
+  def firstFit(spark: SparkSession, sym: DataFrame): DataFrame = {
+    val (ps, pd) = (prio(col("src")), prio(col("dst")))
+    // strict (p, vid) order — vid breaks sha ties exactly like the
+    // oracle's ORDER BY p, vid; collect_list skips the backward edges'
+    // nulls, and every vertex is some edge's src
+    val forward = ps < pd || (ps === pd && col("src") < col("dst"))
+    val r = DagFold.run(spark, "coloring", sym.groupBy(col("src").as("vid"))
+      .agg(collect_list(when(forward, col("dst"))).as("adj"))
+      .withColumn("key", prio(col("vid"))))(mex)
+    r.values.withColumnRenamed("value", "color")
   }
 }

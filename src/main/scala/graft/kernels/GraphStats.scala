@@ -1,6 +1,6 @@
 package graft.kernels
 
-import graft.engine.Superstep
+import graft.engine.{DagFold, Superstep}
 import graft.graph.Edges
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -378,51 +378,14 @@ object GraphStats {
       expr("sum(w * (w - 1) div 2) div 2").as("c4"))
   }
 
-  /** One vertex of [[dagLayers]]' state: its block, its layer so far, and
-    * whether that layer rose in the last superstep on a vertex with an
-    * edge out of its block (the only rises another block must hear of). */
-  final case class DagVertex(vid: Long, b: Int, layer: Long, changed: Boolean)
-
-  /** One row of a block's inbox: an out-edge `src → dst` of one of its
-    * vertices (`l1 = -1`), or a cross-block message `l1` for `dst`. */
-  final case class DagInbox(b: Int, src: Long, dst: Long, l1: Long)
-
-  /** [[dagLayers]]' result: (vid, layer), the number of blocks, and the
-    * supersteps run. */
-  final case class Layering(layers: DataFrame, blocks: Int, rounds: Int)
-
-  /** Topological layering of a DAG (e.g. the degree orientation, which
-    * is acyclic by its strict (degree, vid) total order): layer(v) =
-    * length of the longest path ending at v — the scheduling depth /
-    * topological sort key every dependency-ordered pipeline needs.
-    * Output (vid, layer), layer 0 = sources.
-    *
-    * Block-centric, as in Blogel (Yan et al., VLDB'14): a block is a
-    * contiguous range of the (degree, vid) order, degree = in + out degree
-    * in `oriented`, solved exactly inside one task; only cross-block edges
-    * carry messages. The blocks are one range repartition of the vertex
-    * rows (each carrying its out-adjacency) with no partition count, so
-    * AQE coalescing sizes them by edge bytes; the block id is
-    * `spark_partition_id()`, materialized once (a recomputed range sample
-    * may draw other bounds). Each superstep on [[Superstep.run]]:
-    * cross-block edges carry max(layer + 1) from changed vertices only,
-    * then a cogroup by block seeds every vertex with max(layer, message)
-    * and runs a Kahn-order longest-path pass over the block's internal
-    * edges, held in primitive arrays.
-    *
-    * Exact however the blocks fall: every value is a path length, each
-    * superstep is at least one relaxation of every edge, and every value
-    * a sender holds reaches its cross-block targets the superstep after.
-    * Rounds: on degree-oriented input every edge runs forward in block
-    * order, so superstep k settles block k - 1 for good and the last
-    * block (no cross out-edges) settles without a change another block
-    * must hear of: at most `blocks` supersteps, one when AQE coalesces
-    * the graph into a single block. Any acyclic input settles within |V|
-    * supersteps; a cycle fails loudly, inside a block in the local pass
-    * (vertices left unvisited), across blocks at the |V| bound. */
+  /** Topological layering of a DAG oriented by (degree, vid), degree =
+    * in + out degree in `oriented` — the order [[Edges.orientByDegree]]
+    * orients by, so every edge runs forward: layer(v) = length of the
+    * longest path ending at v — the scheduling depth / topological sort
+    * key every dependency-ordered pipeline needs. Values (vid, layer),
+    * layer 0 = sources: the `max + 1` fold on [[DagFold]]. */
   def dagLayers(spark: org.apache.spark.sql.SparkSession,
-                oriented: DataFrame): Layering = {
-    import spark.implicits._
+                oriented: DataFrame): DagFold.Result = {
     val e = oriented.select(col("src"), col("dst"))
     // one row per vertex: out-adjacency (collect_list skips the in-edge
     // rows' nulls) and in + out degree
@@ -430,95 +393,10 @@ object GraphStats {
       .unionAll(e.select(col("dst").as("vid"),
         lit(null).cast("long").as("nbr")))
       .groupBy("vid")
-      .agg(collect_list(col("nbr")).as("adj"), count(lit(1)).as("degree"))
-    val obs = org.apache.spark.sql.Observation()
-    val vb = vertices.repartitionByRange(col("degree"), col("vid"))
-      .select(col("vid"), spark_partition_id().as("b"), col("adj"))
-      .observe(obs, count(lit(1)).as("n"),
-        coalesce(max(col("b")), lit(-1)).as("last"))
-      .localCheckpoint(eager = true)
-    val n = obs.get("n").asInstanceOf[Long]
-    val blocks = obs.get("last").asInstanceOf[Int] + 1
-    val eb = vb.select(col("vid").as("src"), col("b").as("sb"),
-        explode(col("adj")).as("dst"))
-      .join(vb.select(col("vid").as("dst"), col("b").as("db")), "dst")
-      .localCheckpoint(eager = true)
-    // every out-edge of a block's vertices: the internal ones, and the
-    // cross ones that make their source a sender
-    val edges = eb.select(col("sb").as("b"), col("src"), col("dst"),
-      lit(-1L).as("l1"))
-    val cross = eb.filter(col("sb") =!= col("db"))
-
-    def step(state: DataFrame): DataFrame = {
-      val senders = state.filter(col("changed"))
-      val msgs = cross
-        .join(senders.hint("SHUFFLE_HASH"), cross("src") === senders("vid"))
-        .groupBy(col("db").as("b"), col("dst"))
-        .agg(max(col("layer") + 1).as("l1"))
-        .select(col("b"), lit(-1L).as("src"), col("dst"), col("l1"))
-      state.as[DagVertex].groupByKey(_.b)
-        .cogroup(edges.unionAll(msgs).as[DagInbox].groupByKey(_.b))(
-          (b, vs, in) => blockPass(b, vs, in))
-        .toDF()
-    }
-
-    val init = vb.select(col("vid"), col("b"), lit(0L).as("layer"),
-      lit(true).as("changed"))
-    val (state, _, rounds, done) = Superstep.run(spark, "dag_layers", init,
-      step, sum(col("changed").cast("long")), (_, d, _) => d == 0.0,
-      maxIter = math.max(1L, math.min(n, Int.MaxValue.toLong)).toInt)
-    require(done, s"dagLayers did not converge in $n supersteps — is the " +
-      "input acyclic?")
-    Layering(state.select(col("vid"), col("layer")), blocks, rounds)
-  }
-
-  /** Exact longest-path pass over one block: each vertex starts at
-    * max(its layer, its messages), then Kahn order over the internal
-    * edges. `changed` marks a risen layer on a vertex with a cross edge. */
-  private def blockPass(b: Int, vs: Iterator[DagVertex],
-                        in: Iterator[DagInbox]): Iterator[DagVertex] = {
-    val st = vs.toArray.sortBy(_.vid)
-    val n = st.length
-    val vid = st.map(_.vid)
-    val layer = st.map(_.layer)
-    val sends = new Array[Boolean](n)
-    val indeg = new Array[Int](n)
-    val from = Array.newBuilder[Int]
-    val to = Array.newBuilder[Int]
-    in.foreach { r =>
-      val d = java.util.Arrays.binarySearch(vid, r.dst)
-      if (r.l1 >= 0) layer(d) = math.max(layer(d), r.l1)
-      else {
-        val s = java.util.Arrays.binarySearch(vid, r.src)
-        if (d < 0) sends(s) = true
-        else { from += s; to += d; indeg(d) += 1 }
-      }
-    }
-    // CSR of the internal edges by source
-    val (f, t) = (from.result(), to.result())
-    val start = new Array[Int](n + 1)
-    f.foreach(s => start(s + 1) += 1)
-    for (i <- 0 until n) start(i + 1) += start(i)
-    val adj = new Array[Int](t.length)
-    val next = start.clone()
-    for (k <- f.indices) { adj(next(f(k))) = t(k); next(f(k)) += 1 }
-    val queue = new Array[Int](n)
-    var (head, tail) = (0, 0)
-    for (i <- 0 until n if indeg(i) == 0) { queue(tail) = i; tail += 1 }
-    while (head < tail) {
-      val u = queue(head)
-      head += 1
-      for (k <- start(u) until start(u + 1)) {
-        val w = adj(k)
-        layer(w) = math.max(layer(w), layer(u) + 1)
-        indeg(w) -= 1
-        if (indeg(w) == 0) { queue(tail) = w; tail += 1 }
-      }
-    }
-    require(tail == n, s"dagLayers: a cycle inside block $b — is the " +
-      "input acyclic?")
-    Iterator.tabulate(n)(i =>
-      DagVertex(vid(i), b, layer(i), sends(i) && layer(i) > st(i).layer))
+      .agg(collect_list(col("nbr")).as("adj"), count(lit(1)).as("key"))
+    val r = DagFold.run(spark, "dag_layers", vertices)(in =>
+      if (in.isEmpty) 0L else in.max + 1)
+    r.copy(values = r.values.withColumnRenamed("value", "layer"))
   }
 
   /** GNN-style k-hop neighborhood aggregation (GraphSAGE-sum layers with

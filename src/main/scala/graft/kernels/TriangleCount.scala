@@ -1,7 +1,7 @@
 package graft.kernels
 
 import graft.graph.Edges
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Triangle counting via oriented adjacency intersection — the semantics of
@@ -32,20 +32,32 @@ import org.apache.spark.sql.functions._
   */
 object TriangleCount {
 
-  /** Triangle triples from a pre-materialized oriented edge table. */
-  private def trianglesFrom(e: DataFrame): DataFrame = {
+  /** Each oriented edge (src, dst) with `common`, a function of the sorted
+    * out-adjacency arrays of its two ends (adjU, adjV): one shuffle to
+    * build `adj`, two joins. The triangle triples (q07) and intersection
+    * counts (q06) share this plan up to the last projection. */
+  private def overAdjacency(e: DataFrame)(
+      common: (Column, Column) => Column): DataFrame = {
     val adj = e.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("adj"))
-    val withU = e.join(adj.withColumnRenamed("src", "u"),
-      e("src") === col("u")).select(e("src"), e("dst"), col("adj").as("adjU"))
-    withU.join(
-        adj.withColumnRenamed("src", "v").withColumnRenamed("adj", "adjV"),
-        withU("dst") === col("v"))
-      .select(col("src"), col("dst"),
-        array_intersect(col("adjU"), col("adjV")).as("common"))
+    // deliberately NOT hinted SHUFFLE_HASH: probed on the 50.5M-edge bench
+    // graph, building hash tables over the |V| array-valued adj rows is 3x
+    // SLOWER than sort-merge (89.8 vs 30.4 s total) — the superstep
+    // kernels' SHJ-always rule applies to narrow scalar state, not to
+    // wide array build sides
+    e.join(adj.withColumnRenamed("src", "u"), e("src") === col("u"))
+      .select(e("src"), e("dst"), col("adj").as("adjU"))
+      .join(adj.withColumnRenamed("src", "v").withColumnRenamed("adj", "adjV"),
+        col("dst") === col("v"))
+      .select(col("src"), col("dst"), common(col("adjU"), col("adjV")))
+  }
+
+  /** Triangle triples (a, b, c) from a pre-materialized oriented edge
+    * table: each triangle once, at the edge joining its two lowest corners. */
+  private def trianglesFrom(e: DataFrame): DataFrame =
+    overAdjacency(e)(array_intersect(_, _).as("common"))
       .select(col("src").as("a"), col("dst").as("b"),
         explode(col("common")).as("c"))
-  }
 
   /** Triangle triples over a caller-managed (persisted) oriented edge
     * table — the per-round building block for iterative consumers like
@@ -60,20 +72,8 @@ object TriangleCount {
     * materialization inside builtin `array_intersect`). */
   private def commonCountsFrom(e: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(e.sparkSession)
-    val adj = e.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("adj"))
-    // deliberately NOT hinted SHUFFLE_HASH: probed on the 50.5M-edge bench
-    // graph, building hash tables over the |V| array-valued adj rows is 3x
-    // SLOWER than sort-merge (89.8 vs 30.4 s total) — the superstep
-    // kernels' SHJ-always rule applies to narrow scalar state, not to
-    // wide array build sides
-    e.join(adj.withColumnRenamed("src", "u"), e("src") === col("u"))
-      .select(e("src"), e("dst"), col("adj").as("adjU"))
-      .join(adj.withColumnRenamed("src", "v").withColumnRenamed("adj", "adjV"),
-        col("dst") === col("v"))
-      .select(col("src"), col("dst"),
-        call_function(graft.functions.GraftFunctions.Name,
-          col("adjU"), col("adjV")).as("ncommon"))
+    overAdjacency(e)(call_function(graft.functions.GraftFunctions.Name,
+      _, _).as("ncommon"))
   }
 
   /** Total triangle count as a one-row DataFrame (reference's CountAgg,

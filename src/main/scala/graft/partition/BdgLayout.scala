@@ -34,8 +34,9 @@ import org.apache.spark.sql.functions._
   *    Spark analog — `repartition($"worker")` co-locates a block's
   *    vertices without rewriting neighbor worker-ids into the data.
   *  - B7 cross-edge statistics (`BPartitioner.tpp:454-486`): per-worker
-  *    block/vertex counts + cross-worker edge counts, with the plain
-  *    hash-partition cross count as the baseline the layout must beat.
+  *    block/vertex counts + cross-worker edge counts, with the sha-hash
+  *    partition cross count as the baseline the layout must beat
+  *    ([[crossEdgeStatsExact]]).
   *
   * Every entry point pins its edge table ([[Frontier.pinned]]): the
   * layout passes a DERIVED table (e.g. a co-occurrence self-join) through
@@ -201,10 +202,9 @@ object BdgLayout {
     out.result().toDF("color", "worker")
   }
 
-  /** B7 parity twin (q97): per-worker layout stats + cross-edge counts for
-    * an EXPLICIT (color, worker) assignment over an explicit color table —
-    * plain SQL end-to-end, unlike [[crossEdgeStats]] whose layout runs
-    * the re-seed ladder. The hash baseline uses the sha-derived hash family
+  /** B7 (q97): per-worker layout stats + cross-edge counts for an
+    * EXPLICIT (color, worker) assignment over an explicit color table —
+    * plain SQL end-to-end. The hash baseline uses the sha-derived hash family
     * (the one DuckDB shares; xxhash64 has no DuckDB counterpart) and is
     * computed over the SAME colored-colored edge subset as the BDG count,
     * so the reduction claim is apples-to-apples and driver-verifiable.
@@ -249,65 +249,6 @@ object BdgLayout {
         coalesce(col("sha_cross_edges"), lit(0L)).as("sha_cross_edges"))
     val eager = res.localCheckpoint(eager = true)
     lay.unpersist(); wEdges.unpersist()
-    if (ownSym) sym.unpersist()
-    eager
-  }
-
-  /** Full layout: (vid, color, worker), with the block→worker map shipped
-    * as a broadcast join (J7 — `blk_to_slv` broadcast,
-    * `BDGPartitioner.tpp:131-135`). */
-  def layout(spark: SparkSession, symIn: DataFrame,
-             p: Params = Params()): DataFrame = {
-    val (sym, ownSym) = Frontier.pinned(symIn)
-    val colors = voronoiColors(spark, sym, p)
-    val assign = assignBlocksExact(spark, sym, colors, p.workers)
-    if (ownSym) sym.unpersist() // assign is local; colors checkpointed
-    colors.join(broadcast(assign), "color")
-      .select(col("vid"), col("color"), col("worker").cast("int"))
-  }
-
-  /** B7: per-worker layout stats + cross-edge counts, with the plain
-    * hash-partition baseline alongside (the number BDG must beat).
-    * Output: (worker, n_blocks, n_vertices, cross_edges,
-    *          hash_cross_edges) — cross counts are directed edge counts
-    * leaving the worker under each assignment. */
-  def crossEdgeStats(spark: SparkSession, symIn: DataFrame,
-                     p: Params = Params()): DataFrame = {
-    val (sym, ownSym) = Frontier.pinned(symIn)
-    val lay = layout(spark, sym, p).persist()
-    val wA = sym
-      .join(lay.select(col("vid").as("src"), col("worker").as("wa")), "src")
-      .join(lay.select(col("vid").as("dst"), col("worker").as("wb")), "dst")
-    val cross = wA.filter(col("wa") =!= col("wb"))
-      .groupBy(col("wa").as("worker")).agg(count(lit(1)).as("cross_edges"))
-    val hashW = (c: org.apache.spark.sql.Column) =>
-      pmod(xxhash64(c), lit(p.workers.toLong))
-    val hashCross = sym.filter(hashW(col("src")) =!= hashW(col("dst")))
-      .groupBy(hashW(col("src")).as("worker"))
-      .agg(count(lit(1)).as("hash_cross_edges"))
-    val perW = lay.groupBy(col("worker")).agg(
-      countDistinct(col("color")).as("n_blocks"),
-      count(lit(1)).as("n_vertices"))
-    // anchor on the FULL worker-id universe: both assignments map into
-    // 0 until workers, and joining hash counts onto BDG-occupied workers
-    // only would silently drop baseline rows whenever the greedy packer
-    // leaves a worker empty (undercounting the hash baseline)
-    import spark.implicits._
-    val universe = (0 until p.workers).toDF("worker")
-    val out = universe
-      .join(perW, Seq("worker"), "left")
-      .join(cross, Seq("worker"), "left")
-      .join(hashCross, Seq("worker"), "left")
-      .select(col("worker"),
-        coalesce(col("n_blocks"), lit(0L)).as("n_blocks"),
-        coalesce(col("n_vertices"), lit(0L)).as("n_vertices"),
-        coalesce(col("cross_edges"), lit(0L)).as("cross_edges"),
-        coalesce(col("hash_cross_edges"), lit(0L)).as("hash_cross_edges"))
-    // eager distributed materialization (NOT collect+parallelize: the
-    // worker universe is small here, but the pattern must not funnel
-    // multi-row results through driver memory) — then release the cache
-    val eager = out.localCheckpoint(eager = true)
-    lay.unpersist()
     if (ownSym) sym.unpersist()
     eager
   }

@@ -1271,16 +1271,15 @@ object GraphQueries {
          |       (SELECT min(degree) FROM cum WHERE cum * 100 >= sc.n * 99) AS p99_degree
          |FROM sc""".stripMargin)),
 
-    // deterministic greedy coloring: Jones-Plassmann parallel fixpoint
-    // on Spark == sequential first-fit greedy in sha-priority order,
-    // which the oracle replays one vertex per recursion step
+    // deterministic greedy coloring: sequential first-fit in sha-priority
+    // order, block by block on DagFold; the oracle replays it one vertex
+    // per recursion step
     Q("q105_coloring", (s, d) =>
-      graft.kernels.Coloring.jonesPlassmann(s,
-        Edges.symmetrize(e2(s, d))),
+      graft.kernels.Coloring.firstFit(s, Edges.symmetrize(e2(s, d))),
       // first-fit greedy replay in (sha60("col:vid"), vid) order: adj
       // keeps only HIGHER-priority (lower ord) neighbors, the recursion
       // appends one color per step, chosen = smallest c in 0..deg not
-      // used by those neighbors — provably the Jones-Plassmann fixpoint
+      // used by those neighbors
       Sql(s"""WITH RECURSIVE $CTE,
          |pv AS (SELECT vid,
          |         CAST(('0x' || substr(sha256('col:' || CAST(vid AS VARCHAR)), 1, 15)) AS BIGINT) AS p
@@ -1358,7 +1357,7 @@ object GraphQueries {
     // ending at each vertex — the scheduling depth / topo-sort key)
     Q("q109_topo_layers", (s, d) =>
       graft.kernels.GraphStats.dagLayers(s,
-        Edges.orientByDegree(e2(s, d))).layers,
+        Edges.orientByDegree(e2(s, d))).values,
       // topo layering replay: degree orientation (lower (degree,vid)
       // first), longest path via dedup'd (vid, h) expansion — bounded by
       // V x depth because the orientation is acyclic

@@ -513,6 +513,58 @@ class KernelSpec extends SparkSpec {
     sym.unpersist()
   }
 
+  /** DAGScheduler's "non-existent accumulator" errors logged while `body`
+    * runs: a task reporting a SQL metric the driver has already dropped. */
+  private def lostMetrics(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lost = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val log = LogManager.getLogger("org.apache.spark.scheduler.DAGScheduler")
+      .asInstanceOf[Logger]
+    val capture = new AbstractAppender("lost-metrics", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        Option(e.getThrown).map(_.getMessage)
+          .filter(_.contains("non-existent accumulator")).foreach(lost.add)
+    }
+    capture.start()
+    log.addAppender(capture)
+    try body finally { log.removeAppender(capture); capture.stop() }
+    lost.toArray(Array.empty[String]).toSeq
+  }
+
+  test("frontier and peel runs report every SQL metric to a live plan") {
+    import spark.implicits._
+    import graft.engine.{Frontier, Peel}
+    // every task collects garbage: a plan the driver no longer reaches has
+    // its metrics dropped before the task reports them
+    val gc = udf { (v: Long) => System.gc(); v }
+    val sym = Edges.symmetrize(edgeDF((0L until 12L).map(i => (i, i + 1))))
+      .persist()
+    // 12 hops: more than FoldAt pieces, so the walk folds
+    val walk = lostMetrics {
+      val r = Frontier.run(sym, Seq(0L).toDF("vid"), Seq("vid"), 12) {
+        (e, last, _) => last.join(e, last("vid") === e("src"))
+          .select(gc(e("dst")).as("vid")).distinct()
+      }
+      assert(r.rows === 13L)
+    }
+    assert(walk.isEmpty,
+      s"${walk.size} lost in a frontier walk: ${walk.take(1).mkString}")
+    val peel = lostMetrics {
+      val r = Peel.run(Vector(Edges.vertexIds(sym), sym),
+          Seq.empty[Long].toDF("vid"), 20) { st =>
+        st.live(0).agg(min(gc(col("vid"))).as("vid"))
+      }((st, out) => Edges.withoutVertices(st.live, out))
+      assert(r.emitted.count() === 13L)
+    }
+    assert(peel.isEmpty,
+      s"${peel.size} lost in a peel: ${peel.take(1).mkString}")
+    sym.unpersist()
+  }
+
   test("superstep stats are observed: a superstep runs only its materialization's jobs") {
     import graft.engine.{Checkpointer, Superstep}
     // a 20-hop path: none of the three kernels settles within k supersteps
@@ -876,7 +928,7 @@ class KernelSpec extends SparkSpec {
       assert(math.abs(got(v) - exp) < 1e-9, s"vid=$v: ${got(v)} vs $exp") }
   }
 
-  test("jones-plassmann equals sequential first-fit greedy, proper") {
+  test("first-fit coloring equals sequential greedy, proper") {
     def localGreedy(es: Seq[(Long, Long)]): Map[Long, Long] = {
       val verts = es.flatMap(e => Seq(e._1, e._2)).distinct
       val adj = (es ++ es.map(_.swap)).groupBy(_._1)
@@ -889,28 +941,27 @@ class KernelSpec extends SparkSpec {
       }
       colors.toMap
     }
-    // on the sha-descending path each round colours only the last
-    // uncoloured vertex (the lowest sha is the highest priority)
-    val deep = shaPath("col", 12)
+    // the sha-descending path: one priority chain through every vertex
     val graphs = Seq(golden("triangle"), golden("path4"), golden("k4"),
       golden("sample15"), Oracles.erdosRenyi(60, 0.08, seed = 13),
-      Oracles.powerLaw(70, seed = 21), deep)
-    def coloring(es: Seq[(Long, Long)], maxRounds: Int = 500) =
-      Coloring.jonesPlassmann(spark, Edges.symmetrize(edgeDF(es)),
-          maxRounds = maxRounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Oracles.powerLaw(70, seed = 21), shaPath("col", 12))
     graphs.zipWithIndex.foreach { case (es, gi) =>
       val canon = es.map { case (a, b) =>
         (math.min(a, b), math.max(a, b)) }.distinct
-      val got = coloring(canon)
+      val got = Coloring.firstFit(spark, Edges.symmetrize(edgeDF(canon)))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === localGreedy(canon), s"graph=$gi")
       // propriety: no monochromatic edge
       canon.foreach { case (a, b) =>
         assert(got(a) !== got(b), s"graph=$gi edge ($a,$b)") }
     }
-    // the deep path needs all 12 rounds; 11 is a cut loop, which throws
-    assert(coloring(deep, maxRounds = 12) === localGreedy(deep))
-    intercept[IllegalArgumentException](coloring(deep, maxRounds = 11))
+  }
+
+  test("coloring's jobs do not grow with the priority chain's depth") {
+    def jobs(n: Int): Int = jobsOf(Coloring.firstFit(spark,
+      Edges.symmetrize(edgeDF(shaPath("col", n)))))._1
+    val (deep, shallow) = (jobs(200), jobs(40))
+    assert(deep <= shallow, s"$deep jobs at depth 199, $shallow at depth 39")
   }
 
   test("butterflies, rectangles, katz: hand-checked golden values") {
@@ -949,13 +1000,13 @@ class KernelSpec extends SparkSpec {
   test("dagLayers: longest-path layers on oriented path4 + DAG check") {
     // path4 degree orientation: 1->2, 2->3, 4->3; layers 0,1,2,0
     val got = GraphStats.dagLayers(spark,
-        Edges.orientByDegree(edgeDF(golden("path4")))).layers
+        Edges.orientByDegree(edgeDF(golden("path4")))).values
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 0L))
     // every oriented edge goes to a strictly higher layer (topo order)
     val or = Edges.orientByDegree(edgeDF(Oracles.erdosRenyi(50, 0.1,
       seed = 17)))
-    val lay = GraphStats.dagLayers(spark, or).layers
+    val lay = GraphStats.dagLayers(spark, or).values
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     or.collect().foreach { r =>
       assert(lay(r.getLong(0)) < lay(r.getLong(1)),
@@ -978,35 +1029,28 @@ class KernelSpec extends SparkSpec {
     val byDegree = (Seq(3L, 17L, 29L).map(s =>
         Oracles.erdosRenyi(60, 0.08, seed = s)) :+ path)
       .map(es => pairs(Edges.orientByDegree(edgeDF(es))))
-    // descending vid: the blocks are not topological, cross edges run
-    // backward in block order
-    val byVid = Seq(Oracles.erdosRenyi(60, 0.08, seed = 41), path)
-      .map(_.map { case (a, b) => (math.max(a, b), math.min(a, b)) })
-    for (on <- Seq(true, false);
-         (es, degreeOrder) <- byDegree.map(_ -> true) ++ byVid.map(_ -> false)) {
+    for (on <- Seq(true, false); es <- byDegree) {
       val run = coalescing(on)(GraphStats.dagLayers(spark, es.toDF("src", "dst")))
-      val what = s"coalescing=$on degreeOrder=$degreeOrder |E|=${es.size}"
-      assert(run.layers.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val what = s"coalescing=$on |E|=${es.size}"
+      assert(run.values.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         === Oracles.longestPathLayers(es), what)
       if (on) assert(run.blocks === 1, what)
       else assert(run.blocks > 1, what)
-      // degree order: every edge runs forward in block order
-      if (degreeOrder) assert(run.rounds <= run.blocks, what)
+      assert(run.rounds <= run.blocks, what)
     }
   }
 
-  test("dagLayers fails loudly on a cycle, inside a block and across blocks") {
+  test("dagLayers: a backward edge fails loudly, inside a block and across blocks") {
     import spark.implicits._
-    // one block: the local Kahn pass leaves the 3-cycle unvisited
-    val inBlock = intercept[Exception](coalescing(true)(GraphStats.dagLayers(
-      spark, Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst"))))
-    assert(inBlock.getMessage.contains("a cycle inside block"))
-    // an 8-ring over 4 blocks: every block is a path, the layers climb
-    // round the ring until the |V| bound
-    val ring = (0L until 8L).map(i => (i, (i + 1) % 8))
+    // descending vid on a 200-path: every vertex of degree 2 sorts by vid,
+    // so the edges between them run backward in the (degree, vid) order
+    val path = (0L until 199L).map(i => (i + 1, i)).toDF("src", "dst")
+    val inBlock = intercept[Exception](coalescing(true)(
+      GraphStats.dagLayers(spark, path)))
+    assert(inBlock.getMessage.contains("runs backward inside block 0"))
     val across = intercept[IllegalArgumentException](coalescing(false)(
-      GraphStats.dagLayers(spark, ring.toDF("src", "dst"))))
-    assert(across.getMessage.contains("did not converge in 8 supersteps"))
+      GraphStats.dagLayers(spark, path)))
+    assert(across.getMessage.contains("cross-block edges run backward"))
   }
 
   test("dagLayers' jobs do not grow with the DAG's depth") {

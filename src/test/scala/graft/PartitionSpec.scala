@@ -39,32 +39,6 @@ class PartitionSpec extends SparkSpec {
     sym.unpersist()
   }
 
-  test("layout is deterministic and capacity-bounded; beats hash on cross edges") {
-    val sym = Edges.symmetrize(plantedGraph).persist()
-    val s1 = BdgLayout.crossEdgeStats(spark, sym, p).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).sortBy(_._1)
-    val s2 = BdgLayout.crossEdgeStats(spark, sym, p).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).sortBy(_._1)
-    assert(s1.sameElements(s2), "layout must be deterministic")
-    val total = s1.map(_._3).sum
-    assert(total === 16L * 12L)
-    // every worker's load under capacity + one max block (fallback slack)
-    val capacity = (1 + 0.1) * total / p.workers
-    s1.foreach { case (_, _, load, _, _) =>
-      assert(load <= capacity + 12, s"worker overloaded: $load") }
-    // the point of BDG (EuroSys §8.4): fewer cross edges than hash layout
-    val bdgCross = s1.map(_._4).sum
-    val hashCross = s1.map(_._5).sum
-    assert(bdgCross < hashCross,
-      s"BDG cross $bdgCross should beat hash cross $hashCross")
-    // planted structure: clique blocks should make crossings rare
-    assert(bdgCross <= hashCross / 4,
-      s"expected a large cross-edge reduction, got $bdgCross vs $hashCross")
-    sym.unpersist()
-  }
-
   test("floodColors == min color among NEAREST seeds (q56 oracle closure)") {
     val sym = Edges.symmetrize(plantedGraph).persist()
     val edges = sym.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -171,29 +145,47 @@ class PartitionSpec extends SparkSpec {
 
   test("crossEdgeStatsExact (B7 parity twin): totals and hash-beating") {
     val sym = Edges.symmetrize(plantedGraph).persist()
-    val colors = BdgLayout.voronoiColors(spark, sym, p).persist()
-    val assign = BdgLayout.assignBlocksExact(spark, sym, colors, p.workers)
-    val rows = BdgLayout.crossEdgeStatsExact(spark, sym, colors, assign,
-      p.workers).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4)))
+    def stats() = {
+      val colors = BdgLayout.voronoiColors(spark, sym, p).persist()
+      val assign = BdgLayout.assignBlocksExact(spark, sym, colors, p.workers)
+      val rows = BdgLayout.crossEdgeStatsExact(spark, sym, colors, assign,
+        p.workers).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4))).sortBy(_._1)
+      // vertex total = colored vertices; block total = #blocks
+      assert(rows.map(_._3).sum === colors.count())
+      assert(rows.map(_._2).sum ===
+        colors.select("color").distinct().count())
+      colors.unpersist()
+      rows
+    }
+    val rows = stats()
+    assert(rows.sameElements(stats()), "layout must be deterministic")
     assert(rows.length === p.workers)
-    // vertex total = colored vertices; block total = #blocks
-    assert(rows.map(_._3).sum === colors.count())
-    assert(rows.map(_._2).sum ===
-      colors.select("color").distinct().count())
-    // the planted clique blocks must beat the sha-hash layout handily
+    // voronoi flooding colors every vertex of the connected planted graph
+    val total = rows.map(_._3).sum
+    assert(total === 16L * 12L)
+    // every worker's load under capacity + one max block (fallback slack)
+    val capacity = (1 + 0.1) * total / p.workers
+    rows.foreach { case (_, _, load, _, _) =>
+      assert(load <= capacity + 12, s"worker overloaded: $load") }
+    // the point of BDG (EuroSys §8.4): the planted clique blocks make
+    // crossings rare, far fewer than under the sha-hash layout
     val bdg = rows.map(_._4).sum; val sha = rows.map(_._5).sum
     assert(bdg < sha, s"BDG cross $bdg should beat sha-hash cross $sha")
-    colors.unpersist(); sym.unpersist()
+    assert(bdg <= sha / 4,
+      s"expected a large cross-edge reduction, got $bdg vs $sha")
+    sym.unpersist()
   }
 
   test("block re-shuffle (B6): repartition by worker co-locates blocks") {
     val sym = Edges.symmetrize(plantedGraph)
-    val lay = BdgLayout.layout(spark, sym, p)
+    val colors = BdgLayout.voronoiColors(spark, sym, p)
+    val lay = colors.join(
+      BdgLayout.assignBlocksExact(spark, sym, colors, p.workers), "color")
     val parts = lay.repartition(p.workers, col("worker"))
       .select(col("worker"), spark_partition_id().as("pid"))
-      .distinct().collect().map(r => (r.getInt(0), r.getInt(1)))
+      .distinct().collect().map(r => (r.getLong(0), r.getInt(1)))
     // each worker maps to exactly one physical partition
     assert(parts.groupBy(_._1).forall(_._2.length === 1))
   }
