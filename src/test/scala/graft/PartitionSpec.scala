@@ -26,6 +26,24 @@ class PartitionSpec extends SparkSpec {
   private val p = BdgLayout.Params(
     seedRate = 0.05, maxHop = 10, workers = 4)
 
+  /** Per-worker (worker, blocks, vertices, bdgCross, shaCross) of the
+    * voronoiColors + assignBlocksExact layout, sorted by worker; checks
+    * the vertex and block totals against the coloring. */
+  private def exactStats(sym: org.apache.spark.sql.DataFrame) = {
+    val colors = BdgLayout.voronoiColors(spark, sym, p).persist()
+    val assign = BdgLayout.assignBlocksExact(spark, sym, colors, p.workers)
+    val rows = BdgLayout.crossEdgeStatsExact(spark, sym, colors, assign,
+      p.workers).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).sortBy(_._1)
+    // vertex total = colored vertices; block total = #blocks
+    assert(rows.map(_._3).sum === colors.count())
+    assert(rows.map(_._2).sum ===
+      colors.select("color").distinct().count())
+    colors.unpersist()
+    rows
+  }
+
   test("voronoi flooding colors every vertex; blocks are seed-rooted") {
     val sym = Edges.symmetrize(plantedGraph).persist()
     val colors = BdgLayout.voronoiColors(spark, sym, p)
@@ -36,6 +54,28 @@ class PartitionSpec extends SparkSpec {
     val badColor = colors.select(col("color").as("vid")).distinct()
       .join(colors.select("vid"), Seq("vid"), "left_anti").count()
     assert(badColor === 0L)
+    sym.unpersist()
+  }
+
+  test("layout is deterministic and capacity-bounded; beats hash on cross edges") {
+    val sym = Edges.symmetrize(plantedGraph).persist()
+    val s1 = exactStats(sym)
+    assert(s1.sameElements(exactStats(sym)), "layout must be deterministic")
+    // voronoi flooding colors every vertex of the connected planted graph
+    val total = s1.map(_._3).sum
+    assert(total === 16L * 12L)
+    // every worker's load under capacity + one max block (fallback slack)
+    val capacity = (1 + 0.1) * total / p.workers
+    s1.foreach { case (_, _, load, _, _) =>
+      assert(load <= capacity + 12, s"worker overloaded: $load") }
+    // the point of BDG (EuroSys §8.4): fewer cross edges than hash layout
+    val bdgCross = s1.map(_._4).sum
+    val hashCross = s1.map(_._5).sum
+    assert(bdgCross < hashCross,
+      s"BDG cross $bdgCross should beat hash cross $hashCross")
+    // planted structure: clique blocks should make crossings rare
+    assert(bdgCross <= hashCross / 4,
+      s"expected a large cross-edge reduction, got $bdgCross vs $hashCross")
     sym.unpersist()
   }
 
@@ -145,36 +185,11 @@ class PartitionSpec extends SparkSpec {
 
   test("crossEdgeStatsExact (B7 parity twin): totals and hash-beating") {
     val sym = Edges.symmetrize(plantedGraph).persist()
-    def stats() = {
-      val colors = BdgLayout.voronoiColors(spark, sym, p).persist()
-      val assign = BdgLayout.assignBlocksExact(spark, sym, colors, p.workers)
-      val rows = BdgLayout.crossEdgeStatsExact(spark, sym, colors, assign,
-        p.workers).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4))).sortBy(_._1)
-      // vertex total = colored vertices; block total = #blocks
-      assert(rows.map(_._3).sum === colors.count())
-      assert(rows.map(_._2).sum ===
-        colors.select("color").distinct().count())
-      colors.unpersist()
-      rows
-    }
-    val rows = stats()
-    assert(rows.sameElements(stats()), "layout must be deterministic")
+    val rows = exactStats(sym)
     assert(rows.length === p.workers)
-    // voronoi flooding colors every vertex of the connected planted graph
-    val total = rows.map(_._3).sum
-    assert(total === 16L * 12L)
-    // every worker's load under capacity + one max block (fallback slack)
-    val capacity = (1 + 0.1) * total / p.workers
-    rows.foreach { case (_, _, load, _, _) =>
-      assert(load <= capacity + 12, s"worker overloaded: $load") }
-    // the point of BDG (EuroSys §8.4): the planted clique blocks make
-    // crossings rare, far fewer than under the sha-hash layout
+    // the planted clique blocks must beat the sha-hash layout handily
     val bdg = rows.map(_._4).sum; val sha = rows.map(_._5).sum
     assert(bdg < sha, s"BDG cross $bdg should beat sha-hash cross $sha")
-    assert(bdg <= sha / 4,
-      s"expected a large cross-edge reduction, got $bdg vs $sha")
     sym.unpersist()
   }
 
