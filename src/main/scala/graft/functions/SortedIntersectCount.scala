@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** |a ∩ b| for two SORTED long arrays — a native Catalyst expression with
   * whole-stage codegen (SURVEY §7.3's flagged candidate).
@@ -73,19 +73,30 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration — either per-session ([[ensureRegistered]]) or via
-  * `spark.sql.extensions=graft.functions.GraftSparkExtensions`. */
+/** Per-session registration of every graft function ([[ensureRegistered]]),
+  * called by name with `call_function`. */
 object GraftFunctions {
   val Name = "sorted_intersect_count"
   val DotName = "graft_dot"
   val IDotName = "graft_idot"
   val SqDistName = "graft_sqdist"
+  val SimHashName = "graft_simhash"
+  val WordNgramsName = "graft_word_ngrams"
 
   private def two(name: String, mk: (Expression, Expression) => Expression)(
       exprs: Seq[Expression]): Expression = {
     require(exprs.size == 2, s"$name takes exactly 2 arguments")
     mk(exprs.head, exprs(1))
   }
+
+  /** A builder whose second argument is a constant int (a bit count, n). */
+  private def withInt(name: String, mk: (Expression, Int) => Expression)(
+      exprs: Seq[Expression]): Expression =
+    two(name, (e, k) => {
+      require(k.foldable && k.dataType == IntegerType,
+        s"$name takes a constant int as its second argument")
+      mk(e, k.eval().asInstanceOf[Int])
+    })(exprs)
 
   private val all: Seq[(String, Class[_], Seq[Expression] => Expression)] =
     Seq(
@@ -95,7 +106,11 @@ object GraftFunctions {
       (IDotName, classOf[LongDotProduct],
         two(IDotName, LongDotProduct.apply) _),
       (SqDistName, classOf[SquaredL2Distance],
-        two(SqDistName, SquaredL2Distance.apply) _))
+        two(SqDistName, SquaredL2Distance.apply) _),
+      (SimHashName, classOf[SimHashAgg],
+        withInt(SimHashName, SimHashAgg(_, _)) _),
+      (WordNgramsName, classOf[WordNgrams],
+        withInt(WordNgramsName, WordNgrams.apply) _))
 
   /** Idempotent per-session registration. */
   def ensureRegistered(spark: SparkSession): Unit =
@@ -104,23 +119,4 @@ object GraftFunctions {
         FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
         builder)
     }
-}
-
-/** `--conf spark.sql.extensions=graft.functions.GraftSparkExtensions` */
-class GraftSparkExtensions
-    extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    Seq[(String, Class[_], Seq[Expression] => Expression)](
-      (GraftFunctions.Name, classOf[SortedIntersectCount],
-        exprs => SortedIntersectCount(exprs.head, exprs(1))),
-      (GraftFunctions.DotName, classOf[DotProduct],
-        exprs => DotProduct(exprs.head, exprs(1))),
-      (GraftFunctions.IDotName, classOf[LongDotProduct],
-        exprs => LongDotProduct(exprs.head, exprs(1))),
-      (GraftFunctions.SqDistName, classOf[SquaredL2Distance],
-        exprs => SquaredL2Distance(exprs.head, exprs(1))))
-      .foreach { case (name, cls, builder) =>
-        ext.injectFunction((FunctionIdentifier(name),
-          new ExpressionInfo(cls.getName, name), builder))
-      }
 }

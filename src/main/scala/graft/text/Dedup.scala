@@ -457,24 +457,21 @@ object Dedup {
   }
 
   /** SimHash fingerprint per document over whitespace tokens:
-    * bit j = sign of Σ_tokens (2·bit_j(hash(token)) − 1).
-    * Pure builtin: `bits` sum-aggregations then a bitwise-OR fold.
+    * bit j = sign of Σ_tokens (2·bit_j(hash(token)) − 1), for j < `bits`
+    * (1 to 64). One `graft_simhash` aggregate per document: its buffer
+    * holds the `bits` per-bit sums, combined map-side before the
+    * shuffle. A document with null text has no tokens and no row.
     * Default hash is xxhash64/64-bit (fast path); pass
     * ([[shaTokenHash60]], 60) for DuckDB-verifiable fingerprints. */
   def simHash(docs: DataFrame, idCol: String, textCol: String,
               bits: Int = 64,
               tokenHash: Column => Column = xxhash64(_)): DataFrame = {
-    val toks = docs.select(col(idCol).as("id"),
-      explode(TextFunctions.tokens(col(textCol))).as("t"))
-      .withColumn("h", tokenHash(col("t")))
-    val sums = (0 until bits).map(j =>
-      sum(shiftrightunsigned(col("h"), j).bitwiseAND(lit(1L)) * 2 - 1)
-        .as(s"s$j"))
-    val bitCols = (0 until bits).map(j =>
-      when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-    toks.groupBy(col("id"))
-      .agg(sums.head, sums.tail: _*)
-      .select(col("id"), bitCols.reduce(_ bitwiseOR _).as("simhash"))
+    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
+    docs.select(col(idCol).as("id"),
+        explode(TextFunctions.tokens(col(textCol))).as("t"))
+      .groupBy(col("id"))
+      .agg(call_function(graft.functions.GraftFunctions.SimHashName,
+        tokenHash(col("t")), lit(bits)).as("simhash"))
   }
 
   /** SimHash near-duplicate pairs at Hamming distance ≤ `maxHamming`, via
@@ -487,11 +484,13 @@ object Dedup {
     * ANN vector case they ride through the pair join for free.
     *
     * `maxBucket` trades exactness for hot-bucket safety: a (band, bucket)
-    * group larger than it is SKIPPED, dropping its pairs (the guard
-    * against a boilerplate fingerprint shared by millions of docs turning
-    * the bucket join quadratic). Pass `Int.MaxValue` for the strictly
-    * pigeonhole-exact result (the q54 oracle runs that way).
-    * Returns (d1, d2, hamming) with d1 < d2. */
+    * group larger than it is SKIPPED, dropping every pair whose lowest
+    * shared band falls in it (the guard against a boilerplate
+    * fingerprint shared by millions of docs turning the bucket join
+    * quadratic). Pass `Int.MaxValue` for the strictly pigeonhole-exact
+    * result (the q54 oracle runs that way); it also skips the bucket
+    * count.
+    * Returns one (d1, d2, hamming) row per pair, with d1 < d2. */
   def simHashNearDup(docs: DataFrame, idCol: String, textCol: String,
                      maxHamming: Int = 3, bits: Int = 64,
                      tokenHash: Column => Column = xxhash64(_),
@@ -501,29 +500,38 @@ object Dedup {
     // band j covers fingerprint bits [cuts(j), cuts(j+1)) — integer-spread
     // so any bits/bands combination works
     val cuts = (0 to bands).map(j => j * bits / bands)
-    val bandKeys = (0 until bands).map { j =>
+    def bandKey(h: Column, j: Int): Column = {
       val width = cuts(j + 1) - cuts(j)
       // Java shifts are mod 64: (1L << 64) - 1 would be 0, not all-ones
       val mask = if (width >= 64) -1L else (1L << width) - 1L
-      shiftrightunsigned(col("simhash"), cuts(j)).bitwiseAND(lit(mask))
+      shiftrightunsigned(h, cuts(j)).bitwiseAND(lit(mask))
     }
     val banded = fp.select(col("id"), col("simhash"),
-        posexplode(array(bandKeys: _*)))
+        posexplode(array((0 until bands).map(bandKey(col("simhash"), _)): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
     // hot-bucket cap (all-identical boilerplate shards) — same guard as
-    // the MinHash-LSH path
-    val ok = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > 1 && col("bn") <= maxBucket)
-    val inBucket = banded.join(ok, Seq("band", "bucket"), "left_semi")
+    // the MinHash-LSH path; a singleton bucket joins to nothing anyway
+    val inBucket =
+      if (maxBucket == Int.MaxValue) banded
+      else {
+        val ok = banded.groupBy(col("band"), col("bucket"))
+          .agg(count(lit(1)).as("bn"))
+          .filter(col("bn") > 1 && col("bn") <= maxBucket)
+        banded.join(ok, Seq("band", "bucket"), "left_semi")
+      }
+    // a pair meets once per band it shares: keep only the meeting on its
+    // lowest shared band (the first band whose xor key is 0), so each
+    // pair is one row without a dedup aggregation
+    val xor = col("a.simhash").bitwiseXOR(col("b.simhash"))
+    val lowestShared = (0 until bands).foldRight(lit(bands)) { (j, later) =>
+      when(bandKey(xor, j) === 0L, lit(j)).otherwise(later)
+    }
     inBucket.as("a")
       .join(inBucket.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket")
-          && col("a.id") < col("b.id"))
+          && col("a.id") < col("b.id") && col("a.band") === lowestShared)
       .select(col("a.id").as("d1"), col("b.id").as("d2"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .cast("int").as("hamming"))
-      .dropDuplicates("d1", "d2")
+        bit_count(xor).cast("int").as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 

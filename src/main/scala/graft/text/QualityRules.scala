@@ -76,7 +76,7 @@ object QualityRules {
                     textCol: String): DataFrame = {
     // persisted: the exploded bigram stream feeds the bigram-count agg,
     // the prefix-count agg AND the scoring join — without the cache the
-    // explode + interpreted wordNgrams transform runs three times
+    // explode + wordNgrams runs three times
     val bg = df.select(col(idCol),
         explode(TextFunctions.wordNgrams(col(textCol), 2)).as("bg"))
       .persist()

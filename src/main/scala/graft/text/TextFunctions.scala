@@ -1,11 +1,14 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import graft.functions.GraftFunctions
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Text-analysis columns for training-data pipelines — all pure builtin
-  * `functions._` compositions (codegen'd, no UDFs), so filters/projections
-  * stay inside whole-stage codegen and push down where possible.
+/** Text-analysis columns for training-data pipelines — builtin
+  * `functions._` compositions and one native expression ([[wordNgrams]]),
+  * no UDFs, so filters/projections push down where possible. Only
+  * [[charShingles]]' `transform` keeps its projection out of whole-stage
+  * codegen.
   */
 object TextFunctions {
 
@@ -76,14 +79,13 @@ object TextFunctions {
     transform(sequence(lit(1), length(text) - (k - 1)),
       i => text.substr(i, lit(k)))
 
-  /** Word n-grams of a text column (whitespace tokens, space-joined
-    * n-grams, array with repeats). Guarded against short docs — see the
-    * [[charShingles]] descending-`sequence` footgun. */
+  /** Word n-grams of a text column: the space-joined windows of `n`
+    * consecutive whitespace tokens, in order, with repeats; an empty array
+    * when the text is null or has fewer than `n` tokens. The tokens are
+    * the builtin split; the windows are one `graft_word_ngrams`
+    * expression, registered in the active session. */
   def wordNgrams(text: Column, n: Int): Column = {
-    val t = split(trim(text), "\\s+")
-    when(size(t) >= n,
-      transform(sequence(lit(1), size(t) - (n - 1)),
-        i => concat_ws(" ", slice(t, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    GraftFunctions.ensureRegistered(SparkSession.active)
+    call_function(GraftFunctions.WordNgramsName, tokens(text), lit(n))
   }
 }

@@ -1,11 +1,15 @@
 package graft
 
-import graft.functions.{GraftFunctions, SortedIntersectCount}
+import graft.functions.{GraftFunctions, SimHashAgg, SortedIntersectCount, WordNgrams}
+import graft.text.{Dedup, TextFunctions => TF}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Native Catalyst expression: sorted_intersect_count — parity with the
+/** Native Catalyst expressions: sorted_intersect_count — parity with the
   * builtin size(array_intersect(...)) on random sorted inputs, null
-  * handling, SQL registration, and codegen execution.
+  * handling, SQL registration, and codegen execution; graft_dot and its
+  * folds; and the two text kernels against the builtin forms they
+  * replaced (`Oracles`).
   */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -134,5 +138,85 @@ class FunctionsSpec extends SparkSpec {
       .orderBy("id").collect().map(_.getDouble(1))
     assert(got(0) === 0.5 * 1.0 + 0.5 * 2.0 + 0.5 * 3.0)
     assert(got(1) === -1.0 * 0.25 + 0.0 * -4.0 + 2.0 * 0.125)
+  }
+
+  test("graft_simhash aggregate equals the per-bit-sum reference") {
+    val rnd = new scala.util.Random(23)
+    val words = Vector("alpha", "beta", "gamma", "delta", "épée", "数据", "x")
+    def text(): String = rnd.nextInt(10) match {
+      case 0 => null
+      case 1 => ""
+      case 2 => Seq(" ", "  \t", "\n ", "   ")(rnd.nextInt(4))
+      case _ => Seq.fill(rnd.nextInt(30))(words(rnd.nextInt(words.size)))
+        .mkString(Seq(" ", "  ", "\t")(rnd.nextInt(3)))
+    }
+    // ids repeat, and id 999's twelve documents are dealt round-robin over
+    // four partitions, so its partial buffers are serialized and merged
+    val rows = Seq.fill(300)((rnd.nextInt(150).toLong, text())) ++
+      Seq.fill(12)((999L, text() + " alpha beta"))
+    val df = rows.toDF("id", "text").repartition(4)
+    assert(df.filter(col("id") === 999L)
+      .select(spark_partition_id()).distinct().count() > 1,
+      "test premise: one id spans several partitions")
+    for ((bits, hash) <- Seq[(Int, Column => Column)](
+        (60, Dedup.shaTokenHash60), (64, xxhash64(_)))) {
+      def fps(d: DataFrame) =
+        d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = fps(Dedup.simHash(df, "id", "text", bits, hash))
+      val want = fps(Oracles.simHashPerBitSum(df, "id", "text", bits, hash))
+      assert(got === want, s"bits = $bits")
+      assert(got.contains(999L) && got.size > 100)
+    }
+    val agg = SimHashAgg(
+      org.apache.spark.sql.catalyst.expressions.Literal(0L), 64)
+    val buf = Array.tabulate(64)(j => (j - 32).toLong * 1000003L)
+    assert(agg.deserialize(agg.serialize(buf)).toSeq === buf.toSeq)
+  }
+
+  test("graft_word_ngrams equals the transform reference, codegen and interpreted") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(29)
+    val pieces = Vector("a", "bb", "ünï", "日本語", "🙂x", "z-z", "Ω")
+    val seps = Vector(" ", "   ", "\t", "\n", " \t ", "\r\n", "\u00a0")
+    def sep() = seps(rnd.nextInt(seps.size))
+    val texts = Seq(null, "", " ", "   ", "\t", "one", "two words") ++
+      Seq.fill(200) {
+        val body = Seq.fill(rnd.nextInt(20))(pieces(rnd.nextInt(pieces.size)))
+          .foldLeft("")((acc, w) => if (acc.isEmpty) w else acc + sep() + w)
+        (if (rnd.nextBoolean()) sep() else "") + body +
+          (if (rnd.nextBoolean()) sep() else "")
+      }
+    val df = spark.sparkContext.parallelize(texts.zipWithIndex, 2)
+      .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    for (n <- Seq(1, 2, 5, 13)) {
+      // the reference runs in its own query: its interpreted `transform`
+      // would take the whole projection out of whole-stage codegen
+      val q = df.select(col("id"), TF.wordNgrams(col("text"), n).as("got"),
+        TF.tokens(col("text")).as("t"))
+      assert(q.queryExecution.executedPlan.collectFirst {
+        case w: WholeStageCodegenExec
+          if w.toString.contains(GraftFunctions.WordNgramsName) => w
+      }.nonEmpty, "the expression runs inside whole-stage codegen")
+      val want = df.select(col("id"),
+          Oracles.wordNgramsTransform(col("text"), n))
+        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      val rows = q.collect()
+      assert(rows.length === texts.size)
+      assert(want.values.exists(_.nonEmpty),
+        s"test premise: some document has $n tokens")
+      rows.foreach { r =>
+        assert(r.getSeq[String](1) === want(r.getLong(0)))
+        val tokens = if (r.isNullAt(2)) null else new GenericArrayData(
+          r.getSeq[String](2).map(UTF8String.fromString).toArray[Any])
+        val interp = WordNgrams(Literal(tokens, ArrayType(StringType)), n)
+          .eval(null).asInstanceOf[ArrayData]
+        assert(interp.toArray[UTF8String](StringType).map(_.toString).toSeq
+          === want(r.getLong(0)))
+      }
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+
 /** Single-threaded reference implementations (SURVEY §5.2.2) the engine is
   * checked against: union-find CC, brute-force triangle enumeration, dense
   * power-iteration PageRank, synchronous min-tie-break label propagation.
@@ -224,6 +226,36 @@ object Oracles {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8"))
       .take(8).map("%02x".format(_)).mkString.take(15), 16)
+
+  /** The per-bit-sum SimHash that `Dedup.simHash`'s aggregate replaced:
+    * `bits` `sum` aggregations of the ±1 bit terms, then a `bits`-way
+    * bitwise OR of the positive ones. Returns (id, simhash). */
+  def simHashPerBitSum(docs: DataFrame, idCol: String, textCol: String,
+                       bits: Int, tokenHash: Column => Column): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val toks = docs.select(col(idCol).as("id"),
+      explode(split(trim(col(textCol)), "\\s+")).as("t"))
+      .withColumn("h", tokenHash(col("t")))
+    val sums = (0 until bits).map(j =>
+      sum(shiftrightunsigned(col("h"), j).bitwiseAND(lit(1L)) * 2 - 1)
+        .as(s"s$j"))
+    val bitCols = (0 until bits).map(j =>
+      when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
+    toks.groupBy(col("id"))
+      .agg(sums.head, sums.tail: _*)
+      .select(col("id"), bitCols.reduce(_ bitwiseOR _).as("simhash"))
+  }
+
+  /** The `transform(sequence(...))` word n-grams that
+    * `TextFunctions.wordNgrams`' expression replaced. */
+  def wordNgramsTransform(text: Column, n: Int): Column = {
+    import org.apache.spark.sql.functions._
+    val t = split(trim(text), "\\s+")
+    when(size(t) >= n,
+      transform(sequence(lit(1), size(t) - (n - 1)),
+        i => concat_ws(" ", slice(t, i, lit(n)))))
+      .otherwise(array().cast("array<string>"))
+  }
 
   /** Raw-HLL cardinality estimate from one group's registers (reg →
     * max rank, as `Sketches.hllRegisters` emits them): α_m·m²/Σ 2^(−M_j),
