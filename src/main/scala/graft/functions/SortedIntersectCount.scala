@@ -112,11 +112,15 @@ object GraftFunctions {
       (WordNgramsName, classOf[WordNgrams],
         withInt(WordNgramsName, WordNgrams.apply) _))
 
-  /** Idempotent per-session registration. */
-  def ensureRegistered(spark: SparkSession): Unit =
+  /** Idempotent per-session registration: a function already in the
+    * session's registry is left as it is. */
+  def ensureRegistered(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, cls, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
-        builder)
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo(cls.getName, name),
+          builder)
     }
+  }
 }

@@ -17,24 +17,28 @@ import org.apache.spark.sql.functions._
   */
 object GraphStats {
 
+  /** (vid, degree, tri) for every vertex: its degree and the triangles
+    * through it (0 for none), tri from the degree-oriented triangle plan
+    * ([[TriangleCount.perVertex]]). */
+  private def degreeTriangles(edges: DataFrame): DataFrame =
+    Edges.degrees(Edges.symmetrize(edges))
+      .join(TriangleCount.perVertex(edges).withColumnRenamed("tc", "tc0"),
+        Seq("vid"), "left")
+      .select(col("vid"), col("degree"),
+        coalesce(col("tc0"), lit(0L)).as("tri"))
+
   /** Per-vertex local clustering coefficient (vid, degree, tc, lcc):
     * lcc = 2*tc / (degree*(degree-1)) — how close each vertex's
     * neighborhood is to a clique. Vertices with degree >= 2; tc from the
     * degree-oriented triangle plan ([[TriangleCount.perVertex]]), so the
     * heavy step stays the O(E^1.5) sorted-adjacency intersection.
     * Per-row arithmetic on exact integers — no float-sum order hazard. */
-  def localClustering(edges: DataFrame): DataFrame = {
-    val deg = Edges.degrees(Edges.symmetrize(edges))
-    val tc = TriangleCount.perVertex(edges)
-      .withColumnRenamed("tc", "tc0")
-    deg.filter(col("degree") >= 2)
-      .join(tc, Seq("vid"), "left")
+  def localClustering(edges: DataFrame): DataFrame =
+    degreeTriangles(edges).filter(col("degree") >= 2)
       .select(
-        col("vid"), col("degree"),
-        coalesce(col("tc0"), lit(0L)).as("tc"),
-        round((lit(2.0) * coalesce(col("tc0"), lit(0L))) /
+        col("vid"), col("degree"), col("tri").as("tc"),
+        round((lit(2.0) * col("tri")) /
           (col("degree") * (col("degree") - 1)), 8).as("lcc"))
-  }
 
   /** Per-vertex ego-net density census (OddBall, Akoglu et al. PAKDD'10
     * intuition, integer fixed point): for each vertex, its ego network
@@ -45,56 +49,33 @@ object GraphStats {
     * values near the 2/n_ego floor flag near-stars (hubs). All integer
     * arithmetic on top of the q07 triangle plan — no float-sum hazard,
     * one extra per-row projection over [[localClustering]]'s inputs. */
-  def egoDensity(edges: DataFrame): DataFrame = {
-    val deg = Edges.degrees(Edges.symmetrize(edges))
-    val tc = TriangleCount.perVertex(edges).withColumnRenamed("tc", "tc0")
-    deg.join(tc, Seq("vid"), "left")
-      .withColumn("tri", coalesce(col("tc0"), lit(0L)))
+  def egoDensity(edges: DataFrame): DataFrame =
+    degreeTriangles(edges)
       .select(col("vid"), col("degree"), col("tri"),
         (col("degree") + col("tri")).as("ego_edges"),
         expr("2 * (degree + tri) * 1000000L div ((degree + 1) * degree)")
           .as("density_ppm"))
-  }
 
   /** Per-edge embeddedness (src, dst, sup, jaccard): sup = common
-    * neighbors of the endpoints (= the edge's triangle support, the
-    * quantity [[KTruss]] peels on), jaccard = sup / (deg(u)+deg(v)-sup)
-    * — the strong-tie/weak-tie feature (u and v themselves stay in the
-    * union). Every edge, including sup = 0 bridges. Heavy step is the
-    * oriented triangle plan; the rest is two degree joins and one exact
-    * double division per row. */
+    * neighbors of the endpoints (= the edge's triangle support,
+    * [[TriangleCount.support]], the quantity [[KTruss]] peels on),
+    * jaccard = sup / (deg(u)+deg(v)-sup) — the strong-tie/weak-tie
+    * feature (u and v themselves stay in the union). Every edge,
+    * including sup = 0 bridges. The rest is two degree joins and one
+    * exact double division per row; the degrees are counted over the
+    * materialized support rows (every input edge), so the input's plan
+    * runs once. */
   def edgeEmbeddedness(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
+    val e = TriangleCount.support(edges)
     val deg = Edges.degrees(Edges.symmetrize(e))
-    val oe = Edges.orientByDegree(e).persist()
-    val tri = TriangleCount.trianglesOriented(oe)
-    // canonical (least/greatest) charge, as in the truss peel
-    val charged = tri.select(
-        array(
-          struct(least(col("a"), col("b")).as("src"),
-            greatest(col("a"), col("b")).as("dst")),
-          struct(least(col("a"), col("c")).as("src"),
-            greatest(col("a"), col("c")).as("dst")),
-          struct(least(col("b"), col("c")).as("src"),
-            greatest(col("b"), col("c")).as("dst"))).as("es"))
-      .select(explode(col("es")).as("t"))
-      .select(col("t.src").as("src"), col("t.dst").as("dst"))
-    val support = charged.groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("sup0"))
-    val out = e.join(support, Seq("src", "dst"), "left")
-      .join(deg.withColumnRenamed("vid", "src")
+    e.join(deg.withColumnRenamed("vid", "src")
         .withColumnRenamed("degree", "du"), "src")
       .join(deg.withColumnRenamed("vid", "dst")
         .withColumnRenamed("degree", "dv"), "dst")
       .select(
-        col("src"), col("dst"),
-        coalesce(col("sup0"), lit(0L)).as("sup"),
-        round(coalesce(col("sup0"), lit(0L)).cast("double") /
-          (col("du") + col("dv") - coalesce(col("sup0"), lit(0L))), 8)
-          .as("jaccard"))
-      .localCheckpoint(eager = true)
-    oe.unpersist()
-    out
+        col("src"), col("dst"), col("sup"),
+        round(col("sup").cast("double") /
+          (col("du") + col("dv") - col("sup")), 8).as("jaccard"))
   }
 
   /** Harmonic centrality of a landmark (seed) set, bounded horizon:

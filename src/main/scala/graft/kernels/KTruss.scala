@@ -14,16 +14,11 @@ import org.apache.spark.sql.functions._
   * the quantity the reference's TC computes per oriented edge; peeling
   * iterates it).
   *
-  * Shape, per peel round (SURVEY §2.3 J3 + §2.8 B1):
-  *  - triangle triples come from the degree-oriented sorted-adjacency
-  *    intersection (the [[TriangleCount]] plan — O(E^1.5) intersection
-  *    work, hub-safe under degree orientation);
-  *  - each triangle charges its three CANONICAL edges (least/greatest —
-  *    one row per (triangle, edge), the unavoidable 3× expansion of
-  *    support attribution);
-  *  - support is a two-phase count aggregation; the filter drops edges
-  *    under k−2 — one [[graft.engine.Peel]] round, which stops when no
-  *    row is removed.
+  * Shape, per peel round (SURVEY §2.3 J3 + §2.8 B1): the live edges'
+  * triangle support from [[TriangleCount.support]] (the degree-oriented
+  * sorted-adjacency intersection, each triangle charged to its three
+  * canonical edges), then a filter that drops edges under k−2 — one
+  * [[graft.engine.Peel]] round, which stops when no row is removed.
   *
   * `maxRounds` bounds the peel for the oracle-parity query (q69 runs a
   * FIXED 3 rounds so DuckDB replays the identical staged SQL); the
@@ -38,36 +33,11 @@ object KTruss {
   def run(edges: DataFrame, k: Int,
           maxRounds: Int = Int.MaxValue): DataFrame = {
     require(k >= 3, "k-truss needs k >= 3")
-    // the round's oriented table feeds the adj aggregation AND both join
-    // probes: persisted, and released once the next round's survivors
-    // have materialized (relying on ReusedExchange instead was measured
-    // 3.7x slower on the bench graph, TriangleCount scaladoc)
-    var oe = Option.empty[DataFrame]
     val r = Peel.shrink(Vector(edges.select(col("src"), col("dst"))),
         maxRounds) { st =>
-      val e = st.live.head
-      oe.foreach(_.unpersist())
-      oe = Some(graft.graph.Edges.orientByDegree(e).persist())
-      val tri = TriangleCount.trianglesOriented(oe.get)
-      // charge each triangle to its three CANONICAL edges (least/greatest:
-      // degree orientation does not preserve id order)
-      val charged = tri.select(
-          array(
-            struct(least(col("a"), col("b")).as("src"),
-              greatest(col("a"), col("b")).as("dst")),
-            struct(least(col("a"), col("c")).as("src"),
-              greatest(col("a"), col("c")).as("dst")),
-            struct(least(col("b"), col("c")).as("src"),
-              greatest(col("b"), col("c")).as("dst"))).as("es"))
-        .select(explode(col("es")).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      val support = charged.groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).as("sup"))
-      Vector(e.join(support, Seq("src", "dst"), "left")
-        .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
-        .select(col("src"), col("dst")))
+      Vector(TriangleCount.support(st.live.head)
+        .filter(col("sup") >= k - 2).select(col("src"), col("dst")))
     }
-    oe.foreach(_.unpersist())
     r.live.head
   }
 

@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
   * no sqrt, no float, bit-replayable by a SQL oracle.
   *
   * Scale shape: the one heavy step is common-neighbor counting, which
-  * reuses the degree-oriented triangle plan ([[TriangleCount
-  * .trianglesOriented]], O(E^1.5) with the codegen'd sorted-adjacency
-  * intersection) — everything after is degree joins, one hash-min
-  * component fixpoint over the (much sparser) core ε-edges, and one
-  * aggregation per role. No per-seed work, no quadratic candidate sets.
+  * is the per-edge triangle support ([[TriangleCount.support]], O(E^1.5)
+  * over the degree-oriented sorted-adjacency intersection) — everything
+  * after is degree joins, one hash-min component fixpoint over the (much
+  * sparser) core ε-edges, and one aggregation per role. No per-seed
+  * work, no quadratic candidate sets.
   */
 object Scan {
 
@@ -42,32 +42,17 @@ object Scan {
     val sym = Edges.symmetrize(e)
     val deg = Edges.degrees(sym)
 
-    // common open neighbors per canonical edge = triangles through it
-    val oe = Edges.orientByDegree(e).persist()
-    val charged = TriangleCount.trianglesOriented(oe)
-      .select(array(
-        struct(least(col("a"), col("b")).as("src"),
-          greatest(col("a"), col("b")).as("dst")),
-        struct(least(col("a"), col("c")).as("src"),
-          greatest(col("a"), col("c")).as("dst")),
-        struct(least(col("b"), col("c")).as("src"),
-          greatest(col("b"), col("c")).as("dst"))).as("es"))
-      .select(explode(col("es")).as("t"))
-      .select(col("t.src").as("src"), col("t.dst").as("dst"))
-    val sup = charged.groupBy(col("src"), col("dst"))
-      .agg(count(lit(1)).as("com0"))
-
-    // ε-similar edges: closed-neighborhood overlap com = com0 + 2 (u and v
-    // are in both closed neighborhoods), closed degrees d+1
-    val simE = e.join(sup, Seq("src", "dst"), "left")
+    // ε-similar edges: common open neighbors per canonical edge = its
+    // triangle support; closed-neighborhood overlap com = sup + 2 (u and
+    // v are in both closed neighborhoods), closed degrees d+1
+    val simE = TriangleCount.support(e)
       .join(deg.select(col("vid").as("src"), col("degree").as("du")), "src")
       .join(deg.select(col("vid").as("dst"), col("degree").as("dv")), "dst")
-      .withColumn("com", coalesce(col("com0"), lit(0L)) + lit(2L))
+      .withColumn("com", col("sup") + lit(2L))
       .filter(col("com") * col("com") * lit(1000000L) >=
         lit(epsSqPpm) * (col("du") + 1L) * (col("dv") + 1L))
       .select(col("src"), col("dst"))
       .localCheckpoint(eager = true)
-    oe.unpersist()
 
     val ssym = Edges.symmetrize(simE)
     // ε-neighborhood size, closed (self counts: σ(v,v) = 1 ≥ ε)

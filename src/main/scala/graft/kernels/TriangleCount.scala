@@ -15,12 +15,17 @@ import org.apache.spark.sql.functions._
   * |N⁺(u) ∩ N⁺(v)| with a codegen'd sorted-merge expression — one shuffle
   * to build `adj`, two co-partitioned joins, no iteration.
   *
+  * Three entry points share that plan: [[total]] (one scalar),
+  * [[perVertex]] (vid, tc) and [[support]] (src, dst, sup) — every
+  * triangle consumer in `src/main` reads one of them, so the orientation,
+  * the adjacency build and the cache decision live here only.
+  *
   * The oriented edge table IS persisted for the duration of each call
   * (it feeds the adj aggregation and both join probes; measured on the
   * 50.5M-directed-edge bench graph, relying on ReusedExchange instead of
   * the cache made `total` 3.7x slower — the oriented subtree, itself two
   * joins over the degree table, gets recomputed per consumer) and
-  * released before return: `total`/`perVertex` materialize their result
+  * released before return: each entry point materializes its result
   * first (a single row / a localCheckpoint), so no cached blocks outlive
   * the call in a long-lived session.
   *
@@ -34,12 +39,12 @@ object TriangleCount {
 
   /** Each oriented edge (src, dst) with `common`, a function of the sorted
     * out-adjacency arrays of its two ends (adjU, adjV): one shuffle to
-    * build `adj`, two joins. The triangle triples (q07) and intersection
-    * counts (q06) share this plan up to the last projection. */
+    * build `adj`, two joins. The triangle triples (q07, support) and
+    * intersection counts (q06) share this plan up to the last
+    * projection. */
   private def overAdjacency(e: DataFrame)(
       common: (Column, Column) => Column): DataFrame = {
-    val adj = e.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("adj"))
+    val adj = Edges.adjacency(e)
     // deliberately NOT hinted SHUFFLE_HASH: probed on the 50.5M-edge bench
     // graph, building hash tables over the |V| array-valued adj rows is 3x
     // SLOWER than sort-merge (89.8 vs 30.4 s total) — the superstep
@@ -58,12 +63,6 @@ object TriangleCount {
     overAdjacency(e)(array_intersect(_, _).as("common"))
       .select(col("src").as("a"), col("dst").as("b"),
         explode(col("common")).as("c"))
-
-  /** Triangle triples over a caller-managed (persisted) oriented edge
-    * table — the per-round building block for iterative consumers like
-    * [[KTruss]] that must control the cache lifecycle themselves. */
-  def trianglesOriented(orientedEdges: DataFrame): DataFrame =
-    trianglesFrom(orientedEdges)
 
   /** Per-oriented-edge intersection sizes (src, dst, ncommon) — the count
     * fabric, WITHOUT materializing a row per triangle. Uses the native
@@ -103,6 +102,35 @@ object TriangleCount {
       .union(t.select(col("b").as("vid")))
       .union(t.select(col("c").as("vid")))
       .groupBy("vid").agg(count(lit(1)).as("tc"))
+      .localCheckpoint(true)
+    e.unpersist()
+    out
+  }
+
+  /** Per-edge triangle support (src, dst, sup) for every input edge:
+    * sup = the triangles through the edge = |N(src) ∩ N(dst)|, 0 for an
+    * edge in none — the quantity [[KTruss]] peels on, [[Scan]] turns into
+    * structural similarity and [[GraphStats.edgeEmbeddedness]] reports.
+    * Each triangle charges its three edges under their canonical names
+    * (degree orientation does not keep id order); a left join back to
+    * the input keeps the zero-support edges. Result is materialized
+    * (localCheckpoint) so the oriented-edge cache can be released before
+    * return.
+    * @param edges canonical undirected pairs, src < dst, distinct */
+  def support(edges: DataFrame): DataFrame = {
+    val e = Edges.orientByDegree(edges).persist()
+    val lo = Seq(least(col("a"), col("b")), least(col("a"), col("c")),
+      least(col("b"), col("c")))
+    val hi = Seq(greatest(col("a"), col("b")), greatest(col("a"), col("c")),
+      greatest(col("b"), col("c")))
+    val charged = trianglesFrom(e)
+      .select(explode(array(lo.zip(hi).map { case (l, h) =>
+        struct(l.as("src"), h.as("dst")) }: _*)).as("t"))
+      .groupBy(col("t.src").as("src"), col("t.dst").as("dst"))
+      .agg(count(lit(1)).as("sup0"))
+    val out = edges.join(charged, Seq("src", "dst"), "left")
+      .select(col("src"), col("dst"),
+        coalesce(col("sup0"), lit(0L)).as("sup"))
       .localCheckpoint(true)
     e.unpersist()
     out

@@ -1877,7 +1877,7 @@ object GraphQueries {
     // communities judged by the TRIANGLES they cut (edge weight = q74's
     // triangle support) — robust to weak-tie noise; complements q134
     Q("q146_motif_conductance", (s, d) => {
-      val supE = graft.kernels.GraphStats.edgeEmbeddedness(e2(s, d))
+      val supE = TriangleCount.support(e2(s, d))
         .select(col("src"), col("dst"), col("sup").as("weight"))
       val brands = broadcast(T(s, d, "part")
         .select(col("p_partkey").as("vid"), col("p_brand").as("label")))

@@ -42,6 +42,28 @@ class FunctionsSpec extends SparkSpec {
     assert(r.isNullAt(2))
   }
 
+  test("registering twice replaces no function") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    val capture = new AbstractAppender("replaced-functions", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        Option(e.getMessage).map(_.getFormattedMessage)
+          .filter(_.contains("replaced a previously registered function"))
+          .foreach(replaced.add)
+    }
+    GraftFunctions.ensureRegistered(spark)
+    capture.start()
+    root.addAppender(capture)
+    try GraftFunctions.ensureRegistered(spark)
+    finally { root.removeAppender(capture); capture.stop() }
+    assert(replaced.isEmpty)
+  }
+
   test("interpreted eval agrees with codegen path") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.GenericArrayData

@@ -305,6 +305,52 @@ class KernelSpec extends SparkSpec {
     }
   }
 
+  test("triangle support equals |N(u) ∩ N(v)|; no cache outlives a call") {
+    // persisted RDDs other than materialized local checkpoints (a call's
+    // result): an oriented-edge cache left behind shows up here
+    def cached(): Set[Int] = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+    def leavesNoCache[T](what: String)(body: => T): T = {
+      val before = cached()
+      val out = body
+      assert(cached() === before, s"$what left a persisted RDD")
+      out
+    }
+    // hub 1 (degree 5) sits above its low-degree neighbors in degree
+    // order, so orientation reverses id order on its triangles
+    val revHub = (2L to 6L).map(k => (1L, k)) ++ Seq((2L, 3L), (3L, 4L))
+    assert(Edges.orientByDegree(edgeDF(revHub)).collect()
+      .exists(r => r.getLong(0) > r.getLong(1)))
+    val k5bridge = (for { i <- 1L to 5L; j <- i + 1 to 5L } yield (i, j)) ++
+      Seq((5L, 6L), (6L, 7L))
+    val graphs = golden ++ Map(
+      "er20" -> Oracles.erdosRenyi(20, 0.35, seed = 7),
+      "pl60" -> Oracles.powerLaw(60, seed = 5),
+      "k5bridge" -> k5bridge, "revHub" -> revHub)
+    val got = graphs.map { case (name, es) =>
+      val canon = es.map { case (a, b) => (a min b, a max b) }.distinct
+      val sym = canon.flatMap(e => Seq(e, e.swap))
+      val adj = sym.groupBy(_._1).map { case (v, n) => v -> n.map(_._2).toSet }
+      val expect = canon.map { case (u, v) =>
+        (u, v, (adj(u) intersect adj(v)).size.toLong)
+      }.toSet
+      val sup = leavesNoCache(s"support($name)") {
+        TriangleCount.support(edgeDF(es)).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      }
+      assert(sup === expect, s"graph=$name")
+      name -> sup
+    }
+    assert(got("k5bridge").filter(_._2 >= 6L) ===
+      Set((5L, 6L, 0L), (6L, 7L, 0L)))
+    Seq(k5bridge, Oracles.powerLaw(60, seed = 5)).foreach { es =>
+      leavesNoCache("KTruss.run")(KTruss.run(edgeDF(es), 4).collect())
+      leavesNoCache("Scan.run")(Scan.run(spark, edgeDF(es)).collect())
+      leavesNoCache("edgeEmbeddedness")(
+        GraphStats.edgeEmbeddedness(edgeDF(es)).collect())
+    }
+  }
+
   test("common-neighbor link prediction matches a hand oracle") {
     import spark.implicits._
     golden.foreach { case (name, es) =>
