@@ -103,6 +103,35 @@ object Edges {
     sym.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("adj"))
 
+  /** G-Miner's task pull (`core/task.hpp:41-51`): per seed, its candidate
+    * set and the subgraph those candidates induce — the input of every
+    * per-seed local search (MCF, CD, GC; J4 in SURVEY §2.8).
+    *
+    * Plan: the membership pull `members ⋈ edges on v = src ⋈ members on
+    * (seed, dst = v)` (both ends of an edge must be members of the same
+    * seed), one `collect_list` per side grouped by seed, one left join.
+    *
+    * @param members (seed, v, <member attrs…>), one row per (seed, v)
+    * @param edges   (src, dst, <edge attrs…>)
+    * @return (seed, members, edges): `members` an array<struct<v, …>>
+    *         sorted by v; `edges` an array<struct<src, dst, …>> of every
+    *         edge with both ends among the seed's members, `[]` (never
+    *         null) when there is none */
+  def taskSubgraphs(members: DataFrame, edges: DataFrame): DataFrame = {
+    val attrs = members.columns.filterNot(Set("seed", "v")).map(col)
+    val pairs = members.select(col("seed"), col("v"))
+    val induced = pairs.withColumnRenamed("v", "src").join(edges, "src")
+      .join(pairs.withColumnRenamed("v", "dst"), Seq("seed", "dst"))
+      .groupBy(col("seed"))
+      .agg(collect_list(struct(edges.columns.map(col): _*)).as("edges"))
+    members.groupBy(col("seed"))
+      .agg(sort_array(collect_list(struct(col("v") +: attrs: _*)))
+        .as("members"))
+      .join(induced, Seq("seed"), "left")
+      .select(col("seed"), col("members"), coalesce(col("edges"),
+        array().cast(induced.schema("edges").dataType)).as("edges"))
+  }
+
   /** A vertex peel's live (vertices, edges) without the vertices `gone`
     * names (its `vid` column) and every edge touching one. */
   def withoutVertices(live: Vector[DataFrame],

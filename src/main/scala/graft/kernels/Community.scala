@@ -1,5 +1,6 @@
 package graft.kernels
 
+import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,9 +25,10 @@ import org.apache.spark.sql.functions._
   * oracle-checkable by exhaustive enumeration.
   *
   * Dataflow (same shape as [[MaxClique]], J4 per-seed local search):
-  * id-oriented edges → per-seed induced edge sets via one triangle-style
-  * self-join → neighbor attrs joined in → typed map running the exact
-  * local search; all joins shuffle on the vertex key.
+  * id-oriented edges with the neighbor attrs joined in are the members
+  * of each seed's task, [[Edges.taskSubgraphs]] pulls the edges they
+  * induce, and a typed map runs the exact local search; all joins
+  * shuffle on the vertex key.
   *
   * Skew note: the reference-mandated id-orientation (candidates = ids
   * above the seed, `apps/community.cpp:476-480`) does NOT bound
@@ -79,15 +81,7 @@ object Community {
     if (cand0.length < k - 1) return None
     val ids = cand0.map(_._1)
     val attrs = cand0.map(_._2.toSet)
-    val idx = ids.zipWithIndex.toMap
-    val n = ids.length
-    val adj = Array.fill(n)(scala.collection.mutable.BitSet.empty)
-    induced.foreach { case (u, w) =>
-      (idx.get(u), idx.get(w)) match {
-        case (Some(i), Some(j)) => adj(i) += j; adj(j) += i
-        case _ =>
-      }
-    }
+    val adj = MaxClique.bitAdjacency(ids, induced)
     var best: List[Int] = Nil
     var bestSize = k - 1 // accept only size >= k (incl. seed)
     // ascending-id DFS enumerates member lists in lexicographic order, so
@@ -106,76 +100,51 @@ object Community {
         }
       }
     }
-    search(Nil, seedSet, (0 until n).toList)
+    search(Nil, seedSet, ids.indices.toList)
     if (bestSize < k) None
     else Some((seed +: best.map(ids(_))).sorted.toArray)
   }
 
-  final case class SeedCommunity(seed: Long, community: Array[Long], size: Int)
-
-  /** Per-seed best communities (size ≥ k). Lazy; returns the unpersist
-    * hook for the oriented-edge cache (used 4x in the plan), which [[run]]
-    * invokes after materializing.
+  /** Global CD result — the reference CountAgg shape (A4 set-union + max):
+    * one row per distinct community, (community csv, size), from each
+    * seed's best community of size ≥ k. Eager, so the cached oriented
+    * edges and task members are released before return. The distinct
+    * community set is unbounded, so materialization is a distributed
+    * localCheckpoint — never a driver collect (a hub-rich graph at scale
+    * would funnel every community row through driver memory).
     * @param verts (vid, attrs array<string>) — attr-format vertices
     * @param edges canonical undirected edge table (src < dst) */
-  def perSeedWithRelease(spark: SparkSession, verts: DataFrame,
-                          edges: DataFrame, k: Int,
-                          maxCandidates: Int = DefaultMaxCandidates)
-      : (org.apache.spark.sql.Dataset[SeedCommunity], () => Unit) = {
+  def run(spark: SparkSession, verts: DataFrame, edges: DataFrame,
+          k: Int = 3, maxCandidates: Int = DefaultMaxCandidates): DataFrame = {
     import spark.implicits._
     // id orientation — the reference's candidate rule keeps neighbors with
     // id > vid (`apps/community.cpp:476-480`), so canonical src<dst IS the
     // candidate relation
     val e = edges.select(col("src"), col("dst")).persist()
-    val ind = e.as("vu")
-      .join(e.as("uw"), col("vu.dst") === col("uw.src"))
-      .join(e.as("vw"),
-        col("vw.src") === col("vu.src") && col("vw.dst") === col("uw.dst"))
-      .select(col("vu.src").as("seed"),
-        col("uw.src").as("u"), col("uw.dst").as("w"))
     val va = verts.select(col("vid"), col("attrs"))
-    val nbrs = e.join(va.withColumnRenamed("vid", "dst"), "dst")
-      .groupBy(col("src").as("seed"))
-      .agg(collect_list(struct(col("dst"), col("attrs"))).as("nbrs"))
-    val grouped = nbrs
+    // read by both sides of the task pull and the members aggregate:
+    // cached, the attrs join runs once (uncached, q36 ran 2 more jobs)
+    val members = e.join(va.withColumnRenamed("vid", "dst"), "dst")
+      .select(col("src").as("seed"), col("dst").as("v"), col("attrs"))
+      .persist()
+    val result = Edges.taskSubgraphs(members, e)
       // seed rule P1: candidates >= k-1 and nonempty seed attrs
-      .filter(size(col("nbrs")) >= k - 1)
+      .filter(size(col("members")) >= k - 1)
       .join(va.withColumnRenamed("vid", "seed")
         .withColumnRenamed("attrs", "seed_attrs"), "seed")
       .filter(size(col("seed_attrs")) > 0)
-      .join(ind.groupBy("seed").agg(
-          collect_list(col("u")).as("us"),
-          collect_list(col("w")).as("ws")),
-        Seq("seed"), "left")
-      .select(col("seed"), col("seed_attrs"), col("nbrs"),
-        coalesce(col("us"), array().cast("array<long>")).as("us"),
-        coalesce(col("ws"), array().cast("array<long>")).as("ws"))
+      .select(col("seed"), col("seed_attrs"), col("members"), col("edges"))
       .as[(Long, Array[String], Array[(Long, Array[String])],
-           Array[Long], Array[Long])]
-    val out = grouped.flatMap { case (seed, sa, ns, us, ws) =>
-      localSearch(seed, sa, ns, us.zip(ws), k, maxCandidates)
-        .map(m => SeedCommunity(seed, m, m.length))
-    }
-    (out, () => { e.unpersist(); () })
-  }
-
-  /** Global CD result — the reference CountAgg shape (A4 set-union + max):
-    * one row per distinct community, (community csv, size). Eager, so the
-    * cached oriented edges are released before return. The distinct
-    * community set is unbounded, so materialization is a distributed
-    * localCheckpoint — never a driver collect (a hub-rich graph at scale
-    * would funnel every community row through driver memory). */
-  def run(spark: SparkSession, verts: DataFrame, edges: DataFrame,
-          k: Int = 3, maxCandidates: Int = DefaultMaxCandidates): DataFrame = {
-    val (perDs, release) =
-      perSeedWithRelease(spark, verts, edges, k, maxCandidates)
-    val result = perDs.toDF().select(
-        array_join(col("community").cast("array<string>"), ",")
+           Array[(Long, Long)])]
+      .flatMap { case (seed, sa, ns, es) =>
+        localSearch(seed, sa, ns, es, k, maxCandidates)
+      }
+      .select(array_join(col("value").cast("array<string>"), ",")
           .as("community"),
-        col("size").cast("int").as("size"))
+        size(col("value")).as("size"))
       .distinct()
       .localCheckpoint(eager = true)
-    release()
+    e.unpersist(); members.unpersist()
     result
   }
 }

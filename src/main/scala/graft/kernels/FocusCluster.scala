@@ -1,6 +1,8 @@
 package graft.kernels
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.graph.Edges
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Focused clustering with outliers — the reference's GC application
@@ -61,13 +63,13 @@ object FocusCluster {
     * @param wdeg    FULL weighted degree per ball vertex
     * @param deg     FULL unweighted degree per ball vertex
     * @param edges   ball-internal weighted edges (u, v, w), u != v
-    * @return (cluster sorted, outliers sorted, final phi, rounds) or None */
+    * @return (cluster sorted, outliers sorted) or None */
   private[kernels] def localFocus(
       core: Array[Long],
       wdeg: Map[Long, Double],
       deg: Map[Long, Long],
       edges: Array[(Long, Long, Double)],
-      p: Params): Option[(Array[Long], Array[Long], Double, Int)] = {
+      p: Params): Option[(Array[Long], Array[Long])] = {
     val adj = scala.collection.mutable.HashMap
       .empty[Long, List[(Long, Double)]].withDefaultValue(Nil)
     edges.foreach { case (u, v, w) =>
@@ -107,11 +109,9 @@ object FocusCluster {
     val outlier = scala.collection.mutable.TreeSet.empty[Long]
     var initPhi = Double.NaN
     var iterRound = 0 // counts contract-continue cycles (ITER_ROUND_MAX)
-    var rounds = 0    // total loop passes, reported for diagnostics
     var first = true
     var done = false
     while (!done) {
-      rounds += 1
       val cur = phiW
       if (cur < 0) return None // wVol == 0 — reference clears and finishes
       if (first) { initPhi = cur; first = false }
@@ -168,132 +168,103 @@ object FocusCluster {
       }
     }
     if (s.size < math.max(p.minResult, 1)) None
-    else Some((s.toArray, (outlier -- s).toArray, phiW, rounds))
+    else Some((s.toArray, (outlier -- s).toArray))
   }
 
-  final case class SeedCluster(seed: Long, cluster: Array[Long],
-                               outliers: Array[Long], phi: Double,
-                               rounds: Int)
+  /** Canonical weighted edges (src, dst, weight) as (src, dst, w: double). */
+  private def weighted(wedges: DataFrame): DataFrame =
+    wedges.select(col("src"), col("dst"), col("weight").cast("double").as("w"))
 
-  /** The seed/core stage ALONE (`create_task`, `apps/focusCO.cpp:608-629`):
-    * per qualifying seed, its core = {seed} ∪ strong neighbors (edge
-    * weight ≥ `minWeight`), kept iff |core| ≥ `minCore` — plain SQL, so
-    * the stage feeding the greedy φ loop is hash-oracled (q68; the same
-    * promotion move that isolated the Voronoi flood as q56). The local
-    * loop itself stays spec-covered (MiningSpec hand-traced oracle).
-    * Input: canonical weighted edges (src, dst, weight), src < dst.
-    * Output: (seed, core_size, core) with core a sorted-id CSV. */
-  def seedCores(wedges: DataFrame, minWeight: Double,
-                minCore: Int): DataFrame = {
-    val e = wedges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w"))
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-      col("w")))
+  /** Both directions of canonical weighted edges (src, dst, w). */
+  private def symmetric(e: DataFrame): DataFrame =
+    e.union(e.select(col("dst").as("src"), col("src").as("dst"), col("w")))
+
+  /** The seed rule (`create_task`, `apps/focusCO.cpp:608-629`) over the
+    * symmetric weighted edges: per seed, (seed, core_size, core) with
+    * core = {seed} ∪ strong neighbors (edge weight ≥ `minWeight`) as
+    * sorted ids, kept iff |core| ≥ `minCore`. The one derivation of the
+    * core: [[seedCores]] formats it, [[run]] seeds the φ loop with it. */
+  private def cores(sym: DataFrame, minWeight: Double,
+                    minCore: Int): DataFrame = {
     val strong = sym.filter(col("w") >= minWeight)
     strong.select(col("src").as("seed"), col("dst").as("m"))
       .union(strong.select(col("src").as("seed"), col("src").as("m")))
       .distinct()
       .groupBy(col("seed"))
       .agg(count(lit(1)).as("core_size"),
-        array_join(sort_array(collect_set(col("m"))).cast("array<string>"),
-          ",").as("core"))
+        sort_array(collect_set(col("m"))).as("core"))
       .filter(col("core_size") >= minCore)
   }
 
-  /** Per-seed focused clusters over a weighted canonical edge table
-    * (src, dst, weight) with src < dst. Lazy; returns the unpersist hook
-    * that [[run]] invokes after materializing. */
-  def perSeedWithRelease(spark: SparkSession, wedges: DataFrame, p: Params)
-      : (org.apache.spark.sql.Dataset[SeedCluster], () => Unit) = {
-    import spark.implicits._
-    val e = wedges.select(col("src"), col("dst"),
-      col("weight").cast("double").as("w"))
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-      col("w"))).persist()
-    // full degrees (cut terms count edges to ANYWHERE, ball or not)
-    val degs = sym.groupBy(col("src").as("vid"))
-      .agg(sum(col("w")).as("wdeg"), count(lit(1)).as("deg")).persist()
-    // seed rule: core = seed + strong nbrs, |core| >= minCore
-    val strong = sym.filter(col("w") >= p.minWeight)
-    val coreM = strong.select(col("src").as("seed"), col("dst").as("m"))
-      .union(strong.select(col("src").as("seed"), col("src").as("m")))
-      .distinct()
-    val seeds = coreM.groupBy("seed").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= p.minCore).select("seed")
-    val core = coreM.join(seeds.hint("SHUFFLE_HASH"), "seed")
-    // 2-hop ball = core ∪ top-maxBall nbrs(core): the extension layer is
-    // deterministically truncated per seed (best in-edge weight desc, id
-    // asc) BEFORE any collect_list, so the heaviest row a hub seed can
-    // build is bounded — the set-at-a-time form of the reference's
-    // candidate pruning; candidates() re-applies the per-round
-    // candCap·|S| cap inside the local loop
-    val coreV = core.select(col("seed"), col("m").as("v"))
-    val extRanked = core.join(sym, core("m") === sym("src"))
-      .select(col("seed"), col("dst").as("v"), col("w"))
-      .join(coreV.withColumnRenamed("v", "dst")
-        .withColumnRenamed("seed", "s2"),
-        col("seed") === col("s2") && col("v") === col("dst"), "left_anti")
-      .groupBy(col("seed"), col("v")).agg(max(col("w")).as("bw"))
-    import org.apache.spark.sql.expressions.Window
-    val win = Window.partitionBy(col("seed"))
-      .orderBy(col("bw").desc, col("v"))
-    val extAll = extRanked.withColumn("rn", row_number().over(win))
-      .persist() // shared by the drop-count job and the ball build
-    val dropped = extAll.filter(col("rn") > p.maxBall).count()
-    if (dropped > 0)
-      System.err.println(
-        s"[FocusCluster] ball cap maxBall=${p.maxBall} dropped $dropped " +
-          "extension vertices (weakest-weight first, deterministic)")
-    val ball = coreV
-      .union(extAll.filter(col("rn") <= p.maxBall)
-        .select(col("seed"), col("v")))
-      .distinct().persist()
-    ball.count() // materialize off the extAll cache, then release it
-    extAll.unpersist()
-    // ball-internal edges, built once via two membership semi-joins
-    val be = ball.join(e, ball("v") === e("src"))
-      .select(col("seed"), col("src"), col("dst"), col("w"))
-      .join(ball.select(col("seed"), col("v").as("dst")), Seq("seed", "dst"))
-    val ballEdges = be.groupBy("seed").agg(
-      collect_list(col("src")).as("eu"),
-      collect_list(col("dst")).as("ev"),
-      collect_list(col("w")).as("ew"))
-    val ballVerts = ball.join(degs, ball("v") === degs("vid"))
-      .groupBy("seed").agg(
-        collect_list(col("v")).as("bv"),
-        collect_list(col("wdeg")).as("bw"),
-        collect_list(col("deg")).as("bd"))
-    val grouped = core.groupBy("seed")
-      .agg(collect_list(col("m")).as("core"))
-      .join(ballVerts, "seed")
-      .join(ballEdges, Seq("seed"), "left")
-      .select(col("seed"), col("core"), col("bv"), col("bw"), col("bd"),
-        coalesce(col("eu"), array().cast("array<long>")).as("eu"),
-        coalesce(col("ev"), array().cast("array<long>")).as("ev"),
-        coalesce(col("ew"), array().cast("array<double>")).as("ew"))
-      .as[(Long, Array[Long], Array[Long], Array[Double], Array[Long],
-           Array[Long], Array[Long], Array[Double])]
-    val ds = grouped.flatMap { case (seed, cr, bv, bw, bd, eu, ev, ew) =>
-      val wdeg = bv.zip(bw).toMap
-      val deg = bv.zip(bd).toMap
-      val edges = Array.tabulate(eu.length)(i => (eu(i), ev(i), ew(i)))
-      localFocus(cr, wdeg, deg, edges, p).map { case (c, o, phi, r) =>
-        SeedCluster(seed, c, o, phi, r)
-      }
-    }
-    (ds, () => { sym.unpersist(); degs.unpersist(); ball.unpersist(); () })
-  }
+  /** The seed/core stage ALONE, exactly as [[run]] derives it: plain SQL,
+    * so the stage feeding the greedy φ loop is hash-oracled (q68; the same
+    * promotion move that isolated the Voronoi flood as q56). The local
+    * loop itself stays spec-covered (MiningSpec hand-traced oracle).
+    * Input: canonical weighted edges (src, dst, weight), src < dst.
+    * Output: (seed, core_size, core) with core a sorted-id CSV. */
+  def seedCores(wedges: DataFrame, minWeight: Double,
+                minCore: Int): DataFrame =
+    cores(symmetric(weighted(wedges)), minWeight, minCore)
+      .select(col("seed"), col("core_size"),
+        array_join(col("core").cast("array<string>"), ",").as("core"))
 
-  /** Global GC result — the reference CountAgg co_map (A5 map-union):
-    * one row per distinct cluster with the UNION of its reported outlier
-    * sets (the reference's map insert keeps whichever seed's set arrived
-    * first — nondeterministic across workers; the union is the
-    * deterministic closure of that). Eager; caches released before
-    * return. */
+  /** Global GC result over a weighted canonical edge table (src, dst,
+    * weight) with src < dst — the reference CountAgg co_map (A5
+    * map-union): one row per distinct cluster with the UNION of its
+    * reported outlier sets (the reference's map insert keeps whichever
+    * seed's set arrived first — nondeterministic across workers; the
+    * union is the deterministic closure of that).
+    *
+    * Each qualifying seed's task is its 2-hop ball — the core plus the
+    * core's top-`maxBall` neighbors — with every ball vertex's FULL
+    * weighted and unweighted degree (cut terms count edges to anywhere,
+    * ball or not) and the ball-internal edges
+    * ([[Edges.taskSubgraphs]]); [[localFocus]] runs on it.
+    * Eager; caches released before return. */
   def run(spark: SparkSession, wedges: DataFrame,
           p: Params = Params()): DataFrame = {
-    val (ds, release) = perSeedWithRelease(spark, wedges, p)
-    val result = ds.toDF()
+    import spark.implicits._
+    val e = weighted(wedges)
+    val sym = symmetric(e).persist()
+    val core = cores(sym, p.minWeight, p.minCore)
+      .select(col("seed"), explode(col("core")).as("v"))
+    // the extension layer is deterministically truncated per seed (best
+    // in-edge weight desc, id asc) BEFORE any collect_list, so the
+    // heaviest row a hub seed can build is bounded — the set-at-a-time
+    // form of the reference's candidate pruning; candidates() re-applies
+    // the per-round candCap·|S| cap inside the local loop
+    val extRanked = core.join(sym, core("v") === sym("src"))
+      .select(col("seed"), col("dst").as("v"), col("w"))
+      .join(core, Seq("seed", "v"), "left_anti")
+      .groupBy(col("seed"), col("v")).agg(max(col("w")).as("bw"))
+    val win = Window.partitionBy(col("seed"))
+      .orderBy(col("bw").desc, col("v"))
+    val dropped = Observation()
+    val ext = extRanked.withColumn("rn", row_number().over(win))
+      .observe(dropped, count(when(col("rn") > p.maxBall, 1)).as("n"))
+      .filter(col("rn") <= p.maxBall)
+    val degs = sym.groupBy(col("src").as("v"))
+      .agg(sum(col("w")).as("wdeg"), count(lit(1)).as("deg"))
+    val ball = core.withColumn("core", lit(true))
+      .union(ext.select(col("seed"), col("v"), lit(false).as("core")))
+      .join(degs, "v")
+      .select(col("seed"), col("v"), col("wdeg"), col("deg"), col("core"))
+      .persist()
+    ball.count() // materializes the ball; its job observes the drop count
+    val n = dropped.get("n").asInstanceOf[Long]
+    if (n > 0)
+      System.err.println(
+        s"[FocusCluster] ball cap maxBall=${p.maxBall} dropped $n " +
+          "extension vertices (weakest-weight first, deterministic)")
+    val result = Edges.taskSubgraphs(ball, e)
+      .as[(Long, Array[(Long, Double, Long, Boolean)],
+           Array[(Long, Long, Double)])]
+      .flatMap { case (_, ms, es) =>
+        val core = ms.collect { case (v, _, _, true) => v }
+        localFocus(core, ms.map(m => m._1 -> m._2).toMap,
+          ms.map(m => m._1 -> m._3).toMap, es, p)
+      }
+      .toDF("cluster", "outliers")
       .groupBy(col("cluster"))
       .agg(array_sort(array_distinct(flatten(collect_list(col("outliers")))))
         .as("out"))
@@ -301,10 +272,10 @@ object FocusCluster {
         array_join(col("cluster").cast("array<string>"), ",").as("cluster"),
         array_join(col("out").cast("array<string>"), ",").as("outliers"),
         size(col("cluster")).as("size"))
-    // distributed eager materialization — the cluster set is unbounded,
-    // so no driver collect (same rule as Community.run)
-    val eager = result.localCheckpoint(eager = true)
-    release()
-    eager
+      // distributed eager materialization — the cluster set is unbounded,
+      // so no driver collect (same rule as Community.run)
+      .localCheckpoint(eager = true)
+    sym.unpersist(); ball.unpersist()
+    result
   }
 }

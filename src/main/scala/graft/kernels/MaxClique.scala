@@ -3,6 +3,7 @@ package graft.kernels
 import graft.graph.Edges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Maximum-clique finding — the reference's MCF application
   * (`apps/maxclique.cpp`) re-expressed Spark-first.
@@ -17,11 +18,11 @@ import org.apache.spark.sql.functions._
   *     once, at its minimum member; out-neighborhoods are O(√E) on any
   *     graph, so no per-seed task can blow up (the skew bound the reference
   *     gets from task splitting + stealing);
-  *  2. the induced edge set of each seed's out-neighborhood is ONE
-  *     triangle-style self-join (set-at-a-time, shuffled once);
-  *  3. the per-seed exact search runs inside `mapGroups` — the J4 pattern
-  *     (whole-subgraph local algorithm), the one place imperative code
-  *     beats a dataflow encoding;
+  *  2. each seed's task — its out-neighborhood and the edges it induces —
+  *     comes from the one task pull, [[Edges.taskSubgraphs]];
+  *  3. the per-seed exact search runs inside a typed `map` over the tasks
+  *     — the J4 pattern (whole-subgraph local algorithm), the one place
+  *     imperative code beats a dataflow encoding;
   *  4. the global argmax-with-ties aggregate (max size, #cliques at max —
   *     the reference's CountAgg, `apps/maxclique.cpp:73-205`) is a plain
   *     two-phase aggregation.
@@ -32,31 +33,46 @@ import org.apache.spark.sql.functions._
   */
 object MaxClique {
 
-  /** Exact max-clique search on one seed's induced neighborhood.
-    * Returns (bestSize, countAtBest, witness) over cliques that INCLUDE
-    * the seed (size counts the seed). */
-  private[kernels] def localSearch(
-      nbrs: Array[Long],
-      induced: Array[(Long, Long)]): (Int, Long, Array[Long]) = {
-    val idx = nbrs.zipWithIndex.toMap
-    val n = nbrs.length
-    val adj = Array.fill(n)(scala.collection.mutable.BitSet.empty)
-    induced.foreach { case (u, w) =>
+  /** Symmetric BitSet adjacency over `ids` (index i stands for ids(i))
+    * from `edges`; an edge with an end outside `ids` is skipped. The
+    * in-task graph the clique searches ([[localSearch]],
+    * [[Community.localSearch]], [[greedyBound]]) branch over. */
+  private[kernels] def bitAdjacency(ids: Array[Long],
+      edges: Array[(Long, Long)]): Array[mutable.BitSet] = {
+    val idx = ids.zipWithIndex.toMap
+    val adj = Array.fill(ids.length)(mutable.BitSet.empty)
+    edges.foreach { case (u, w) =>
       (idx.get(u), idx.get(w)) match {
         case (Some(i), Some(j)) => adj(i) += j; adj(j) += i
         case _ =>
       }
     }
+    adj
+  }
+
+  /** Exact max-clique search on one seed's induced neighborhood.
+    * Returns (bestSize, countAtBest, witness) over cliques that INCLUDE
+    * the seed (size counts the seed); the witness is the lex-min sorted
+    * member list (seed excluded) among the maximum cliques. */
+  private[kernels] def localSearch(
+      nbrs: Array[Long],
+      induced: Array[(Long, Long)]): (Int, Long, Array[Long]) = {
+    val adj = bitAdjacency(nbrs, induced)
     // degree-descending order (reference get_listR)
-    val order = (0 until n).sortBy(i => -adj(i).size)
+    val order = nbrs.indices.sortBy(i => -adj(i).size)
     var best = 1      // the seed alone
     var countAtBest = 1L
-    var witness = Array.empty[Int]
+    var witness = Array.empty[Long]
     def search(r: List[Int], cand: List[Int]): Unit = {
       val size = r.length + 1 // + seed
-      if (size > best) {
-        best = size; countAtBest = 1L; witness = r.toArray
-      } else if (size == best && r.nonEmpty) countAtBest += 1L
+      if (size >= best && r.nonEmpty) {
+        val ids = r.map(nbrs(_)).sorted.toArray
+        if (size > best) { best = size; countAtBest = 1L; witness = ids }
+        else {
+          countAtBest += 1L
+          if (java.util.Arrays.compare(ids, witness) < 0) witness = ids
+        }
+      }
       var cs = cand
       while (cs.nonEmpty) {
         val v = cs.head
@@ -66,11 +82,8 @@ object MaxClique {
       }
     }
     search(Nil, order.toList)
-    (best, countAtBest, witness.map(nbrs(_)))
+    (best, countAtBest, witness)
   }
-
-  final case class SeedResult(seed: Long, size: Int, cliques: Long,
-                              witness: Array[Long])
 
   /** Cheap global lower bound on the max clique size — the reference's
     * cross-seed bound (`apps/maxclique.cpp:358,413`: every task prunes
@@ -91,84 +104,54 @@ object MaxClique {
     val kept = e.filter(col("src") === seed)
       .select(col("dst")).orderBy(col("dst")).limit(cap)
       .collect().map(_.getLong(0))
-    val keptSet = kept.toSet
     val induced = e
       .filter(col("src").isInCollection(kept) &&
         col("dst").isInCollection(kept))
       .select(col("src"), col("dst")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    val adj = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.HashSet[Long]]
-    induced.foreach { case (u, w) =>
-      if (keptSet(u) && keptSet(w)) {
-        adj.getOrElseUpdate(u, scala.collection.mutable.HashSet.empty) += w
-        adj.getOrElseUpdate(w, scala.collection.mutable.HashSet.empty) += u
-      }
-    }
+    val adj = bitAdjacency(kept, induced)
     // greedy: induced-degree desc (get_listR order), keep if adjacent to
     // all chosen so far
-    val order = kept.sortBy(v => (-adj.get(v).map(_.size).getOrElse(0), v))
-    val chosen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    order.foreach { v =>
-      if (chosen.forall(c => adj.get(v).exists(_.contains(c)))) chosen += v
-    }
-    1 + chosen.length // + the seed itself (adjacent to every neighbor)
+    val order = kept.indices.sortBy(i => (-adj(i).size, kept(i)))
+    val chosen = mutable.BitSet.empty
+    order.foreach(i => if (chosen.subsetOf(adj(i))) chosen += i)
+    1 + chosen.size // + the seed itself (adjacent to every neighbor)
   }
 
-  /** Per-seed maximum cliques. Input: canonical undirected edges (src<dst).
+  /** Global result: (max_size, n_cliques_at_max, witness) — A3's
+    * argmax-with-ties shape, over canonical undirected edges (src<dst).
     * Every maximum clique of the graph is found at exactly one seed (its
-    * min-(degree,id) member). Lazy; returns the unpersist hook for the
-    * oriented edge cache (used 4x in the plan — triple self-join +
-    * neighbor agg — so it IS persisted, and [[run]] releases it once the
-    * result is materialized). */
-  def perSeedWithRelease(spark: SparkSession, edges: DataFrame)
-      : (org.apache.spark.sql.Dataset[SeedResult], () => Unit) = {
+    * min-(degree,id) member), by a local search over that seed's task:
+    * its out-neighborhood and the edges it induces
+    * ([[Edges.taskSubgraphs]]). Computed EAGERLY (one row) so both
+    * persisted inputs — the oriented edges, read by the bound, the seed
+    * pruning and both sides of the task pull, and the per-seed results —
+    * are released before return: a long-lived session running many
+    * queries keeps no cached blocks behind. */
+  def run(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
     val e = Edges.orientByDegree(edges).persist()
     // global-bound seed pruning: a seed whose candidate set (out-
     // neighborhood) cannot reach the greedy lower bound hosts neither a
     // maximum clique nor a tie (its best is 1+outdeg < bound <= max), so
-    // it is dropped BEFORE the induced-edge self-join — strictly-less
-    // keeps every possible tie exact
+    // it is dropped BEFORE the task pull — strictly-less keeps every
+    // possible tie exact
     val bound = greedyBound(e)
     val survivors = e.groupBy(col("src").as("seed"))
       .agg(count(lit(1)).as("outdeg"))
       .filter(col("outdeg") + 1 >= bound).select(col("seed"))
     val eS = e.join(survivors.withColumnRenamed("seed", "src")
       .hint("SHUFFLE_HASH"), Seq("src"), "left_semi")
-    // induced edges of each surviving seed's out-neighborhood:
-    // (v,u),(u,w),(v,w) — the middle (u,w) role probes the FULL edge set
-    val ind = eS.as("vu")
-      .join(e.as("uw"), col("vu.dst") === col("uw.src"))
-      .join(eS.as("vw"),
-        col("vw.src") === col("vu.src") && col("vw.dst") === col("uw.dst"))
-      .select(col("vu.src").as("seed"),
-        col("uw.src").as("u"), col("uw.dst").as("w"))
-    val nbrs = eS.groupBy(col("src").as("seed"))
-      .agg(collect_list(col("dst")).as("nbrs"))
-    val grouped = nbrs.join(
-        ind.groupBy("seed").agg(
-          collect_list(col("u")).as("us"),
-          collect_list(col("w")).as("ws")),
-        Seq("seed"), "left")
-      .select(col("seed"), col("nbrs"),
-        coalesce(col("us"), array().cast("array<long>")).as("us"),
-        coalesce(col("ws"), array().cast("array<long>")).as("ws"))
-      .as[(Long, Array[Long], Array[Long], Array[Long])]
-    val ds = grouped.map { case (seed, ns, us, ws) =>
-      val (sz, cnt, wit) = localSearch(ns, us.zip(ws))
-      SeedResult(seed, sz, cnt, seed +: wit)
-    }
-    (ds, () => { e.unpersist(); () })
-  }
-
-  /** Global result: (max_size, n_cliques_at_max, witness) — A3's
-    * argmax-with-ties shape. Computed EAGERLY (one row) so both persisted
-    * inputs are released before return — a long-lived session running many
-    * queries keeps no cached blocks behind. */
-  def run(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val (perDs, release) = perSeedWithRelease(spark, edges)
-    val per = perDs.toDF().persist()
+    // the task's induced edges probe the FULL oriented edge set
+    val per = Edges.taskSubgraphs(
+        eS.select(col("src").as("seed"), col("dst").as("v")), e)
+      .select(col("seed"), col("members.v"), col("edges"))
+      .as[(Long, Array[Long], Array[(Long, Long)])]
+      .map { case (seed, ns, es) =>
+        val (sz, cnt, wit) = localSearch(ns, es)
+        (sz, cnt, seed +: wit)
+      }
+      .toDF("size", "cliques", "witness").persist()
     val mx = per.agg(max(col("size")).as("max_size"))
     val result = per.join(broadcast(mx), col("size") === col("max_size"))
       .agg(max(col("size")).as("max_size"),
@@ -177,7 +160,7 @@ object MaxClique {
     val rows = result.collect().toSeq
     val out = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), result.schema)
-    per.unpersist(); release()
+    per.unpersist(); e.unpersist()
     out
   }
 }

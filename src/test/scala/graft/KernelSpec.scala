@@ -306,16 +306,6 @@ class KernelSpec extends SparkSpec {
   }
 
   test("triangle support equals |N(u) ∩ N(v)|; no cache outlives a call") {
-    // persisted RDDs other than materialized local checkpoints (a call's
-    // result): an oriented-edge cache left behind shows up here
-    def cached(): Set[Int] = spark.sparkContext.getPersistentRDDs
-      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
-    def leavesNoCache[T](what: String)(body: => T): T = {
-      val before = cached()
-      val out = body
-      assert(cached() === before, s"$what left a persisted RDD")
-      out
-    }
     // hub 1 (degree 5) sits above its low-degree neighbors in degree
     // order, so orientation reverses id order on its triangles
     val revHub = (2L to 6L).map(k => (1L, k)) ++ Seq((2L, 3L), (3L, 4L))
@@ -348,6 +338,42 @@ class KernelSpec extends SparkSpec {
       leavesNoCache("Scan.run")(Scan.run(spark, edgeDF(es)).collect())
       leavesNoCache("edgeEmbeddedness")(
         GraphStats.edgeEmbeddedness(edgeDF(es)).collect())
+    }
+  }
+
+  test("task subgraphs equal the brute-force induced subgraph per seed") {
+    import spark.implicits._
+    // "star": seed 1's members {2, 3, 4} induce no edge (2-5 leaves them)
+    val graphs = Map(
+      "er20" -> Oracles.erdosRenyi(20, 0.35, seed = 7),
+      "pl60" -> Oracles.powerLaw(60, seed = 5),
+      "star" -> Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 5L)))
+    graphs.foreach { case (name, es) =>
+      val canon = es.map { case (a, b) => (a min b, a max b) }.distinct
+      // members: each vertex's neighbours, with an attr of the (seed, v)
+      // pair; edges: canonical, with a weight attr
+      val members = canon.flatMap(e => Seq(e, e.swap))
+        .map { case (s, v) => (s, v, s"$s>$v") }
+      val weighted = canon.map { case (u, v) => (u, v, (31 * u + v) / 4.0) }
+      val tasks = Edges.taskSubgraphs(members.toDF("seed", "v", "tag"),
+        weighted.toDF("src", "dst", "w"))
+      assert(tasks.filter(col("edges").isNull).count() === 0L,
+        s"graph=$name: a null edge list")
+      val got = tasks.as[(Long, Seq[(Long, String)],
+        Seq[(Long, Long, Double)])].collect()
+      val expect = members.groupBy(_._1).map { case (s, ms) =>
+        val vs = ms.map(_._2).toSet
+        s -> (ms.map(m => (m._2, m._3)).sortBy(_._1),
+          weighted.filter(e => vs(e._1) && vs(e._2)).sorted)
+      }
+      assert(got.map(_._1).sorted.toSeq === expect.keys.toSeq.sorted,
+        s"graph=$name seeds")
+      got.foreach { case (s, ms, ies) =>
+        assert(ms === expect(s)._1, s"graph=$name seed=$s members")
+        assert(ies.sorted === expect(s)._2, s"graph=$name seed=$s edges")
+      }
+      if (name == "star")
+        assert(got.find(_._1 == 1L).map(_._3) === Some(Seq.empty))
     }
   }
 

@@ -20,22 +20,37 @@ class MiningSpec extends SparkSpec {
 
   // ---- brute-force oracles ----
 
-  /** (maxCliqueSize, #cliques at that size) by subset enumeration. */
-  private def cliqueOracle(es: Seq[(Long, Long)]): (Int, Long) = {
+  /** (maxCliqueSize, #cliques at that size, lex-min sorted member list
+    * among them) by subset enumeration — q31's oracle semantics. */
+  private def cliqueOracle(es: Seq[(Long, Long)]): (Int, Long, Seq[Long]) = {
+    import scala.math.Ordering.Implicits._
     val adj = (es ++ es.map(_.swap)).groupBy(_._1)
       .view.mapValues(_.map(_._2).toSet).toMap
     val verts = adj.keys.toSeq.sorted
-    var best = 1; var cnt = 0L
+    var best = 1; var cnt = 0L; var wit = Seq.empty[Long]
     def rec(chosen: List[Long], rest: List[Long]): Unit = rest match {
       case Nil =>
-        if (chosen.size > best) { best = chosen.size; cnt = 1 }
-        else if (chosen.size == best && best > 1) cnt += 1
+        val members: Seq[Long] = chosen.reverse // ascending: verts in order
+        if (chosen.size > best) { best = chosen.size; cnt = 1; wit = members }
+        else if (chosen.size == best && best > 1) {
+          cnt += 1
+          if (members < wit) wit = members
+        }
       case v :: tail =>
         if (chosen.forall(adj.getOrElse(v, Set.empty))) rec(v :: chosen, tail)
         rec(chosen, tail)
     }
     rec(Nil, verts.toList)
-    (best, cnt)
+    (best, cnt, wit)
+  }
+
+  /** `body`'s lines on System.err that start with `prefix`. */
+  private def stderrLines(prefix: String)(body: => Unit): Seq[String] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try body finally System.setErr(saved)
+    buf.toString("UTF-8").linesIterator.filter(_.startsWith(prefix)).toSeq
   }
 
   /** Count labeled simple paths (pairwise-distinct) by enumeration. */
@@ -74,19 +89,33 @@ class MiningSpec extends SparkSpec {
   // ---- tests ----
 
   test("max clique matches subset-enumeration oracle") {
+    // "twoRoots": seed 1 roots four triangles through its candidates 2..7
+    // (edges 2-3, 4-5, 4-6, 5-7); 4 and 5 have the higher induced degree,
+    // so a search in degree-descending order meets {1,4,5} before the
+    // lex-min {1,2,3}. Pendant leaves lift every candidate to degree 6,
+    // which makes 1 the minimum (degree, id) member of all four.
+    val roots = (2L to 7L).map(v => (1L, v)) ++
+      Seq((2L, 3L), (4L, 5L), (4L, 6L), (5L, 7L))
+    val rootDeg = (roots ++ roots.map(_.swap)).groupBy(_._1)
+      .view.mapValues(_.size)
     val graphs = Map(
+      "twoRoots" -> (roots ++ (2L to 7L).flatMap(v =>
+        (0 until 6 - rootDeg(v)).map(i => (v, 100L + 10 * v + i)))),
       "k4" -> Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)),
       "bowtie" -> Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (3L, 5L)),
       "sample15" -> Oracles.sample15,
       "er" -> Oracles.erdosRenyi(30, 0.3, seed = 4),
       "plaw" -> Oracles.powerLaw(60, seed = 6))
     graphs.foreach { case (name, es) =>
-      val (sz, cnt) = cliqueOracle(es)
-      val r = MaxClique.run(spark, edgeDF(es)).head()
+      val (sz, cnt, lexMin) = cliqueOracle(es)
+      val r = leavesNoCache(s"MaxClique.run($name)") {
+        MaxClique.run(spark, edgeDF(es)).head()
+      }
       assert(r.getInt(0) === sz, s"graph=$name size")
       assert(r.getLong(1) === cnt, s"graph=$name count")
-      // witness really is a clique of that size
+      // witness really is a clique of that size, the lex-min one
       val wit = r.getSeq[Long](2)
+      assert(wit === lexMin, s"graph=$name witness")
       val eset = es.map(e => (math.min(e._1, e._2), math.max(e._1, e._2))).toSet
       assert(wit.size === sz, s"graph=$name witness size")
       for (i <- wit.indices; j <- (i + 1) until wit.size)
@@ -309,9 +338,11 @@ class MiningSpec extends SparkSpec {
       val best = cs.filter(_.size == maxSz).min // numeric element-wise lex
       (best.mkString(","), best.size)
     }.toSet
-    val got = graft.kernels.Community.run(spark,
-        va.select(col("src").as("vid"), col("attrs")), edges, k)
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSet
+    val got = leavesNoCache("Community.run") {
+      graft.kernels.Community.run(spark,
+          va.select(col("src").as("vid"), col("attrs")), edges, k)
+        .collect().map(r => (r.getString(0), r.getInt(1))).toSet
+    }
     assert(got === expect)
     assert(got.nonEmpty)
     va.unpersist()
@@ -334,8 +365,10 @@ class MiningSpec extends SparkSpec {
     w += ((11L, 12L, 5.0))
     val edges = w.result().toDF("src", "dst", "weight")
     val p = FocusCluster.Params(minWeight = 5.0, minCore = 5)
-    val got = FocusCluster.run(spark, edges, p).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+    val got = leavesNoCache("FocusCluster.run") {
+      FocusCluster.run(spark, edges, p).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+    }
     // seeds 1-5 converge on A+20 (seeds 4/5 discover 20 by expansion and
     // record 11 as the struct-best outlier; the cluster-keyed union merges
     // them); seeds 6-10 keep clique B with no outliers
@@ -349,7 +382,7 @@ class MiningSpec extends SparkSpec {
       "er" -> Oracles.erdosRenyi(30, 0.3, seed = 4),
       "plaw" -> Oracles.powerLaw(60, seed = 6))
     graphs.foreach { case (name, es) =>
-      val (sz, _) = cliqueOracle(es)
+      val (sz, _, _) = cliqueOracle(es)
       val e = Edges.orientByDegree(es.toDF("src", "dst"))
       val bound = MaxClique.greedyBound(e)
       assert(bound >= 2, s"graph=$name bound $bound not useful")
@@ -372,11 +405,20 @@ class MiningSpec extends SparkSpec {
     def clusters(maxBall: Int) = FocusCluster.run(spark, edges,
         FocusCluster.Params(minWeight = 5.0, minCore = 5, maxBall = maxBall))
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+    def logged(maxBall: Int) = stderrLines("[FocusCluster]")(clusters(maxBall))
     val uncapped = clusters(100000)
     assert(uncapped === Set(("1,2,3,4,5", "", 5)))
     assert(clusters(2) === uncapped, "tight cap must not change the answer")
     // extensions fully dropped: the pipeline still completes on core alone
     assert(clusters(0) === uncapped)
+    // each of the five seeds' balls holds the 200 satellites; the cap's
+    // drop count is reported once per run, and not when nothing drops
+    def line(maxBall: Int, n: Int) = s"[FocusCluster] ball cap " +
+      s"maxBall=$maxBall dropped $n extension vertices " +
+      "(weakest-weight first, deterministic)"
+    assert(logged(100000) === Seq.empty)
+    assert(logged(2) === Seq(line(2, 5 * 198)))
+    assert(logged(0) === Seq(line(0, 5 * 200)))
   }
 
   test("GC seed/core stage (q68) matches direct strong-neighbor computation") {

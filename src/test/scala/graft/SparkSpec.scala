@@ -24,6 +24,18 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
 
+  /** Runs `body` and asserts that it leaves no persisted RDD behind,
+    * other than materialized local checkpoints (a call's result): a
+    * kernel cache left behind by `body` shows up here. */
+  def leavesNoCache[T](what: String)(body: => T): T = {
+    def cached(): Set[Int] = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+    val before = cached()
+    val out = body
+    assert(cached() === before, s"$what left a persisted RDD")
+    out
+  }
+
   /** Canonical (src < dst) edge DataFrame from a literal edge list. */
   def edgeDF(edges: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
