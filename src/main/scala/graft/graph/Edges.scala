@@ -105,7 +105,7 @@ object Edges {
 
   /** G-Miner's task pull (`core/task.hpp:41-51`): per seed, its candidate
     * set and the subgraph those candidates induce — the input of every
-    * per-seed local search (MCF, CD, GC; J4 in SURVEY §2.8).
+    * per-seed local search (MCF, CD, GC; J4 in SURVEY §2.3).
     *
     * Plan: the membership pull `members ⋈ edges on v = src ⋈ members on
     * (seed, dst = v)` (both ends of an edge must be members of the same

@@ -107,14 +107,12 @@ object FocusCluster {
     }
     recompute()
     val outlier = scala.collection.mutable.TreeSet.empty[Long]
-    var initPhi = Double.NaN
+    var initPhi = phiW
     var iterRound = 0 // counts contract-continue cycles (ITER_ROUND_MAX)
-    var first = true
     var done = false
     while (!done) {
       val cur = phiW
       if (cur < 0) return None // wVol == 0 — reference clears and finishes
-      if (first) { initPhi = cur; first = false }
       val curS = phiS
       // expand_once: argmin phi-diff over candidates (weighted & struct)
       var bwNode = -1L; var bwDiff = 0.0
@@ -251,7 +249,8 @@ object FocusCluster {
       .select(col("seed"), col("v"), col("wdeg"), col("deg"), col("core"))
       .persist()
     ball.count() // materializes the ball; its job observes the drop count
-    val n = dropped.get("n").asInstanceOf[Long]
+    // absent when adaptive execution prunes an empty extension branch
+    val n = dropped.get.getOrElse("n", 0L).asInstanceOf[Long]
     if (n > 0)
       System.err.println(
         s"[FocusCluster] ball cap maxBall=${p.maxBall} dropped $n " +

@@ -421,6 +421,22 @@ class MiningSpec extends SparkSpec {
     assert(logged(0) === Seq(line(0, 5 * 200)))
   }
 
+  test("GC with no qualifying seed or no edge returns no cluster") {
+    import graft.kernels.FocusCluster
+    // every weight below minWeight: no core, so no ball and no task; the
+    // run must finish even when no drop count is observed
+    val weak = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 1.0))
+      .toDF("src", "dst", "weight")
+    val none = Seq.empty[(Long, Long, Double)].toDF("src", "dst", "weight")
+    for ((name, es) <- Seq("weak" -> weak, "empty" -> none)) {
+      val got = leavesNoCache(s"FocusCluster.run graph=$name") {
+        FocusCluster.run(spark, es, FocusCluster.Params(minWeight = 5.0,
+          minCore = 2, maxBall = 0)).collect()
+      }
+      assert(got.isEmpty, s"graph=$name")
+    }
+  }
+
   test("GC seed/core stage (q68) matches direct strong-neighbor computation") {
     import graft.kernels.FocusCluster
     val wedges = Seq((1L, 2L, 3.0), (1L, 3L, 1.0), (2L, 3L, 2.0),
