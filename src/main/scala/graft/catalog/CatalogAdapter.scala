@@ -1,7 +1,9 @@
 package graft.catalog
 
+import graft.Json.mapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 /** Thin table-catalog seam (SURVEY §7.4.2).
@@ -10,19 +12,23 @@ import scala.jdk.CollectionConverters._
   * iteration checkpoints, metrics) lives in an Iceberg catalog:
   * `spark.table(name)` / `df.writeTo(name).createOrReplace()/append()`,
   * with snapshot ids giving incremental derivation and time travel. No
-  * Iceberg jars exist in this offline sandbox, so the same five-method
-  * contract is implemented over parquet directories with an atomic
-  * rename-commit and a `_snapshots.jsonl` log — semantically the subset of
-  * Iceberg the engine relies on (atomic replace, append as new snapshot,
-  * read-latest, list-snapshots). Swapping in Iceberg is a one-class change;
-  * nothing else in the engine touches storage paths.
+  * Iceberg jars exist in this offline sandbox, so the same contract is
+  * implemented over parquet directories with an atomic rename-commit and
+  * a `_snapshots.jsonl` log whose lines carry each snapshot's schema, as
+  * Iceberg's table metadata does — the subset of Iceberg the engine relies
+  * on. Iteration checkpoints are snapshots here (`engine.Checkpointer`),
+  * so swapping in Iceberg is a one-class change; no other engine module
+  * commits durable state.
   */
 trait CatalogAdapter {
-  def createOrReplace(name: String, df: DataFrame): Long
+  /** `summary`: kept with the snapshot, as Iceberg's summary properties. */
+  def createOrReplace(name: String, df: DataFrame,
+                      summary: Map[String, String] = Map.empty): Long
   def append(name: String, df: DataFrame): Long
   def read(spark: SparkSession, name: String): DataFrame
   def readSnapshot(spark: SparkSession, name: String, snapshot: Long): DataFrame
   def snapshots(name: String): Seq[Long]
+  def summary(name: String, snapshot: Long): Map[String, String]
 
   /** Iceberg-style DELETE: commit a NEW snapshot holding the current rows
     * that do NOT match `cond`; prior snapshots stay time-travelable. This
@@ -70,27 +76,45 @@ trait CatalogAdapter {
 
 /** Parquet + snapshot-log implementation (local stand-in for Iceberg). */
 final class LocalCatalog(root: String) extends CatalogAdapter {
-  Files.createDirectories(Paths.get(root))
+  import LocalCatalog._
 
   private def tableDir(name: String): Path = Paths.get(root, name)
-  private def log(name: String): Path = tableDir(name).resolve("_snapshots.jsonl")
+  private def snapDir(name: String, snap: Long): Path =
+    tableDir(name).resolve(f"snap_$snap%06d")
+  private def logPath(name: String): Path =
+    tableDir(name).resolve("_snapshots.jsonl")
   private def refLog(name: String): Path = tableDir(name).resolve("_refs.jsonl")
 
-  private def commit(name: String, df: DataFrame,
-                     parents: Seq[Long],
+  /** The snapshot log, commit order: the table's only commit record. */
+  private def log(name: String): Seq[Snapshot] =
+    if (!Files.exists(logPath(name))) Seq.empty
+    else Files.readAllLines(logPath(name)).asScala.toSeq.map(parse)
+
+  /** An append extends the chain of snapshot `head`. */
+  private def commit(name: String, df: DataFrame, head: Option[Long],
+                     summary: Map[String, String] = Map.empty,
                      advance: Option[String] = None): Long = {
     val dir = tableDir(name)
     Files.createDirectories(dir)
-    val snap = snapshots(name).maxOption.getOrElse(0L) + 1L
+    val snaps = log(name)
+    val parents = head.toSeq.flatMap(chain(snaps, _))
+    // an append may add columns, never change one's type: fail before
+    // anything is written, so the table still reads
+    chainSchema(parents.map(_.schema) :+ df.schema)
+    val snap = snaps.map(_.id).maxOption.getOrElse(0L) + 1L
     val tmp = dir.resolve(f"_tmp_$snap%06d")
     df.write.mode("overwrite").parquet(tmp.toString)
-    val dst = dir.resolve(f"snap_$snap%06d")
+    val dst = snapDir(name, snap)
+    // an orphan: renamed into place by a commit whose log line never
+    // landed, so no reader sees it
+    deleteTree(dst)
     Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+    // per-partition lineage: the committed part files ARE the partitions
+    val files = dst.toFile.list().count(_.startsWith("part-"))
+    val line = Snapshot(snap, parents.map(_.id), files, df.schema.json, summary)
     // the log line is the commit point (written last, append-only)
-    val line = s"""{"snapshot":$snap,"parents":[${parents.mkString(",")}]}"""
-    Files.write(log(name), java.util.List.of(line),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    Files.write(logPath(name), java.util.List.of(line.json),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     // branch bookkeeping: a main-line commit on a branched table advances
     // "main"; a branch commit advances only its own ref. Unbranched
     // tables never touch the ref log — legacy behavior is bit-identical.
@@ -112,8 +136,7 @@ final class LocalCatalog(root: String) extends CatalogAdapter {
   private def writeRef(name: String, ref: String, snap: Long): Unit =
     Files.write(refLog(name),
       java.util.List.of(s"""{"ref":"$ref","snapshot":$snap}"""),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
 
   /** Current ref heads (empty for never-branched tables). */
   def refs(name: String): Map[String, Long] =
@@ -148,7 +171,7 @@ final class LocalCatalog(root: String) extends CatalogAdapter {
   def appendTo(name: String, ref: String, df: DataFrame): Long = {
     val head = refs(name).getOrElse(validRef(ref),
       sys.error(s"unknown ref $ref for table $name"))
-    commit(name, df, parentsOf(name, head) :+ head, advance = Some(ref))
+    commit(name, df, Some(head), advance = Some(ref))
   }
 
   /** Read a named ref's head (time travel by branch). */
@@ -156,19 +179,17 @@ final class LocalCatalog(root: String) extends CatalogAdapter {
     readSnapshot(spark, name, refs(name).getOrElse(ref,
       sys.error(s"unknown ref $ref for table $name")))
 
-  override def createOrReplace(name: String, df: DataFrame): Long =
-    commit(name, df, Seq.empty)
+  override def createOrReplace(name: String, df: DataFrame,
+                               summary: Map[String, String]): Long =
+    commit(name, df, None, summary)
 
   /** Append = new snapshot whose lineage is the current MAIN-LINE head's
     * chain (its parents + itself) — not every prior snapshot, which would
     * union replaced-away data back in after a createOrReplace. On a
     * branched table the main line is the "main" ref (the latest snapshot
     * may be a branch commit); otherwise it is the latest snapshot. */
-  override def append(name: String, df: DataFrame): Long = {
-    val head = refs(name).get("main").orElse(snapshots(name).maxOption)
-    val parents = head.map(h => parentsOf(name, h) :+ h).getOrElse(Seq.empty)
-    commit(name, df, parents)
-  }
+  override def append(name: String, df: DataFrame): Long =
+    commit(name, df, refs(name).get("main").orElse(snapshots(name).maxOption))
 
   override def read(spark: SparkSession, name: String): DataFrame =
     // a branched table's default read follows the "main" ref (branch
@@ -182,34 +203,21 @@ final class LocalCatalog(root: String) extends CatalogAdapter {
         readSnapshot(spark, name, snaps.max)
     }
 
-  /** Recorded parent chain of a snapshot. */
-  private def parentsOf(name: String, snapshot: Long): Seq[Long] =
-    Files.readAllLines(log(name)).asScala.flatMap { l =>
-      val m = """"snapshot":(\d+),"parents":\[([0-9,]*)\]""".r
-        .findFirstMatchIn(l)
-      m.filter(_.group(1).toLong == snapshot)
-        .map(_.group(2).split(",").filter(_.nonEmpty).map(_.toLong).toSeq)
-    }.headOption.getOrElse(Seq.empty)
-
   /** A snapshot's content = its own files plus (for appends) its parents'.
-    * `mergeSchema` gives Iceberg-style ADD COLUMN evolution: an append
-    * whose schema has extra columns widens the table and back-fills prior
-    * rows with null on read (real Iceberg resolves the schema from table
-    * metadata instead of file footers; this local stand-in pays one
-    * footer read per file, fine at its scale). */
+    * The schema comes from the log, as Iceberg's comes from table metadata:
+    * ADD COLUMN evolution widens the table and back-fills prior rows with
+    * null, and no Spark job reads a file footer. */
   override def readSnapshot(spark: SparkSession, name: String,
                             snapshot: Long): DataFrame = {
-    val dirs = (parentsOf(name, snapshot) :+ snapshot).distinct.sorted
-      .map(s => tableDir(name).resolve(f"snap_$s%06d").toString)
-    spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    val snaps = chain(log(name), snapshot)
+    spark.read.schema(chainSchema(snaps.map(_.schema)))
+      .parquet(snaps.map(s => snapDir(name, s.id).toString): _*)
   }
 
-  override def snapshots(name: String): Seq[Long] =
-    if (!Files.exists(log(name))) Seq.empty
-    else Files.readAllLines(log(name)).asScala.toSeq
-      .flatMap(l => """"snapshot":(\d+)""".r.findFirstMatchIn(l)
-        .map(_.group(1).toLong))
-      .filter(s => Files.exists(tableDir(name).resolve(f"snap_$s%06d")))
+  override def snapshots(name: String): Seq[Long] = log(name).map(_.id)
+
+  override def summary(name: String, snapshot: Long): Map[String, String] =
+    chain(log(name), snapshot).last.summary
 
   /** Iceberg-style expire_snapshots (table maintenance): drop history
     * older than the newest `keep` snapshots, RETAINING any snapshot a
@@ -222,26 +230,67 @@ final class LocalCatalog(root: String) extends CatalogAdapter {
     * now fails, kept ids are untouched. Returns expired ids. */
   def expireSnapshots(name: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least the latest snapshot")
-    val snaps = snapshots(name).sorted
+    val snaps = log(name)
     // ref heads are GC roots exactly like the newest snapshots (Iceberg
     // retains any snapshot a branch still points at)
-    val roots = snaps.takeRight(keep).toSet ++ refs(name).values
-    val kept = roots ++ roots.flatMap(s => parentsOf(name, s))
-    val expired = snaps.filterNot(kept)
+    val roots = snaps.map(_.id).takeRight(keep).toSet ++ refs(name).values
+    val kept = roots.flatMap(chain(snaps, _).map(_.id))
+    val (live, expired) = snaps.partition(s => kept(s.id))
     if (expired.nonEmpty) {
-      val lines = Files.readAllLines(log(name)).asScala.filter { l =>
-        """"snapshot":(\d+)""".r.findFirstMatchIn(l)
-          .exists(m => kept(m.group(1).toLong))
-      }
-      Files.write(log(name), lines.asJava,
-        java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-      expired.foreach { s =>
-        val dir = tableDir(name).resolve(f"snap_$s%06d")
-        if (Files.exists(dir))
-          Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => Files.delete(p))
+      Files.write(logPath(name), live.map(_.json).asJava,
+        StandardOpenOption.TRUNCATE_EXISTING)
+      expired.foreach(s => deleteTree(snapDir(name, s.id)))
+    }
+    expired.map(_.id)
+  }
+}
+
+object LocalCatalog {
+  /** One snapshot-log line: the snapshot's parents, its part-file count,
+    * the schema its files were written with and the caller's summary. */
+  private final case class Snapshot(id: Long, parents: Seq[Long],
+                                    files: Int, schemaJson: String,
+                                    summary: Map[String, String]) {
+    // parsed only for the snapshots a read or an append's check touches
+    lazy val schema: StructType =
+      DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    def json: String =
+      s"""{"snapshot":$id,"parents":[${parents.mkString(",")}],""" +
+        s""""files":$files,"schema":$schemaJson,"summary":""" +
+        mapper.writeValueAsString(summary.asJava) + "}"
+  }
+
+  /** A snapshot's read chain, oldest first: its parents, then itself. */
+  private def chain(snaps: Seq[Snapshot], snapshot: Long): Seq[Snapshot] = {
+    val byId = snaps.map(s => s.id -> s).toMap
+    (byId(snapshot).parents :+ snapshot).distinct.sorted.map(byId)
+  }
+
+  private def parse(line: String): Snapshot = {
+    val j = mapper.readTree(line)
+    Snapshot(j.get("snapshot").asLong,
+      j.get("parents").iterator().asScala.map(_.asLong).toSeq,
+      j.get("files").asInt,
+      j.get("schema").toString,
+      mapper.convertValue(j.get("summary"),
+        classOf[java.util.Map[String, String]]).asScala.toMap)
+  }
+
+  /** A chain's read schema: fields in first-appearance order, a field
+    * added by a later snapshot nullable; throws on a type change. */
+  private def chainSchema(schemas: Seq[StructType]): StructType =
+    schemas.tail.flatten.foldLeft(schemas.head) { (a, f) =>
+      a.find(_.name == f.name) match {
+        case Some(g) =>
+          require(g.dataType.catalogString == f.dataType.catalogString,
+            s"column ${f.name}: ${f.dataType.catalogString} conflicts " +
+              s"with the table's ${g.dataType.catalogString}")
+          a
+        case None => a.add(f.copy(nullable = true))
       }
     }
-    expired
-  }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) scala.util.Using.resource(Files.walk(p))(
+      _.sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_)))
 }

@@ -1,7 +1,8 @@
 package graft.engine
 
 import graft.Json
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import graft.catalog.{CatalogAdapter, LocalCatalog}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -10,11 +11,11 @@ import scala.jdk.CollectionConverters._
   * Mirrors the reference's pause/resume protocol (`core/master.tpp:30-110`:
   * a resume file is detected and the computation continues from durable
   * state; commit-by-rename at `core/master.tpp:104-109`) at the table layer:
-  * every superstep writes `state_<iter>` as parquet into a temp dir, then
-  * atomically renames it into place and appends a manifest line LAST — a
-  * crash between the two leaves the previous iteration as the resume point.
-  * At production scale the same API maps onto Iceberg snapshot commits
-  * (SURVEY §7.4.2); locally it is parquet + `_manifest.json`.
+  * every superstep commits its state as a snapshot of catalog table
+  * `runId` under `root`, its iteration in the snapshot summary. The
+  * catalog renames the snapshot into place and appends its log line LAST,
+  * so a crash between the two leaves the previous commit as the resume
+  * point; a resume continues the most recent commit.
   *
   * Checkpointing also truncates plan lineage: each iteration re-reads its
   * state from disk, so the logical plan stays O(1) across thousands of
@@ -22,39 +23,14 @@ import scala.jdk.CollectionConverters._
   * `core/priority_queue.tpp`).
   */
 final class Checkpointer(val root: String, val runId: String) {
-  private def runDir: Path = Paths.get(root, runId)
-  private def manifest: Path = runDir.resolve("_manifest.jsonl")
-  Files.createDirectories(runDir)
-
-  private def stateDir(iter: Int): Path = runDir.resolve(f"state_$iter%05d")
+  private val catalog: CatalogAdapter = new LocalCatalog(root)
+  private val metricsLog = Paths.get(root, runId, "_metrics.jsonl")
 
   /** Commit one iteration's state; returns the re-read (lineage-truncated)
-    * DataFrame. */
-  def commit(spark: SparkSession, state: DataFrame, iter: Int): DataFrame = {
-    val tmp = runDir.resolve(f"_tmp_state_$iter%05d")
-    deleteRecursively(tmp)
-    state.write.mode("overwrite").parquet(tmp.toString)
-    val dst = stateDir(iter)
-    deleteRecursively(dst)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    // per-partition lineage: the committed part files ARE the partitions;
-    // record their count so the manifest describes the physical layout
-    // (stream closed explicitly — it holds an open directory handle)
-    val listing = Files.list(dst)
-    val nParts =
-      try listing.iterator().asScala
-        .count(_.getFileName.toString.startsWith("part-"))
-      finally listing.close()
-    val line = s"""{"iter":$iter,"path":${Json.quote(dst.toString)},""" +
-      s""""partitions":$nParts}"""
-    Files.write(manifest,
-      java.util.List.of(line),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    // the schema is the written one: passing it skips the Spark job that
-    // infers it from a part-file footer on every commit
-    spark.read.schema(state.schema).parquet(dst.toString)
-  }
+    * DataFrame, read with its recorded schema (no job infers it). */
+  def commit(spark: SparkSession, state: DataFrame, iter: Int): DataFrame =
+    catalog.readSnapshot(spark, runId,
+      catalog.createOrReplace(runId, state, Map("iter" -> iter.toString)))
 
   /** Durably record one iteration's metrics next to its checkpoint
     * (`_metrics.jsonl`) — the north rule's "iteration/shuffle metrics
@@ -64,37 +40,20 @@ final class Checkpointer(val root: String, val runId: String) {
       s""""run":${Json.quote(m.runId)},"iter":${m.iter},""" +
       s""""rows":${m.rows},"delta":${m.delta},"wall_ms":${m.wallMs},""" +
       s""""shuffle_read":${m.shuffleReadBytes},"shuffle_write":${m.shuffleWriteBytes}}"""
-    Files.write(runDir.resolve("_metrics.jsonl"),
-      java.util.List.of(line),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    Files.write(metricsLog, java.util.List.of(line),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
   /** Recorded metrics lines (raw JSON), commit order. */
-  def recordedMetrics(): Seq[String] = {
-    val p = runDir.resolve("_metrics.jsonl")
-    if (!Files.exists(p)) Seq.empty
-    else Files.readAllLines(p).asScala.toSeq
-  }
+  def recordedMetrics(): Seq[String] =
+    if (!Files.exists(metricsLog)) Seq.empty
+    else Files.readAllLines(metricsLog).asScala.toSeq
 
-  /** Latest committed iteration, if any — the resume point. */
+  /** The most recent commit and its iteration, if any — the resume
+    * point. */
   def latest(spark: SparkSession): Option[(Int, DataFrame)] =
-    if (!Files.exists(manifest)) None
-    else {
-      val iters = Files.readAllLines(manifest).asScala
-        .flatMap { l =>
-          """"iter":(\d+)""".r.findFirstMatchIn(l).map(_.group(1).toInt)
-        }
-        .filter(i => Files.exists(stateDir(i)))
-      if (iters.isEmpty) None
-      else {
-        val i = iters.max
-        Some((i, spark.read.parquet(stateDir(i).toString)))
-      }
-    }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    catalog.snapshots(runId).maxOption.map { s =>
+      (catalog.summary(runId, s)("iter").toInt,
+        catalog.readSnapshot(spark, runId, s))
     }
 }

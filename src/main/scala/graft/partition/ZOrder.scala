@@ -30,16 +30,6 @@ object ZOrder {
       xb.bitwiseOR(yb)
     }.reduce(_ bitwiseOR _)
 
-  /** Range-partitioned Z-order layout of an edge table: rows ordered and
-    * partitioned by the curve key. `repartitionByRange` samples the key
-    * distribution, so files get balanced row counts whatever the graph's
-    * skew — the standard OPTIMIZE ZORDER shape. */
-  def layout(edges: DataFrame, partitions: Int, bits: Int = 16): DataFrame =
-    edges
-      .withColumn("z", zValue(col("src"), col("dst"), bits))
-      .repartitionByRange(partitions, col("z"))
-      .sortWithinPartitions(col("z"))
-
   /** Curve-bucket census: per top-level Z bucket (the key's high bits —
     * i.e. the square tiles of the (src, dst) plane), edge count and the
     * distinct-vertex spread in each role. The locality evidence: compact

@@ -419,7 +419,7 @@ object GraphQueries {
          |          (SELECT w FROM wz)""".stripMargin)),
 
     // S7 in the driver path: run CC for 2 supersteps against a durable
-    // checkpoint, then a FRESH run resumes from the manifest and finishes —
+    // checkpoint, then a FRESH run resumes from the last commit and finishes —
     // final components must equal the uninterrupted q08 fixpoint
     Q("q44_resume", (s, d) => {
       val root = scratchDir("graft_ckpt")

@@ -69,7 +69,8 @@ class BenchSpec extends AnyFunSuite {
     ("none", Record("/root/testdata/sf0.1", 2700, 32,
       legs = Map(2 -> Leg(big, Vector(19.0, 18.5)),
         8 -> Leg(big, Vector(5.0, 5.25)))), 300.25),
-    // a 4-core run: N = 4N / 4 = 1 = base, so the headline pair is (1, 1)
+    // a 4-core run: the headline pair is (1, 4), and the saturated pair
+    // (4N / 4, 4N) is the same one, so it is not drawn twice
     ("failed_query", Record("/root/testdata/sf0.001", 2700, 4,
       legs = Map(1 -> Leg(98765L, Vector(0.812, 0.9, 0.85)),
         4 -> Leg(98765L, Vector(0.33, 0.31, 0.35))),

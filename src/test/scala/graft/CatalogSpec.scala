@@ -106,6 +106,48 @@ class CatalogSpec extends SparkSpec {
       === Array("id", "lang"))
   }
 
+  test("a catalog read runs no Spark job: its schema comes from the log") {
+    val cat = new LocalCatalog(
+      Files.createTempDirectory("graft-catalog-jobs").toString)
+    cat.createOrReplace("t", Seq((1L, "a")).toDF("id", "lang"))
+    cat.append("t", Seq((2L, 7L, "b")).toDF("id", "quality", "lang"))
+    val (jobs, df) = graft.tools.QProbe.countJobs(spark)(cat.read(spark, "t"))
+    assert(jobs === 0)
+    // fields in first-appearance order; the added one is nullable
+    assert(df.columns === Array("id", "lang", "quality"))
+    assert(df.schema("quality").nullable)
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1),
+      Option(r.get(2)))).sortBy(_._1) ===
+      Array((1L, "a", None), (2L, "b", Some(7L))))
+  }
+
+  test("an append that changes a column's type fails; the table still reads") {
+    val cat = new LocalCatalog(
+      Files.createTempDirectory("graft-catalog-type").toString)
+    val s1 = cat.createOrReplace("t", Seq((1L, "a")).toDF("id", "lang"))
+    intercept[IllegalArgumentException](
+      cat.append("t", Seq(("2", "b")).toDF("id", "lang")))
+    assert(cat.snapshots("t") === Seq(s1))
+    assert(cat.read(spark, "t").collect().map(_.getLong(0)) === Array(1L))
+  }
+
+  test("an orphan snapshot dir is not read and does not block the next commit") {
+    val root = Files.createTempDirectory("graft-catalog-orphan")
+    val cat = new LocalCatalog(root.toString)
+    cat.createOrReplace("t", Seq(1L, 2L).toDF("x"))
+    cat.append("t", Seq(3L).toDF("x"))
+    // snapshot 1's files renamed into place as snapshot 3 by a commit
+    // whose log line never landed
+    val orphan = Files.createDirectory(root.resolve("t/snap_000003"))
+    Files.list(root.resolve("t/snap_000001")).forEach(f =>
+      Files.copy(f, orphan.resolve(f.getFileName)))
+    assert(cat.read(spark, "t").collect().map(_.getLong(0)).sorted
+      === Array(1L, 2L, 3L))
+    assert(cat.append("t", Seq(4L).toDF("x")) === 3L)
+    assert(cat.read(spark, "t").collect().map(_.getLong(0)).sorted
+      === Array(1L, 2L, 3L, 4L))
+  }
+
   test("append after replace keeps the fresh lineage (no resurrection)") {
     val cat = new LocalCatalog(
       Files.createTempDirectory("graft-catalog3").toString)

@@ -3,7 +3,7 @@ package graft
 import graft.engine.{Checkpointer, IterationMetric}
 import graft.graph.Edges
 import graft.kernels.{ConnectedComponents, LabelPropagation, PageRank}
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** North-rule resume requirement: kill after iteration k, resume from the
@@ -16,6 +16,14 @@ class ResumeSpec extends SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft-ckpt").toString
 
+  private def components(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The run's snapshot-log lines, parsed, commit order. */
+  private def snapshotLog(root: String, runId: String) =
+    Files.readAllLines(Paths.get(root, runId, "_snapshots.jsonl")).asScala
+      .map(Json.mapper.readTree(_)).toSeq
+
   test("CC: interrupted-then-resumed equals straight run (exact)") {
     val sym = Edges.symmetrize(edgeDF(Oracles.sample15))
     val straight = ConnectedComponents.run(spark, sym)
@@ -26,7 +34,7 @@ class ResumeSpec extends SparkSpec {
     val partial = ConnectedComponents.run(spark, sym, maxIter = 2,
       ckpt = Some(new Checkpointer(root, "cc-run")))
     assert(!partial.converged)
-    // new driver resumes from the manifest's latest committed iteration
+    // new driver resumes from the most recent committed snapshot
     val resumed = ConnectedComponents.run(spark, sym,
       ckpt = Some(new Checkpointer(root, "cc-run")), resume = true)
     assert(resumed.converged)
@@ -100,12 +108,13 @@ class ResumeSpec extends SparkSpec {
       got.foreach { case (v, x) =>
         assert(math.abs(x - straight(v)) <= 1e-12, s"$name vid=$v")
       }
-      val manifest = java.nio.file.Paths.get(root, name, "_manifest.jsonl")
-      assert(Files.exists(manifest), name)
-      val lines = Files.readAllLines(manifest)
-      assert(lines.size() === iterations + 1, name) // init + each superstep
+      // one snapshot per committed state (init + each superstep), its
+      // iteration in the snapshot summary
+      val log = snapshotLog(root, name)
+      assert(log.map(_.get("summary").get("iter").asText.toInt) ===
+        (0 to iterations), name)
       // per-partition lineage: every committed state records its part count
-      lines.forEach(l => assert(l.contains("\"partitions\":"), l))
+      log.foreach(j => assert(j.get("files").asInt >= 1, j.toString))
       // metrics observed per superstep: rows, wall, shuffle bytes
       assert(metrics.nonEmpty, name)
       assert(metrics.forall(m => m.rows > 0 && m.wallMs >= 0), name)
@@ -142,12 +151,62 @@ class ResumeSpec extends SparkSpec {
       assert(!lines.isEmpty, file)
       lines.asScala.map(mapper.readTree(_))
     }
-    parsed("_manifest.jsonl").foreach { j =>
-      assert(j.get("path").asText().startsWith(dir.toString))
+    parsed("_snapshots.jsonl").foreach { j =>
+      assert(j.get("files").asInt >= 1)
+      assert(j.get("summary").has("iter"))
     }
     parsed("_metrics.jsonl").foreach { j =>
       assert(j.get("run").asText() === runId)
       assert(j.get("algo").asText() === "cc")
     }
+  }
+
+  test("resume continues the most recent commit, not the longest run") {
+    val path = Edges.symmetrize(edgeDF((0L until 10L).map(i => (i, i + 1))))
+    val sym = Edges.symmetrize(edgeDF(Oracles.sample15))
+    val straight = components(ConnectedComponents.run(spark, sym).components)
+    val root = tmp()
+    // an earlier, longer run under the same id reaches its fixpoint...
+    assert(ConnectedComponents.run(spark, path,
+      ckpt = Some(new Checkpointer(root, "r"))).converged)
+    // ...then a fresh run on another graph stops after 2 supersteps
+    ConnectedComponents.run(spark, sym, maxIter = 2,
+      ckpt = Some(new Checkpointer(root, "r")))
+    val resumed = ConnectedComponents.run(spark, sym,
+      ckpt = Some(new Checkpointer(root, "r")), resume = true)
+    assert(resumed.metrics.head.iter === 3)
+    assert(components(resumed.components) === straight)
+  }
+
+  test("the resume point is read without a Spark job") {
+    val sym = Edges.symmetrize(edgeDF(Oracles.sample15))
+    val root = tmp()
+    ConnectedComponents.run(spark, sym, maxIter = 2,
+      ckpt = Some(new Checkpointer(root, "z")))
+    val (jobs, latest) = graft.tools.QProbe.countJobs(spark)(
+      new Checkpointer(root, "z").latest(spark))
+    assert(jobs === 0)
+    assert(latest.map(_._1) === Some(2))
+  }
+
+  test("an orphan snapshot dir is neither resumed from nor in the way") {
+    val sym = Edges.symmetrize(edgeDF(Oracles.sample15))
+    val straight = components(ConnectedComponents.run(spark, sym).components)
+    val root = tmp()
+    ConnectedComponents.run(spark, sym, maxIter = 2,
+      ckpt = Some(new Checkpointer(root, "o")))
+    // the init state renamed into place as snapshot 4 by a commit whose
+    // log line never landed
+    val dir = Paths.get(root, "o")
+    val orphan = dir.resolve("snap_000004")
+    Files.createDirectory(orphan)
+    Files.list(dir.resolve("snap_000001")).forEach(f =>
+      Files.copy(f, orphan.resolve(f.getFileName)))
+    val resumed = ConnectedComponents.run(spark, sym,
+      ckpt = Some(new Checkpointer(root, "o")), resume = true)
+    assert(resumed.metrics.head.iter === 3)
+    assert(components(resumed.components) === straight)
+    assert(snapshotLog(root, "o").map(_.get("snapshot").asLong) ===
+      (1L to 3L + resumed.metrics.size))
   }
 }
