@@ -60,7 +60,6 @@ object Bench {
     * on a real cluster, where partitions follow data size, not executor
     * count), so the N-vs-4N comparison is the same physical work. */
   private val Partitions = 32
-  private val Salts = 8
   /** In-session PageRank supersteps. */
   private val Supersteps = 10
   /** Fresh-JVM rounds per scaling leg, and supersteps per leg. */
@@ -121,7 +120,7 @@ object Bench {
   private def prSupersteps(spark: SparkSession, sym: DataFrame,
                            supersteps: Int): Seq[IterationMetric] = {
     val r = PageRank.run(spark, sym, fixedIter = Some(supersteps),
-      salts = Salts, symmetric = true)
+      symmetric = true)
     r.ranks.count()
     r.metrics
   }
@@ -142,16 +141,15 @@ object Bench {
     sec
   }
 
-  /** Historical quiet-window median of [[controlSec]] at 32 cores on the
-    * dev host: 0.41-0.50 s across four fresh-JVM calibration runs
-    * (BENCH.md); override with SPARK_GRAFT_CONTROL_FLOOR. The slow-phase
-    * threshold is 2×. */
+  /** Median of twelve warm [[controlSec]] draws on a 4-core, 15 GB host
+    * (0.26-0.41 s, BENCH.md "Host-phase control"); override with
+    * SPARK_GRAFT_CONTROL_FLOOR. The slow-phase threshold is 2×. */
   private def controlFloor: Double =
-    sys.env.getOrElse("SPARK_GRAFT_CONTROL_FLOOR", "0.45").toDouble
+    sys.env.getOrElse("SPARK_GRAFT_CONTROL_FLOOR", "0.33").toDouble
 
   /** Best steady-state superstep seconds from the engine's iteration
-    * metrics, excluding superstep 1 (which materializes the persisted link
-    * table). MIN is the capacity estimator: this VM shows minutes-scale
+    * metrics, excluding superstep 1 (the first run of the superstep's
+    * code in the JVM). MIN is the capacity estimator: this VM shows minutes-scale
     * background throughput phases, and mean/median of one run smear a slow
     * phase over the whole leg; the fastest clean superstep is what the
     * hardware can do. The same estimator is applied to every leg. */

@@ -51,6 +51,12 @@ final class ShuffleMeter(spark: SparkSession) extends SparkListener {
   * tasks merge (a count, a sum of longs, a max); a floating-point sum
   * would not be.
   *
+  * The anchor kernels (PageRank, CC, LP) take each step on [[Blocks]]:
+  * the step routes the state's |V| rows to the cached block CSR and
+  * returns the next state as a DataFrame of the kernel's columns, so one
+  * job computes, observes and commits it like any other state, and no
+  * step joins the |E|-row edge table.
+  *
   * Every kernel whose state is one DataFrame rewritten each round runs
   * here; a fixed-round kernel passes `delta = lit(0)`, never converges,
   * and carries any per-round value it needs (a walk step, Katz's 4^i) as

@@ -177,9 +177,6 @@ object Edges {
       .select(col("src"), col("dst"), col("weight"))
   }
 
-  /** Salt expression for two-phase hub aggregation (SURVEY §4.3). */
-  def saltOf(c: Column, salts: Int): Column = pmod(xxhash64(c), lit(salts))
-
   /** Deterministic vertex-sampled induced subgraph: keep a vertex iff
     * sha256(salt:vid) mod 1000 < keepPerMille, keep an edge iff BOTH
     * endpoints survive — the standard debug-subset / multi-round-training

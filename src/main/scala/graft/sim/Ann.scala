@@ -165,8 +165,8 @@ object Ann {
     * candidates exactly. The candidate join is keyed by cluster id, so
     * cost is ~nprobe/nlist of the corpus per query instead of n² — the
     * same bucketed shape as [[lshTopK]] with learned buckets. Measured
-    * recall@5 on the 500×64 test table (RecallProbe): 0.84 at 16/8,
-    * 0.76 at 8/4, 0.59 at 16/4 — these embeddings' tail neighbors span
+    * recall@5 on the 500×64 test table: 0.84 at 16/8 (TextSimSpec
+    * asserts ≥ 0.7 at that default), 0.76 at 8/4, 0.59 at 16/4 — these embeddings' tail neighbors span
     * clusters, so IVF needs a fat probe fraction here where 32×4 SRP-LSH
     * reaches 0.99; on genuinely clustered corpora the trade flips.
     * At corpus scale set nlist ≈ √n and tune nprobe to the recall bar. */
@@ -331,7 +331,8 @@ object Ann {
     * Candidates come from the [[lshTopKParity]] band-bucket pipeline —
     * never all pairs — re-ranked by exact integer dot, ties to the lower
     * id; vectors whose buckets contain no other-label candidate produce
-    * no row (the LSH recall story is q57's, measured in RecallProbe).
+    * no row (the LSH recall story is q57's; TextSimSpec asserts
+    * [[lshTopK]]'s recall).
     * Missing hard positives are encoded (-1, 0) so the schema stays
     * integral end to end. */
   def hardNegatives(vecs: DataFrame, idCol: String, vecCol: String,
@@ -644,9 +645,11 @@ object Ann {
     * per band, so the per-band candidate join costs O(bands · n · 16)
     * pairs REGARDLESS of n — a fixed 32×4 would collapse to 16 buckets
     * per band and go quadratic on any large corpus. Measured on the
-    * 500×64-dim test table (RecallProbe): recall@5 = 0.99 at 32×4
-    * (= the auto choice's neighborhood; 24×5 = 0.88, 32×6 = 0.81) vs
-    * 0.15 at the old 8×8; hold recall at higher bits by raising bands. */
+    * 500×64-dim sf0.01 table: recall@5 = 0.99 at 32×4 (= the auto
+    * choice's neighborhood; 24×5 = 0.88, 32×6 = 0.81) vs 0.15 at the old
+    * 8×8; TextSimSpec "LSH defaults" asserts the default against 8×8 on
+    * sf0.001 (0.94 vs 0.14). Hold recall at higher bits by raising
+    * bands. */
   def lshTopK(vecs: DataFrame, idCol: String, vecCol: String, k: Int,
               dim: Int, bands: Int = 32, bitsPerBand: Int = -1,
               seed: Long = 42L): DataFrame = {

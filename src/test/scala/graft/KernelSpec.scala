@@ -102,20 +102,6 @@ class KernelSpec extends SparkSpec {
     }
   }
 
-  test("pagerank salted aggregation is equivalent (allclose 1e-12)") {
-    val sym = Edges.symmetrize(edgeDF(Oracles.powerLaw(80, seed = 7)))
-    val plain = PageRank.run(spark, sym, fixedIter = Some(5)).ranks
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // hubDegree=3 so the power-law hubs really take the salted two-phase path
-    val salted = PageRank.run(spark, sym, fixedIter = Some(5), salts = 8,
-      hubDegree = 3L)
-      .ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(plain.keySet === salted.keySet)
-    plain.foreach { case (v, r) =>
-      assert(math.abs(r - salted(v)) < 1e-12, s"vid=$v")
-    }
-  }
-
   test("pagerank symmetric fast path equals the general path bitwise") {
     val sym = Edges.symmetrize(edgeDF(Oracles.sample15))
     val gen = PageRank.run(spark, sym, fixedIter = Some(6)).ranks
@@ -123,6 +109,205 @@ class KernelSpec extends SparkSpec {
     val fast = PageRank.run(spark, sym, fixedIter = Some(6), symmetric = true)
       .ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gen === fast)
+  }
+
+  /** Plain-Scala PageRank: weighted (share = w / Σ_out w), personalized
+    * over `seeds` (all vertices when empty), warm-started from `init`
+    * (others start at their teleport share), dangling mass recycled
+    * through the teleport distribution. */
+  private def pageRankOracle(edges: Seq[(Long, Long, Double)],
+                             seeds: Set[Long], init: Map[Long, Double],
+                             iters: Int): Map[Long, Double] = {
+    val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val out = edges.groupBy(_._1).map { case (u, es) => u -> (es, es.map(_._3).sum) }
+    val n = verts.size
+    def tele(v: Long): Double =
+      if (seeds.isEmpty) 1.0 / n else if (seeds(v)) 1.0 / seeds.size else 0.0
+    var r = verts.map(v => v -> init.getOrElse(v, tele(v))).toMap
+    for (_ <- 1 to iters) {
+      val dm = verts.filterNot(out.contains).map(r).sum
+      val c = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
+      out.foreach { case (u, (es, ws)) => es.foreach(e => c(e._2) += r(u) * (e._3 / ws)) }
+      r = verts.map(v => v -> ((0.15 + 0.85 * dm) * tele(v) + 0.85 * c(v))).toMap
+    }
+    r
+  }
+
+  /** Directed hash-min to fixpoint over the sources: a vertex takes the
+    * min label of its in-neighbours; a destination outside the sources
+    * is no vertex. */
+  private def hashMinOracle(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val verts = edges.map(_._1).toSet
+    var l = verts.map(v => v -> v).toMap
+    var changed = true
+    while (changed) {
+      val next = edges.filter(e => verts(e._2)).groupBy(_._2).map {
+        case (v, in) => v -> math.min(l(v), in.map(e => l(e._1)).min)
+      }
+      val l2 = l ++ next
+      changed = l2 != l
+      l = l2
+    }
+    l
+  }
+
+  /** Synchronous weighted LP over the sources of a symmetric weighted
+    * edge list: the label of greatest weight sum, ties to the smallest. */
+  private def weightedLpOracle(edges: Seq[(Long, Long, Long)],
+                               iters: Int): Map[Long, Long] = {
+    val in = edges.groupBy(_._2)
+    var l = edges.map(_._1).distinct.map(v => v -> v).toMap
+    for (_ <- 1 to iters) {
+      l = l.map { case (v, old) =>
+        in.get(v).map { es =>
+          es.groupBy(e => l(e._1)).map { case (lbl, g) => lbl -> g.map(_._3).sum }
+            .toSeq.sortBy { case (lbl, w) => (-w, lbl) }.head._1
+        }.fold(v -> old)(v -> _)
+      }
+    }
+    l
+  }
+
+  private def ranksOf(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  private def longsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("pagerank on blocks: directed, dangling, weighted, personalized, warm-started (1e-12)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    // 40 vertices; 31-40 only receive (dangling), weights 1..9
+    val es = (for {
+      u <- 1L to 30L; v <- 1L to 40L
+      if u != v && rnd.nextDouble() < 0.15
+    } yield (u, v, (1 + rnd.nextInt(9)).toDouble)).toSeq
+    val seeds = Set(2L, 7L, 33L)
+    val init = (1L to 20L).map(v => v -> 1.0 / (v + 3)).toMap
+    val expect = pageRankOracle(es, seeds, init, 12)
+    val got = ranksOf(PageRank.run(spark, es.toDF("src", "dst", "w"),
+      fixedIter = Some(12), weightCol = Some("w"),
+      personalized = Some(seeds.toSeq.toDF("vid")),
+      initRanks = Some(init.toSeq.toDF("vid", "rank"))).ranks)
+    assert(got.keySet === expect.keySet)
+    got.foreach { case (v, r) =>
+      assert(math.abs(r - expect(v)) < 1e-12, s"vid=$v $r vs ${expect(v)}")
+    }
+  }
+
+  test("cc on blocks: a directed table whose dst set is not within src (Scc's shape)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    // sources 1-30; destinations 1-45, so 31-45 receive but are no vertex
+    val es = (for {
+      u <- 1L to 30L; v <- 1L to 45L
+      if u != v && rnd.nextDouble() < 0.05
+    } yield (u, v)).toSeq
+    assert(es.map(_._2).toSet.exists(v => !es.map(_._1).toSet(v)),
+      "test premise: some destination is not a source")
+    val got = longsOf(ConnectedComponents.run(spark, es.toDF("src", "dst"))
+      .components)
+    assert(got === hashMinOracle(es))
+  }
+
+  test("weighted LP on blocks: exact integral sums, ties to the smaller label") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    // small integral weights on a dense graph: equal sums are common
+    val can = (for {
+      u <- 1L to 40L; v <- (u + 1) to 40L if rnd.nextDouble() < 0.2
+    } yield (u, v, (1 + rnd.nextInt(3)).toLong)).toSeq
+    val es = can ++ can.map(e => (e._2, e._1, e._3))
+    // premise: a first-superstep tie exists
+    val ties = es.groupBy(_._2).values.count { in =>
+      val w = in.groupBy(_._1).map(_._2.map(_._3).sum).toSeq.sorted.reverse
+      w.size > 1 && w(0) == w(1)
+    }
+    assert(ties > 0, "test premise: some vertex sees a weight tie")
+    Seq(1, 4).foreach { it =>
+      val got = longsOf(LabelPropagation.run(spark,
+        es.toDF("src", "dst", "weight"), it, weightCol = Some("weight")).labels)
+      assert(got === weightedLpOracle(es, it), s"iterations=$it")
+    }
+  }
+
+  test("blocks: more blocks than vertices leaves empty blocks that change nothing") {
+    val es = Seq((1L, 2L), (2L, 3L), (4L, 5L))
+    val sym = es ++ es.map(_.swap)
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "16")
+      assert(sym.flatMap(e => Seq(e._1, e._2)).map(graft.engine.Blocks
+        .blockOf(_, 16)).toSet.size < 16, "test premise: some block is empty")
+      val df = Edges.symmetrize(edgeDF(es))
+      val pr = ranksOf(PageRank.run(spark, df, fixedIter = Some(8)).ranks)
+      val expect = Oracles.pageRank(sym, 8)
+      assert(pr.keySet === expect.keySet)
+      pr.foreach { case (v, r) => assert(math.abs(r - expect(v)) < 1e-12, s"vid=$v") }
+      assert(longsOf(ConnectedComponents.run(spark, df).components) ===
+        Oracles.connectedComponents(es))
+      assert(longsOf(LabelPropagation.run(spark, df, 3).labels) ===
+        Oracles.labelPropagation(es, 3))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
+  test("blocks: a hub that receives from every block") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // hub 0 with 60 leaves, and a ring through the leaves
+    val es = (1L to 60L).map(v => (0L, v)) ++ (1L to 60L).map(v => (v, v % 60 + 1))
+    val sym = es ++ es.map(_.swap)
+    assert((1L to 60L).map(graft.engine.Blocks.blockOf(_, n)).toSet.size === n,
+      "test premise: the hub's in-neighbours span every block")
+    val df = Edges.symmetrize(edgeDF(es))
+    val pr = ranksOf(PageRank.run(spark, df, fixedIter = Some(10)).ranks)
+    val expect = Oracles.pageRank(sym, 10)
+    pr.foreach { case (v, r) => assert(math.abs(r - expect(v)) < 1e-12, s"vid=$v") }
+    assert(longsOf(ConnectedComponents.run(spark, df).components) ===
+      Oracles.connectedComponents(es))
+    assert(longsOf(LabelPropagation.run(spark, df, 4).labels) ===
+      Oracles.labelPropagation(es, 4))
+  }
+
+  test("a steady superstep moves O(|V| · blocks) shuffle bytes, not the |E|-row edge table") {
+    import graft.engine.ShuffleMeter
+    val blocks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // three 100-cliques joined by a path: |E| = 29,704 directed edges,
+    // |V| = 300, so |E| / (|V| · blocks) ≈ 25 at 4 blocks
+    val es = (0 until 3).flatMap { c =>
+      val base = c * 100L
+      for (u <- base until base + 100; v <- (u + 1) until base + 100) yield (u, v)
+    } ++ Seq((99L, 100L), (199L, 200L))
+    val sym = Edges.symmetrize(edgeDF(es)).persist()
+    val nE = sym.count()
+    val nV = 300L
+    // the bytes of one exchange of the edge table
+    val meter = new ShuffleMeter(spark)
+    sym.repartition(blocks, col("dst")).foreach(_ => ())
+    Thread.sleep(500) // the listener bus delivers task ends asynchronously
+    val edgeBytes = meter.snapshot._2
+    meter.close()
+    assert(edgeBytes > 0L)
+    // per vertex-block pair: a slot's message and the routed state row,
+    // each under 64 bytes serialized, plus one message header per pair
+    // of blocks
+    val bound = 64L * nV * blocks + 1024L * blocks * blocks
+    val steady: Seq[(String, Seq[graft.engine.IterationMetric])] = Seq(
+      "pagerank" -> PageRank.run(spark, sym, fixedIter = Some(6), symmetric = true)
+        .metrics.filter(_.iter >= 3),
+      "cc" -> ConnectedComponents.run(spark, sym).metrics.filter(_.iter >= 2),
+      "lp" -> LabelPropagation.run(spark, sym, 6).metrics.filter(_.iter >= 3))
+    steady.foreach { case (k, ms) =>
+      assert(ms.nonEmpty, k)
+      ms.foreach { m =>
+        val bytes = m.shuffleWriteBytes
+        info(s"$k superstep ${m.iter}: $bytes bytes; bound $bound; edge exchange $edgeBytes")
+        assert(bytes <= bound, s"$k superstep ${m.iter}: $bytes > $bound bytes")
+        assert(bytes * 8 < edgeBytes,
+          s"$k superstep ${m.iter}: $bytes vs one edge exchange $edgeBytes")
+      }
+    }
+    assert(nE > 25 * nV)
+    sym.unpersist()
   }
 
   test("random graphs: CC and TC match oracles (seeded ER + power-law)") {

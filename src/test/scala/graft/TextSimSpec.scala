@@ -2,6 +2,7 @@ package graft
 
 import graft.sim.Ann
 import graft.text.{Dedup, TextFunctions => TF}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Training-data operators: dedup (exact / n-gram Jaccard / MinHash-LSH /
@@ -164,6 +165,44 @@ class TextSimSpec extends SparkSpec {
     exact.unpersist()
     assert(caught.toDouble / nTrue >= 0.9,
       f"pair recall ${caught.toDouble / nTrue}%.3f < 0.9")
+  }
+
+  test("LSH defaults: recall on the 500x64 test tables beats the settings they replaced") {
+    // the evidence behind Ann.lshTopK's bands/bits and Dedup.minHashLsh's
+    // bands: each default against the grid point it was chosen over
+    val sf = "/root/testdata/sf0.001"
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val brute = Ann.bruteTopK(emb, "vec_id", "embedding", 5)
+      .select(col("vec_id"), col("nn_id")).persist()
+    val nTrue = brute.count()
+    def annRecall(lsh: DataFrame): Double =
+      brute.join(lsh.select(col("vec_id"), col("nn_id")),
+        Seq("vec_id", "nn_id"), "left_semi").count().toDouble / nTrue
+    val annDefault = annRecall(Ann.lshTopK(emb, "vec_id", "embedding", 5, 64))
+    val annOld = annRecall(Ann.lshTopK(emb, "vec_id", "embedding", 5, 64,
+      bands = 8, bitsPerBand = 8))
+    brute.unpersist()
+    val d = spark.read.parquet(s"$sf/documents.parquet")
+    val exact = Dedup.ngramJaccard(d, "doc_id", "text", 3, 0.7)
+      .select(col("d1"), col("d2")).persist()
+    val nPairs = exact.count()
+    def pairRecall(bands: Option[Int]): Double = {
+      val cands = bands.fold(Dedup.minHashLsh(d, "doc_id", "text",
+          threshold = 0.0))(b => Dedup.minHashLsh(d, "doc_id", "text",
+          bands = b, threshold = 0.0))
+      exact.join(cands.select(col("d1"), col("d2")), Seq("d1", "d2"),
+        "left_semi").count().toDouble / nPairs
+    }
+    val mhDefault = pairRecall(None)
+    val mhFewer = pairRecall(Some(8))
+    exact.unpersist()
+    info(f"ann recall@5 default $annDefault%.3f, 8x8 $annOld%.3f; " +
+      f"minhash pair recall default $mhDefault%.3f, 8 bands $mhFewer%.3f")
+    // sf0.001: 0.938 vs 0.138, and 1.000 vs 0.789
+    assert(annDefault >= 0.9 && annDefault > annOld,
+      f"ann recall@5 $annDefault%.3f (8x8: $annOld%.3f)")
+    assert(mhDefault >= 0.9 && mhDefault > mhFewer,
+      f"minhash pair recall $mhDefault%.3f (8 bands: $mhFewer%.3f)")
   }
 
   test("sha-parity MinHash-LSH (q26 config): near-dups found, identical docs est=1") {
